@@ -306,19 +306,12 @@ def bpe_train_merges(df=None, *, text_col: str = "text", rounds: int = 5,
         # keep the pair SIDES alongside the concatenation: "the" could
         # be t+he or th+e — bpe_encode needs the unambiguous (a, b)
         merges.append((r, a + b, a, b, int(best["cnt"])))
-        merged = F.aggregate(
-            "syms", F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                         F.array(F.lit(a + b)))
-            ).otherwise(F.concat(acc, F.array(x))))
         # lazy: round r+1's argmax is the single consumer and
         # materializes this rewrite inside its own job — halves the
         # blocking jobs per round vs the eager form (the checkpoint
         # still truncates lineage exactly the same once computed)
-        vocab = (vocab.select(merged.alias("syms"), "tok_cnt")
+        vocab = (vocab.select(_merge_fold("syms", a, b).alias("syms"),
+                              "tok_cnt")
                  .localCheckpoint(eager=False))
     return spark.createDataFrame(
         merges, "round int, pair string, a string, b string, cnt long")
@@ -326,8 +319,9 @@ def bpe_train_merges(df=None, *, text_col: str = "text", rounds: int = 5,
 
 def _merge_fold(syms, a: str, b: str):
     """One greedy left-to-right application of merge (a, b) over a
-    symbol array — the EXACT fold ``bpe_train_merges`` uses to rewrite
-    its vocabulary, reused so encode mirrors training bit-for-bit."""
+    symbol array — the fold both trainers rewrite their vocabulary
+    with, reused by ``bpe_apply_merges`` so encode mirrors training
+    bit-for-bit."""
     return F.aggregate(
         syms, F.array().cast("array<string>"),
         lambda acc, x: F.when(
@@ -1711,6 +1705,47 @@ def _bpe_encode_py(word: str, merges: list) -> list:
 _TKC_ROUNDS = 6
 _TKC_TOP_WORDS = 40
 
+#: largest vocabulary (distinct words) the compare report trains on the
+#: driver; above it the distributed trainers run. Measured on a 4-core
+#: host (random a-z words of 3-12 letters; wall / process-tree CPU):
+#:   10^4 words: driver 2.0 s / 5.3 s, distributed 13.0 s / 37.9 s
+#:   10^5 words: driver 15.1 s / 19.4 s, distributed 25.6 s / 80.0 s
+#:   10^6 words: driver 114.8 s / 120.5 s, distributed 159.0 s / 525.0 s
+#: No crossover up to 10^6 words. At 1 core the distributed path takes
+#: 50.0 s at 10^5 words, so about two thirds of its 4-core time does not
+#: parallelise and more cores narrow the gap only slowly. The bound is
+#: therefore set by the driver's own cost, spent outside Spark's job
+#: cancellation: 12 CPU-s and ~60 MB of driver heap at 10^5 words,
+#: 124 CPU-s and ~450 MB at 10^6.
+_TKC_DRIVER_VOCAB = 100_000
+
+
+def _fertility_rows(word_freqs, rounds: int, top_words: int) -> list:
+    """The compare report computed in memory from (word, freq) rows:
+    the three pure-Python trainer twins, then every family's pieces over
+    the shared eval set. One helper for the report's driver path and its
+    oracle generator; an empty eval set prices at 0 pieces and 0
+    fertility."""
+    eligible = [(w, f) for w, f in word_freqs if len(w) <= UNIGRAM_MAX_WORD]
+    top = sorted(eligible, key=lambda r: (-r[1], r[0]))[:top_words]
+
+    bpe_merges = _bpe_train_py(word_freqs, rounds=rounds)
+    wp_pieces = {m[1] for m in _wp_train_py(word_freqs, rounds=rounds)}
+    wp_maxlen = max((len(p) for p in wp_pieces), default=1)
+    scores = unigram_scores(_word_piece_counts(eligible))
+
+    f_sum = sum(f for _, f in top)
+    rows = []
+    for name, np_fn in (
+            ("bpe", lambda w: len(_bpe_encode_py(w, bpe_merges))),
+            ("wordpiece", lambda w: len(_wp_greedy(w, wp_pieces,
+                                                   wp_maxlen))),
+            ("unigram", lambda w: len(viterbi_segment(w, scores)[0]))):
+        pieces = sum(f * np_fn(w) for w, f in top)
+        rows.append((name, len(top), pieces,
+                     (pieces * 1_000_000) // max(f_sum, 1)))
+    return rows
+
 
 def tokenizer_fertility_compare(df, *, text_col: str = "text",
                                 rounds: int = _TKC_ROUNDS,
@@ -1724,55 +1759,44 @@ def tokenizer_fertility_compare(df, *, text_col: str = "text",
     tokens-per-word the CORPUS would pay, i.e. the context-window and
     compute cost of choosing that tokenizer.
 
-    Plan: the corpus is scanned ONCE — the shared (word, freq) table is
-    persisted and feeds all three trainers AND the eval set (each
-    trainer used to re-derive it, r8's slowest-benched-query constant);
-    each trainer is its own bounded loop (BPE/WordPiece:
-    driver-metadata merge tables; unigram: vocab-bounded score table);
-    the eval set is top_words rows, with unigram pieces computed
-    DIRECTLY on those rows by the shared Viterbi (no join against the
-    report's fixed top-500 table — which silently dropped eval words
-    whenever top_words exceeded it). The encode-a-corpus cost this
-    report predicts is NOT paid here — that is what the number is
-    for."""
+    Plan: the corpus is scanned ONCE into the shared (word, freq) table
+    and at most ``_TKC_DRIVER_VOCAB + 1`` of its rows come to the driver
+    in one action. A vocabulary under the bound trains and scores on the
+    driver (``_fertility_rows``) — a handful of jobs in place of a
+    multi-job argmax per merge round. Above it the table is persisted
+    and feeds the distributed trainers one after another in the caller's
+    thread (so every job keeps the caller's job group); BPE/WordPiece
+    yield driver-metadata merge tables, unigram a vocab-bounded score
+    table, and the eval set is top_words rows scored by the same
+    segmenters. The encode-a-corpus cost this report predicts is NOT
+    paid here — that is what the number is for."""
     from pyspark.sql.functions import pandas_udf
 
     from ..plans.caching import track_persist
 
-    freq = track_persist(corpus_word_freq(df, text_col=text_col))
-    freq.count()  # materialize ONCE before the concurrent trainers
-    top = (freq.where(F.length("word") <= UNIGRAM_MAX_WORD)
-           .orderBy(F.col("freq").desc(), "word").limit(top_words))
+    freq = corpus_word_freq(df, text_col=text_col)
+    head = freq.limit(_TKC_DRIVER_VOCAB + 1).collect()
+    if len(head) <= _TKC_DRIVER_VOCAB:
+        return df.sparkSession.createDataFrame(
+            _fertility_rows(head, rounds, top_words),
+            "tokenizer string, n_words long, weighted_pieces long, "
+            "fertility_micro long")
+    # persisted only past the bound: a cache under the head collect adds
+    # a job to the driver path; this path recounts the corpus once more
+    freq = track_persist(freq)
 
-    # The three trainers are independent given the shared frequency
-    # table, and each is a chain of driver-synchronous tiny jobs
-    # (argmax + checkpoint per round) whose wall time is job LATENCY,
-    # not compute — so run them as concurrent jobs from a small thread
-    # pool (guide §2.6: later jobs back-fill executors the current
-    # job's tail leaves idle). Results are bit-identical: each trainer
-    # reads only the materialized freq cache.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_bpe = pool.submit(
-            lambda: bpe_train_merges(word_freq=freq,
-                                     rounds=rounds).collect())
-        f_wp = pool.submit(
-            lambda: wordpiece_train_merges(word_freq=freq,
-                                           rounds=rounds).collect())
-        f_uni = pool.submit(
-            lambda: unigram_piece_scores(
-                freq.where(F.length("word") <= UNIGRAM_MAX_WORD)))
-        bpe_rows = f_bpe.result()
-        wp_rows = f_wp.result()
-        uni_scores = f_uni.result()
+    eligible = freq.where(F.length("word") <= UNIGRAM_MAX_WORD)
+    top = eligible.orderBy(F.col("freq").desc(), "word").limit(top_words)
 
     # BPE: rank-order merge replay, pure JVM on the K eval rows
-    bpe_merges = [(r["a"], r["b"]) for r in bpe_rows]
+    bpe_merges = [(r["a"], r["b"]) for r in
+                  bpe_train_merges(word_freq=freq, rounds=rounds).collect()]
     bpe_np = F.size(bpe_apply_merges(F.col("word"), bpe_merges))
 
     # WordPiece: likelihood-scored merges + maximal munch
-    wp_pieces = {r["piece"] for r in wp_rows}
+    wp_pieces = {r["piece"] for r in
+                 wordpiece_train_merges(word_freq=freq,
+                                        rounds=rounds).collect()}
     wp_maxlen = max((len(p) for p in wp_pieces), default=1)
 
     @pandas_udf("int")
@@ -1780,11 +1804,10 @@ def tokenizer_fertility_compare(df, *, text_col: str = "text",
         return words.map(
             lambda w: len(_wp_greedy(w or "", wp_pieces, wp_maxlen)))
 
-    # unigram-LM: Viterbi under the exact corpus piece scores, applied
-    # directly to the eval rows (scores come from the same shared
-    # frequency table, length-filtered like the eval set; trained in
-    # the concurrent pool above)
-    scores = uni_scores
+    # unigram-LM: Viterbi under the exact corpus piece scores (from the
+    # same length-filtered table as the eval set), applied directly to
+    # the eval rows
+    scores = unigram_piece_scores(eligible)
 
     @pandas_udf("int")
     def _uni_np(words: pd.Series) -> pd.Series:
@@ -1794,10 +1817,11 @@ def tokenizer_fertility_compare(df, *, text_col: str = "text",
     def fert(scored, name):
         return (scored
                 .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
-                     F.sum(F.col("freq") * F.col("np")).cast("long")
+                     F.expr("coalesce(sum(freq * np), 0)").cast("long")
                      .alias("weighted_pieces"),
-                     F.expr("(sum(freq * np) * 1000000) div sum(freq)")
-                     .cast("long").alias("fertility_micro"))
+                     F.expr("coalesce((sum(freq * np) * 1000000) div "
+                            "sum(freq), 0)").cast("long")
+                     .alias("fertility_micro"))
                 .select(F.lit(name).alias("tokenizer"), "n_words",
                         "weighted_pieces", "fertility_micro"))
 
@@ -1813,8 +1837,9 @@ def tokenizer_compare_oracle_sql(sf_dir: str, *, table: str = "documents",
                                  text_col: str = "text") -> str:
     """Per-SF generated oracle for tokenizer_fertility_compare: word
     frequencies from DuckDB's own tokenizer chain, all three trainers
-    replayed by their independent pure-Python twins, fertilities baked
-    into a 3-row VALUES table."""
+    replayed by their independent pure-Python twins
+    (``_fertility_rows``), fertilities baked into a 3-row VALUES
+    table."""
     import os
 
     import duckdb
@@ -1828,24 +1853,8 @@ def tokenizer_compare_oracle_sql(sf_dir: str, *, table: str = "documents",
           FROM read_parquet('{path}'))
         GROUP BY word
     """).fetchall()
-    eligible = [(w, f) for w, f in wf if len(w) <= UNIGRAM_MAX_WORD]
-    top = sorted(eligible, key=lambda r: (-r[1], r[0]))[:_TKC_TOP_WORDS]
-
-    bpe_merges = _bpe_train_py(wf, rounds=_TKC_ROUNDS)
-    wp_pieces = {m[1] for m in _wp_train_py(wf, rounds=_TKC_ROUNDS)}
-    wp_maxlen = max((len(p) for p in wp_pieces), default=1)
-    scores = unigram_scores(_word_piece_counts(eligible))
-
-    rows = []
-    for name, np_fn in (
-            ("bpe", lambda w: len(_bpe_encode_py(w, bpe_merges))),
-            ("wordpiece", lambda w: len(_wp_greedy(w, wp_pieces,
-                                                   wp_maxlen))),
-            ("unigram", lambda w: len(viterbi_segment(w, scores)[0]))):
-        wp_sum = sum(f * np_fn(w) for w, f in top)
-        f_sum = sum(f for _, f in top)
-        fert = (wp_sum * 1_000_000) // max(f_sum, 1)
-        rows.append(f"('{name}', {len(top)}, {wp_sum}, {fert})")
+    rows = [f"('{name}', {n}, {pieces}, {fert})" for name, n, pieces, fert
+            in _fertility_rows(wf, _TKC_ROUNDS, _TKC_TOP_WORDS)]
     vals = ",\n".join(rows)
     return f"""SELECT tokenizer::VARCHAR AS tokenizer,
        n_words::BIGINT AS n_words,

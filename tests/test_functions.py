@@ -1624,8 +1624,8 @@ def test_prefix_filter_candidate_budget_guard(spark, sf_dir):
 def test_setsim_pairs_composed_lsh_path(spark, sf_dir):
     """Composed path semantics: setsim_pairs(prefilter='lsh') returns
     EXACTLY the LSH pipeline's verified pairs ({J >= t} ∩ LSH
-    candidates — the PPJoin length/prefix filters are lossless for true
-    pairs), is a subset of the deterministic-complete exact join, and
+    candidates — the PPJoin length filter is lossless for true pairs),
+    is a subset of the deterministic-complete exact join, and
     plans without cartesian products or corpus-side broadcasts."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
     composed = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
@@ -2716,6 +2716,66 @@ def test_wordpiece_greedy_maximal_munch():
     # maximal munch can strand a suffix BPE merge-order would pair:
     # vocab {"ab","abc"} on "abcd": munch takes "abc" then chars
     assert T._wp_greedy("abcd", {"ab", "abc"}, 3) == ["abc", "##d"]
+
+
+# more than _TKC_TOP_WORDS distinct words, so the eval cut lands inside
+# a run of frequency ties (ASCII and non-ASCII), plus one word longer
+# than UNIGRAM_MAX_WORD that trains BPE/WordPiece but is never priced
+_TKC_CORPUS = [
+    "the lower tower shows the lowest newest wider view of the tower",
+    "der neue turm ist niedriger als der alte turm und der see",
+    "le nouveau modèle est très rapide et très utile pour le test",
+    "el modelo nuevo es más rápido que el modelo viejo del año",
+    "数据 处理 数据 模型 处理 数据 流水线",
+    "donaudampfschifffahrtsgesellschaftskapitän und der turm",
+    "lowest newest widest the the lower tower",
+]
+
+
+def _tkc_rows(df):
+    return sorted(tuple(r) for r in T.tokenizer_fertility_compare(df).collect())
+
+
+def test_tokenizer_fertility_compare_driver_matches_distributed(
+        spark, monkeypatch):
+    """The driver-resident path (vocabulary under the bound) and the
+    distributed trainers (bound forced below every vocabulary size)
+    give identical rows on a multi-language corpus, and agree on the
+    empty corpus too: 0 words, 0 pieces, 0 fertility."""
+    long_word = max(" ".join(_TKC_CORPUS).split(), key=len)
+    assert len(long_word) > T.UNIGRAM_MAX_WORD
+    df = spark.createDataFrame(list(enumerate(_TKC_CORPUS)),
+                               "doc_id long, text string")
+    empty = df.limit(0)
+    driver, driver_empty = _tkc_rows(df), _tkc_rows(empty)
+    monkeypatch.setattr(T, "_TKC_DRIVER_VOCAB", -1)
+    assert _tkc_rows(df) == driver
+    assert _tkc_rows(empty) == driver_empty == [
+        ("bpe", 0, 0, 0), ("unigram", 0, 0, 0), ("wordpiece", 0, 0, 0)]
+    assert {r[1] for r in driver} == {T._TKC_TOP_WORDS}
+
+
+def test_tokenizer_fertility_compare_job_budget(spark, sf_dir):
+    """Under the vocabulary bound the registry query runs at most 5
+    Spark jobs end to end (build + collect), counted as a job-id delta
+    in the status store from this single thread (the distributed
+    trainers run about 54)."""
+    from go_streams_spark.plans import release_tracked
+    from go_streams_spark.queries import QUERIES
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    before = last_job_id()
+    rows = QUERIES["tokenizer_fertility_compare"](spark, sf_dir).collect()
+    jobs = last_job_id() - before
+    release_tracked()
+    assert len(rows) == 3
+    assert 1 <= jobs <= 5, jobs
 
 
 def test_procrustes_residuals_recovers_planted_rotation(spark):

@@ -93,23 +93,21 @@ def test_embedding_near_dup_no_nested_loop(spark, sf_dir):
 
 
 def test_embedding_near_dup_lsh_banded_equi_join(spark, sf_dir):
-    """The near-dup path never degenerates to an unbounded pair scan:
-    either the bucketed sign-bit band equi-join (sparse regime) or the
-    r10 dense blocked cogroup scan with the in-batch band predicate
-    (the runtime occupancy estimate picked it — this config's 2-3-bit
-    bands retain ~2/3 of the pair space at any SF, so dense is the
-    expected branch here); never a cartesian/broadcast nested loop.
-    Result equivalence of the two branches is pinned by
+    """The near-dup path never degenerates to an unbounded pair scan.
+    This config's 2-3-bit bands retain ~2/3 of the pair space at any
+    SF, so the runtime occupancy estimate must pick the r10 dense
+    blocked cogroup scan with the in-batch band predicate, not the
+    bucketed sign-bit band equi-join (sparse regime); never a
+    cartesian/broadcast nested loop. Result equivalence of the two
+    branches is pinned by
     test_functions.test_cosine_near_dup_lsh_dense_plan_equivalent."""
     from go_streams_spark.plans import explain_str
     df = QUERIES["embedding_near_dup_lsh"](spark, sf_dir)
     plan = explain_str(df, "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    banded = "band_key" in plan and ("ShuffledHashJoin" in plan
-                                     or "SortMergeJoin" in plan)
-    dense = "FlatMapCoGroupsInPandas" in plan
-    assert banded or dense
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "band_key" not in plan
 
 
 def test_embedding_knn_distributed_no_collect(spark, sf_dir):
