@@ -248,12 +248,10 @@ def corpus_word_freq(df, *, text_col: str = "text"):
             .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
 
 
-def _trainer_vocab(df, text_col: str, word_freq):
-    """Trainer-side vocabulary (syms array, tok_cnt): from a caller-
-    provided (word, freq) frame when given (shared-scan path), else
-    derived from the corpus."""
-    wf = corpus_word_freq(df, text_col=text_col) if word_freq is None \
-        else word_freq.select(F.col("word"), F.col("freq"))
+def _trainer_vocab(df, text_col: str):
+    """Trainer-side vocabulary (syms array, tok_cnt) derived from the
+    corpus."""
+    wf = corpus_word_freq(df, text_col=text_col)
     # lazy: the trainer's first argmax job (or wordpiece's volume
     # check) materializes it — one fewer blocking driver job; each
     # trainer's first action has this frame as its only consumer
@@ -262,8 +260,8 @@ def _trainer_vocab(df, text_col: str, word_freq):
             .localCheckpoint(eager=False))
 
 
-def bpe_train_merges(df=None, *, text_col: str = "text", rounds: int = 5,
-                     min_count: int = 2, word_freq=None):
+def bpe_train_merges(df, *, text_col: str = "text", rounds: int = 5,
+                     min_count: int = 2):
     """Iterative BPE tokenizer training, distributed: ``rounds`` merge
     steps over the corpus vocabulary (token -> count, symbols array).
 
@@ -279,15 +277,11 @@ def bpe_train_merges(df=None, *, text_col: str = "text", rounds: int = 5,
     a, b, cnt) — k rows, the training artifact a tokenizer ships; feed
     the (a, b) columns to ``bpe_encode`` to tokenize a corpus with it.
 
-    ``word_freq``: optionally start from a pre-computed (word, freq)
-    frame (``corpus_word_freq``) instead of scanning the corpus — the
-    shared-scan path for multi-trainer comparisons.
-
     No SQL oracle (iterative argmax is not one DuckDB query); exactness
     is pinned against an independent Python BPE reference in
     tests/test_functions.py::test_bpe_train_matches_python_reference."""
-    spark = (df if df is not None else word_freq).sparkSession
-    vocab = _trainer_vocab(df, text_col, word_freq)
+    spark = df.sparkSession
+    vocab = _trainer_vocab(df, text_col)
     merges: list[tuple] = []
     for r in range(rounds):
         n1 = F.greatest(F.size("syms") - 1, F.lit(0))
@@ -1405,9 +1399,8 @@ def rake_keyphrases(df, *, text_col: str = "text", id_col: str = "doc_id",
 _WP_SCORE_SCALE = 10 ** 12
 
 
-def wordpiece_train_merges(df=None, *, text_col: str = "text",
-                           rounds: int = 5, min_count: int = 2,
-                           word_freq=None):
+def wordpiece_train_merges(df, *, text_col: str = "text",
+                           rounds: int = 5, min_count: int = 2):
     """WordPiece tokenizer training, distributed: like
     ``bpe_train_merges`` (same vocabulary loop, same greedy
     left-to-right rewrite fold) but the merge DECISION maximizes the
@@ -1428,9 +1421,6 @@ def wordpiece_train_merges(df=None, *, text_col: str = "text",
     early when no candidate remains.
     Returns (round, piece, a, b, cnt, score_micro).
 
-    ``word_freq``: optionally start from a pre-computed (word, freq)
-    frame (``corpus_word_freq``) — the shared-scan path.
-
     int64 SAFETY IS ENFORCED, not documented: the total symbol volume V
     bounds every cnt/ca/cb, so when V < 9.2e6 the int64 micro-score is
     provably overflow-free (cnt*1e12 <= V*1e12 < 9.2e18 and
@@ -1445,8 +1435,8 @@ def wordpiece_train_merges(df=None, *, text_col: str = "text",
     into a generated VALUES oracle per SF."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    spark = (df if df is not None else word_freq).sparkSession
-    vocab = _trainer_vocab(df, text_col, word_freq)
+    spark = df.sparkSession
+    vocab = _trainer_vocab(df, text_col)
     vol_row = vocab.agg(F.sum(F.col("tok_cnt") * F.size("syms"))
                         .alias("v")).first()
     volume = int(vol_row["v"] or 0)
@@ -1705,27 +1695,12 @@ def _bpe_encode_py(word: str, merges: list) -> list:
 _TKC_ROUNDS = 6
 _TKC_TOP_WORDS = 40
 
-#: largest vocabulary (distinct words) the compare report trains on the
-#: driver; above it the distributed trainers run. Measured on a 4-core
-#: host (random a-z words of 3-12 letters; wall / process-tree CPU):
-#:   10^4 words: driver 2.0 s / 5.3 s, distributed 13.0 s / 37.9 s
-#:   10^5 words: driver 15.1 s / 19.4 s, distributed 25.6 s / 80.0 s
-#:   10^6 words: driver 114.8 s / 120.5 s, distributed 159.0 s / 525.0 s
-#: No crossover up to 10^6 words. At 1 core the distributed path takes
-#: 50.0 s at 10^5 words, so about two thirds of its 4-core time does not
-#: parallelise and more cores narrow the gap only slowly. The bound is
-#: therefore set by the driver's own cost, spent outside Spark's job
-#: cancellation: 12 CPU-s and ~60 MB of driver heap at 10^5 words,
-#: 124 CPU-s and ~450 MB at 10^6.
-_TKC_DRIVER_VOCAB = 100_000
-
 
 def _fertility_rows(word_freqs, rounds: int, top_words: int) -> list:
     """The compare report computed in memory from (word, freq) rows:
     the three pure-Python trainer twins, then every family's pieces over
-    the shared eval set. One helper for the report's driver path and its
-    oracle generator; an empty eval set prices at 0 pieces and 0
-    fertility."""
+    the shared eval set. One helper for the report and its oracle
+    generator; an empty eval set prices at 0 pieces and 0 fertility."""
     eligible = [(w, f) for w, f in word_freqs if len(w) <= UNIGRAM_MAX_WORD]
     top = sorted(eligible, key=lambda r: (-r[1], r[0]))[:top_words]
 
@@ -1759,78 +1734,23 @@ def tokenizer_fertility_compare(df, *, text_col: str = "text",
     tokens-per-word the CORPUS would pay, i.e. the context-window and
     compute cost of choosing that tokenizer.
 
-    Plan: the corpus is scanned ONCE into the shared (word, freq) table
-    and at most ``_TKC_DRIVER_VOCAB + 1`` of its rows come to the driver
-    in one action. A vocabulary under the bound trains and scores on the
-    driver (``_fertility_rows``) — a handful of jobs in place of a
-    multi-job argmax per merge round. Above it the table is persisted
-    and feeds the distributed trainers one after another in the caller's
-    thread (so every job keeps the caller's job group); BPE/WordPiece
-    yield driver-metadata merge tables, unigram a vocab-bounded score
-    table, and the eval set is top_words rows scored by the same
-    segmenters. The encode-a-corpus cost this report predicts is NOT
-    paid here — that is what the number is for."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..plans.caching import track_persist
-
-    freq = corpus_word_freq(df, text_col=text_col)
-    head = freq.limit(_TKC_DRIVER_VOCAB + 1).collect()
-    if len(head) <= _TKC_DRIVER_VOCAB:
-        return df.sparkSession.createDataFrame(
-            _fertility_rows(head, rounds, top_words),
-            "tokenizer string, n_words long, weighted_pieces long, "
-            "fertility_micro long")
-    # persisted only past the bound: a cache under the head collect adds
-    # a job to the driver path; this path recounts the corpus once more
-    freq = track_persist(freq)
-
-    eligible = freq.where(F.length("word") <= UNIGRAM_MAX_WORD)
-    top = eligible.orderBy(F.col("freq").desc(), "word").limit(top_words)
-
-    # BPE: rank-order merge replay, pure JVM on the K eval rows
-    bpe_merges = [(r["a"], r["b"]) for r in
-                  bpe_train_merges(word_freq=freq, rounds=rounds).collect()]
-    bpe_np = F.size(bpe_apply_merges(F.col("word"), bpe_merges))
-
-    # WordPiece: likelihood-scored merges + maximal munch
-    wp_pieces = {r["piece"] for r in
-                 wordpiece_train_merges(word_freq=freq,
-                                        rounds=rounds).collect()}
-    wp_maxlen = max((len(p) for p in wp_pieces), default=1)
-
-    @pandas_udf("int")
-    def _wp_np(words: pd.Series) -> pd.Series:
-        return words.map(
-            lambda w: len(_wp_greedy(w or "", wp_pieces, wp_maxlen)))
-
-    # unigram-LM: Viterbi under the exact corpus piece scores (from the
-    # same length-filtered table as the eval set), applied directly to
-    # the eval rows
-    scores = unigram_piece_scores(eligible)
-
-    @pandas_udf("int")
-    def _uni_np(words: pd.Series) -> pd.Series:
-        return words.map(
-            lambda w: len(viterbi_segment(w or "", scores)[0]))
-
-    def fert(scored, name):
-        return (scored
-                .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
-                     F.expr("coalesce(sum(freq * np), 0)").cast("long")
-                     .alias("weighted_pieces"),
-                     F.expr("coalesce((sum(freq * np) * 1000000) div "
-                            "sum(freq), 0)").cast("long")
-                     .alias("fertility_micro"))
-                .select(F.lit(name).alias("tokenizer"), "n_words",
-                        "weighted_pieces", "fertility_micro"))
-
-    bpe_scored = top.withColumn("np", bpe_np.cast("int"))
-    wp_scored = top.withColumn("np", _wp_np(F.col("word")))
-    uni_scored = top.withColumn("np", _uni_np(F.col("word")))
-    return (fert(bpe_scored, "bpe")
-            .unionByName(fert(wp_scored, "wordpiece"))
-            .unionByName(fert(uni_scored, "unigram")))
+    Plan: the corpus is scanned ONCE into the shared (word, freq) table,
+    which comes to the driver in one action; the three trainers and the
+    eval-set scoring then run there (``_fertility_rows``, the same
+    helper the oracle replays) — a handful of jobs in place of a
+    multi-job argmax per merge round. The distributed trainers lost to
+    it at every vocabulary measured on a 4-core host (random a-z words
+    of 3-12 letters; wall / process-tree CPU, driver vs distributed):
+    10^4 words 2.0 s / 5.3 s vs 13.0 s / 37.9 s, 10^5 words 15.1 s /
+    19.4 s vs 25.6 s / 80.0 s, 10^6 words 114.8 s / 120.5 s vs 159.0 s /
+    525.0 s (~450 MB of driver heap). The encode-a-corpus cost this
+    report predicts is NOT paid here — that is what the number is
+    for."""
+    word_freqs = corpus_word_freq(df, text_col=text_col).collect()
+    return df.sparkSession.createDataFrame(
+        _fertility_rows(word_freqs, rounds, top_words),
+        "tokenizer string, n_words long, weighted_pieces long, "
+        "fertility_micro long")
 
 
 def tokenizer_compare_oracle_sql(sf_dir: str, *, table: str = "documents",

@@ -2736,30 +2736,29 @@ def _tkc_rows(df):
     return sorted(tuple(r) for r in T.tokenizer_fertility_compare(df).collect())
 
 
-def test_tokenizer_fertility_compare_driver_matches_distributed(
-        spark, monkeypatch):
-    """The driver-resident path (vocabulary under the bound) and the
-    distributed trainers (bound forced below every vocabulary size)
-    give identical rows on a multi-language corpus, and agree on the
-    empty corpus too: 0 words, 0 pieces, 0 fertility."""
-    long_word = max(" ".join(_TKC_CORPUS).split(), key=len)
-    assert len(long_word) > T.UNIGRAM_MAX_WORD
+def test_tokenizer_fertility_compare_multilang_and_empty(spark):
+    """On a multi-language corpus every family prices the full eval set
+    (the over-long word trains BPE/WordPiece but is never priced) with
+    the rows the in-memory helper gives for the same (word, freq)
+    table; the empty corpus prices at 0 words, 0 pieces, 0 fertility."""
+    from collections import Counter
+    words = " ".join(_TKC_CORPUS).split()
+    assert len(max(words, key=len)) > T.UNIGRAM_MAX_WORD
     df = spark.createDataFrame(list(enumerate(_TKC_CORPUS)),
                                "doc_id long, text string")
-    empty = df.limit(0)
-    driver, driver_empty = _tkc_rows(df), _tkc_rows(empty)
-    monkeypatch.setattr(T, "_TKC_DRIVER_VOCAB", -1)
-    assert _tkc_rows(df) == driver
-    assert _tkc_rows(empty) == driver_empty == [
+    rows = _tkc_rows(df)
+    assert {r[1] for r in rows} == {T._TKC_TOP_WORDS}
+    freqs = Counter(words)
+    assert rows == sorted(T._fertility_rows(
+        list(freqs.items()), T._TKC_ROUNDS, T._TKC_TOP_WORDS))
+    assert _tkc_rows(df.limit(0)) == [
         ("bpe", 0, 0, 0), ("unigram", 0, 0, 0), ("wordpiece", 0, 0, 0)]
-    assert {r[1] for r in driver} == {T._TKC_TOP_WORDS}
 
 
 def test_tokenizer_fertility_compare_job_budget(spark, sf_dir):
-    """Under the vocabulary bound the registry query runs at most 5
-    Spark jobs end to end (build + collect), counted as a job-id delta
-    in the status store from this single thread (the distributed
-    trainers run about 54)."""
+    """The registry query runs at most 5 Spark jobs end to end (build +
+    collect), counted as a job-id delta in the status store from this
+    single thread (the distributed trainers ran about 54)."""
     from go_streams_spark.plans import release_tracked
     from go_streams_spark.queries import QUERIES
 
