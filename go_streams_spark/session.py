@@ -57,6 +57,16 @@ def get_spark(app_name: str = "go-streams-spark", extra_conf: dict | None = None
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Generated-code cache sized for the registry's working set. At
+        # Spark's default (100 entries, evicted per cache segment) a loop
+        # of tokenizer_fertility_compare + winnowing_overlap_pairs
+        # recompiled ~23 classes on every winnowing call, so the JIT never
+        # settled and the call's CPU swung 5.3-7.9 s from run to run.
+        # Without the stage id in class names, stages with the same code
+        # (both sides of a self-join, stages AQE numbers differently from
+        # one call to the next) share one class.
+        .config("spark.sql.codegen.cache.maxEntries", "500")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
