@@ -52,33 +52,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 _CW_MOD = 1000000007
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 12) -> list[Column]:
-    """num_hashes numeric minhash values per row, Carter-Wegman style:
-    one md5 per shingle, split into two 60-bit halves (h1, h2), then
-    hash_i(s) = h1 + i * (h2 mod 1e9+7). ONE digest per shingle instead
-    of num_hashes digests — the md5 cost dominates, so this is ~12x
-    cheaper than hashing per seed. Computed entirely JVM-side per row
-    (array lambdas; no shuffle, no UDF); bit-identical to the DuckDB
-    oracle's '0x'||substr cast.
-    """
-    digests = F.transform(shingles, F.md5)
-    h1 = lambda d: F.conv(F.substring(d, 1, 15), 16, 10).cast("long")
-    h2 = lambda d: F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % _CW_MOD
-
-    def _mh(i: int):
-        return F.array_min(F.transform(
-            digests, lambda d: h1(d) + F.lit(i) * h2(d)))
-
-    return [_mh(i) for i in range(num_hashes)]
-
-
-def band_keys(mh: list[Column], rows_per_band: int) -> list[Column]:
-    """LSH band keys: md5 of '|'-joined minhashes per band."""
-    assert len(mh) % rows_per_band == 0
-    return [F.md5(F.concat_ws("|", *mh[b:b + rows_per_band]))
-            for b in range(0, len(mh), rows_per_band)]
-
-
 def shingle_rows(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
                  ngram: int = 3) -> DataFrame:
     """Distinct word n-gram shingles, one ROW per (doc, shingle).

@@ -235,10 +235,12 @@ def token_window_chunks(df, *, text_col: str = "text", id_col: str = "doc_id",
 
 def corpus_word_freq(df, *, text_col: str = "text"):
     """The (word, freq) vocabulary table every tokenizer trainer starts
-    from: lowercase -> whitespace tokens -> one hash agg. Factored out
-    so multi-trainer reports (``tokenizer_fertility_compare``) compute
-    and persist it ONCE instead of each trainer re-scanning the raw
-    corpus."""
+    from: lowercase -> whitespace tokens -> one hash agg. Each trainer
+    and report collects it to the driver in one action and trains there
+    in pure Python: the vocabulary is index metadata (Heaps' law keeps
+    it sublinear in corpus size; 31 distinct words at sf0.1), and a
+    multi-job distributed argmax per merge round paid scheduling
+    latency for tiny work."""
     # NOT cpu_widen'd (guide §1.4 measure-first): the whitespace
     # tokenize + partial agg is light per row (0.4 s single-core at
     # sf0.1) and the widening shuffle of the raw text costs more than
@@ -248,148 +250,54 @@ def corpus_word_freq(df, *, text_col: str = "text"):
             .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
 
 
-def _trainer_vocab(df, text_col: str):
-    """Trainer-side vocabulary (syms array, tok_cnt) derived from the
-    corpus."""
-    wf = corpus_word_freq(df, text_col=text_col)
-    # lazy: the trainer's first argmax job (or wordpiece's volume
-    # check) materializes it — one fewer blocking driver job; each
-    # trainer's first action has this frame as its only consumer
-    return (wf.select(F.split("word", "").alias("syms"),
-                      F.col("freq").alias("tok_cnt"))
-            .localCheckpoint(eager=False))
-
-
 def bpe_train_merges(df, *, text_col: str = "text", rounds: int = 5,
                      min_count: int = 2):
-    """Iterative BPE tokenizer training, distributed: ``rounds`` merge
-    steps over the corpus vocabulary (token -> count, symbols array).
+    """Iterative BPE tokenizer training: ``rounds`` merge steps over the
+    corpus vocabulary (word -> count). Each round takes the most
+    frequent adjacent symbol pair (count desc, then pair asc) and
+    rewrites every word with a greedy left-to-right merge; training
+    stops early when no pair reaches ``min_count``. The (word, freq)
+    table comes to the driver in one action and ``_bpe_train_py``
+    trains there. Returns the merge table (round, pair, a, b, cnt) — k
+    rows, the training artifact a tokenizer ships; feed the (a, b)
+    columns to ``bpe_encode`` to tokenize a corpus with it.
 
-    Per round: (1) weighted adjacent-symbol-pair counts — an explode
-    over the VOCABULARY (shrunk by the token repetition factor), one
-    hash agg; (2) the argmax pair comes to the driver (one row — merge
-    DECISIONS are index metadata, the same driver-residency call as the
-    IVF codebook); (3) every vocab entry rewrites its symbol array with
-    a greedy left-to-right fold (F.aggregate, pure JVM) and the vocab
-    is localCheckpoint'ed so round k+1's plan does not replay rounds
-    1..k (the connected-components lineage rule). Stops early when no
-    pair reaches ``min_count``. Returns the merge table (round, pair,
-    a, b, cnt) — k rows, the training artifact a tokenizer ships; feed
-    the (a, b) columns to ``bpe_encode`` to tokenize a corpus with it.
-
-    No SQL oracle (iterative argmax is not one DuckDB query); exactness
-    is pinned against an independent Python BPE reference in
-    tests/test_functions.py::test_bpe_train_matches_python_reference."""
-    spark = df.sparkSession
-    vocab = _trainer_vocab(df, text_col)
-    merges: list[tuple] = []
-    for r in range(rounds):
-        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
-        pr = vocab.select(
-            F.explode(F.zip_with(F.slice("syms", 1, n1),
-                                 F.slice("syms", 2, n1),
-                                 lambda a, b: F.struct(a.alias("a"),
-                                                       b.alias("b"))))
-            .alias("p"), "tok_cnt")
-        best = (pr.groupBy("p").agg(F.sum("tok_cnt").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), F.col("p.a"), F.col("p.b"))
-                .first())
-        if best is None or best["cnt"] < min_count:
-            break
-        a, b = best["p"]["a"], best["p"]["b"]
-        # keep the pair SIDES alongside the concatenation: "the" could
-        # be t+he or th+e — bpe_encode needs the unambiguous (a, b)
-        merges.append((r, a + b, a, b, int(best["cnt"])))
-        # lazy: round r+1's argmax is the single consumer and
-        # materializes this rewrite inside its own job — halves the
-        # blocking jobs per round vs the eager form (the checkpoint
-        # still truncates lineage exactly the same once computed)
-        vocab = (vocab.select(_merge_fold("syms", a, b).alias("syms"),
-                              "tok_cnt")
-                 .localCheckpoint(eager=False))
-    return spark.createDataFrame(
+    Exactness is pinned against a from-scratch Python BPE reference in
+    tests/test_functions.py::test_bpe_train_matches_python_reference
+    and against the unrolled SQL replay of ``bpe_pipeline_oracle_sql``
+    (``bpe_train_merge_table``)."""
+    word_freqs = corpus_word_freq(df, text_col=text_col).collect()
+    # keep the pair SIDES alongside the concatenation: "the" could be
+    # t+he or th+e — bpe_encode needs the unambiguous (a, b)
+    merges = [(r, a + b, a, b, cnt) for r, (a, b, cnt)
+              in enumerate(_bpe_train_py(word_freqs, rounds, min_count))]
+    return df.sparkSession.createDataFrame(
         merges, "round int, pair string, a string, b string, cnt long")
 
 
-def _merge_fold(syms, a: str, b: str):
-    """One greedy left-to-right application of merge (a, b) over a
-    symbol array — the fold both trainers rewrite their vocabulary
-    with, reused by ``bpe_apply_merges`` so encode mirrors training
-    bit-for-bit."""
-    return F.aggregate(
-        syms, F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                     F.array(F.lit(a + b)))
-        ).otherwise(F.concat(acc, F.array(x))))
-
-
-def bpe_apply_merges(word, merges: list[tuple[str, str]]):
-    """Column expression: encode one (lowercased) word with a trained
-    merge table — split to characters, then apply each (a, b) merge in
-    rank order with the greedy left-to-right fold. Pure JVM (nested
-    higher-order functions), no Python in the hot path; expression
-    depth grows with len(merges), so this path is for the small merge
-    tables the distributed trainer produces — use ``bpe_encode(...,
-    vectorized=True)`` for shipped tokenizers with thousands of merges."""
-    syms = F.filter(F.split(word, ""), lambda x: x != "")
-    for a, b in merges:
-        syms = _merge_fold(syms, a, b)
-    return syms
-
-
 def bpe_encode(df, *, merges, text_col: str = "text",
-               out_col: str = "bpe_tokens", vectorized: bool = False):
+               out_col: str = "bpe_tokens"):
     """Apply a trained BPE merge table to a corpus: lowercase ->
     whitespace words (the trainer's pre-tokenization) -> per-word merge
-    folds -> flattened token array per document.
+    passes in rank order (``_bpe_encode_py``) -> flattened token array
+    per document, in one Arrow-batched pandas UDF whose cost is flat in
+    len(merges).
 
     ``merges`` is a list of (a, b) pairs in rank order — e.g.
     ``[(p[0], p[1:]) for p in bpe_train_merges(df)...]`` is WRONG
     (pair strings are ambiguous); pass the (a, b) tuples you trained
     with, or split the trainer's rows with the known boundary. The
     sequential-in-rank-order application contract matches
-    ``bpe_train_merges``'s vocabulary rewrite exactly (tested).
-
-    Two executions of the same semantics:
-      * default: nested JVM higher-order functions — zero Python,
-        whole-stage codegen, right for small trained tables;
-      * ``vectorized=True``: one Arrow-batched pandas UDF applying the
-        same folds in Python dicts — flat cost in len(merges), right
-        for real tokenizers (32k merges would blow up expression depth
-        and Catalyst analysis time JVM-side). Both paths are
-        parity-tested against each other and an independent reference.
-    """
-    words = tokens(F.lower(F.col(text_col)))
-    if not vectorized:
-        enc = F.flatten(F.transform(words, lambda w: bpe_apply_merges(w, merges)))
-        return df.withColumn(out_col, enc)
-
+    ``bpe_train_merges``'s vocabulary rewrite exactly (tested)."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     merge_list = list(merges)
 
     @pandas_udf("array<string>")
     def _enc(texts: pd.Series) -> pd.Series:
-        def one(t):
-            out = []
-            for w in (t or "").lower().split(" "):
-                if not w:
-                    continue
-                syms = list(w)
-                for a, b in merge_list:
-                    acc = []
-                    for x in syms:
-                        if acc and acc[-1] == a and x == b:
-                            acc[-1] = a + b
-                        else:
-                            acc.append(x)
-                    syms = acc
-                out.extend(syms)
-            return out
-        return texts.map(one)
+        return texts.map(lambda t: [
+            sym for w in (t or "").lower().split(" ") if w
+            for sym in _bpe_encode_py(w, merge_list)])
 
     return df.withColumn(out_col, _enc(F.col(text_col)))
 
@@ -409,7 +317,7 @@ def bpe_pipeline_oracle_sql(*, rounds: int, table: str = "documents",
     sentinels (``..|a||b|..``) and merge (a, b) rewrites
     ``|a||b|`` -> ``|ab|``. Because each symbol keeps one sentinel on
     each side, consecutive matches never share consumed characters, so
-    non-overlapping leftmost replace == the trainer's F.aggregate fold
+    non-overlapping leftmost replace == the trainer's greedy fold
     (edge cases incl. a == b runs pinned in
     tests/test_functions.py::test_bpe_oracle_replace_fold). chr(1)
     never occurs in the corpus (asserted cheaply by the gate query's
@@ -1132,11 +1040,10 @@ UNIGRAM_TOP_WORDS = 500  # segmentation report: most frequent words
 def unigram_scores(counts: dict) -> dict:
     """Integer log-prob scores (micro-units) from exact piece counts:
     score(p) = floor(ln(count/total) * 1e6). ONE CPython source of
-    truth — the driver computes this table once from the distributed
-    exact counts and broadcasts it; the per-SF oracle generator calls
-    the SAME function on independently-derived counts, so a drift in
-    either counting path breaks the gate (the zlib-oracle convention:
-    the replayed computation is identical, the READ path independent)."""
+    truth for the report and its per-SF oracle generator, which feeds it
+    word frequencies read through DuckDB's own tokenizer (the
+    zlib-oracle convention: the replayed computation is identical, the
+    READ path independent)."""
     import math
     total = sum(counts.values())
     return {p: int(math.floor(math.log(c / total) * 1_000_000))
@@ -1182,8 +1089,7 @@ def viterbi_segment(word: str, scores: dict,
 def _word_piece_counts(words_freq) -> dict:
     """Exact piece counts from (word, freq) pairs: every substring
     OCCURRENCE up to UNIGRAM_MAX_PIECE chars contributes the word's
-    corpus frequency. Pure-Python twin of the Spark explode; used by
-    the oracle generator."""
+    corpus frequency."""
     counts: dict = {}
     for w, f in words_freq:
         n = len(w)
@@ -1195,124 +1101,76 @@ def _word_piece_counts(words_freq) -> dict:
             if c >= UNIGRAM_MIN_COUNT or len(p) == 1}
 
 
-def unigram_piece_scores(freq, *, spark=None) -> dict:
-    """Integer log-prob piece-score table from a LENGTH-FILTERED
-    (word, freq) frame: distributed substring-occurrence counts (one
-    Arrow pass over DISTINCT words — vocab scale), then the shared
-    ``unigram_scores`` driver computation. The vocab-bounded collect is
-    index metadata (Heaps' law keeps it sublinear in corpus size) —
-    the tokenizer-model analogue of a codebook. Factored out of
-    ``unigram_segment_report`` so multi-trainer comparisons reuse a
-    shared frequency table instead of re-scanning the corpus."""
-    from typing import Iterator
-
-    def _pieces(batches: "Iterator[pd.DataFrame]") \
-            -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out_p, out_c = [], []
-            for w, f in zip(pdf["word"], pdf["freq"]):
-                n = len(w)
-                for i in range(n):
-                    for ln in range(1, min(UNIGRAM_MAX_PIECE, n - i) + 1):
-                        out_p.append(w[i:i + ln])
-                        out_c.append(int(f))
-            yield pd.DataFrame({"piece": out_p, "c": out_c})
-
-    pc = (freq.mapInPandas(_pieces, schema="piece string, c long")
-          .groupBy("piece").agg(F.sum("c").alias("c"))
-          .where((F.col("c") >= UNIGRAM_MIN_COUNT)
-                 | (F.length("piece") == 1)))
-    counts = {r["piece"]: r["c"] for r in pc.collect()}
-    return unigram_scores(counts)
+def _unigram_rows(word_freqs) -> list:
+    """The unigram segmentation report computed in memory from (word,
+    freq) rows: piece counts and scores over the words of length <=
+    UNIGRAM_MAX_WORD, then the Viterbi segmentation of the
+    UNIGRAM_TOP_WORDS most frequent of them. One helper for the report
+    and its oracle generator."""
+    eligible = [(w, f) for w, f in word_freqs if len(w) <= UNIGRAM_MAX_WORD]
+    scores = unigram_scores(_word_piece_counts(eligible))
+    top = sorted(eligible, key=lambda r: (-r[1], r[0]))[:UNIGRAM_TOP_WORDS]
+    rows = []
+    for w, f in top:
+        pieces, sc = viterbi_segment(w, scores)
+        rows.append((w, f, "|".join(pieces), len(pieces), sc))
+    return rows
 
 
-def unigram_segment_report(df, *, text_col: str = "text",
-                           word_freq=None) -> "DataFrame":
+def unigram_segment_report(df, *, text_col: str = "text") -> "DataFrame":
     """SentencePiece-style unigram-LM tokenizer over the corpus, end to
-    end: exact piece counts (distributed) -> integer log-prob scores
-    (driver, vocab-bounded index metadata — the same decision class as
-    an IVF codebook collect) -> Viterbi max-likelihood segmentation of
-    the UNIGRAM_TOP_WORDS most frequent words. The non-greedy sibling
-    of the BPE family: BPE commits to merges greedily, the unigram LM
-    picks each word's globally best segmentation under the corpus
-    distribution.
+    end: exact piece counts -> integer log-prob scores -> Viterbi
+    max-likelihood segmentation of the UNIGRAM_TOP_WORDS most frequent
+    words. The non-greedy sibling of the BPE family: BPE commits to
+    merges greedily, the unigram LM picks each word's globally best
+    segmentation under the corpus distribution.
 
-    Scale shape: tokenization + word counts are one scan + one
-    word-grain shuffle; piece explosion runs over DISTINCT words (vocab
-    scale, Heaps-sublinear) in one Arrow pass; the segmentation DP runs
-    on 500 rows. Scores are exact ints; ties broken by (fewer pieces,
+    Plan: the (word, freq) table comes to the driver in one action and
+    ``_unigram_rows`` (the helper the oracle replays) computes the
+    report there. Scores are exact ints; ties broken by (fewer pieces,
     lexicographic) — partitioning-independent by construction."""
-    from typing import Iterator
-
-    if word_freq is None:
-        toks = (df.select(F.explode(F.split(F.lower(F.col(text_col)), " "))
-                          .alias("word"))
-                .where((F.col("word") != "")
-                       & (F.length("word") <= UNIGRAM_MAX_WORD)))
-        freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    else:
-        # shared-scan path: the length filter commutes with the word-
-        # grain agg (it filters on the group key), so filtering the
-        # pre-computed table is exactly the scratch derivation
-        freq = word_freq.where(F.length("word") <= UNIGRAM_MAX_WORD)
-    from ..plans.caching import track_persist
-    freq = track_persist(freq)
-    scores = unigram_piece_scores(freq)
-
-    top = (freq.orderBy(F.col("freq").desc(), "word")
-           .limit(UNIGRAM_TOP_WORDS))
-
-    def _segment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            words, freqs, segs, nps, scs = [], [], [], [], []
-            for w, f in zip(pdf["word"], pdf["freq"]):
-                pieces, sc = viterbi_segment(w, scores)
-                words.append(w)
-                freqs.append(int(f))
-                segs.append("|".join(pieces))
-                nps.append(len(pieces))
-                scs.append(sc)
-            yield pd.DataFrame({
-                "word": words, "freq": pd.Series(freqs, dtype="int64"),
-                "segmentation": segs,
-                "n_pieces": pd.Series(nps, dtype="int32"),
-                "score_micro": pd.Series(scs, dtype="int64")})
-
-    return top.mapInPandas(_segment, schema=(
+    word_freqs = corpus_word_freq(df, text_col=text_col).collect()
+    return df.sparkSession.createDataFrame(
+        _unigram_rows(word_freqs),
         "word string, freq long, segmentation string, n_pieces int, "
-        "score_micro long"))
+        "score_micro long")
+
+
+def _duckdb_word_freq(sf_dir: str, table: str, text_col: str,
+                      max_len: int | None = None) -> list:
+    """(word, freq) rows of a parquet table through DuckDB's own
+    tokenizer chain (lowercase, split on ' ', drop empties) — the read
+    path the tokenizer oracles keep independent of Spark's. ``max_len``
+    drops longer words."""
+    import os
+
+    import duckdb
+
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    where = "" if max_len is None else f"WHERE len(word) <= {max_len}"
+    with duckdb.connect() as con:
+        return con.execute(f"""
+            SELECT word, count(*)::BIGINT AS freq FROM (
+              SELECT unnest(list_filter(string_split(lower({text_col}), ' '),
+                                        x -> x <> '')) AS word
+              FROM read_parquet('{path}'))
+            {where}
+            GROUP BY word
+        """).fetchall()
 
 
 def unigram_oracle_sql(sf_dir: str, *, table: str = "documents",
                        text_col: str = "text") -> str:
     """Per-SF generated oracle for unigram_segment_report: word
     frequencies come from DuckDB's own tokenizer chain (independent of
-    Spark's scan/split), piece counting from the pure-Python twin, then
-    the IDENTICAL score + Viterbi functions replay the segmentation and
-    the results bake into a VALUES table."""
-    import os
-
-    import duckdb
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    con = duckdb.connect()
-    wf = con.execute(f"""
-        SELECT word, count(*)::BIGINT AS freq FROM (
-          SELECT unnest(list_filter(string_split(lower({text_col}), ' '),
-                                    x -> x <> '')) AS word
-          FROM read_parquet('{path}'))
-        WHERE len(word) <= {UNIGRAM_MAX_WORD}
-        GROUP BY word
-    """).fetchall()
-    counts = _word_piece_counts(wf)
-    scores = unigram_scores(counts)
-    top = sorted(wf, key=lambda r: (-r[1], r[0]))[:UNIGRAM_TOP_WORDS]
+    Spark's scan/split), then ``_unigram_rows`` replays the counts,
+    scores and segmentation and the results bake into a VALUES table."""
+    wf = _duckdb_word_freq(sf_dir, table, text_col, UNIGRAM_MAX_WORD)
     rows = []
-    for w, f in top:
-        pieces, sc = viterbi_segment(w, scores)
+    for w, f, seg, n, sc in _unigram_rows(wf):
         esc_w = w.replace("'", "''")
-        esc_s = "|".join(pieces).replace("'", "''")
-        rows.append(f"('{esc_w}', {f}, '{esc_s}', {len(pieces)}, {sc})")
+        esc_s = seg.replace("'", "''")
+        rows.append(f"('{esc_w}', {f}, '{esc_s}', {n}, {sc})")
     vals = ",\n".join(rows)
     return f"""SELECT word::VARCHAR AS word, freq::BIGINT AS freq,
        segmentation::VARCHAR AS segmentation, n_pieces::INT AS n_pieces,
@@ -1392,113 +1250,37 @@ def rake_keyphrases(df, *, text_col: str = "text", id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 #: fixed-point scale for the WordPiece pair-likelihood score
-#: cnt(ab)/(cnt(a)*cnt(b)) — integer micro-units so argmax ordering is
-#: engine-exact. int64-safe while cnt(ab) < 9.2e6 and token volume
-#: < 3e9 (den = cnt(a)*cnt(b)); beyond that switch the score to
-#: decimal(38) — the DECISION stays a one-row driver fetch either way.
+#: cnt(ab)/(cnt(a)*cnt(b)) — integer micro-units so the argmax ordering
+#: is exact; Python big ints keep the arithmetic exact at any corpus
+#: size (the score itself is <= 1e12, since cnt(ab) <= cnt(a)).
 _WP_SCORE_SCALE = 10 ** 12
 
 
 def wordpiece_train_merges(df, *, text_col: str = "text",
                            rounds: int = 5, min_count: int = 2):
-    """WordPiece tokenizer training, distributed: like
-    ``bpe_train_merges`` (same vocabulary loop, same greedy
-    left-to-right rewrite fold) but the merge DECISION maximizes the
-    likelihood score cnt(ab) / (cnt(a) * cnt(b)) (Schuster & Nakajima
-    2012; the BERT trainer) instead of raw pair frequency — rare-but-
-    predictive pairs win over merely common ones.
-
-    Per round: weighted pair counts AND weighted symbol counts off the
-    same vocabulary (two hash aggs over the token-TYPE table, shrunk by
-    the repetition factor); symbol counts broadcast back onto pair rows
-    (symbol table is alphabet+rounds bounded); pairs below
-    ``min_count`` are dropped BEFORE the argmax — a raw likelihood
-    argmax would always pick singleton pairs, whose tiny denominators
-    dominate the score; argmax on integer micro-score with
-    (score desc, a, b) tie-break comes to the driver (one row — index
-    metadata); vocab rewrites via the shared ``_merge_fold`` and
-    localCheckpoints so round k+1 does not replay rounds 1..k. Stops
-    early when no candidate remains.
+    """WordPiece tokenizer training: like ``bpe_train_merges`` (same
+    vocabulary, same greedy left-to-right rewrite) but the merge
+    DECISION maximizes the likelihood score cnt(ab) / (cnt(a) * cnt(b))
+    (Schuster & Nakajima 2012; the BERT trainer) instead of raw pair
+    frequency — rare-but-predictive pairs win over merely common ones.
+    Pairs below ``min_count`` are dropped BEFORE the argmax (a raw
+    likelihood argmax would always pick singleton pairs, whose tiny
+    denominators dominate the score); ties break on (score desc, a, b).
+    Stops early when no candidate remains. The (word, freq) table comes
+    to the driver in one action and ``_wp_train_py`` trains there.
     Returns (round, piece, a, b, cnt, score_micro).
 
-    int64 SAFETY IS ENFORCED, not documented: the total symbol volume V
-    bounds every cnt/ca/cb, so when V < 9.2e6 the int64 micro-score is
-    provably overflow-free (cnt*1e12 <= V*1e12 < 9.2e18 and
-    ca*cb <= V^2 << 9.2e18) and runs in the fast path; larger corpora
-    switch the score expression to DECIMAL(38,0) arithmetic whose `div`
-    matches Python big-int floor division exactly (tested) — wrong
-    merges from a silent int64 wrap can no longer happen.
-
-    No single-query SQL oracle (iterative argmax); exactness is pinned
-    against an independent Python twin in tests and the
-    ``wordpiece_segment_report`` gate query bakes the twin's replay
-    into a generated VALUES oracle per SF."""
+    Exactness is pinned against a from-scratch Python trainer in tests,
+    and the ``wordpiece_segment_report`` gate query bakes the replay
+    into a generated VALUES oracle per SF over DuckDB-read word
+    frequencies."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    spark = df.sparkSession
-    vocab = _trainer_vocab(df, text_col)
-    vol_row = vocab.agg(F.sum(F.col("tok_cnt") * F.size("syms"))
-                        .alias("v")).first()
-    volume = int(vol_row["v"] or 0)
-    if volume < 9_200_000:
-        score_expr = F.expr(f"(cnt * {_WP_SCORE_SCALE}) div (ca * cb)")
-    else:
-        # DECIMAL(38,0) holds cnt*1e12 (<= 9.2e30) and ca*cb
-        # (<= 8.5e37); decimal `div` truncates like Python //
-        score_expr = F.expr(
-            f"(CAST(cnt AS DECIMAL(38,0)) * {_WP_SCORE_SCALE}) div "
-            f"(CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)))")
-    merges: list[tuple] = []
-    for r in range(rounds):
-        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
-        # ONE tagged-union explode carries both the adjacent-pair rows
-        # (kind 'p') and the symbol rows (kind 's') through a single
-        # scan of the vocabulary and a single
-        # hash agg — r9: the former two-agg form scanned vocab twice
-        # per round, which also forced an EAGER per-round checkpoint
-        # (two concurrent consumers of a lazy one double-compute the
-        # merge fold); with a single consumer the checkpoint goes lazy
-        # and each round collapses to exactly one blocking job. The
-        # '' sentinel in b cannot collide: '' is never a symbol.
-        pair_structs = F.zip_with(
-            F.slice("syms", 1, n1), F.slice("syms", 2, n1),
-            lambda a, b: F.struct(F.lit("p").alias("k"), a.alias("a"),
-                                  b.alias("b")))
-        sym_structs = F.transform(
-            "syms", lambda s: F.struct(F.lit("s").alias("k"),
-                                       s.alias("a"), F.lit("").alias("b")))
-        ex = vocab.select(
-            F.explode(F.concat(pair_structs, sym_structs)).alias("x"),
-            "tok_cnt")
-        counts = ex.groupBy("x").agg(F.sum("tok_cnt").alias("n"))
-        pairs = (counts.where(F.col("x.k") == "p")
-                 .select(F.struct(F.col("x.a").alias("a"),
-                                  F.col("x.b").alias("b")).alias("p"),
-                         F.col("n").alias("cnt")))
-        syms = counts.where(F.col("x.k") == "s").select(
-            F.col("x.a").alias("s"), F.col("n").alias("sc"))
-        cand = (pairs
-                .join(F.broadcast(syms.select(F.col("s").alias("__a"),
-                                              F.col("sc").alias("ca"))),
-                      F.col("p.a") == F.col("__a"))
-                .join(F.broadcast(syms.select(F.col("s").alias("__b"),
-                                              F.col("sc").alias("cb"))),
-                      F.col("p.b") == F.col("__b"))
-                .where(F.col("cnt") >= min_count)
-                .withColumn("score_micro", score_expr))
-        best = (cand.orderBy(F.col("score_micro").desc(),
-                             F.col("p.a"), F.col("p.b")).first())
-        if best is None:
-            break
-        a, b = best["p"]["a"], best["p"]["b"]
-        merges.append((r, a + b, a, b, int(best["cnt"]),
-                       int(best["score_micro"])))
-        vocab = (vocab.select(_merge_fold("syms", a, b).alias("syms"),
-                              "tok_cnt")
-                 .localCheckpoint(eager=False))
-    return spark.createDataFrame(
-        merges, "round int, piece string, a string, b string, cnt long, "
-                "score_micro long")
+    word_freqs = corpus_word_freq(df, text_col=text_col).collect()
+    return df.sparkSession.createDataFrame(
+        _wp_train_py(word_freqs, rounds, min_count),
+        "round int, piece string, a string, b string, cnt long, "
+        "score_micro long")
 
 
 def _wp_greedy(word: str, pieces: set, maxlen: int) -> list:
@@ -1507,8 +1289,8 @@ def _wp_greedy(word: str, pieces: set, maxlen: int) -> list:
     in the trained vocabulary, falling back to the single character
     (every corpus character is implicitly in-vocab, so no [UNK] arises
     on the training corpus itself); continuation pieces carry the
-    BERT '##' display prefix. Pure function — shared verbatim by the
-    Spark encoder and the DuckDB oracle generator."""
+    BERT '##' display prefix. Pure function — shared by the report
+    and its oracle generator."""
     out, pos = [], 0
     while pos < len(word):
         ln = min(maxlen, len(word) - pos)
@@ -1521,9 +1303,9 @@ def _wp_greedy(word: str, pieces: set, maxlen: int) -> list:
 
 
 def _wp_train_py(word_freqs, rounds: int, min_count: int = 2) -> list:
-    """Independent pure-Python WordPiece trainer twin (exact big-int
-    arithmetic) — the oracle generator's replay of
-    ``wordpiece_train_merges``. Input: (word, freq) rows."""
+    """Pure-Python WordPiece trainer (exact big-int arithmetic) behind
+    ``wordpiece_train_merges`` and the oracle generators. Input:
+    (word, freq) rows; output (round, piece, a, b, cnt, score_micro)."""
     from collections import Counter
     vocab = Counter()
     for w, c in word_freqs:
@@ -1562,6 +1344,21 @@ _WP_ROUNDS = 6
 _WP_TOP_WORDS = 40
 
 
+def _wordpiece_rows(word_freqs, rounds: int, top_words: int) -> list:
+    """The WordPiece segmentation report computed in memory from
+    (word, freq) rows: train ``rounds`` merges, then segment the
+    ``top_words`` most frequent words with ``_wp_greedy``. One helper
+    for the report and its oracle generator."""
+    pieces = {m[1] for m in _wp_train_py(word_freqs, rounds=rounds)}
+    maxlen = max((len(p) for p in pieces), default=1)
+    top = sorted(word_freqs, key=lambda r: (-r[1], r[0]))[:top_words]
+    rows = []
+    for w, f in top:
+        seg = "|".join(_wp_greedy(w, pieces, maxlen))
+        rows.append((w, f, seg, seg.count("|") + 1))
+    return rows
+
+
 def wordpiece_segment_report(df, *, text_col: str = "text",
                              rounds: int = _WP_ROUNDS,
                              top_words: int = _WP_TOP_WORDS):
@@ -1574,61 +1371,27 @@ def wordpiece_segment_report(df, *, text_col: str = "text",
     different (sometimes longer) segmentation — that divergence is the
     reason real tokenizers ship the inference rule with the vocab.
 
-    Plan: training as ``wordpiece_train_merges`` (the merge table is
-    driver metadata, rounds rows); word frequencies are one hash agg
-    over exploded tokens; top-k is a TakeOrdered (never a global
-    sort); segmentation is an Arrow-batched pandas UDF over the K
-    surviving rows."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    merges = wordpiece_train_merges(df, text_col=text_col, rounds=rounds)
-    pieces = {r["piece"] for r in merges.collect()}  # bounded: <= rounds
-    maxlen = max((len(p) for p in pieces), default=1)
-
-    @pandas_udf("string")
-    def _seg(words: pd.Series) -> pd.Series:
-        return words.map(
-            lambda w: "|".join(_wp_greedy(w or "", pieces, maxlen)))
-
-    freq = (df.select(F.explode(tokens(F.lower(F.col(text_col))))
-                      .alias("word"))
-            .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-            .orderBy(F.col("freq").desc(), "word").limit(top_words))
-    out = freq.withColumn("segmentation", _seg(F.col("word")))
-    return out.withColumn(
-        "n_pieces", F.size(F.split("segmentation", r"\|")).cast("int"))
+    Plan: the (word, freq) table comes to the driver in one action and
+    ``_wordpiece_rows`` (the helper the oracle replays) trains and
+    segments there."""
+    word_freqs = corpus_word_freq(df, text_col=text_col).collect()
+    return df.sparkSession.createDataFrame(
+        _wordpiece_rows(word_freqs, rounds, top_words),
+        "word string, freq long, segmentation string, n_pieces int")
 
 
 def wordpiece_oracle_sql(sf_dir: str, *, table: str = "documents",
                          text_col: str = "text") -> str:
     """Per-SF generated oracle for wordpiece_segment_report: word
-    frequencies come from DuckDB's own tokenizer chain, the merge table
-    from the pure-Python big-int trainer twin, segmentation from the
-    SAME ``_wp_greedy`` function, and the results bake into a VALUES
-    table."""
-    import os
-
-    import duckdb
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    con = duckdb.connect()
-    wf = con.execute(f"""
-        SELECT word, count(*)::BIGINT AS freq FROM (
-          SELECT unnest(list_filter(string_split(lower({text_col}), ' '),
-                                    x -> x <> '')) AS word
-          FROM read_parquet('{path}'))
-        GROUP BY word
-    """).fetchall()
-    merges = _wp_train_py(wf, rounds=_WP_ROUNDS)
-    pieces = {m[1] for m in merges}
-    maxlen = max((len(p) for p in pieces), default=1)
-    top = sorted(wf, key=lambda r: (-r[1], r[0]))[:_WP_TOP_WORDS]
+    frequencies come from DuckDB's own tokenizer chain, then
+    ``_wordpiece_rows`` replays training and segmentation and the
+    results bake into a VALUES table."""
+    wf = _duckdb_word_freq(sf_dir, table, text_col)
     rows = []
-    for w, f in top:
-        seg = "|".join(_wp_greedy(w, pieces, maxlen))
+    for w, f, seg, n in _wordpiece_rows(wf, _WP_ROUNDS, _WP_TOP_WORDS):
         esc_w = w.replace("'", "''")
         esc_s = seg.replace("'", "''")
-        rows.append(f"('{esc_w}', {f}, '{esc_s}', {seg.count('|') + 1})")
+        rows.append(f"('{esc_w}', {f}, '{esc_s}', {n})")
     vals = ",\n".join(rows)
     return f"""SELECT word::VARCHAR AS word, freq::BIGINT AS freq,
        segmentation::VARCHAR AS segmentation, n_pieces::INT AS n_pieces
@@ -1644,9 +1407,10 @@ FROM (VALUES
 # ---------------------------------------------------------------------------
 
 def _bpe_train_py(word_freqs, rounds: int, min_count: int = 2) -> list:
-    """Independent pure-Python BPE trainer twin (frequency argmax,
-    count-desc/pair-asc tie-break) — mirrors ``bpe_train_merges``;
-    used by the tokenizer-compare oracle generator."""
+    """Pure-Python BPE trainer (frequency argmax, count-desc/pair-asc
+    tie-break) behind ``bpe_train_merges`` and the tokenizer-compare
+    report. Input: (word, freq) rows; output (a, b, cnt) per merge in
+    rank order."""
     from collections import Counter
     vocab = Counter()
     for w, c in word_freqs:
@@ -1662,7 +1426,7 @@ def _bpe_train_py(word_freqs, rounds: int, min_count: int = 2) -> list:
         (a, b), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
         if cnt < min_count:
             break
-        merges.append((a, b))
+        merges.append((a, b, cnt))
         new_vocab = Counter()
         for syms, c in vocab.items():
             new_vocab[tuple(_bpe_apply_py_syms(list(syms), a, b))] += c
@@ -1671,8 +1435,8 @@ def _bpe_train_py(word_freqs, rounds: int, min_count: int = 2) -> list:
 
 
 def _bpe_apply_py_syms(syms: list, a: str, b: str) -> list:
-    """One greedy left-to-right (a, b) merge pass — the exact
-    ``_merge_fold`` semantics in Python."""
+    """One greedy left-to-right (a, b) merge pass — the rewrite BPE
+    training and encoding share."""
     out = []
     for x in syms:
         if out and out[-1] == a and x == b:
@@ -1683,8 +1447,8 @@ def _bpe_apply_py_syms(syms: list, a: str, b: str) -> list:
 
 
 def _bpe_encode_py(word: str, merges: list) -> list:
-    """Encode one word with a rank-ordered merge table — the
-    ``bpe_apply_merges`` fold in Python."""
+    """Encode one word with a rank-ordered (a, b) merge table: one
+    ``_bpe_apply_py_syms`` pass per merge."""
     syms = list(word)
     for a, b in merges:
         syms = _bpe_apply_py_syms(syms, a, b)
@@ -1698,13 +1462,14 @@ _TKC_TOP_WORDS = 40
 
 def _fertility_rows(word_freqs, rounds: int, top_words: int) -> list:
     """The compare report computed in memory from (word, freq) rows:
-    the three pure-Python trainer twins, then every family's pieces over
+    the three pure-Python trainers, then every family's pieces over
     the shared eval set. One helper for the report and its oracle
     generator; an empty eval set prices at 0 pieces and 0 fertility."""
     eligible = [(w, f) for w, f in word_freqs if len(w) <= UNIGRAM_MAX_WORD]
     top = sorted(eligible, key=lambda r: (-r[1], r[0]))[:top_words]
 
-    bpe_merges = _bpe_train_py(word_freqs, rounds=rounds)
+    bpe_merges = [(a, b) for a, b, _ in
+                  _bpe_train_py(word_freqs, rounds=rounds)]
     wp_pieces = {m[1] for m in _wp_train_py(word_freqs, rounds=rounds)}
     wp_maxlen = max((len(p) for p in wp_pieces), default=1)
     scores = unigram_scores(_word_piece_counts(eligible))
@@ -1738,14 +1503,14 @@ def tokenizer_fertility_compare(df, *, text_col: str = "text",
     which comes to the driver in one action; the three trainers and the
     eval-set scoring then run there (``_fertility_rows``, the same
     helper the oracle replays) — a handful of jobs in place of a
-    multi-job argmax per merge round. The distributed trainers lost to
-    it at every vocabulary measured on a 4-core host (random a-z words
-    of 3-12 letters; wall / process-tree CPU, driver vs distributed):
-    10^4 words 2.0 s / 5.3 s vs 13.0 s / 37.9 s, 10^5 words 15.1 s /
-    19.4 s vs 25.6 s / 80.0 s, 10^6 words 114.8 s / 120.5 s vs 159.0 s /
-    525.0 s (~450 MB of driver heap). The encode-a-corpus cost this
-    report predicts is NOT paid here — that is what the number is
-    for."""
+    multi-job argmax per merge round. The distributed trainers it
+    replaced lost to it at every vocabulary measured on a 4-core host
+    (random a-z words of 3-12 letters; wall / process-tree CPU, driver
+    vs distributed): 10^4 words 2.0 s / 5.3 s vs 13.0 s / 37.9 s, 10^5
+    words 15.1 s / 19.4 s vs 25.6 s / 80.0 s, 10^6 words 114.8 s /
+    120.5 s vs 159.0 s / 525.0 s (~450 MB of driver heap). The
+    encode-a-corpus cost this report predicts is NOT paid here — that
+    is what the number is for."""
     word_freqs = corpus_word_freq(df, text_col=text_col).collect()
     return df.sparkSession.createDataFrame(
         _fertility_rows(word_freqs, rounds, top_words),
@@ -1757,22 +1522,9 @@ def tokenizer_compare_oracle_sql(sf_dir: str, *, table: str = "documents",
                                  text_col: str = "text") -> str:
     """Per-SF generated oracle for tokenizer_fertility_compare: word
     frequencies from DuckDB's own tokenizer chain, all three trainers
-    replayed by their independent pure-Python twins
-    (``_fertility_rows``), fertilities baked into a 3-row VALUES
-    table."""
-    import os
-
-    import duckdb
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    con = duckdb.connect()
-    wf = con.execute(f"""
-        SELECT word, count(*)::BIGINT AS freq FROM (
-          SELECT unnest(list_filter(string_split(lower({text_col}), ' '),
-                                    x -> x <> '')) AS word
-          FROM read_parquet('{path}'))
-        GROUP BY word
-    """).fetchall()
+    replayed by ``_fertility_rows``, fertilities baked into a 3-row
+    VALUES table."""
+    wf = _duckdb_word_freq(sf_dir, table, text_col)
     rows = [f"('{name}', {n}, {pieces}, {fert})" for name, n, pieces, fert
             in _fertility_rows(wf, _TKC_ROUNDS, _TKC_TOP_WORDS)]
     vals = ",\n".join(rows)

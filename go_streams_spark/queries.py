@@ -6408,9 +6408,10 @@ def k_core_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("bpe_encode_corpus", T.bpe_pipeline_oracle_sql(rounds=6))
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full BPE loop: train a merge table on the corpus
-    (text.bpe_train_merges, 6 rounds) and ENCODE the corpus with it
-    (text.bpe_encode — per-word greedy merge folds, pure JVM
-    higher-order functions, zero Python in the encode hot path).
+    (text.bpe_train_merges, 6 rounds, on the driver from one collect
+    of the (word, freq) table) and ENCODE the corpus with it
+    (text.bpe_encode — per-word greedy merge passes in one
+    Arrow-batched pandas UDF).
     Hash-checked against a generated chained-CTE oracle
     (text.bpe_pipeline_oracle_sql) that unrolls all 6 training rounds
     and replays the greedy fold as sentinel-string replaces — training
@@ -6422,12 +6423,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     table = T.bpe_train_merges(docs, rounds=6).collect()
     merges = [(r["a"], r["b"]) for r in sorted(table, key=lambda r: r["round"])]
-    # vectorized=True: the corpus-scale encode runs the Arrow pandas
-    # path — measured 7x faster than the nested JVM transform fold at
-    # sf0.1 (the expression tree is interpreted per row; the Arrow path
-    # amortizes per batch). Both paths are parity-tested
-    # (test_bpe_encode_paths_agree), so the oracle is unchanged.
-    enc = T.bpe_encode(docs, merges=merges, vectorized=True)
+    enc = T.bpe_encode(docs, merges=merges)
     return (enc.select("doc_id", F.size("bpe_tokens").alias("n_bpe"),
                        F.concat_ws("|", F.slice("bpe_tokens", 1, 8))
                        .alias("head_preview"))
@@ -8869,9 +8865,10 @@ def semdedup_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
        T.bpe_pipeline_oracle_sql(rounds=8, emit="merges"))
 def bpe_train_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE tokenizer training over the documents corpus: 8
-    merge rounds, each = vocabulary-grain pair count + driver argmax +
-    JVM fold rewrite + localCheckpoint (lineage truncation).
-    Hash-checked against the generated unrolled-training oracle
+    merge rounds (most frequent adjacent pair, greedy left-to-right
+    rewrite), trained on the driver from one collect of the corpus
+    (word, freq) table. Hash-checked against the generated
+    unrolled-training oracle
     (text.bpe_pipeline_oracle_sql emit="merges" — sentinel-string
     replaces replay the greedy fold); independent Python-trainer parity
     additionally pinned by
@@ -10702,17 +10699,16 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded tokens per whitespace word — the standard multilingual
     tokenizer-equity report (high fertility = that language pays more
     sequence length per word; re-balance the merge training mix). Runs
-    the real train(6 rounds)+encode loop and rolls up at lang grain;
-    oracle = the BPE chained-CTE replay wrapped in the same rollup
-    (integer sums, one rounded division)."""
+    the real train(6 rounds, on the driver)+encode(Arrow pandas UDF)
+    loop and rolls up at lang grain; oracle = the BPE chained-CTE
+    replay wrapped in the same rollup (integer sums, one rounded
+    division)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     table = T.bpe_train_merges(docs.select("doc_id", "text"),
                                rounds=6).collect()
     merges = [(r["a"], r["b"])
               for r in sorted(table, key=lambda r: r["round"])]
-    # Arrow-vectorized encode: 7x over the JVM fold at corpus scale
-    # (see bpe_encode_corpus); parity between paths is test-pinned
-    enc = T.bpe_encode(docs, merges=merges, vectorized=True)
+    enc = T.bpe_encode(docs, merges=merges)
     return (enc.select(
         "lang", F.size("bpe_tokens").alias("n_bpe"),
         F.size(F.filter(F.split("text", " "), lambda x: x != ""))
@@ -11822,36 +11818,40 @@ def attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("unigram_lm_segment", T.unigram_oracle_sql)
 def unigram_lm_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SentencePiece-style unigram-LM tokenizer (functions/text.py::
-    unigram_segment_report): exact distributed piece counts -> integer
-    log-prob scores (vocab-bounded driver table, the codebook decision
-    class) -> Viterbi max-likelihood segmentation of the 500 most
+    unigram_segment_report): one collect of the corpus (word, freq)
+    table, then on the driver exact piece counts -> integer log-prob
+    scores -> Viterbi max-likelihood segmentation of the 500 most
     frequent corpus words, with deterministic tie-breaks (fewer pieces,
     then lexicographic). The non-greedy sibling of the BPE family —
     together they cover both dominant subword-tokenizer architectures.
     PER-SF generated oracle: DuckDB re-derives the word frequencies
-    through its own tokenizer chain, the pure-Python twin recounts the
-    pieces, and the identical score/Viterbi functions replay the
-    segmentation into a VALUES table — a drift in either counting path
-    or the DP breaks the hash."""
+    through its own tokenizer chain and the same in-memory helper
+    replays counts, scores and segmentation into a VALUES table — a
+    drift in Spark's tokenize/count path breaks the hash; the counting
+    and the DP are pinned by hand-computed values in
+    tests/test_functions.py::test_unigram_lm_segments_frequent_word_whole."""
     docs = _t(spark, sf_dir, "documents")
     return T.unigram_segment_report(docs)
 
 
 @query("wordpiece_segment_report", T.wordpiece_oracle_sql)
 def wordpiece_segment_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece tokenizer (functions/text.py::wordpiece_train_merges +
-    greedy longest-match encode): merges chosen by the LIKELIHOOD score
-    cnt(ab)/(cnt(a)*cnt(b)) (Schuster & Nakajima 2012, the BERT
-    trainer) rather than BPE's raw frequency, then the top-40 corpus
-    words segmented with maximal munch and '##' continuation prefixes.
+    """WordPiece tokenizer (functions/text.py::wordpiece_segment_report,
+    trained on the driver from one collect of the corpus (word, freq)
+    table, then greedy longest-match encode): merges chosen by the
+    LIKELIHOOD score cnt(ab)/(cnt(a)*cnt(b)) (Schuster & Nakajima 2012,
+    the BERT trainer) rather than BPE's raw frequency, then the top-40
+    corpus words segmented with maximal munch and '##' continuation
+    prefixes.
     Completes the tokenizer triad — BPE (frequency merge, rank-order
     encode), unigram-LM (Viterbi), WordPiece (likelihood merge, greedy
     encode) — on one corpus with one report shape. PER-SF generated
     oracle: DuckDB re-derives word frequencies through its own
-    tokenizer chain, an independent pure-Python big-int trainer twin
-    replays the merge decisions, and the SAME greedy segmenter bakes
-    the expected rows into a VALUES table — a drift in scoring,
-    tie-break, or the munch rule breaks the hash."""
+    tokenizer chain and the same in-memory helper replays training and
+    segmentation into a VALUES table — a drift in Spark's
+    tokenize/count path breaks the hash; scoring, tie-break and the
+    munch rule are pinned against from-scratch references in
+    tests/test_functions.py."""
     docs = _t(spark, sf_dir, "documents")
     return T.wordpiece_segment_report(docs)
 
