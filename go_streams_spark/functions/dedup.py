@@ -1246,7 +1246,7 @@ def dedup_method_eval(df: DataFrame, *, text_col: str = "text",
     is the quantified cost of that mismatch). Every pair set is a
     bucketed equi-join; the report aggregates are pair-grain counts.
     """
-    from .text import winnow_fingerprints
+    from .text import capped_winnow_fingerprints
 
     # ONE shingle build feeds the exact ground truth and the MinHash
     # blocker (r9: each previously re-derived its own shingle rows —
@@ -1270,19 +1270,7 @@ def dedup_method_eval(df: DataFrame, *, text_col: str = "text",
            .select(F.col(f"a.{id_col}").alias("id_a"),
                    F.col(f"b.{id_col}").alias("id_b"))
            .distinct())
-    fp = winnow_fingerprints(df, text_col=text_col, id_col=id_col,
-                             ngram=3, window=4).select(id_col, "fp_hash")
-    # doc-frequency cap via partial aggregate + merge join on the
-    # PRE-FILTERED key set — the SKEW-SAFE shape (r10 restores the r8
-    # form per the r9 verdict; guide §2.5): a count-over-window buffers
-    # every occurrence of a boilerplate fingerprint (power-law key) in
-    # ONE window task, and AQE skew handling never applies to window
-    # exchanges. Hot keys drop from the aggregate OUTPUT before the
-    # join. Same rows. (Persisting fp measured 2x slower at sf0.1 —
-    # cache-fill barrier > recomputing the pipeline once per side.)
-    rare = (fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") <= 20).select("fp_hash"))
-    f2 = fp.join(rare.hint("merge"), "fp_hash")  # fingerprint-grain
+    f2 = capped_winnow_fingerprints(df, text_col=text_col, id_col=id_col)
     fa = f2.select(F.col(id_col).alias("id_a"), "fp_hash")
     fb = f2.select(F.col(id_col).alias("id_b"), "fp_hash")
     wn = (fa.join(fb, "fp_hash")

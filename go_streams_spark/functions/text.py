@@ -897,9 +897,10 @@ def winnow_fingerprints(df, *, text_col: str = "text",
     unspecified arg-min tie rule. Caps: docs up to 2^20 grams
     (enforced by a per-row assert_true; shard longer docs upstream).
     Plan: posexplode ->
-    lead-stitched grams (one shuffle on the doc id) -> two window
-    passes -> distinct; fingerprint volume is ~2/(window+1) of gram
-    volume by the winnowing density bound.
+    lead-stitched grams (one shuffle on the doc id) -> three window
+    passes (lead, per-doc gram count, windowed min) -> distinct;
+    fingerprint volume is ~2/(window+1) of gram volume by the
+    winnowing density bound.
 
     Returns (id, fp_hash, fp_pos) — distinct selected fingerprints
     with the position of their first selection.
@@ -944,6 +945,44 @@ def winnow_fingerprints(df, *, text_col: str = "text",
         (F.col("wmin") % F.lit(1_048_576)).cast("int").alias("fp_pos"))
     return out.groupBy(id_col, "fp_hash").agg(
         F.min("fp_pos").alias("fp_pos"))
+
+
+def capped_winnow_fingerprints(df, *, text_col: str = "text",
+                               id_col: str = "doc_id"):
+    """(id, fp_hash) winnowing fingerprints (word 3-grams, window 4)
+    with the MOSS common-code exclusion: a fingerprint present in more
+    than 20 documents is dropped. Rows with a null id are dropped
+    first; they could never form a pair, and they do not count toward a
+    fingerprint's document frequency.
+
+    One shuffle of the fingerprints by ``fp_hash`` feeds both the
+    doc-frequency count and the join that applies the cap, so the
+    fingerprint pipeline runs once and the second read is a
+    ReusedExchange. Three things keep the two branches identical for
+    exchange reuse: the explicit null-id filter (otherwise Catalyst
+    infers ``isnotnull(id)`` on one branch only), counting ``id_col``
+    rather than a literal (so column pruning keeps the same two columns
+    on both branches), and the explicit repartition. The output stays
+    hash-partitioned by ``fp_hash``, so a self-join on it needs no
+    further shuffle.
+
+    Skew: a boilerplate (power-law) fingerprint still lands in one
+    partition, but nothing buffers it (a count-over-window would hold
+    every occurrence in one window task). The aggregate holds one entry
+    per key, and the merge join streams the hot rows past a ``rare``
+    side that has no match for them. The count runs after the shuffle,
+    so a hot key's rows reach one task in both the count and the probe:
+    a straggler that AQE does not skew-split, because it leaves
+    ``REPARTITION_BY_COL`` exchanges alone. The doc-frequency cap is
+    what bounds the pair fan-out downstream.
+    """
+    fp = (winnow_fingerprints(df.where(F.col(id_col).isNotNull()),
+                              text_col=text_col, id_col=id_col,
+                              ngram=3, window=4)
+          .select(id_col, "fp_hash").repartition("fp_hash"))
+    rare = (fp.groupBy("fp_hash").agg(F.count(id_col).alias("__df"))
+            .where(F.col("__df") <= 20).select("fp_hash"))
+    return fp.join(rare.hint("merge"), "fp_hash").select(id_col, "fp_hash")
 
 
 def token_budget_select(df, *, text_col: str = "text",

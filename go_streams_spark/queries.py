@@ -10580,7 +10580,7 @@ def mrl_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (
   SELECT doc_id,
          list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-  FROM documents
+  FROM documents WHERE doc_id IS NOT NULL
 ), g AS (
   SELECT doc_id, unnest(
     CASE WHEN len(toks) >= 3 THEN
@@ -10631,24 +10631,11 @@ def winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerates on boilerplate grams. Integer counts + one rounded
     division — hash-exact."""
     docs = _t(spark, sf_dir, "documents")
-    fp = T.winnow_fingerprints(docs, ngram=3, window=4) \
-        .select("doc_id", "fp_hash")
-    # doc-frequency cap via partial aggregate + merge join on the
-    # PRE-FILTERED key set — the SKEW-SAFE shape (r10 restores the r8
-    # form per the r9 verdict; guide §2.5): the r9 count-over-window
-    # buffered every occurrence of a boilerplate fingerprint (a
-    # power-law key) in ONE window task, and AQE skew handling never
-    # applies to window exchanges. Here hot keys drop from the
-    # aggregate OUTPUT before the join, the merge join streams +
-    # spills, and AQE skew-splits the probe side. Same rows. (An r10
-    # track_persist of fp measured 2x SLOWER at sf0.1 — the cache-fill
-    # barrier costs more than recomputing the fingerprint pipeline
-    # once per side.) The pair self-join sides below also pin MERGE
-    # (fan-out-sized — the SHJ-build-OOM class SCALE.md §26 measured
-    # at sf100); doc-grain sizes keep shuffle_hash.
-    rare = (fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") <= 20).select("fp_hash"))
-    f2 = fp.join(rare.hint("merge"), "fp_hash")
+    # capped fingerprints come from one fp_hash shuffle (see the
+    # helper); the pair self-join reads that same partitioning, and its
+    # sides pin MERGE (fan-out-sized — the SHJ-build-OOM class SCALE.md
+    # §26 measured at sf100); doc-grain sizes keep shuffle_hash.
+    f2 = T.capped_winnow_fingerprints(docs)
     sizes = f2.groupBy(F.col("doc_id").alias("sid")) \
         .agg(F.count(F.lit(1)).alias("nf"))
     a = f2.select(F.col("doc_id").alias("id_a"), "fp_hash")

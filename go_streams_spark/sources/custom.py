@@ -15,8 +15,9 @@ line-number offsets — the shape a Redis XREADGROUP source takes with
 stream IDs as offsets). The real network connectors live in sibling
 modules (redis_stream.py, nats_jetstream.py, pulsar.py, websocket.py,
 aerospike.py), each coding against an injectable client adapter so the
-connector logic is tested broker-free; the convenience functions below
-register them and return a loaded DataFrame.
+connector logic is tested broker-free. Each module's ``register_*``
+function registers its format; ``redis_stream_source`` below also
+returns a loaded DataFrame.
 """
 
 from __future__ import annotations
@@ -284,54 +285,6 @@ def redis_stream_source(spark, **options):
     broker-free with the file-backed FakeRedis."""
     from .redis_stream import register_redis_sources
     fmt, _ = register_redis_sources(spark)
-    reader = spark.readStream if options.pop("streaming", True) else spark.read
-    return reader.format(fmt).options(**options).load()
-
-
-def nats_jetstream_source(spark, **options):
-    """NATS JetStream source (nats/nats_jetstream.go:82,114-158) — REAL
-    implementation in nats_jetstream.py: stream sequence numbers as
-    offsets, per-trigger FetchBatchSize cap, range replay via
-    get-by-sequence. Requires 'nats-py' at runtime (or a clientFactory
-    option); tested broker-free with FakeJetStream."""
-    from .nats_jetstream import register_nats_source
-    fmt = register_nats_source(spark)
-    reader = spark.readStream if options.pop("streaming", True) else spark.read
-    return reader.format(fmt).options(**options).load()
-
-
-def pulsar_source(spark, **options):
-    """Pulsar source (pulsar/pulsar.go:25,57-79) — REAL implementation
-    in pulsar.py: serialized MessageIds as offsets, Reader-API range
-    replay. Requires 'pulsar-client' at runtime (or a clientFactory
-    option); tested broker-free with FakePulsarClient."""
-    from .pulsar import register_pulsar_source
-    fmt = register_pulsar_source(spark)
-    reader = spark.readStream if options.pop("streaming", True) else spark.read
-    return reader.format(fmt).options(**options).load()
-
-
-def websocket_source(spark, **options):
-    """WebSocket source (websocket/web_socket.go:33,65-95) — REAL
-    implementation in websocket.py: driver-side frame reader,
-    at-most-once like the reference (no server-side replay exists).
-    Requires 'websockets' at runtime (or a clientFactory option);
-    tested broker-free with FakeWebSocketServer."""
-    from .websocket import register_websocket_source
-    fmt = register_websocket_source(spark)
-    return spark.readStream.format(fmt).options(**options).load()
-
-
-def aerospike_polling_source(spark, **options):
-    """Aerospike CDC polling source (aerospike/aerospike.go:52,91-127)
-    — REAL implementation in aerospike.py: high-water last-update clock
-    as the offset, one filtered scan per micro-batch (ExpLastUpdate >
-    cursor). Requires 'aerospike' at runtime (or a clientFactory
-    option); tested broker-free with FakeAerospike. The file-backed
-    gss_cdc_poll source in this module is the same pattern over a JSONL
-    changelog."""
-    from .aerospike import register_aerospike_source
-    fmt = register_aerospike_source(spark)
     reader = spark.readStream if options.pop("streaming", True) else spark.read
     return reader.format(fmt).options(**options).load()
 

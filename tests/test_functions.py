@@ -2150,8 +2150,7 @@ def test_winnowing_overlap_detects_copied_passage(spark):
     """A passage copied between two otherwise-different docs must
     surface as an overlap pair; full duplicates score containment 1.0;
     unrelated docs pair with nothing."""
-    import go_streams_spark.queries as Q
-    from go_streams_spark.functions.text import winnow_fingerprints
+    from go_streams_spark.functions.text import capped_winnow_fingerprints
 
     passage = "alpha beta gamma delta epsilon zeta eta theta"
     docs = spark.createDataFrame(
@@ -2160,10 +2159,7 @@ def test_winnowing_overlap_detects_copied_passage(spark):
          (3, "totally unrelated content about nothing shared at all"),
          (4, f"intro words here {passage} closing remarks now")],  # dup of 1
         "doc_id bigint, text string")
-    fp = winnow_fingerprints(docs, ngram=3, window=4) \
-        .select("doc_id", "fp_hash")
-    # replicate the query's pairing (cap high enough for 4 docs)
-    from pyspark.sql import functions as F
+    fp = capped_winnow_fingerprints(docs)
     a = fp.select(F.col("doc_id").alias("id_a"), "fp_hash")
     b = fp.select(F.col("doc_id").alias("id_b"), "fp_hash")
     pairs = {(r["id_a"], r["id_b"]): r["n"] for r in
@@ -2173,6 +2169,56 @@ def test_winnowing_overlap_detects_copied_passage(spark):
     assert (1, 2) in pairs, "copied passage must share fingerprints"
     assert (1, 4) in pairs and pairs[(1, 4)] >= pairs[(1, 2)]
     assert not any(3 in p for p in pairs), "unrelated doc must not pair"
+
+
+def test_capped_winnow_fingerprints_cap_and_null_ids(spark):
+    """The doc-frequency cap keeps a fingerprint shared by exactly 20
+    docs and drops one shared by 21. A null-id row is dropped before
+    the count: it neither appears (so it cannot pair) nor pushes the
+    20-doc fingerprint over the cap."""
+    from go_streams_spark.functions.text import (
+        capped_winnow_fingerprints, winnow_fingerprints)
+
+    # a 3-token doc has one 3-gram, hence exactly one fingerprint
+    rows = ([(i, "kept at cap") for i in range(20)]
+            + [(100 + i, "dropped over cap") for i in range(21)]
+            + [(None, "kept at cap"), (None, "dropped over cap")])
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    fp_of = {r["doc_id"]: r["fp_hash"] for r in
+             winnow_fingerprints(docs.where(F.col("doc_id").isin(0, 100)))
+             .collect()}
+    got = capped_winnow_fingerprints(docs).collect()
+    assert all(r["doc_id"] is not None for r in got)
+    assert {r["fp_hash"] for r in got} == {fp_of[0]}
+    assert sorted(r["doc_id"] for r in got) == list(range(20))
+
+
+def _final_plan(df) -> str:
+    """Tree string of an executed DataFrame's AQE final plan only (the
+    top-level string also prints the initial plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_winnowing_fingerprint_pipeline_runs_once(spark, sf_dir):
+    """The doc-frequency cap and the pair join read one fp_hash shuffle
+    of the fingerprints: the final plan holds ONE posexplode subtree,
+    every other use is a ReusedExchange. Checked on the query and on
+    the helper itself (dedup_method_eval hides its use inside a
+    persisted frame)."""
+    from go_streams_spark.functions.text import capped_winnow_fingerprints
+    from go_streams_spark.queries import QUERIES, _t
+
+    q = QUERIES["winnowing_overlap_pairs"](spark, sf_dir)
+    q.collect()
+    assert _final_plan(q).count("Generate posexplode") == 1
+    h = capped_winnow_fingerprints(_t(spark, sf_dir, "documents"))
+    h.collect()
+    plan = _final_plan(h)
+    assert plan.count("Generate posexplode") == 1
+    assert "ReusedExchange" in plan
 
 
 def test_bmp_codec_roundtrip_and_validation(spark):
