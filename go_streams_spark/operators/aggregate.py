@@ -235,10 +235,10 @@ def ewma_halving(df: DataFrame, *, key_cols: Sequence[str],
         .drop("__m"))
 
 
-def _tdiv4(a: int) -> int:
-    """Truncating (toward-zero) division by 4 — matches Spark SQL `div`
-    and DuckDB `//` on negatives, unlike Python's floor `//`."""
-    return a // 4 if a >= 0 else -((-a) // 4)
+def _tdiv(a: int, d: int) -> int:
+    """Truncating (toward-zero) division — matches Spark SQL `div` and
+    DuckDB `//` on negatives, unlike Python's floor `//`."""
+    return a // d if a >= 0 else -((-a) // d)
 
 
 def holt_linear(df: DataFrame, *, key_col: str, order_col: str,
@@ -279,8 +279,8 @@ def holt_linear(df: DataFrame, *, key_col: str, order_col: str,
         lv, tr = ys[0], ys[1] - ys[0]
         levels, trends = [lv], [tr]
         for y in ys[1:]:
-            nl = _tdiv4(y + 3 * (lv + tr))
-            tr = _tdiv4((nl - lv) + 3 * tr)
+            nl = _tdiv(y + 3 * (lv + tr), 4)
+            tr = _tdiv((nl - lv) + 3 * tr, 4)
             lv = nl
             levels.append(lv)
             trends.append(tr)
@@ -294,12 +294,6 @@ def holt_linear(df: DataFrame, *, key_col: str, order_col: str,
     schema = (f"{key_col} {key_type}, {order_col} {order_type}, "
               f"{value_col} {val_type}, level long, trend long")
     return df.groupBy(key_col).applyInPandas(_fold, schema=schema)
-
-
-def _tdiv(a: int, d: int) -> int:
-    """Truncating (toward-zero) division — matches Spark SQL `div` and
-    DuckDB `//` on negatives, unlike Python's floor `//`."""
-    return a // d if a >= 0 else -((-a) // d)
 
 
 def holt_winters_additive(df: DataFrame, *, key_col: str, order_col: str,

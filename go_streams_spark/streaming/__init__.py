@@ -7,11 +7,8 @@ from .io import (file_stream_source, rate_source, memory_sink, console_sink,
                  noop_sink, foreach_batch_sink, with_bounded_retry,
                  state_sized_partitions)
 from .stateful import (running_fold_stream, global_fold_stream,
-                       count_or_time_batch_stream, running_sum_stream_tws,
-                       heavy_hitters_stream, heavy_hitters_stream_tws,
-                       count_or_time_batch_stream_tws, cep_stream,
-                       cep_stream_tws, token_bucket_stream,
-                       token_bucket_stream_tws)
+                       count_or_time_batch_stream, heavy_hitters_stream,
+                       cep_stream, token_bucket_stream)
 from .incremental_dedup import (incremental_near_dup_sink,
                                 near_dup_filter_batch, batch_band_keys)
 from .joins import stream_interval_join
@@ -23,10 +20,6 @@ __all__ = [
     "state_sized_partitions",
     "stream_interval_join",
     "running_fold_stream", "global_fold_stream", "count_or_time_batch_stream",
-    "heavy_hitters_stream", "heavy_hitters_stream_tws",
-    "count_or_time_batch_stream_tws",
-    "cep_stream", "cep_stream_tws",
-    "token_bucket_stream", "token_bucket_stream_tws",
-    "running_sum_stream_tws",
+    "heavy_hitters_stream", "cep_stream", "token_bucket_stream",
     "incremental_near_dup_sink", "near_dup_filter_batch", "batch_band_keys",
 ]

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.aggregate import _tdiv
+
 
 def running_fold_stream(df: DataFrame, *, key_cols: list[str], value_col: str,
                         order_col: str, fold_fn: Callable[[Any, Any], Any],
@@ -119,9 +121,7 @@ def count_or_time_batch_stream(df: DataFrame, *, key_cols: list[str],
     operator re-arms the interval whenever new rows arrive — the same
     sliding deadline, at micro-batch rather than per-element
     granularity (indistinguishable: a micro-batch's elements arrive
-    together, so only the last element's reset matters). The
-    transformWithState port (``count_or_time_batch_stream_tws``)
-    mirrors this with explicit deleteTimer/registerTimer per input.
+    together, so only the last element's reset matters).
     """
 
     def batcher(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
@@ -157,52 +157,6 @@ def count_or_time_batch_stream(df: DataFrame, *, key_cols: list[str],
             .applyInPandasWithState(batcher, output_schema,
                                     "buf array<double>", output_mode,
                                     GroupStateTimeout.ProcessingTimeTimeout))
-
-
-def running_sum_stream_tws(df: DataFrame, *, key_col: str,
-                           value_col: str) -> DataFrame:
-    """Per-key running sum on the ``transformWithStateInPandas`` API —
-    Spark 4's arbitrary-state processor (successor to
-    ``applyInPandasWithState``): explicit named state variables, state
-    TTL, timers, and multiple state types per processor. Requires the
-    RocksDB state store provider (the engine enforces this), which is
-    also the right store at scale — keyed state lives on executor local
-    disk, bounded by storage not heap.
-
-    Semantics match the reference's cross-batch Reduce
-    (flow/reduce.go:80-91) aggregated per key: each micro-batch emits
-    the key's updated running total (Update mode).
-
-    Dependency note: the transformWithState state-server protocol
-    imports ``google.protobuf`` in the Python driver worker — present on
-    standard cluster images, absent from this test container (the parity
-    test import-skips there).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class RunningSum(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState("acc", "total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            total = self._acc.get()[0] if self._acc.exists() else 0.0
-            n = 0.0
-            for pdf in rows:
-                n += float(pdf[value_col].sum())
-            total += n
-            self._acc.update((total,))
-            yield pd.DataFrame({key_col: [key[0]], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return (df.groupBy(key_col)
-            .transformWithStateInPandas(
-                statefulProcessor=RunningSum(),
-                outputStructType=f"{key_col} string, total double",
-                outputMode="Update",
-                timeMode="None"))
 
 
 def heavy_hitters_stream(df: DataFrame, *, item_col: str,
@@ -260,8 +214,10 @@ def _hh_keyed(df: DataFrame, item_col: str, num_buckets: int) -> DataFrame:
 
 def _spacesaving_ingest(track: dict, pdfs, capacity: int) -> None:
     """The classic SpaceSaving update over a micro-batch's per-item
-    counts — shared verbatim by the legacy and transformWithState
-    implementations so their emissions are bit-identical."""
+    counts, in place on ``track`` (item -> [count, error]): a tracked
+    item adds its count; a new item takes a free counter (error 0) or
+    evicts the smallest (count = min + c, error = min; ties break on
+    the item so the eviction is deterministic)."""
     for pdf in pdfs:
         for item, c in pdf["__item"].value_counts().items():
             c = int(c)
@@ -283,141 +239,6 @@ def _hh_frame(bucket_key, track: dict) -> pd.DataFrame:
         "cnt": [track[i][0] for i in items],
         "err": [track[i][1] for i in items],
     })
-
-
-def heavy_hitters_stream_tws(df: DataFrame, *, item_col: str,
-                             capacity: int = 16,
-                             num_buckets: int = 8) -> DataFrame:
-    """``heavy_hitters_stream`` on the ``transformWithStateInPandas``
-    API (Spark 4 arbitrary-state processor) — same bucket sharding, same
-    SpaceSaving kernel (``_spacesaving_ingest``, shared), same
-    (bucket, item, cnt, err) emissions, so the engine's stateful ops are
-    not pinned to the legacy ``applyInPandasWithState`` protocol. State
-    is one named ValueState of (items, counts, errors) arrays — bounded
-    at ``capacity`` counters per bucket forever. Requires the RocksDB
-    state store provider and google.protobuf in the Python worker
-    (standard cluster images; the parity test import-skips without it).
-    """
-    if capacity < 1 or num_buckets < 1:
-        raise ValueError("capacity and num_buckets must be >= 1")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    keyed = _hh_keyed(df, item_col, num_buckets)
-
-    class SpaceSaving(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._track = handle.getValueState(
-                "track",
-                "items array<string>, counts array<long>, errors array<long>")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._track.exists():
-                items, counts, errors = self._track.get()
-                track = {i: [c, e]
-                         for i, c, e in zip(items, counts, errors)}
-            else:
-                track = {}
-            _spacesaving_ingest(track, rows, capacity)
-            items = sorted(track)
-            self._track.update((items,
-                                [track[i][0] for i in items],
-                                [track[i][1] for i in items]))
-            yield _hh_frame(key[0], track)
-
-        def close(self) -> None:
-            pass
-
-    return (keyed.groupBy("__hh_bucket")
-            .transformWithStateInPandas(
-                statefulProcessor=SpaceSaving(),
-                outputStructType="bucket int, item string, cnt long, err long",
-                outputMode="Update",
-                timeMode="None"))
-
-
-def count_or_time_batch_stream_tws(df: DataFrame, *, key_cols: list[str],
-                                   value_col: str, max_size: int,
-                                   interval_ms: int,
-                                   output_schema: str) -> DataFrame:
-    """``count_or_time_batch_stream`` on ``transformWithStateInPandas``:
-    size-flushes in ``handleInputRows``, the residual-buffer time-flush
-    via a REAL named timer (``registerTimer`` / ``handleExpiredTimer``
-    — the tws timer API replacing the legacy single
-    ``setTimeoutDuration`` slot). Every input invocation deletes the
-    pending timer and (when a residual buffer remains) re-registers it
-    at now+interval, reproducing the reference's per-element
-    ``ticker.Reset(interval)`` (flow/batch.go:95-96) at micro-batch
-    granularity — the deadline slides with input, exactly like the
-    legacy operator's GroupState timeout. Emissions match the legacy
-    operator: (key..., batch array, batch_size, reason).
-
-    Run with a ``processingTime`` trigger and stop explicitly (same
-    AvailableNow caveat as the legacy operator: pending processing-time
-    work keeps the drain loop alive). Requires RocksDB state store +
-    google.protobuf (parity test import-skips without them).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class Batcher(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._buf = handle.getValueState("buf", "buf array<double>")
-
-        def _frame(self, key, batches):
-            return pd.DataFrame({
-                **{k: [key[i]] * len(batches)
-                   for i, k in enumerate(key_cols)},
-                "batch": [b for b, _ in batches],
-                "batch_size": [len(b) for b, _ in batches],
-                "reason": [r for _, r in batches],
-            })
-
-        def handleInputRows(self, key, rows, timerValues):
-            buf = list(self._buf.get()[0]) if self._buf.exists() else []
-            out = []
-            for pdf in rows:
-                for v in pdf[value_col]:
-                    buf.append(float(v))
-                    if len(buf) >= max_size:
-                        out.append((buf, "size"))
-                        buf = []
-            # Timer discipline mirrors the reference's ticker
-            # (flow/batch.go:95-96): ticker.Reset(interval) after EVERY
-            # received element, so the time-flush deadline slides with
-            # input. At micro-batch granularity that means: every input
-            # invocation drops the pending timer, and a new one is
-            # armed at now+interval only while a residual buffer
-            # remains (an empty buffer needs no timer — the reference's
-            # tick is a no-op there).
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            if buf:
-                self._buf.update((buf,))
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs()
-                    + interval_ms)
-            else:
-                self._buf.clear()
-            if out:
-                yield self._frame(key, out)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            buf = list(self._buf.get()[0]) if self._buf.exists() else []
-            self._buf.clear()
-            if buf:
-                yield self._frame(key, [(buf, "time")])
-
-        def close(self) -> None:
-            pass
-
-    return (df.groupBy(*key_cols)
-            .transformWithStateInPandas(
-                statefulProcessor=Batcher(),
-                outputStructType=output_schema,
-                outputMode="Append",
-                timeMode="ProcessingTime"))
 
 
 def cep_stream(df: DataFrame, *, pattern: str, symbols: dict[str, str],
@@ -533,8 +354,8 @@ def _cep_source(df: DataFrame, ts_col: str, gap_seconds: int) -> DataFrame:
 def _cep_ingest(buf: list, pdfs, *, ts_col: str, tiebreak_col: str,
                 type_col: str, symmap: dict, default_symbol: str) -> list:
     """Append (int64-ns epoch, tiebreak, symbol) triples from a
-    micro-batch to the open-session buffer — shared verbatim by the
-    legacy and transformWithState CEP operators."""
+    micro-batch to the open-session buffer; types outside ``symmap``
+    map to ``default_symbol``."""
     for pdf in pdfs:
         if pdf.empty:
             continue
@@ -551,7 +372,7 @@ def _cep_ingest(buf: list, pdfs, *, ts_col: str, tiebreak_col: str,
 def _cep_gap_close(buf: list, gap_seconds: int) -> tuple[list, list]:
     """Sort the buffer by (ns, tiebreak) and split on FLOOR-SECOND gap
     breaks (the batch sessionize convention): returns (closed session
-    symbol strings in order, open buffer). Shared CEP kernel."""
+    symbol strings in order, open buffer)."""
     buf.sort(key=lambda x: (x[0], x[1]))
     closed, cur_start = [], 0
     for i in range(1, len(buf)):
@@ -560,110 +381,6 @@ def _cep_gap_close(buf: list, gap_seconds: int) -> tuple[list, list]:
             closed.append("".join(b[2] for b in buf[cur_start:i]))
             cur_start = i
     return closed, buf[cur_start:]
-
-
-def cep_stream_tws(df: DataFrame, *, pattern: str, symbols: dict[str, str],
-                   user_col: str = "user_id", ts_col: str = "ts",
-                   type_col: str = "event_type",
-                   tiebreak_col: str = "event_id",
-                   gap_seconds: int = 1800, default_symbol: str = "x",
-                   close_on_timeout: bool = True) -> DataFrame:
-    """``cep_stream`` on the ``transformWithStateInPandas`` API (Spark
-    4's arbitrary-state processor, successor to applyInPandasWithState):
-    the same shared kernels (``_cep_ingest`` / ``_cep_gap_close`` /
-    match row), so emissions are bit-identical to the legacy operator —
-    different state protocol only. The legacy event-time timeout
-    becomes a REAL event-time timer: every input invocation deletes the
-    pending timer and re-arms it at (last_event_floor_sec + gap) + 1ms,
-    clamped past the current watermark; ``handleExpiredTimer`` closes
-    the idle open session exactly like the legacy hasTimedOut branch.
-
-    Requires the RocksDB state store provider and google.protobuf in
-    the Python worker (the parity test import-skips where absent —
-    standard cluster images carry both). Append output, EventTime
-    mode."""
-    import re as _re
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    from ..functions.cep import validate_pattern, validate_symbols
-    validate_pattern(pattern)
-    validate_symbols(symbols)
-    if len(default_symbol) != 1:
-        raise ValueError("default_symbol must be a single char")
-    if gap_seconds < 1:
-        raise ValueError(f"gap_seconds must be >= 1, got {gap_seconds}")
-    rx = _re.compile(pattern)
-    symmap = dict(symbols)
-    ktype = dict(df.dtypes)[user_col]
-    out_schema = (f"{user_col} {ktype}, sid long, seq string, "
-                  "n_matches long, first_match string")
-
-    def _row(key, sid: int, syms: str):
-        hits = [m.group(0) for m in rx.finditer(syms)]
-        if not hits:
-            return None
-        return pd.DataFrame({user_col: [key[0]], "sid": [sid],
-                             "seq": [syms], "n_matches": [len(hits)],
-                             "first_match": [hits[0]]})
-
-    class Cep(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._st = handle.getValueState(
-                "sess", "epochs array<bigint>, ties array<bigint>, "
-                        "syms string, sid bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._st.exists():
-                epochs, ties, syms, sid = self._st.get()
-                buf = list(zip(epochs, ties, syms))
-            else:
-                buf, sid = [], 1
-            buf = _cep_ingest(buf, rows, ts_col=ts_col,
-                              tiebreak_col=tiebreak_col,
-                              type_col=type_col, symmap=symmap,
-                              default_symbol=default_symbol)
-            if not buf:
-                return
-            closed, open_buf = _cep_gap_close(buf, gap_seconds)
-            for syms_closed in closed:
-                out = _row(key, sid, syms_closed)
-                sid += 1
-                if out is not None:
-                    yield out
-            self._st.update(([b[0] for b in open_buf],
-                             [b[1] for b in open_buf],
-                             "".join(b[2] for b in open_buf), sid))
-            if close_on_timeout:
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                deadline_ms = (open_buf[-1][0] // 1_000_000_000
-                               + gap_seconds) * 1000 + 1
-                self._handle.registerTimer(
-                    max(deadline_ms,
-                        timerValues.getCurrentWatermarkInMs() + 1))
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._st.exists():
-                return
-            epochs, ties, syms, sid = self._st.get()
-            self._st.clear()
-            out = _row(key, sid, syms)
-            if out is not None:
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    src = _cep_source(df, ts_col, gap_seconds)
-    return (src.groupBy(user_col)
-            .transformWithStateInPandas(
-                statefulProcessor=Cep(),
-                outputStructType=out_schema,
-                outputMode="Append",
-                timeMode="EventTime"))
 
 
 def token_bucket_stream(df: DataFrame, *, rate_micro_per_sec: int,
@@ -718,9 +435,10 @@ def token_bucket_stream(df: DataFrame, *, rate_micro_per_sec: int,
 def _token_bucket_apply(pdf, cols, *, ts_col: str, tiebreak_col: str,
                         tokens: int, last, rate_micro_per_sec: int,
                         burst_micro: int, cost_micro: int):
-    """One micro-batch of the integer token-bucket fold — shared
-    verbatim by the legacy and transformWithState operators so their
-    admissions are bit-identical. Returns (out_pdf, tokens, last)."""
+    """One micro-batch of the integer token-bucket fold: rows sorted
+    by (ts, tiebreak), the bucket refilled by whole elapsed seconds and
+    capped at ``burst_micro``, a row admitted while ``cost_micro``
+    tokens remain. Returns (out_pdf, tokens, last)."""
     pdf = pdf.sort_values([ts_col, tiebreak_col]).copy()
     ser = pd.to_datetime(pdf[ts_col])
     if getattr(ser.dt, "tz", None) is not None:
@@ -742,62 +460,6 @@ def _token_bucket_apply(pdf, cols, *, ts_col: str, tiebreak_col: str,
     pdf["admitted"] = admitted
     pdf["tokens_after_micro"] = after
     return pdf[cols + ["admitted", "tokens_after_micro"]], tokens, last
-
-
-def token_bucket_stream_tws(df: DataFrame, *, rate_micro_per_sec: int,
-                            burst_micro: int, cost_micro: int = 1_000_000,
-                            key_col: str = "user_id", ts_col: str = "ts",
-                            tiebreak_col: str = "event_id") -> DataFrame:
-    """``token_bucket_stream`` on the ``transformWithStateInPandas``
-    API: the same shared integer fold (``_token_bucket_apply``), state
-    = one named ValueState of two longs per key, no timers — emissions
-    bit-identical to the legacy operator by construction. Requires the
-    RocksDB state store provider and google.protobuf in the Python
-    worker (parity test import-skips where absent)."""
-    if rate_micro_per_sec < 0 or burst_micro < 1 or cost_micro < 1:
-        raise ValueError(
-            "need rate_micro_per_sec >= 0, burst_micro >= 1, "
-            f"cost_micro >= 1; got {rate_micro_per_sec}/{burst_micro}/"
-            f"{cost_micro}")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    cols = df.columns
-    out_schema = ", ".join(
-        f"{n} {t}" for n, t in df.dtypes) + ", admitted boolean, " \
-        "tokens_after_micro bigint"
-
-    class Bucket(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "bucket", "tokens bigint, last_sec bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._st.exists():
-                tokens, last = self._st.get()
-                last = None if last < 0 else last
-            else:
-                tokens, last = burst_micro, None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                out, tokens, last = _token_bucket_apply(
-                    pdf, cols, ts_col=ts_col, tiebreak_col=tiebreak_col,
-                    tokens=tokens, last=last,
-                    rate_micro_per_sec=rate_micro_per_sec,
-                    burst_micro=burst_micro, cost_micro=cost_micro)
-                yield out
-            self._st.update((tokens, -1 if last is None else last))
-
-        def close(self) -> None:
-            pass
-
-    return (df.groupBy(key_col)
-            .transformWithStateInPandas(
-                statefulProcessor=Bucket(),
-                outputStructType=out_schema,
-                outputMode="Append",
-                timeMode="None"))
 
 
 def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
@@ -830,9 +492,6 @@ def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
     """
     if period < 2:
         raise ValueError("holt_winters_stream: period must be >= 2")
-
-    def _tdiv(a: int, d: int) -> int:
-        return a // d if a >= 0 else -((-a) // d)
 
     def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.exists:

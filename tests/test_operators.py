@@ -538,7 +538,7 @@ def test_holt_linear_tracks_ramp_exactly(spark):
     step for step, and the trend state must approach the true slope
     while plain EWMA-style level-only smoothing lags; a 1-point series
     is dropped (needs the 2-point init)."""
-    from go_streams_spark.operators.aggregate import holt_linear, _tdiv4
+    from go_streams_spark.operators.aggregate import holt_linear, _tdiv
     rows = [("a", t, 100 + 10 * t) for t in range(12)] + [("b", 0, 5)]
     df = spark.createDataFrame(rows, "k string, t int, y long")
     got = {(r["k"], r["t"]): (r["level"], r["trend"])
@@ -549,8 +549,8 @@ def test_holt_linear_tracks_ramp_exactly(spark):
     expect = {("a", 0): (lv, tr)}
     for t in range(1, 12):
         y = 100 + 10 * t
-        nl = _tdiv4(y + 3 * (lv + tr))
-        tr = _tdiv4((nl - lv) + 3 * tr)
+        nl = _tdiv(y + 3 * (lv + tr), 4)
+        tr = _tdiv((nl - lv) + 3 * tr, 4)
         lv = nl
         expect[("a", t)] = (lv, tr)
     assert got == expect

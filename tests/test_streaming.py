@@ -75,17 +75,24 @@ def test_stream_tumbling_window_watermark(spark, stream_dir):
 
 
 def test_running_fold_stream(spark, stream_dir):
-    rows = [(1, i, float(i)) for i in range(1, 6)] + [(2, i, 10.0) for i in range(3)]
-    spark.createDataFrame(rows, "k int, seq int, value double") \
-        .coalesce(1).write.mode("overwrite").parquet(stream_dir)
+    # two files, one per micro-batch, each holding rows of both keys: the
+    # second batch's sums must start from the state the first one left
+    first = [(1, i, float(i)) for i in range(1, 4)] + [(2, i, 10.0) for i in range(2)]
+    second = [(1, i, float(i)) for i in range(4, 6)] + [(2, 2, 10.0)]
+    for mode, rows in (("overwrite", first), ("append", second)):
+        spark.createDataFrame(rows, "k int, seq int, value double") \
+            .coalesce(1).write.mode(mode).parquet(stream_dir)
     src = file_stream_source(spark, stream_dir, fmt="parquet",
-                             schema="k int, seq int, value double")
+                             schema="k int, seq int, value double",
+                             maxFilesPerTrigger=1)
     out = running_fold_stream(
         src, key_cols=["k"], value_col="value", order_col="seq",
         fold_fn=lambda v, acc: acc + v, init=0.0,
         output_schema="k int, seq int, value double, acc double")
     name = _mem_name()
-    Source(out).to(memory_sink(name, output_mode="append"))
+    q = Source(out).to(memory_sink(name, output_mode="append"))
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"]] == [len(first), len(second)]
     rows = spark.table(name).collect()
     accs = {(r["k"], r["seq"]): r["acc"] for r in rows}
     # reduce golden semantics: prefix sums (flow/reduce_test.go:34-35)

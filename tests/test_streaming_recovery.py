@@ -11,7 +11,6 @@ story at all.
 import os
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -19,7 +18,7 @@ def _mem():
     return "t" + uuid.uuid4().hex[:10]
 
 
-def _run_counts(spark, src_dir, cp_dir, provider=None):
+def _run_counts(spark, src_dir, cp_dir):
     """Start the counts-per-key query against src_dir with checkpoint
     cp_dir, drain with AvailableNow, return {key: count}."""
     stream = spark.readStream.schema("k string, v int").json(src_dir)
@@ -100,54 +99,6 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
             spark.conf.set(key, old)
 
 
-def test_transform_with_state_running_sum(spark, tmp_path):
-    """The transformWithStateInPandas path (Spark 4 arbitrary-state API)
-    carries a named ValueState across micro-batches: with
-    maxFilesPerTrigger=1 each input file is its own batch, so the final
-    Update-mode emission per key must equal the sum over ALL batches.
-
-    The state-server protocol needs google.protobuf, which is not baked
-    into this container — skipped here, runs on any real cluster image.
-    """
-    pytest.importorskip("google.protobuf.descriptor")
-    from go_streams_spark.streaming import running_sum_stream_tws
-
-    provider = ("org.apache.spark.sql.execution.streaming."
-                "state.RocksDBStateStoreProvider")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, provider)
-    try:
-        src = str(tmp_path / "src")
-        _write_json(spark, src, [("a", 1), ("b", 10)])
-        _write_json(spark, src, [("a", 2), ("b", 20), ("c", 5)])
-        stream = (spark.readStream.schema("k string, v int")
-                  .option("maxFilesPerTrigger", 1).json(src))
-        out = running_sum_stream_tws(
-            stream.select("k", F.col("v").cast("double").alias("v")),
-            key_col="k", value_col="v")
-        name = _mem()
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation", str(tmp_path / "cp"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        rows = spark.table(name).collect()
-        # last emission per key is the cross-batch running total
-        final = {}
-        for r in rows:
-            final[r["k"]] = r["total"]
-        assert final == {"a": 3.0, "b": 30.0, "c": 5.0}
-        # and at least one key was emitted more than once (state carried
-        # across >1 micro-batch, not a single-batch degenerate run)
-        assert len(rows) > len(final)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def test_idempotent_parquet_sink_replay_safe(spark, tmp_path):
     """The batchId-partitioned parquet sink is replay-idempotent: a
     batch written twice (simulating the crash-between-write-and-commit
@@ -180,124 +131,6 @@ def test_idempotent_parquet_sink_replay_safe(spark, tmp_path):
     final = spark.read.parquet(out)
     assert sorted((r["k"], r["v"]) for r in final.collect()) == [
         ("a", 1), ("b", 2), ("c", 3)]  # no duplicates after replay
-
-
-def _rocksdb(spark):
-    """Context manager: force the RocksDB state store provider (required
-    by transformWithStateInPandas), restoring the prior provider."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        provider = ("org.apache.spark.sql.execution.streaming."
-                    "state.RocksDBStateStoreProvider")
-        key = "spark.sql.streaming.stateStore.providerClass"
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, provider)
-        try:
-            yield
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-    return cm()
-
-
-def _final_hh_state(by_batch: dict) -> dict:
-    """Reconstruct final per-(bucket, item) counters from update-mode
-    emissions: each invocation emits a bucket's FULL tracked set, so a
-    bucket's rows in the LAST batch that touched it supersede earlier
-    emissions wholesale."""
-    final = {}
-    for bid in sorted(by_batch):
-        per_bucket_rows = {}
-        for r in by_batch[bid]:
-            per_bucket_rows.setdefault(r["bucket"], []).append(r)
-        for b, rows in per_bucket_rows.items():
-            final = {k: v for k, v in final.items() if k[0] != b}
-            for r in rows:
-                final[(b, r["item"])] = (r["cnt"], r["err"])
-    return final
-
-
-def test_tws_heavy_hitters_parity(spark, tmp_path):
-    """heavy_hitters_stream_tws (transformWithStateInPandas) must emit
-    counters BIT-IDENTICAL to the legacy applyInPandasWithState operator
-    on the same multi-batch skewed stream — same bucket sharding, same
-    shared SpaceSaving kernel, different state protocol. Skipped where
-    google.protobuf (the tws state-server dependency) is absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from go_streams_spark.streaming import (
-        heavy_hitters_stream, heavy_hitters_stream_tws)
-
-    src = str(tmp_path / "src")
-    for b in range(3):
-        items = []
-        for h in range(3):
-            items += [f"h{h}"] * (40 - 10 * h)
-        items += [f"t{b}_{j}" for j in range(30)]
-        spark.createDataFrame([(x,) for x in items], "item string") \
-            .coalesce(1).write.mode("append").parquet(src)
-
-    def run(op, cp, **kw):
-        stream = (spark.readStream.schema("item string")
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        out = op(stream, item_col="item", capacity=8, num_buckets=4, **kw)
-        by_batch: dict[int, list] = {}
-        q = (out.writeStream
-             .foreachBatch(lambda df, bid: by_batch.__setitem__(
-                 bid, df.collect()))
-             .outputMode("update")
-             .option("checkpointLocation", cp)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return _final_hh_state(by_batch)
-
-    legacy = run(heavy_hitters_stream, str(tmp_path / "cp_legacy"))
-    with _rocksdb(spark):
-        tws = run(heavy_hitters_stream_tws, str(tmp_path / "cp_tws"))
-    assert tws == legacy
-    assert len(tws) > 0
-
-
-def test_tws_count_or_time_batch_flushes(spark, tmp_path):
-    """count_or_time_batch_stream_tws: size-flushes from
-    handleInputRows, residual flushed by a REAL tws timer
-    (registerTimer -> handleExpiredTimer) — the same emissions the
-    legacy operator produces for this input (3 size-batches of 3 plus a
-    1-element time-batch covering all 10 values). Skipped without
-    google.protobuf."""
-    import time
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from go_streams_spark.streaming import count_or_time_batch_stream_tws
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame([(1, float(i)) for i in range(10)],
-                          "k int, value double") \
-        .coalesce(1).write.mode("overwrite").parquet(src)
-    stream = (spark.readStream.schema("k int, value double").parquet(src))
-    out = count_or_time_batch_stream_tws(
-        stream, key_cols=["k"], value_col="value", max_size=3,
-        interval_ms=3000,
-        output_schema="k int, batch array<double>, batch_size int, reason string")
-    name = _mem()
-    with _rocksdb(spark):
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", str(tmp_path / "cp"))
-             .start())
-        deadline = time.time() + 90
-        while time.time() < deadline and spark.table(name).count() < 4:
-            time.sleep(1)
-        q.stop()
-    got = spark.table(name).collect()
-    assert len(got) == 4
-    sizes = sorted((r["batch_size"], r["reason"]) for r in got)
-    assert sizes == [(1, "time"), (3, "size"), (3, "size"), (3, "size")]
-    flat = sorted(v for r in got for v in r["batch"])
-    assert flat == [float(i) for i in range(10)]
 
 
 def test_incremental_fingerprint_matches_batch_and_replays_safely(spark, tmp_path):
@@ -428,106 +261,6 @@ def test_cep_stream_checkpoint_recovery_exactly_once(spark, tmp_path):
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
     assert spark.read.parquet(out).count() == len(seen) == 1
-
-
-def test_tws_cep_stream_parity(spark, tmp_path):
-    """cep_stream_tws (transformWithStateInPandas, event-time timers)
-    must emit sessions BIT-IDENTICAL to the legacy
-    applyInPandasWithState cep_stream on the same multi-batch stream —
-    shared ingest/gap-close/match kernels, different state protocol.
-    Skipped where google.protobuf (the tws state-server dependency) is
-    absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    import datetime as dt
-    from go_streams_spark.streaming import file_stream_source
-    from go_streams_spark.streaming.stateful import (cep_stream,
-                                                     cep_stream_tws)
-
-    SCHEMA = ("event_id long, ts timestamp, user_id long, "
-              "event_type string")
-    base = dt.datetime(2024, 1, 1, 8)
-
-    def ev(uid, minute, etype, eid):
-        return (eid, base + dt.timedelta(minutes=minute), uid, etype)
-
-    rows = ([ev(1, m, t, 10 + i) for i, (m, t) in enumerate(
-                [(0, "view"), (5, "click"), (9, "purchase")])]
-            + [ev(2, m, t, 30 + i) for i, (m, t) in enumerate(
-                [(0, "purchase"), (3, "view"), (6, "click")])]
-            + [ev(1, 600, "view", 40), ev(2, 600, "click", 41)]
-            + [ev(1, 10 ** 5, "noop", 901), ev(2, 10 ** 5, "noop", 902)])
-    src = str(tmp_path / "src")
-    df_all = spark.createDataFrame(rows, SCHEMA)
-    df_all.where(F.col("event_id") < 40).coalesce(1) \
-        .write.mode("overwrite").parquet(src)
-    df_all.where(F.col("event_id") >= 40).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    def run(op, cp):
-        stream = file_stream_source(spark, src, fmt="parquet",
-                                    schema=SCHEMA,
-                                    maxFilesPerTrigger="1")
-        out = op(stream, pattern="v[^p]*c[^p]*p",
-                 symbols={"view": "v", "click": "c", "purchase": "p"},
-                 gap_seconds=1800)
-        name = _mem()
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", cp)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return {(r["user_id"], r["sid"]): (r["seq"], r["n_matches"],
-                                           r["first_match"])
-                for r in spark.table(name).collect()}
-
-    legacy = run(cep_stream, str(tmp_path / "cp_legacy"))
-    with _rocksdb(spark):
-        tws = run(cep_stream_tws, str(tmp_path / "cp_tws"))
-    assert tws == legacy
-    assert len(tws) > 0
-
-
-def test_tws_token_bucket_parity(spark, tmp_path):
-    """token_bucket_stream_tws must admit BIT-IDENTICALLY to the legacy
-    operator (shared integer fold, different state protocol). Skipped
-    where google.protobuf is absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    import datetime as dt
-    from go_streams_spark.streaming import file_stream_source
-    from go_streams_spark.streaming.stateful import (
-        token_bucket_stream, token_bucket_stream_tws)
-
-    SCHEMA = "event_id long, ts timestamp, user_id long"
-    base = dt.datetime(2024, 1, 1, 8)
-    rows = [(i, base + dt.timedelta(seconds=s), i % 3)
-            for i, s in enumerate([0, 0, 1, 2, 5, 5, 6, 9, 30, 31, 60])]
-    src = str(tmp_path / "src")
-    df_all = spark.createDataFrame(rows, SCHEMA)
-    df_all.where(F.col("event_id") < 6).coalesce(1) \
-        .write.mode("overwrite").parquet(src)
-    df_all.where(F.col("event_id") >= 6).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    def run(op, cp):
-        stream = file_stream_source(spark, src, fmt="parquet",
-                                    schema=SCHEMA,
-                                    maxFilesPerTrigger="1")
-        out = op(stream, rate_micro_per_sec=500_000,
-                 burst_micro=2_000_000)
-        name = _mem()
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", cp)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return {r["event_id"]: (r["admitted"], r["tokens_after_micro"])
-                for r in spark.table(name).collect()}
-
-    legacy = run(token_bucket_stream, str(tmp_path / "cp_legacy"))
-    with _rocksdb(spark):
-        tws = run(token_bucket_stream_tws, str(tmp_path / "cp_tws"))
-    assert tws == legacy
-    assert len(tws) == len(rows)
 
 
 def test_holt_winters_stream_checkpoint_recovery(spark, tmp_path):

@@ -5,6 +5,12 @@ Usage: python tools/dump_plan_files.py OUT_DIR SUFFIX query [query ...]
 
 Writes OUT_DIR/<query>_<SUFFIX>.txt — the judge-facing plan evidence
 (plans/r09/*_before.txt / *_after.txt).
+
+Each query's own plan runs once first (``queryExecution().toRdd()
+.count()``: the rows are counted on the executors, none is collected
+to the driver), so the dump is AQE's final plan (``isFinalPlan=true``)
+with its exchange reuse and runtime re-planning, not the initial plan
+an explain-only run shows.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)
+        df._jdf.queryExecution().toRdd().count()
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(explain_str(df, mode="formatted"))

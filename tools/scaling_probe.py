@@ -1,17 +1,20 @@
-"""Fresh-JVM per-query timing probe with conf overrides — the round-10
-anti-scaling bisect harness (VERDICT r9 #1/#8: every claim needs a
-fresh-session confirmation at the driver's core counts, and the bisect
-needs config toggles time_queries.py cannot express).
+"""Per-query timing at any SF dir, one fresh SparkSession per
+invocation, with optional conf overrides — the harness behind the
+SCALE.md exponent tables and the round-10 anti-scaling bisect (VERDICT
+r9 #1/#8: every claim needs a fresh-session confirmation at the
+driver's core counts).
 
 Usage:
   SPARK_GRAFT_CPUS=32 python tools/scaling_probe.py SF_DIR \
       [--runs N] [--conf key=value ...] query [query ...]
 
-One fresh SparkSession per INVOCATION (the driver's measurement
-condition); same statistic as bench.py (noop-forced, run 1 pays
-codegen, min of the remaining runs; tracked persists released between
-runs). Prints one JSON line {"cpus": N, "conf": {...}, "queries":
-{name: {"min": s, "all": [...]}}}.
+Statistic: noop-forced, run 1 (which pays codegen) dropped, min of the
+remaining runs; tracked persists released between runs (bench.py's
+min keeps run 1). Every
+name is checked before any is timed. Prints one JSON line {"cpus": N,
+"conf": {...}, "queries": {name: {"min": s, "all": [...]}}}. Exponent
+between two SFs = log(t_big/t_small) / log(volume_ratio); see
+tools/scaling_report.py for the two-detail-file variant.
 """
 
 from __future__ import annotations
@@ -36,6 +39,9 @@ def main():
     i = 0
     names: list[str] = []
     while i < len(rest):
+        if rest[i] in ("--runs", "--conf") and i + 1 >= len(rest):
+            print(f"{rest[i]} needs a value", file=sys.stderr)
+            sys.exit(2)
         if rest[i] == "--runs":
             runs = int(rest[i + 1]); i += 2
         elif rest[i] == "--conf":
