@@ -8,8 +8,11 @@ truncated at ~2 KB and failed to parse), so the printed line carries just
 the 10 slowest per-query timings; the FULL per-query breakdown is written
 to BENCH_DETAIL.json next to this script.
 
-Each query is forced with a noop write (full pipeline execution, no
-driver collect) — the same way you'd measure on a cluster.
+Every lane times its runs with ``timed_runs``: each run builds the frame,
+forces it with a noop write (full pipeline execution, no driver collect)
+and then releases the caches the query pinned. The statistic is the min
+of all runs, the codegen run included; the median goes to the detail
+file as the noise bound.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -378,8 +382,27 @@ EXCLUDED = {
 }
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def timed_runs(build, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` runs of the frame ``build()`` returns.
+
+    The clock starts before ``build()``, so jobs a query runs eagerly
+    while its frame is built are timed too, and stops after the noop
+    write. ``release_tracked()`` then frees the caches the run pinned
+    (``track_persist``), so every run executes the same program and none
+    reads partitions an earlier run cached.
+
+    Callers report the min of the runs. Host load only ever adds time,
+    so the fastest run is the closest to the query's own cost; run 1
+    also pays Janino + JIT compilation of the generated code (2-10x,
+    nondeterministic in a long-lived session), which later runs skip.
+    """
+    times: list[float] = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        times.append(time.perf_counter() - t0)
+        release_tracked()
+    return times
 
 
 def main() -> None:
@@ -387,8 +410,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("go-streams-spark-bench")
     # warm the JVM + parquet footers once so timings measure the queries
-    for name in BENCH_QUERIES[:1]:
-        force(QUERIES[name](spark, sf_dir))
+    timed_runs(partial(QUERIES[BENCH_QUERIES[0]], spark, sf_dir), 1)
 
     # Single-node pipeline THROUGHPUT (events/sec): the reference's own
     # claim surface is element throughput through an operator chain, so
@@ -408,50 +430,36 @@ def main() -> None:
     # spread, prompting the N>=7 bump so tools/bench_compare.py can
     # classify a median-over-median drop as noise vs signal). Record
     # the full sample so the spread is evidence, not anecdote: min is
-    # the headline (host load only adds time), median + all raw times
-    # go to BENCH_DETAIL.json as the noise bound.
-    pipe_times: list[float] = []
-    for _ in range(7):
-        t0 = time.perf_counter()
-        force(ev
-              .withColumn("v2", F.col("value") * 2)            # Map
-              .where(F.col("v2") > 0)                          # Filter
-              .groupBy("user_id", F.window("ts", "1 hour"))    # Keyed window
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.sum("v2").alias("s")))
-        pipe_times.append(time.perf_counter() - t0)
+    # the headline, median + all raw times go to BENCH_DETAIL.json as
+    # the noise bound.
+    pipe_times = timed_runs(
+        lambda: (ev
+                 .withColumn("v2", F.col("value") * 2)          # Map
+                 .where(F.col("v2") > 0)                        # Filter
+                 .groupBy("user_id", F.window("ts", "1 hour"))  # Keyed window
+                 .agg(F.count(F.lit(1)).alias("n"),
+                      F.sum("v2").alias("s"))),
+        7)
     best_pipe = min(pipe_times)
     med_pipe = sorted(pipe_times)[len(pipe_times) // 2]
     events_per_sec = int(n_events / best_pipe) if best_pipe > 0 else 0
     events_per_sec_median = int(n_events / med_pipe) if med_pipe > 0 else 0
 
     # Min-of-N per query (default 3, override SPARK_GRAFT_BENCH_RUNS):
-    # run 1 pays Janino + JIT compilation of the generated code
-    # (measured 2-10x inflation, nondeterministic in a long-lived
-    # session); later runs hit the codegen cache and measure the actual
-    # pipeline. The MIN is the right statistic on a shared host — host
-    # load only ever adds time, and round-over-round per-query ratios
-    # at min-of-2 still swung 1.2-1.3x on unchanged plans, at the edge
-    # of hiding a real regression.
+    # round-over-round per-query ratios at min-of-2 swung 1.2-1.3x on
+    # unchanged plans, at the edge of hiding a real regression.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     timings: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
     for name in BENCH_QUERIES:
-        if name not in QUERIES:
-            continue
-        sample: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            force(QUERIES[name](spark, sf_dir))
-            sample.append(time.perf_counter() - t0)
-        sample.sort()
+        sample = sorted(timed_runs(partial(QUERIES[name], spark, sf_dir),
+                                   runs))
         timings[name] = round(sample[0], 3)
         # min vs median gap = host-load noise bound for THIS query in
         # THIS bench window; round-over-round deltas smaller than the
         # typical gap are noise, not plan regressions
         spread[name] = {"min": round(sample[0], 3),
                         "median": round(sample[len(sample) // 2], 3)}
-        release_tracked()  # free operator-pinned caches between queries
 
     # Streaming lane: availableNow wall time, min-of-2 (run 1 pays state
     # store + checkpoint dir creation on top of codegen; the floor is
@@ -459,15 +467,8 @@ def main() -> None:
     # cost is the honest number for a streaming micro-batch).
     stream_timings: dict[str, float] = {}
     for name in STREAMING_BENCH:
-        if name not in QUERIES:
-            continue
-        sample = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            force(QUERIES[name](spark, sf_dir))
-            sample.append(time.perf_counter() - t0)
+        sample = timed_runs(partial(QUERIES[name], spark, sf_dir), 2)
         stream_timings[name] = round(min(sample), 3)
-        release_tracked()
     stream_total = round(sum(stream_timings.values()), 3)
 
     unaccounted = sorted(set(QUERIES) - set(BENCH_QUERIES)
@@ -476,37 +477,6 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-    # Opt-in anti-scaling self-check (r10, VERDICT r9 #4): rerun the 10
-    # slowest queries at cpus/4 in a FRESH subprocess JVM and record the
-    # low-core/high-core ratio — a query much FASTER at a quarter of the
-    # cores is anti-scaling (the r9 driver had to assemble this table by
-    # hand from two full bench runs). Off by default: two JVMs would
-    # contend and distort the main lane's numbers.
-    scaling = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALING") == "1" and cpus >= 4:
-        import subprocess
-        slow10 = sorted(timings, key=timings.get, reverse=True)[:10]
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus // 4))
-        probe = subprocess.run(
-            [sys.executable,
-             os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "tools", "scaling_probe.py"),
-             sf_dir, "--runs", str(runs), *slow10],
-            env=env, capture_output=True, text=True)
-        try:
-            low = json.loads(probe.stdout.strip().splitlines()[-1])["queries"]
-            scaling = {
-                "cpus_main": cpus, "cpus_low": cpus // 4,
-                "low_core_fresh_session_min": {q: low[q]["min"] for q in low},
-                # ratio > 1: the query is FASTER with 4x fewer cores
-                "main_over_low_ratio": {
-                    q: round(timings[q] / low[q]["min"], 2)
-                    for q in low if low[q]["min"] > 0},
-            }
-        except Exception as e:  # noqa: BLE001 — diagnostics, not the bench
-            scaling = {"error": f"{type(e).__name__}: {e}",
-                       "stderr_tail": probe.stderr[-500:]}
 
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
@@ -519,7 +489,6 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf_val,
                 "cpus": cpus,
-                "scaling": scaling,
                 "n_queries": len(timings),
                 "runs_per_query": runs,
                 "pipeline_events_per_sec": events_per_sec,

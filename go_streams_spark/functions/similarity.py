@@ -14,10 +14,9 @@ Two tiers, per the standard ANN playbook:
 Dot products use ``F.zip_with`` + ``F.aggregate`` (JVM-side, sequential
 left fold in doubles — bit-identical to the DuckDB oracle's list_sum of
 per-element products). The EXACT-kNN family (``brute_force_knn``,
-``brute_force_knn_matmul``, ``block_knn``) goes one step further:
-micro-unit int64 quantization (``quantized_vec`` /
-``quantized_cosine`` / ``_np_quantized_cosine``) makes the similarity
-bit-identical across the JVM, numpy/BLAS (any thread count), and
+``block_knn``) goes one step further: micro-unit int64 quantization
+(``quantized_vec`` / ``quantized_cosine`` / ``_np_quantized_cosine``)
+makes the similarity bit-identical across the JVM, numpy/BLAS (any thread count), and
 DuckDB — float left-folds match DuckDB but NOT BLAS accumulation
 order, which once flipped a 0.5e-6 rounding midpoint and with it a
 recall report's value hash.
@@ -726,58 +725,6 @@ def block_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embeddin
             .select(F.col("id_a").alias(id_col),
                     F.col("id_b").alias("neighbor_id"),
                     "sim", F.col("rank").cast("int").alias("rank")))
-
-
-def brute_force_knn_matmul(df: DataFrame, *, id_col: str = "vec_id",
-                           vec_col: str = "embedding", k: int = 5,
-                           round_dp: int = 6) -> DataFrame:
-    """Exact cosine top-k via broadcast + blocked matrix multiply.
-
-    BOUNDED-INDEX helper: ``df`` here is the index side and is collected
-    to the driver, so callers MUST guarantee it is bounded metadata-sized
-    (an embedding index of 1M x 256 floats is ~1 GB — the broadcast-join
-    regime). For corpus-as-index exact kNN use ``block_knn`` (fully
-    distributed, nothing ever collected); for approximate use
-    ``sign_lsh_knn``/``ivf_knn``.
-
-    Same result contract as ``brute_force_knn`` (ENGINE-EXACT quantized
-    sim, id tie-break) but one BLAS call per Arrow batch instead of an
-    interpreted expression per pair — no shuffle; the cross product
-    never materializes.
-    """
-    import numpy as np
-    import pandas as pd
-
-    scale = 10 ** round_dp
-    rows = df.select(id_col, vec_col).collect()  # index build: small side
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.floor(np.array([r[1] for r in rows], dtype=np.float64)
-                   * scale + 0.5)
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-
-    def _knn(batches):
-        for pdf in batches:
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.floor(np.array(list(pdf[vec_col]), dtype=np.float64)
-                         * scale + 0.5)
-            sims = _np_quantized_cosine(q, b_mat.value, scale)
-            out_id, out_nb, out_sim, out_rank = [], [], [], []
-            for qi, row in zip(q_ids, sims):
-                mask = b_ids.value != qi
-                cand_ids = b_ids.value[mask]
-                cand_sims = row[mask]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_id.extend([qi] * len(order))
-                out_nb.extend(cand_ids[order])
-                out_sim.extend(cand_sims[order])
-                out_rank.extend(range(1, len(order) + 1))
-            yield pd.DataFrame({id_col: out_id, "neighbor_id": out_nb,
-                                "sim": out_sim, "rank": out_rank})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _knn, schema=f"{id_col} long, neighbor_id long, sim double, rank int")
 
 
 def _ivf_codebook_mat(base: DataFrame, id_col: str, nlist: int,

@@ -2003,8 +2003,7 @@ def embedding_knn(spark: SparkSession, sf_dir: str,
     matrix product (``block_knn``): every vector moves (blocks+shards)
     times, per-cogroup BLAS matmuls emit local top-k, one window pass
     takes the global top-k. Nothing is ever collected to the driver —
-    the corpus-as-index shape that survives 100 TB (the driver-collect
-    ``brute_force_knn_matmul`` remains as the bounded-index helper).
+    the corpus-as-index shape that survives 100 TB.
 
     Still O(N^2*d) FLOPs by definition, so the run is budget-guarded:
     unsampled past S.DEFAULT_EVAL_FLOP_BUDGET raises loudly;

@@ -37,7 +37,7 @@ def get_spark(app_name: str = "go-streams-spark", extra_conf: dict | None = None
         # (maxShuffledHashJoinLocalMapThreshold=0, i.e. OFF). r9 turned
         # it on at 64 MB and the r10 fresh-JVM bisect measured it as a
         # pure loss on this suite at BOTH driver core counts
-        # (tools/scaling_probe.py, min-of-3 after codegen run, sf0.1):
+        # (tools/scaling_probe.py, sf0.1, codegen run left out of the min):
         # setsim_prefix_pairs 3.56->2.79 s @32c / 3.90->3.46 @8c,
         # dedup_containment_pairs 5.42->3.23 / 4.03->2.70,
         # dedup_method_eval 14.3->10.1 / 13.0->10.5, setsim_pairs_lsh

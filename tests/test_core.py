@@ -100,19 +100,6 @@ def test_invalid_parallelism_raises():
             make()
 
 
-def test_registry_and_bench_integrity():
-    """Every oracle belongs to a registered query; every bench headline
-    name resolves (bench.py silently skips unknown names, so a typo
-    would silently shrink the benchmark)."""
-    import bench
-    from go_streams_spark.queries import ORACLE, QUERIES
-    assert set(ORACLE) <= set(QUERIES)
-    missing = [n for n in bench.BENCH_QUERIES if n not in QUERIES]
-    assert missing == []
-    # no duplicate bench entries
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
-
-
 def test_sql_surface_over_registered_views(spark, sf_dir):
     """Raw SQL is a first-class pipeline surface: register the tables
     as views and run a join+window query through spark.sql, matching
@@ -135,10 +122,10 @@ def test_sql_surface_over_registered_views(spark, sf_dir):
 
 
 def test_registry_integrity():
-    """Registry meta-invariants that silent-fail otherwise: every oracle
-    belongs to a registered query; bench headline names all resolve (the
-    bench loop skips unknown names without erroring — a typo would
-    silently shrink the benchmark); no blank names."""
+    """Registry meta-invariants: every oracle belongs to a registered
+    query; bench headline names all resolve (a typo would otherwise
+    surface only as a KeyError deep into a bench run); no duplicate
+    bench entries; no blank names."""
     import bench
     from go_streams_spark.queries import ORACLE, QUERIES
     assert set(ORACLE) <= set(QUERIES)

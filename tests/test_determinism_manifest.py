@@ -48,8 +48,11 @@ def test_manifest_entries_are_complete():
     with open(MANIFEST) as f:
         manifest = json.load(f)
     for name, rec in manifest.get("queries", {}).items():
-        assert {"hash", "rows", "sf_dir"} <= set(rec), (
-            f"malformed manifest entry for {name}: {rec}")
+        sfh = rec.get("sf_hashes", {})
+        assert sfh, f"manifest entry for {name} has no SF record: {rec}"
+        for sf_dir, sf_rec in sfh.items():
+            assert {"hash", "rows"} <= set(sf_rec), (
+                f"malformed {sf_dir} record for {name}: {sf_rec}")
 
 
 def test_fold_class_audited_at_two_sfs():

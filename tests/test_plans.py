@@ -252,6 +252,44 @@ def test_release_tracked_frees_all_caches(spark, sf_dir):
     assert persisted_ids() - baseline == set()
 
 
+def test_timed_runs_releases_pins_after_each_run(spark, sf_dir):
+    """bench.timed_runs must time the same program on every run: it
+    releases a run's track_persist pins before the next run starts, so
+    run 2 recomputes what run 1 cached instead of reading it (releasing
+    only after the loop, tfidf_top_terms' run 2 launched 8 jobs against
+    run 1's 12 at sf0.1), and nothing stays persisted after the call.
+    Jobs are counted by job-id delta, since a query may launch jobs
+    from threads that do not carry the caller's job group."""
+    from bench import timed_runs
+    from go_streams_spark.plans import release_tracked
+    release_tracked()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def newest_job_id():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    marks: list[int] = []
+
+    def build():
+        marks.append(newest_job_id())
+        return QUERIES["tfidf_top_terms"](spark, sf_dir)
+
+    baseline = persisted_ids()
+    times = timed_runs(build, 2)
+    marks.append(newest_job_id())
+    assert len(times) == 2 and all(t > 0 for t in times)
+    run1, run2 = marks[1] - marks[0], marks[2] - marks[1]
+    assert run1 > 0
+    assert run2 == run1, f"run 2 launched {run2} jobs, run 1 {run1}"
+    assert persisted_ids() - baseline == set()
+
+
 def test_pagerank_shuffle_mode_no_broadcast(spark, sf_dir):
     """broadcast_ranks=False is the billion-node plan: rank tables must
     NEVER be broadcast (forced F.broadcast bypasses

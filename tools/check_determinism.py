@@ -17,8 +17,9 @@ Usage: python tools/check_determinism.py [sf_dir] [query ...]
 vary with partitioning). Exits 1 on any mismatch.
 
 Every PASSING query is recorded (merged) into DETERMINISM_AUDIT.json
-at the repo root — {query: {hash, rows, sf_dir}} plus a count — and
-entries for queries no longer in the registry are pruned on write.
+at the repo root — {query: {"sf_hashes": {sf_dir: {hash, rows}}}} plus
+a count — and entries for queries no longer in the registry are pruned
+on write.
 tests/test_determinism_manifest.py asserts the manifest covers the
 full registry, so REGISTERING A QUERY WITHOUT AUDITING IT FAILS THE
 SUITE (the round-6/round-7 audit-staleness drift, mechanized away).
@@ -124,7 +125,7 @@ def main():
             print(f"NONDET {name}: parts={PARTS_A} hash={ha[:12]} "
                   f"rows={na} vs parts={PARTS_B} hash={hb[:12]} rows={nb}")
         else:
-            passed[name] = {"hash": ha, "rows": na, "sf_dir": sf_dir}
+            passed[name] = {"hash": ha, "rows": na}
             print(f"OK    {name}: {na} rows, hash stable across "
                   f"partitionings")
     spark.conf.set("spark.sql.shuffle.partitions", PARTS_A)
@@ -138,15 +139,9 @@ def main():
     qs = {k: v for k, v in manifest.get("queries", {}).items()
           if k in QUERIES}
     for name, rec in passed.items():
-        old = qs.get(name, {})
-        sfh = dict(old.get("sf_hashes", {}))
-        if old.get("sf_dir") and old["sf_dir"] not in sfh:
-            # migrate a pre-multi-SF entry's evidence
-            sfh[old["sf_dir"]] = {"hash": old["hash"], "rows": old["rows"]}
-        sfh[rec["sf_dir"]] = {"hash": rec["hash"], "rows": rec["rows"]}
-        entry = dict(rec)
-        entry["sf_hashes"] = dict(sorted(sfh.items()))
-        qs[name] = entry
+        sfh = dict(qs.get(name, {}).get("sf_hashes", {}))
+        sfh[sf_dir] = rec
+        qs[name] = {"sf_hashes": dict(sorted(sfh.items()))}
     manifest["queries"] = dict(sorted(qs.items()))
     manifest["audited_count"] = len(qs)
     manifest["registry_count"] = len(QUERIES)
