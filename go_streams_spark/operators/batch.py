@@ -22,12 +22,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..api import Flow
+from .topology import distributed_ordinal
 
 
 def batch_by_count(max_size: int, *, order_by: Sequence[Column | str],
                    partition_by: Sequence[Column | str] | None = None,
-                   batch_col: str = "batch_id",
-                   distributed: bool = False) -> Flow:
+                   batch_col: str = "batch_id") -> Flow:
     """Assign each row a batch id: consecutive groups of ``max_size`` in
     ``order_by`` order (``flow/batch.go:86-96`` count path).
 
@@ -36,35 +36,31 @@ def batch_by_count(max_size: int, *, order_by: Sequence[Column | str],
     instead of materializing ``[]T``). ``collect_batches`` converts to the
     array form when the reference shape is wanted.
 
-    Three numbering strategies:
-      * ``partition_by`` — per-key numbering, fully distributed;
-      * ``distributed=True`` — GLOBAL numbering via ``distributed_ordinal``
-        (range shuffle + per-partition rank + broadcast prefix offsets):
-        same global batch ids as the window form with no
-        Exchange SinglePartition anywhere — the 100 TB shape;
-      * default — global ``row_number()`` window (single-partition sort);
-        kept for small bounded flows where a range shuffle costs more
-        than it saves.
+    Two numbering strategies:
+      * ``partition_by`` — per-key ``row_number()`` window, fully
+        distributed;
+      * otherwise GLOBAL numbering via ``distributed_ordinal`` (range
+        shuffle + per-partition rank + broadcast prefix offsets): the
+        global ``row_number()`` batch ids with no Exchange
+        SinglePartition anywhere.
     """
     if max_size <= 0:
         raise ValueError("max_size must be positive")  # flow/batch_test.go:82-89
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    if distributed and not partition_by:
-        from .topology import distributed_ordinal
-
-        def _apply(df: DataFrame) -> DataFrame:
-            ordd = distributed_ordinal(df, order_by=cols, idx="__bord")
-            return (ordd.withColumn(
-                batch_col, F.floor((F.col("__bord") - 1) / max_size))
-                .drop("__bord"))
-
-        return Flow(_apply, name="batch")
-    w = Window.orderBy(*cols)
     if partition_by:
         w = Window.partitionBy(*[F.col(c) if isinstance(c, str) else c
                                  for c in partition_by]).orderBy(*cols)
-    return Flow(lambda df: df.withColumn(
-        batch_col, F.floor((F.row_number().over(w) - 1) / max_size)), name="batch")
+        return Flow(lambda df: df.withColumn(
+            batch_col, F.floor((F.row_number().over(w) - 1) / max_size)),
+            name="batch")
+
+    def _apply(df: DataFrame) -> DataFrame:
+        ordd = distributed_ordinal(df, order_by=cols, idx="__bord")
+        return (ordd.withColumn(
+            batch_col, F.floor((F.col("__bord") - 1) / max_size))
+            .drop("__bord"))
+
+    return Flow(_apply, name="batch")
 
 
 def batch_by_time(ts: str | Column, interval: str, *, batch_col: str = "batch_id") -> Flow:

@@ -485,8 +485,7 @@ def batch_by_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Numbering via ``distributed_ordinal`` — identical global batch ids
     with no single-partition WindowExec in the plan."""
     ev = _t(spark, sf_dir, "events")
-    out = Source(ev).via(batch_by_count(
-        100, order_by=["event_id"], distributed=True)).to_df()
+    out = Source(ev).via(batch_by_count(100, order_by=["event_id"])).to_df()
     return (out.groupBy("batch_id")
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.min("event_id").alias("min_id"),
@@ -2919,7 +2918,7 @@ def batch_collect_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import collect_batches, Flatten
     ev = _t(spark, sf_dir, "events")
     batched = Source(ev.select("event_id")) \
-        .via(batch_by_count(50, order_by=["event_id"], distributed=True)) \
+        .via(batch_by_count(50, order_by=["event_id"])) \
         .via(collect_batches("event_id", group_cols=["batch_id"], output="value")) \
         .to_df()
     # flatten back and recompute stats per batch (round-trip proof)

@@ -4,8 +4,7 @@ Data Source API connectors."""
 from .files import (text_source, json_source, csv_source, parquet_source,
                     binary_source, framed_binary_source, orc_source,
                     xml_source)
-from .custom import (register_replay_source, REPLAY_SOURCE_NAME,
-                     register_cdc_polling_source)
+from .custom import register_replay_source, REPLAY_SOURCE_NAME
 from .redis_stream import (register_redis_sources, REDIS_STREAM_SOURCE_NAME,
                            REDIS_PUBSUB_SOURCE_NAME)
 from .nats_jetstream import register_nats_source, NATS_SOURCE_NAME
@@ -17,7 +16,6 @@ __all__ = [
     "text_source", "json_source", "csv_source", "parquet_source", "binary_source",
     "framed_binary_source", "orc_source", "xml_source",
     "register_replay_source", "REPLAY_SOURCE_NAME",
-    "register_cdc_polling_source",
     "register_redis_sources", "REDIS_STREAM_SOURCE_NAME",
     "REDIS_PUBSUB_SOURCE_NAME",
     "register_nats_source", "NATS_SOURCE_NAME",

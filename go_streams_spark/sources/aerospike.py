@@ -18,8 +18,7 @@ trigger-flush at task end reproduces the count-OR-time contract). The
 streaming source is the last-update-cursor micro-batch reader: offsets
 are the high-water last-update clock, each batch scans
 ``(cursor, new_cursor]`` — the replayable form of the reference's poll
-loop (same design as the file-backed gss_cdc_poll source, here against
-the client adapter).
+loop.
 
 Adapter protocol (injected via ``clientFactory``): ``put_batch(ns, set,
 [(key, bins)])``, ``scan(ns, set, since_update)``, ``max_last_update(ns,
@@ -29,17 +28,14 @@ client; tests inject the file-backed FakeAerospike.
 
 from __future__ import annotations
 
-import importlib
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
+
+from ._broker import ClientReader, RowWriter, connected
 
 AEROSPIKE_SOURCE_NAME = "gss_aerospike"
 AEROSPIKE_SCHEMA = "key string, bins map<string,string>, last_update long"
@@ -90,14 +86,6 @@ class AerospikeClientAdapter:
         self._client.close()
 
 
-def resolve_adapter_factory(options: dict):
-    spec = options.get("clientfactory")
-    if spec:
-        mod, _, fn = spec.partition(":")
-        return getattr(importlib.import_module(mod), fn)
-    return AerospikeClientAdapter
-
-
 def _ns_set(options: dict) -> tuple[str, str]:
     ns, st = options.get("namespace"), options.get("set")
     if not ns or not st:
@@ -120,32 +108,16 @@ class AerospikeBatchReader(DataSourceReader):
 
     def read(self, partition):
         ns, st = _ns_set(self.options)
-        adapter = resolve_adapter_factory(self.options)(self.options)
-        try:
-            for key, bins, lut in adapter.scan(ns, st, 0):
-                yield (key, bins, lut)
-        finally:
-            adapter.close()
+        with connected(self.options, AerospikeClientAdapter) as adapter:
+            yield from adapter.scan(ns, st, 0)
 
 
-class AerospikeCDCStreamReader(DataSourceStreamReader):
+class AerospikeCDCStreamReader(ClientReader, DataSourceStreamReader):
     """Polling CDC source (aerospike.go:91-127): offsets are the
     high-water last-update clock; each micro-batch scans the
     ``(cursor, new_cursor]`` update window."""
 
-    def __init__(self, options: dict):
-        self.options = dict(options)
-        self._adapter = None
-
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_adapter"] = None
-        return state
-
-    def _cli(self):
-        if self._adapter is None:
-            self._adapter = resolve_adapter_factory(self.options)(self.options)
-        return self._adapter
+    default_client = AerospikeClientAdapter
 
     def initialOffset(self) -> dict:
         return {"lut": 0}
@@ -161,35 +133,26 @@ class AerospikeCDCStreamReader(DataSourceStreamReader):
         if partition.since >= partition.until:
             return
         ns, st = _ns_set(self.options)
-        adapter = resolve_adapter_factory(self.options)(self.options)
-        try:
+        with connected(self.options, AerospikeClientAdapter) as adapter:
             for key, bins, lut in adapter.scan(ns, st, partition.since):
                 if lut <= partition.until:
                     yield (key, bins, lut)
-        finally:
-            adapter.close()
 
     def commit(self, end: dict):
         pass
 
 
-class _PutCommit(WriterCommitMessage):
-    def __init__(self, rows: int, batches: int):
-        self.rows = rows
-        self.batches = batches
-
-
-def _put_rows(options: dict, iterator) -> _PutCommit:
+def _put_rows(options: dict, iterator) -> int:
     """Executor-side batched put loop (aerospike.go:255-332): buffer up
     to ``batchSize`` records, flush via one ``put_batch`` call; the end
-    of the task (micro-batch/partition boundary) is the time-flush."""
+    of the task (micro-batch/partition boundary) is the time-flush.
+    Puts are keyed upserts, so a replayed task is idempotent."""
     ns, st = _ns_set(options)
     batch_size = int(options.get("batchsize", str(DEFAULT_BATCH_SIZE)))
     key_col = options.get("keycolumn", "key")
-    adapter = resolve_adapter_factory(options)(options)
     buffer: list[tuple] = []
-    n = batches = 0
-    try:
+    n = 0
+    with connected(options, AerospikeClientAdapter) as adapter:
         for row in iterator:
             d = row.asDict(recursive=True)
             key = str(d.get(key_col))
@@ -201,42 +164,10 @@ def _put_rows(options: dict, iterator) -> _PutCommit:
             n += 1
             if len(buffer) >= batch_size:
                 adapter.put_batch(ns, st, buffer)
-                batches += 1
                 buffer = []
         if buffer:
             adapter.put_batch(ns, st, buffer)
-            batches += 1
-    finally:
-        adapter.close()
-    return _PutCommit(n, batches)
-
-
-class AerospikeBatchWriter(DataSourceWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _put_rows(self.options, iterator)
-
-    def commit(self, messages):
-        pass  # puts are keyed upserts: replays are idempotent
-
-    def abort(self, messages):
-        pass
-
-
-class AerospikeStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _put_rows(self.options, iterator)
-
-    def commit(self, messages, batchId):
-        pass
-
-    def abort(self, messages, batchId):
-        pass
+    return n
 
 
 class AerospikeDataSource(DataSource):
@@ -263,10 +194,10 @@ class AerospikeDataSource(DataSource):
         return AerospikeCDCStreamReader(self.options)
 
     def writer(self, schema, overwrite):
-        return AerospikeBatchWriter(self.options)
+        return RowWriter(self.options, _put_rows)
 
     def streamWriter(self, schema, overwrite):
-        return AerospikeStreamWriter(self.options)
+        return RowWriter(self.options, _put_rows)
 
 
 def register_aerospike_source(spark) -> str:

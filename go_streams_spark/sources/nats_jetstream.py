@@ -29,18 +29,16 @@ same protocol.
 
 from __future__ import annotations
 
-import importlib
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
+
+from ._broker import ClientReader, RowWriter, connected, to_bytes
 
 NATS_SOURCE_NAME = "gss_nats_jetstream"
 NATS_SCHEMA = "seq long, subject string, data binary"
@@ -53,9 +51,7 @@ class NatsPyAdapter:
 
     def __init__(self, options: dict):
         try:
-            import asyncio
-
-            import nats  # noqa: F401
+            import nats
         except ImportError as e:  # pragma: no cover - depends on env
             raise ImportError(
                 "NATS connector requires the 'nats-py' client library "
@@ -95,14 +91,6 @@ class NatsPyAdapter:
             self._loop.close()
 
 
-def resolve_adapter_factory(options: dict):
-    spec = options.get("clientfactory")
-    if spec:
-        mod, _, fn = spec.partition(":")
-        return getattr(importlib.import_module(mod), fn)
-    return NatsPyAdapter
-
-
 def _stream_name(options: dict) -> str:
     s = options.get("stream")
     if not s:
@@ -120,13 +108,8 @@ class _SeqRange(InputPartition):
 def _read_range(options: dict, part: _SeqRange) -> Iterator[tuple]:
     if part.start >= part.end:
         return
-    adapter = resolve_adapter_factory(options)(options)
-    try:
-        for seq, subject, data in adapter.fetch_range(
-                part.stream, part.start, part.end):
-            yield (seq, subject, data)
-    finally:
-        adapter.close()
+    with connected(options, NatsPyAdapter) as adapter:
+        yield from adapter.fetch_range(part.stream, part.start, part.end)
 
 
 class NatsBatchReader(DataSourceReader):
@@ -139,11 +122,8 @@ class NatsBatchReader(DataSourceReader):
 
     def partitions(self):
         stream = _stream_name(self.options)
-        adapter = resolve_adapter_factory(self.options)(self.options)
-        try:
+        with connected(self.options, NatsPyAdapter) as adapter:
             last = adapter.last_sequence(stream)
-        finally:
-            adapter.close()
         n = max(1, int(self.options.get("numpartitions", "4")))
         step = max(1, (last + n - 1) // n)
         return [_SeqRange(stream, lo, min(lo + step, last))
@@ -153,25 +133,16 @@ class NatsBatchReader(DataSourceReader):
         yield from _read_range(self.options, partition)
 
 
-class NatsStreamReader(DataSourceStreamReader):
+class NatsStreamReader(ClientReader, DataSourceStreamReader):
     """Micro-batch reader: offsets are ``{"seq": last_stream_sequence}``."""
 
+    default_client = NatsPyAdapter
+
     def __init__(self, options: dict):
-        self.options = dict(options)
+        super().__init__(options)
         self.stream = _stream_name(self.options)
         self.fetch_batch = int(
             self.options.get("fetchbatchsize", str(DEFAULT_FETCH_BATCH)))
-        self._adapter = None
-
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_adapter"] = None
-        return state
-
-    def _cli(self):
-        if self._adapter is None:
-            self._adapter = resolve_adapter_factory(self.options)(self.options)
-        return self._adapter
 
     def initialOffset(self) -> dict:
         if self.options.get("deliverpolicy", "all") == "new":
@@ -213,67 +184,23 @@ class NatsStreamReader(DataSourceStreamReader):
         pass
 
 
-class _PublishCommit(WriterCommitMessage):
-    def __init__(self, rows: int):
-        self.rows = rows
-
-
-def _publish_rows(options: dict, iterator) -> _PublishCommit:
+def _publish_rows(options: dict, iterator) -> int:
     """Executor-side publish loop (nats_jetstream.go:239-275): each
     row's ``data`` column (or sole column) is published to ``subject``
     — per-row override via a ``subject`` column when present."""
     subject = options.get("subject")
-    adapter = resolve_adapter_factory(options)(options)
     n = 0
-    try:
+    with connected(options, NatsPyAdapter) as adapter:
         for row in iterator:
             d = row.asDict()
             subj = d.get("subject") or subject
             if not subj:
                 raise ValueError(
                     "NATS sink requires option 'subject' or a subject column")
-            payload = d.get("data", d.get("value", d.get("payload")))
-            if payload is None:
-                payload = b""
-            if isinstance(payload, str):
-                payload = payload.encode("utf-8")
-            elif isinstance(payload, (bytearray, memoryview)):
-                payload = bytes(payload)
-            elif not isinstance(payload, bytes):
-                payload = str(payload).encode("utf-8")
-            adapter.publish(subj, payload)
+            adapter.publish(
+                subj, to_bytes(d.get("data", d.get("value", d.get("payload")))))
             n += 1
-    finally:
-        adapter.close()
-    return _PublishCommit(n)
-
-
-class NatsBatchWriter(DataSourceWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _publish_rows(self.options, iterator)
-
-    def commit(self, messages):
-        pass  # publishes are immediate; at-least-once like the reference
-
-    def abort(self, messages):
-        pass
-
-
-class NatsStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _publish_rows(self.options, iterator)
-
-    def commit(self, messages, batchId):
-        pass
-
-    def abort(self, messages, batchId):
-        pass
+    return n
 
 
 class NatsJetStreamDataSource(DataSource):
@@ -303,10 +230,10 @@ class NatsJetStreamDataSource(DataSource):
     def writer(self, schema, overwrite):
         if overwrite:
             raise ValueError("JetStream streams are append-only; use append")
-        return NatsBatchWriter(self.options)
+        return RowWriter(self.options, _publish_rows)
 
     def streamWriter(self, schema, overwrite):
-        return NatsStreamWriter(self.options)
+        return RowWriter(self.options, _publish_rows)
 
 
 def register_nats_source(spark) -> str:

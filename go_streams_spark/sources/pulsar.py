@@ -27,18 +27,16 @@ library; tests inject the file-backed FakePulsarClient.
 from __future__ import annotations
 
 import base64
-import importlib
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
+
+from ._broker import ClientReader, RowWriter, connected, resolve_factory, to_bytes
 
 PULSAR_SOURCE_NAME = "gss_pulsar"
 PULSAR_SCHEMA = "message_id string, key string, data binary"
@@ -136,28 +134,13 @@ class PulsarClientAdapter:
 
     def compare_ids(self, a: str, b: str) -> int:
         ma, mb = self._deser(a), self._deser(b)
-
-        def key(m):
-            try:  # stable accessors present in every pulsar-client release
-                return (m.ledger_id(), m.entry_id(), m.batch_index())
-            except AttributeError:
-                return None
-
-        ka, kb = key(ma), key(mb)
+        ka, kb = self._id_key(ma), self._id_key(mb)
         if ka is not None and kb is not None:
             return (ka > kb) - (ka < kb)
         return (ma > mb) - (ma < mb)  # last resort: rich comparison
 
     def close(self):
         self._client.close()
-
-
-def resolve_adapter_factory(options: dict):
-    spec = options.get("clientfactory")
-    if spec:
-        mod, _, fn = spec.partition(":")
-        return getattr(importlib.import_module(mod), fn)
-    return PulsarClientAdapter
 
 
 def _topic(options: dict) -> str:
@@ -178,26 +161,19 @@ class _IdRange(InputPartition):
 
 
 def _read_range(options: dict, part: _IdRange) -> Iterator[tuple]:
-    adapter = resolve_adapter_factory(options)(options)
-    try:
+    with connected(options, PulsarClientAdapter) as adapter:
         if adapter.compare_ids(part.start, part.end) >= 0:
             return
-        for mid, key, data in adapter.read_range(
-                part.topic, part.start, part.end):
-            yield (mid, key, data)
-    finally:
-        adapter.close()
+        yield from adapter.read_range(part.topic, part.start, part.end)
 
 
 def _earliest_id(options: dict) -> str:
-    # fake uses "0:-1"; real adapter serializes MessageId.earliest
-    spec = options.get("clientfactory")
-    if spec:
+    # an injected adapter takes the ``earliestId`` option (the fake's
+    # "0:-1"); the real adapter serializes MessageId.earliest
+    if resolve_factory(options, None) is not None:
         return options.get("earliestid", "0:-1")
-    import base64 as _b64
-
     import pulsar
-    return _b64.b64encode(pulsar.MessageId.earliest.serialize()).decode("ascii")
+    return base64.b64encode(pulsar.MessageId.earliest.serialize()).decode("ascii")
 
 
 class PulsarBatchReader(DataSourceReader):
@@ -210,18 +186,15 @@ class PulsarBatchReader(DataSourceReader):
 
     def partitions(self):
         topic = _topic(self.options)
-        adapter = resolve_adapter_factory(self.options)(self.options)
-        try:
+        with connected(self.options, PulsarClientAdapter) as adapter:
             last = adapter.last_message_id(topic)
-        finally:
-            adapter.close()
         return [_IdRange(topic, _earliest_id(self.options), last)]
 
     def read(self, partition: _IdRange):
         yield from _read_range(self.options, partition)
 
 
-class PulsarStreamReader(DataSourceStreamReader):
+class PulsarStreamReader(ClientReader, DataSourceStreamReader):
     """Micro-batch reader: offsets are ``{topic: serialized MessageId}``.
 
     ``topic`` may be comma-separated — each topic becomes its own input
@@ -230,21 +203,12 @@ class PulsarStreamReader(DataSourceStreamReader):
     ``topic-partition-N`` names, mirroring the Redis multi-stream
     model)."""
 
+    default_client = PulsarClientAdapter
+
     def __init__(self, options: dict):
-        self.options = dict(options)
+        super().__init__(options)
         self.topics = [t.strip() for t in _topic(self.options).split(",")
                        if t.strip()]
-        self._adapter = None
-
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_adapter"] = None
-        return state
-
-    def _cli(self):
-        if self._adapter is None:
-            self._adapter = resolve_adapter_factory(self.options)(self.options)
-        return self._adapter
 
     def initialOffset(self) -> dict:
         if self.options.get("startingoffsets", EARLIEST_OPTION) == "latest":
@@ -267,68 +231,20 @@ class PulsarStreamReader(DataSourceStreamReader):
         pass  # checkpoint replaces the subscription cursor
 
 
-def _to_bytes(payload) -> bytes:
-    if payload is None:
-        return b""
-    if isinstance(payload, str):
-        return payload.encode("utf-8")
-    if isinstance(payload, (bytearray, memoryview)):
-        return bytes(payload)
-    if isinstance(payload, bytes):
-        return payload
-    return str(payload).encode("utf-8")
-
-
-class _SendCommit(WriterCommitMessage):
-    def __init__(self, rows: int):
-        self.rows = rows
-
-
-def _send_rows(options: dict, iterator) -> _SendCommit:
+def _send_rows(options: dict, iterator) -> int:
     """Producer loop (pulsar.go:138-165): send each row's ``data``
     column (or sole column) to the topic, with optional ``key``."""
     topic = _topic(options)
-    adapter = resolve_adapter_factory(options)(options)
     n = 0
-    try:
+    with connected(options, PulsarClientAdapter) as adapter:
         for row in iterator:
             d = row.asDict()
             adapter.publish(
                 topic,
-                _to_bytes(d.get("data", d.get("value", d.get("payload")))),
+                to_bytes(d.get("data", d.get("value", d.get("payload")))),
                 d.get("key"))
             n += 1
-    finally:
-        adapter.close()
-    return _SendCommit(n)
-
-
-class PulsarBatchWriter(DataSourceWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _send_rows(self.options, iterator)
-
-    def commit(self, messages):
-        pass
-
-    def abort(self, messages):
-        pass
-
-
-class PulsarStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _send_rows(self.options, iterator)
-
-    def commit(self, messages, batchId):
-        pass
-
-    def abort(self, messages, batchId):
-        pass
+    return n
 
 
 class PulsarDataSource(DataSource):
@@ -356,10 +272,10 @@ class PulsarDataSource(DataSource):
     def writer(self, schema, overwrite):
         if overwrite:
             raise ValueError("Pulsar topics are append-only; use append")
-        return PulsarBatchWriter(self.options)
+        return RowWriter(self.options, _send_rows)
 
     def streamWriter(self, schema, overwrite):
-        return PulsarStreamWriter(self.options)
+        return RowWriter(self.options, _send_rows)
 
 
 def register_pulsar_source(spark) -> str:

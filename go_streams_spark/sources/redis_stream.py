@@ -36,19 +36,16 @@ builds a real ``redis.Redis`` from host/port/db/password options.
 
 from __future__ import annotations
 
-import importlib
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
+
+from ._broker import ClientReader, RowWriter, TailReader, connected, resolve_factory
 
 REDIS_STREAM_SOURCE_NAME = "gss_redis_stream"
 REDIS_PUBSUB_SOURCE_NAME = "gss_redis_pubsub"
@@ -62,31 +59,28 @@ def _parse_id(entry_id: str) -> tuple[int, int]:
     return int(ms), int(seq or 0)
 
 
+def _redis_client(opts: dict):
+    """The real client: ``redis.Redis`` from host/port/db/password."""
+    try:
+        import redis
+    except ImportError as e:  # pragma: no cover - depends on env
+        raise ImportError(
+            "Redis connector requires the 'redis' client library "
+            "(pip install redis), or pass clientFactory pointing at a "
+            "compatible client builder") from e
+    return redis.Redis(
+        host=opts.get("host", "localhost"),
+        port=int(opts.get("port", "6379")),
+        db=int(opts.get("db", "0")),
+        password=opts.get("password"),
+        decode_responses=True,
+    )
+
+
 def resolve_client_factory(options: dict):
-    """Resolve the redis client factory: ``clientFactory`` option
+    """The redis client builder: ``clientFactory`` option
     (``module:function``) or the default real-client builder."""
-    spec = options.get("clientfactory")
-    if spec:
-        mod, _, fn = spec.partition(":")
-        return getattr(importlib.import_module(mod), fn)
-
-    def _default(opts: dict):
-        try:
-            import redis
-        except ImportError as e:  # pragma: no cover - depends on env
-            raise ImportError(
-                "Redis connector requires the 'redis' client library "
-                "(pip install redis), or pass clientFactory pointing at a "
-                "compatible client builder") from e
-        return redis.Redis(
-            host=opts.get("host", "localhost"),
-            port=int(opts.get("port", "6379")),
-            db=int(opts.get("db", "0")),
-            password=opts.get("password"),
-            decode_responses=True,
-        )
-
-    return _default
+    return resolve_factory(options, _redis_client)
 
 
 def _streams(options: dict) -> list[str]:
@@ -94,6 +88,13 @@ def _streams(options: dict) -> list[str]:
     if not raw:
         raise ValueError("redis stream connector requires option 'stream'")
     return [s.strip() for s in raw.split(",") if s.strip()]
+
+
+def _channel(options: dict, role: str) -> str:
+    channel = options.get("channel")
+    if not channel:
+        raise ValueError(f"redis pubsub {role} requires option 'channel'")
+    return channel
 
 
 def _ensure_group(client, options: dict, streams: list[str]):
@@ -125,62 +126,44 @@ def _read_slice(options: dict, part: _StreamSlice) -> Iterator[tuple]:
     exclusive lower bound, the property XREADGROUP cannot give us."""
     if part.start == part.end:
         return
-    client = resolve_client_factory(options)(options)
-    try:
+    with connected(options, _redis_client) as client:
         for eid, values in client.xrange(
                 part.stream, f"({part.start}", part.end):
             yield (eid, part.stream, dict(values))
-    finally:
-        client.close()
 
 
 class RedisStreamBatchReader(DataSourceReader):
-    """Bounded read of full streams (or an explicit [startId, endId]
+    """Bounded read of full streams (or an explicit (startId, endId]
     range) — one partition per stream."""
 
     def __init__(self, options: dict):
         self.options = dict(options)
 
     def partitions(self):
-        out = []
-        for s in _streams(self.options):
-            out.append(_StreamSlice(
-                s,
-                self.options.get("startid", "0-0"),
-                self.options.get("endid", "+")))
-        return out
+        # "-" (the smallest id) reads the same entries as "(0-0"
+        start = self.options.get("startid", "0-0")
+        return [_StreamSlice(s, "0-0" if start == "-" else start,
+                             self.options.get("endid", "+"))
+                for s in _streams(self.options)]
 
     def read(self, partition: _StreamSlice):
-        client = resolve_client_factory(self.options)(self.options)
-        try:
-            lo = partition.start
-            lo = "-" if lo in ("0-0", "-") else f"({lo}"
-            for eid, values in client.xrange(partition.stream, lo, partition.end):
-                yield (eid, partition.stream, dict(values))
-        finally:
-            client.close()
+        yield from _read_slice(self.options, partition)
 
 
-class RedisStreamStreamReader(DataSourceStreamReader):
+class RedisStreamStreamReader(ClientReader, DataSourceStreamReader):
     """Micro-batch reader: offsets are ``{stream: last_entry_id}``."""
 
+    default_client = staticmethod(_redis_client)
+
     def __init__(self, options: dict):
-        self.options = dict(options)
+        super().__init__(options)
         self.streams = _streams(self.options)
         self.max_per_trigger = int(
             self.options.get("maxentriespertrigger", "1000"))
-        self._client = None
 
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_client"] = None  # network clients don't pickle
-        return state
-
-    def _cli(self):
-        if self._client is None:
-            self._client = resolve_client_factory(self.options)(self.options)
-            _ensure_group(self._client, self.options, self.streams)
-        return self._client
+    def _open(self, client):
+        _ensure_group(client, self.options, self.streams)
+        return client
 
     def initialOffset(self) -> dict:
         cli = self._cli()
@@ -267,21 +250,15 @@ class RedisStreamStreamReader(DataSourceStreamReader):
                     cli.xgroup_setid(s, group, id=eid)
 
 
-class _XAddCommit(WriterCommitMessage):
-    def __init__(self, rows: int):
-        self.rows = rows
-
-
-def _xadd_rows(options: dict, iterator) -> _XAddCommit:
+def _xadd_rows(options: dict, iterator) -> int:
     """Executor-side XADD loop (redis_stream.go:176-210): a ``values``
     map column is written as the entry's field map; otherwise every
     column becomes a stringified field (the map[string]any case)."""
     stream = options.get("stream")
     if not stream:
         raise ValueError("redis stream sink requires option 'stream'")
-    client = resolve_client_factory(options)(options)
     n = 0
-    try:
+    with connected(options, _redis_client) as client:
         for row in iterator:
             d = row.asDict(recursive=True)
             values = d.get("values")
@@ -289,37 +266,7 @@ def _xadd_rows(options: dict, iterator) -> _XAddCommit:
                 values = {k: "" if v is None else str(v) for k, v in d.items()}
             client.xadd(stream, values)
             n += 1
-    finally:
-        client.close()
-    return _XAddCommit(n)
-
-
-class RedisStreamBatchWriter(DataSourceWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _xadd_rows(self.options, iterator)
-
-    def commit(self, messages):
-        pass  # XADD is immediate; at-least-once like the reference sink
-
-    def abort(self, messages):
-        pass  # appended entries are not retracted (fire-and-forget)
-
-
-class RedisStreamStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options: dict):
-        self.options = dict(options)
-
-    def write(self, iterator):
-        return _xadd_rows(self.options, iterator)
-
-    def commit(self, messages, batchId):
-        pass
-
-    def abort(self, messages, batchId):
-        pass
+    return n
 
 
 class RedisStreamDataSource(DataSource):
@@ -351,13 +298,17 @@ class RedisStreamDataSource(DataSource):
             raise ValueError(
                 "redis streams are append-only; mode('overwrite') is not "
                 "supported — use mode('append')")
-        return RedisStreamBatchWriter(self.options)
+        return RowWriter(self.options, _xadd_rows)
 
     def streamWriter(self, schema, overwrite):
-        return RedisStreamStreamWriter(self.options)
+        return RowWriter(self.options, _xadd_rows)
 
 
-class RedisPubSubStreamReader(SimpleDataSourceStreamReader):
+def _text(value):
+    return value.decode("utf-8", "replace") if isinstance(value, bytes) else value
+
+
+class RedisPubSubStreamReader(TailReader):
     """Redis Pub/Sub source (redis_pubsub.go:35,65-83).
 
     Pub/Sub is fire-and-forget: a message not consumed at publish time is
@@ -370,98 +321,41 @@ class RedisPubSubStreamReader(SimpleDataSourceStreamReader):
     delivery is at-most-once — exactly the reference's guarantee.
     """
 
+    default_client = staticmethod(_redis_client)
+
     def __init__(self, options: dict):
-        self.options = dict(options)
-        self.channel = self.options.get("channel")
-        if not self.channel:
-            raise ValueError("redis pubsub source requires option 'channel'")
-        self._client = None
-        self._pubsub = None
-        self._buffer: list[tuple] = []  # rows consumed, index = offset - base
-        self._base = 0
+        super().__init__(options)
+        self.channel = _channel(self.options, "source")
 
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_client"] = None
-        state["_pubsub"] = None
-        return state
+    def _open(self, client):
+        pubsub = client.pubsub()
+        pubsub.subscribe(self.channel)
+        return client, pubsub  # the client owns the pubsub's connection
 
-    def _sub(self):
-        if self._pubsub is None:
-            self._client = resolve_client_factory(self.options)(self.options)
-            self._pubsub = self._client.pubsub()
-            self._pubsub.subscribe(self.channel)
-        return self._pubsub
+    _sub = TailReader._cli  # subscribe now, before the first trigger
 
-    def initialOffset(self) -> dict:
-        return {"n": 0}
-
-    def _drain(self):
-        ps = self._sub()
-        while True:
-            msg = ps.get_message(ignore_subscribe_messages=True, timeout=0.01)
-            if msg is None:
-                break
-            if msg.get("type") != "message":
-                continue
-            ch = msg.get("channel")
-            data = msg.get("data")
-            if isinstance(ch, bytes):
-                ch = ch.decode("utf-8", "replace")
-            if isinstance(data, bytes):
-                data = data.decode("utf-8", "replace")
-            self._buffer.append((ch, msg.get("pattern"), data))
-
-    def read(self, start: dict):
-        self._drain()
-        lo = start["n"] - self._base
-        rows = self._buffer[max(lo, 0):]
-        end = {"n": self._base + len(self._buffer)}
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        lo, hi = start["n"] - self._base, end["n"] - self._base
-        if lo < 0:  # pragma: no cover - post-restart replay gap
-            lo = 0  # at-most-once: pre-restart messages are unrecoverable
-        return iter(self._buffer[lo:hi])
-
-    def commit(self, end: dict):
-        # trim the replay tail below the committed offset
-        keep = end["n"] - self._base
-        if keep > 0:
-            self._buffer = self._buffer[keep:]
-            self._base = end["n"]
+    def _poll(self):
+        _, pubsub = self._sub()
+        while (msg := pubsub.get_message(ignore_subscribe_messages=True,
+                                         timeout=0.01)) is not None:
+            if msg.get("type") == "message":
+                yield (_text(msg.get("channel")), msg.get("pattern"),
+                       _text(msg.get("data")))
 
 
-class RedisPubSubStreamWriter(DataSourceStreamWriter):
+def _pubsub_rows(options: dict, iterator) -> int:
     """PUBLISH each row's payload (redis_pubsub.go:112,135-154)."""
-
-    def __init__(self, options: dict):
-        self.options = dict(options)
-        self.channel = self.options.get("channel")
-        if not self.channel:
-            raise ValueError("redis pubsub sink requires option 'channel'")
-
-    def write(self, iterator):
-        client = resolve_client_factory(self.options)(self.options)
-        n = 0
-        try:
-            for row in iterator:
-                d = row.asDict()
-                payload = d.get("payload", d.get("value"))
-                if payload is None and d:
-                    payload = next(iter(d.values()))
-                client.publish(self.channel, "" if payload is None else str(payload))
-                n += 1
-        finally:
-            client.close()
-        return _XAddCommit(n)
-
-    def commit(self, messages, batchId):
-        pass
-
-    def abort(self, messages, batchId):
-        pass
+    channel = options["channel"]  # checked by streamWriter()
+    n = 0
+    with connected(options, _redis_client) as client:
+        for row in iterator:
+            d = row.asDict()
+            payload = d.get("payload", d.get("value"))
+            if payload is None and d:
+                payload = next(iter(d.values()))
+            client.publish(channel, "" if payload is None else str(payload))
+            n += 1
+    return n
 
 
 class RedisPubSubDataSource(DataSource):
@@ -480,7 +374,8 @@ class RedisPubSubDataSource(DataSource):
         return RedisPubSubStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        return RedisPubSubStreamWriter(self.options)
+        _channel(self.options, "sink")
+        return RowWriter(self.options, _pubsub_rows)
 
 
 def register_redis_sources(spark) -> tuple[str, str]:

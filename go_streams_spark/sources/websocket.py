@@ -26,14 +26,9 @@ FakeWebSocketServer.
 
 from __future__ import annotations
 
-import importlib
+from pyspark.sql.datasource import DataSource
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamWriter,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from ._broker import RowWriter, TailReader, resolve_factory, to_bytes
 
 WEBSOCKET_SOURCE_NAME = "gss_websocket"
 WEBSOCKET_SCHEMA = "msg_type int, payload binary"
@@ -82,14 +77,6 @@ class WebsocketsAdapter:
         return _Conn()
 
 
-def resolve_adapter_factory(options: dict):
-    spec = options.get("clientfactory")
-    if spec:
-        mod, _, fn = spec.partition(":")
-        return getattr(importlib.import_module(mod), fn)
-    return WebsocketsAdapter
-
-
 def _url(options: dict) -> str:
     u = options.get("url")
     if not u:
@@ -97,98 +84,44 @@ def _url(options: dict) -> str:
     return u
 
 
-class WebSocketStreamReader(SimpleDataSourceStreamReader):
+class WebSocketStreamReader(TailReader):
     """Driver-side frame reader; offsets count frames consumed since
     connect. Committed prefix is trimmed; uncommitted ranges replay from
     the in-memory tail; across restarts delivery is at-most-once."""
 
+    default_client = WebsocketsAdapter
+
     def __init__(self, options: dict):
-        self.options = dict(options)
+        super().__init__(options)
         self.url = _url(self.options)
-        self._conn = None
-        self._buffer: list[tuple] = []
-        self._base = 0
 
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_conn"] = None
-        return state
+    def _open(self, adapter):
+        return adapter.connect(self.url)
 
-    def _c(self):
-        if self._conn is None:
-            self._conn = resolve_adapter_factory(
-                self.options)(self.options).connect(self.url)
-        return self._conn
+    _c = TailReader._cli  # connect now, before the first trigger
 
-    def initialOffset(self) -> dict:
-        return {"n": 0}
-
-    def _drain(self):
+    def _poll(self):
         conn = self._c()
-        while True:
-            frame = conn.recv(timeout=0.01)
-            if frame is None:
-                break
-            self._buffer.append(frame)
-
-    def read(self, start: dict):
-        self._drain()
-        lo = max(start["n"] - self._base, 0)
-        rows = self._buffer[lo:]
-        return iter(rows), {"n": self._base + len(self._buffer)}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        lo = max(start["n"] - self._base, 0)
-        hi = end["n"] - self._base
-        return iter(self._buffer[lo:hi])
-
-    def commit(self, end: dict):
-        keep = end["n"] - self._base
-        if keep > 0:
-            self._buffer = self._buffer[keep:]
-            self._base = end["n"]
+        while (frame := conn.recv(timeout=0.01)) is not None:
+            yield frame
 
 
-class _FrameCommit(WriterCommitMessage):
-    def __init__(self, rows: int):
-        self.rows = rows
-
-
-class WebSocketStreamWriter(DataSourceStreamWriter):
+def _send_frames(options: dict, iterator) -> int:
     """Frame writer (web_socket.go:152-180): each row's ``payload`` is
     sent as one frame; ``msg_type`` column (or ``messageType`` option)
     selects Text(1)/Binary(2)."""
-
-    def __init__(self, options: dict):
-        self.options = dict(options)
-        self.url = _url(self.options)
-        self.default_type = int(self.options.get(
-            "messagetype", str(TEXT_MESSAGE)))
-
-    def write(self, iterator):
-        conn = resolve_adapter_factory(self.options)(self.options).connect(self.url)
-        n = 0
-        try:
-            for row in iterator:
-                d = row.asDict()
-                payload = d.get("payload", d.get("value", d.get("data")))
-                if payload is None:
-                    payload = b""
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                elif isinstance(payload, (bytearray, memoryview)):
-                    payload = bytes(payload)
-                conn.send(payload, int(d.get("msg_type") or self.default_type))
-                n += 1
-        finally:
-            conn.close()
-        return _FrameCommit(n)
-
-    def commit(self, messages, batchId):
-        pass
-
-    def abort(self, messages, batchId):
-        pass
+    default_type = int(options.get("messagetype", str(TEXT_MESSAGE)))
+    conn = resolve_factory(options, WebsocketsAdapter)(options).connect(_url(options))
+    n = 0
+    try:
+        for row in iterator:
+            d = row.asDict()
+            conn.send(to_bytes(d.get("payload", d.get("value", d.get("data")))),
+                      int(d.get("msg_type") or default_type))
+            n += 1
+    finally:
+        conn.close()
+    return n
 
 
 class WebSocketDataSource(DataSource):
@@ -206,7 +139,8 @@ class WebSocketDataSource(DataSource):
         return WebSocketStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite):
-        return WebSocketStreamWriter(self.options)
+        _url(self.options)
+        return RowWriter(self.options, _send_frames)
 
 
 def register_websocket_source(spark) -> str:

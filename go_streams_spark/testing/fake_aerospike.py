@@ -10,40 +10,11 @@ on, aerospike/aerospike.go:104-124).
 
 from __future__ import annotations
 
-import fcntl
-import json
-import os
-from contextlib import contextmanager
+from ._filestate import FileState
 
 
-class FakeAerospike:
-    def __init__(self, path: str):
-        self.path = path
-        if not os.path.exists(path):
-            self._write({"records": {}, "clock": 0})
-
-    @contextmanager
-    def _locked(self):
-        lock = open(self.path + ".lock", "w")
-        try:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-            lock.close()
-
-    def _read(self) -> dict:
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"records": {}, "clock": 0}
-
-    def _write(self, state: dict):
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+class FakeAerospike(FileState):
+    EMPTY = {"records": {}, "clock": 0}
 
     @staticmethod
     def _rkey(namespace: str, set_name: str, key: str) -> str:
@@ -77,12 +48,5 @@ class FakeAerospike:
                     for rkey, rec in self._read()["records"].items()
                     if rkey.startswith(prefix)), default=0)
 
-    def close(self):
-        pass
 
-
-def fake_aerospike_factory(options: dict) -> FakeAerospike:
-    path = options.get("fakepath") or options.get("fakePath")
-    if not path:
-        raise ValueError("fake_aerospike_factory requires option 'fakePath'")
-    return FakeAerospike(path)
+fake_aerospike_factory = FakeAerospike.from_options

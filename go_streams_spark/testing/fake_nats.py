@@ -10,42 +10,13 @@ increasing stream sequence number; messages can be fetched by sequence
 
 from __future__ import annotations
 
-import fcntl
-import json
-import os
-from contextlib import contextmanager
+from ._filestate import FileState
 
 
-class FakeJetStream:
+class FakeJetStream(FileState):
     """Minimal file-backed JetStream server + adapter in one object."""
 
-    def __init__(self, path: str):
-        self.path = path
-        if not os.path.exists(path):
-            self._write({"streams": {}})
-
-    @contextmanager
-    def _locked(self):
-        lock = open(self.path + ".lock", "w")
-        try:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-            lock.close()
-
-    def _read(self) -> dict:
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"streams": {}}
-
-    def _write(self, state: dict):
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+    EMPTY = {"streams": {}}
 
     # -- admin ----------------------------------------------------------
     def add_stream(self, name: str, subjects: list[str]):
@@ -93,12 +64,5 @@ class FakeJetStream:
             if start_exclusive < seq <= end_inclusive:
                 yield seq, subject, data.encode("utf-8")
 
-    def close(self):
-        pass
 
-
-def fake_nats_factory(options: dict) -> FakeJetStream:
-    path = options.get("fakepath") or options.get("fakePath")
-    if not path:
-        raise ValueError("fake_nats_factory requires option 'fakePath'")
-    return FakeJetStream(path)
+fake_nats_factory = FakeJetStream.from_options

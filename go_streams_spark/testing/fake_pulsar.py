@@ -11,10 +11,7 @@ connector builds offsets on). The fake serializes MessageIds as
 
 from __future__ import annotations
 
-import fcntl
-import json
-import os
-from contextlib import contextmanager
+from ._filestate import FileState
 
 
 def _mid(entry: int) -> str:
@@ -28,34 +25,8 @@ def _entry(mid: str) -> int:
 EARLIEST = "0:-1"
 
 
-class FakePulsarClient:
-    def __init__(self, path: str):
-        self.path = path
-        if not os.path.exists(path):
-            self._write({"topics": {}})
-
-    @contextmanager
-    def _locked(self):
-        lock = open(self.path + ".lock", "w")
-        try:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-            lock.close()
-
-    def _read(self) -> dict:
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"topics": {}}
-
-    def _write(self, state: dict):
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+class FakePulsarClient(FileState):
+    EMPTY = {"topics": {}}
 
     # -- adapter protocol ----------------------------------------------
     def publish(self, topic: str, payload: bytes, key: str | None = None) -> str:
@@ -84,12 +55,5 @@ class FakePulsarClient:
     def compare_ids(a: str, b: str) -> int:
         return (_entry(a) > _entry(b)) - (_entry(a) < _entry(b))
 
-    def close(self):
-        pass
 
-
-def fake_pulsar_factory(options: dict) -> FakePulsarClient:
-    path = options.get("fakepath") or options.get("fakePath")
-    if not path:
-        raise ValueError("fake_pulsar_factory requires option 'fakePath'")
-    return FakePulsarClient(path)
+fake_pulsar_factory = FakePulsarClient.from_options

@@ -11,10 +11,7 @@ driver, executor Python workers, and the test process all see the same
 
 from __future__ import annotations
 
-import fcntl
-import json
-import os
-from contextlib import contextmanager
+from ._filestate import FileState
 
 
 def parse_id(entry_id: str) -> tuple[int, int]:
@@ -68,37 +65,10 @@ class _FakePubSub:
         self._positions.clear()
 
 
-class FakeRedis:
+class FakeRedis(FileState):
     """Minimal file-backed redis server + client in one object."""
 
-    def __init__(self, path: str):
-        self.path = path
-        if not os.path.exists(path):
-            self._write({"streams": {}, "pubsub": {}})
-
-    # -- state plumbing -------------------------------------------------
-    @contextmanager
-    def _locked(self):
-        lock = open(self.path + ".lock", "w")
-        try:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-            lock.close()
-
-    def _read(self) -> dict:
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"streams": {}, "pubsub": {}}
-
-    def _write(self, state: dict):
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+    EMPTY = {"streams": {}, "pubsub": {}}
 
     def _stream(self, state: dict, name: str) -> dict:
         return state["streams"].setdefault(
@@ -215,13 +185,5 @@ class FakeRedis:
     def pubsub(self) -> _FakePubSub:
         return _FakePubSub(self)
 
-    def close(self):
-        pass
 
-
-def fake_redis_factory(options: dict) -> FakeRedis:
-    """``clientFactory`` hook: builds a FakeRedis over option ``fakePath``."""
-    path = options.get("fakepath") or options.get("fakePath")
-    if not path:
-        raise ValueError("fake_redis_factory requires option 'fakePath'")
-    return FakeRedis(path)
+fake_redis_factory = FakeRedis.from_options

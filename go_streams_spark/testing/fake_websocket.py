@@ -11,10 +11,7 @@ later frames are received, exactly like a real socket.
 
 from __future__ import annotations
 
-import fcntl
-import json
-import os
-from contextlib import contextmanager
+from ._filestate import FileState
 
 TEXT_MESSAGE = 1    # websocket.TextMessage (gorilla/websocket constants)
 BINARY_MESSAGE = 2  # websocket.BinaryMessage
@@ -41,34 +38,8 @@ class _FakeConnection:
         pass
 
 
-class FakeWebSocketServer:
-    def __init__(self, path: str):
-        self.path = path
-        if not os.path.exists(path):
-            self._write({"urls": {}})
-
-    @contextmanager
-    def _locked(self):
-        lock = open(self.path + ".lock", "w")
-        try:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-            lock.close()
-
-    def _read(self) -> dict:
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"urls": {}}
-
-    def _write(self, state: dict):
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+class FakeWebSocketServer(FileState):
+    EMPTY = {"urls": {}}
 
     def _frames(self, url: str) -> list:
         return self._read()["urls"].get(url, [])
@@ -85,8 +56,4 @@ class FakeWebSocketServer:
         return _FakeConnection(self, url)
 
 
-def fake_websocket_factory(options: dict) -> FakeWebSocketServer:
-    path = options.get("fakepath") or options.get("fakePath")
-    if not path:
-        raise ValueError("fake_websocket_factory requires option 'fakePath'")
-    return FakeWebSocketServer(path)
+fake_websocket_factory = FakeWebSocketServer.from_options

@@ -164,37 +164,6 @@ def test_json_error_modes(spark, tmpdir):
         failfast.collect()
 
 
-def test_cdc_polling_source(spark, tmpdir):
-    """CDC-by-last-update polling (the Aerospike pattern): rows appear in
-    the stream as their update timestamp passes the polled high-water
-    mark; updates written between polls arrive in the next batch."""
-    import time
-    from go_streams_spark.sources import register_cdc_polling_source
-    path = os.path.join(tmpdir, "changelog.jsonl")
-    with open(path, "w") as f:
-        f.write(json.dumps({"id": 1, "v": "a", "__updated_at": 100}) + "\n")
-        f.write(json.dumps({"id": 2, "v": "b", "__updated_at": 200}) + "\n")
-    fmt = register_cdc_polling_source(spark)
-    name = "cdc_" + uuid.uuid4().hex[:8]
-    q = (spark.readStream.format(fmt)
-         .option("path", path).option("ddl", "id int, v string")
-         .load()
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").start())
-    deadline = time.time() + 30
-    while time.time() < deadline and spark.table(name).count() < 2:
-        time.sleep(0.5)
-    assert sorted(r["id"] for r in spark.table(name).collect()) == [1, 2]
-    # simulate a new update landing after the initial poll
-    with open(path, "a") as f:
-        f.write(json.dumps({"id": 3, "v": "c", "__updated_at": 300}) + "\n")
-    deadline = time.time() + 30
-    while time.time() < deadline and spark.table(name).count() < 3:
-        time.sleep(0.5)
-    q.stop()
-    assert sorted(r["id"] for r in spark.table(name).collect()) == [1, 2, 3]
-
-
 def test_merge_schema_evolution_read(spark, tmp_path):
     """Schema evolution across parquet writes: a later file adds a
     column; mergeSchema unions the schemas and back-fills NULL for old

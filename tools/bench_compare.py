@@ -6,9 +6,10 @@ signal.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [top_n]
 
-A delta is NOISE if it is smaller than the larger run's own min-vs-
-median gap for that query (host load only ever adds time, so the gap
-is a per-query noise bound measured in the same bench window).
+A delta is NOISE if it is no larger than the two runs' min-vs-median
+gaps for that query summed, floored at 5% of the old time (host load
+only ever adds time, so each gap is that bench window's own noise
+bound) — the same rule as the pipeline comparison below.
 """
 
 from __future__ import annotations
@@ -23,6 +24,13 @@ def load(path: str):
     if "parsed" in d and isinstance(d["parsed"], dict):
         d = d["parsed"]  # driver BENCH_r{N}.json wrapper (10 slowest only)
     return d.get("queries", {}) or {}, d.get("spread", {}) or {}, d
+
+
+def _gap(spread: dict | None, t: float) -> float:
+    """One run's min-vs-median gap for a query (0 without a spread)."""
+    if not spread:
+        return 0.0
+    return max(0.0, spread.get("median", t) - spread.get("min", t))
 
 
 def compare_pipeline(old_d: dict, new_d: dict) -> None:
@@ -52,7 +60,7 @@ def compare_pipeline(old_d: dict, new_d: dict) -> None:
 def main():
     old_path, new_path = sys.argv[1], sys.argv[2]
     top_n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
-    old_q, _, old_d = load(old_path)
+    old_q, old_spread, old_d = load(old_path)
     new_q, new_spread, new_d = load(new_path)
     common = sorted(set(old_q) & set(new_q))
     if not common:
@@ -66,10 +74,7 @@ def main():
             continue
         r = n / o
         ratios.append(math.log(r))
-        gap = 0.0
-        sp = new_spread.get(q)
-        if sp:
-            gap = max(0.0, sp.get("median", n) - sp.get("min", n))
+        gap = _gap(old_spread.get(q), o) + _gap(new_spread.get(q), n)
         noise = abs(n - o) <= max(gap, 0.05 * o)
         rows.append((q, o, n, r, noise))
     geo = math.exp(sum(ratios) / len(ratios))
