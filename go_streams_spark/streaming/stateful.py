@@ -48,16 +48,17 @@ def running_fold_stream(df: DataFrame, *, key_cols: list[str], value_col: str,
     never total stream volume.
     """
 
+    out_cols = [c.strip().split(" ")[0] for c in output_schema.split(",")]
+
     def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         acc = state.get[0] if state.exists else init
         chunks = [pdf for pdf in pdfs if len(pdf)]
-        out_cols = [c.strip().split(" ")[0] for c in output_schema.split(",")]
         if not chunks:
             state.update((acc,))
             return
         allrows = (pd.concat(chunks, ignore_index=True)
                    if len(chunks) > 1 else chunks[0])
-        allrows = allrows.sort_values(order_col, kind="mergesort").copy()
+        allrows = allrows.sort_values(order_col, kind="mergesort")
         accs = []
         for v in allrows[value_col]:
             acc = fold_fn(v, acc)
