@@ -375,44 +375,54 @@ def ngram_jaccard_pairs(df: DataFrame, *, text_col: str = "text", id_col: str = 
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash32(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """32-bit SimHash per document from distinct lowercase tokens.
+def simhash(df: DataFrame, *, bits: int, text_col: str = "text",
+            id_col: str = "doc_id") -> DataFrame:
+    """``bits``-bit SimHash (32 or 64) per document from distinct
+    lowercase tokens.
 
     Bit j of md5(token) (hex-decoded) contributes +1/-1; simhash bit j is
     the sign of the sum. One row per (doc, distinct token), ONE shuffle
-    keyed by doc with map-side partials.
+    keyed by doc with map-side partials. Why 64 bits matters at scale:
+    with pigeonhole banding at ``max_hamming=3`` the four bands carry
+    16 bits each (65536 buckets per band instead of 256), so candidate
+    volume — which scales with the sum of per-bucket squares — drops by
+    orders of magnitude while recall stays exactly 1.0.
 
-    Vote sums are PACKED: the 32 bit-votes ride in 8 longs with 16-bit
-    lanes (4 bits per long), so the aggregate is 8 packed sums + a
-    count — not 32 sum columns. The earlier 32-column form generated a
-    whole-stage method so large the JIT intermittently left it
-    interpreted (5-60s swings in a long-lived session); 9 small
+    Vote sums are PACKED: the bit-votes ride in ``bits // 4`` longs with
+    16-bit lanes (4 bits per long), so the aggregate is that many packed
+    sums + a count — not ``bits`` sum columns. The earlier 32-column
+    form generated a whole-stage method so large the JIT intermittently
+    left it interpreted (5-60s swings in a long-lived session); 9 small
     aggregates codegen to JIT-friendly methods and run in a stable
     ~2.5s at sf0.1. The +-1 vote sum is recovered as 2*s_j - n (s_j =
     per-bit 1-count, n = token count); lanes overflow only past 32767
     distinct tokens per doc — far beyond any real document.
     Bit-identical to the SQL oracle's exploded formulation.
     """
+    if bits not in (32, 64):
+        raise ValueError(f"simhash bits must be 32 or 64, got {bits}")
     toks = df.select(F.col(id_col),
                      F.explode(F.array_distinct(F.transform(tokens(text_col), F.lower)))
                      .alias("tok"))
-    # One conv() decodes the first 8 md5 hex chars into a 32-bit int;
-    # hex char j//4+1 is nibble (7 - j//4) of that int and bit j%4 of
-    # the nibble is vote bit j — identical bits to the oracle's
-    # strpos-per-char formulation. Computed INLINE per (doc, token) row:
-    # md5 is cheap and embarrassingly parallel, and inlining keeps the
-    # plan one straight scan->explode->agg pipeline with NO broadcast
-    # join (an earlier hash-the-vocab-once + broadcast-join variant
-    # added two extra query stages whose single-task broadcast jobs
-    # intermittently sat unscheduled for tens of seconds in long-lived
-    # sessions). Subexpression elimination collapses the md5/conv to one
+    # One conv() per 8 md5 hex chars decodes a 32-bit half (a single
+    # 16-char conv would overflow signed long); hex char j//4+1 is
+    # nibble (7 - (j//4)%8) of its half and bit j%4 of the nibble is
+    # vote bit j — identical bits to the oracle's strpos-per-char
+    # formulation. Computed INLINE per (doc, token) row: md5 is cheap
+    # and embarrassingly parallel, and inlining keeps the plan one
+    # straight scan->explode->agg pipeline with NO broadcast join (an
+    # earlier hash-the-vocab-once + broadcast-join variant added two
+    # extra query stages whose single-task broadcast jobs intermittently
+    # sat unscheduled for tens of seconds in long-lived sessions).
+    # Subexpression elimination collapses the md5/conv to one
     # evaluation per row at codegen time.
-    h32 = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+    halves = [F.conv(F.substring(F.md5("tok"), 1 + 8 * i, 8), 16, 10)
+              .cast("long") for i in range(bits // 32)]
 
     def packed(g):  # lanes j = 4g..4g+3, 16 bits apart
-        # group g's four vote bits are exactly nibble (7-g) of h32
-        # (bit j sits at 4*(7 - j//4) + j%4, and j//4 == g across the
-        # group), so ONE multiply spreads them to the 16-bit lanes:
+        # group g's four vote bits are exactly nibble (7 - g%8) of its
+        # half (bit j sits at 4*(7 - j//4) + j%4, and j//4 == g across
+        # the group), so ONE multiply spreads them to the 16-bit lanes:
         # nib * (1 + 2^15 + 2^30 + 2^45) puts bit k at position
         # 16k (k + 15k), every product term lands on a distinct bit
         # (no carries), and the lane mask keeps positions {0,16,32,48}.
@@ -420,64 +430,24 @@ def simhash32(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") 
         # chains + 3 adds per group — measured 0.64 -> 0.44 s on the
         # sf0.1 vote aggregate with bit-identical sums, and the
         # generated code shrinks ~6x (less JIT warmup).
-        nib = F.shiftright(h32, 4 * (7 - g)).bitwiseAND(F.lit(15))
+        nib = F.shiftright(halves[g // 8], 4 * (7 - g % 8)).bitwiseAND(F.lit(15))
         return (nib * F.lit(0x200040008001)) \
             .bitwiseAND(F.lit(0x1000100010001)).alias(f"p{g}")
 
-    voted = toks.select(F.col(id_col), *[packed(g) for g in range(8)])
+    groups = bits // 4
+    voted = toks.select(F.col(id_col), *[packed(g) for g in range(groups)])
     sums = voted.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.col(f"p{g}")).alias(f"S{g}") for g in range(8)])
-    simhash = None
-    for j in range(32):
-        s_j = F.shiftright(F.col(f"S{j//4}"), 16 * (j % 4)).bitwiseAND(F.lit(0xFFFF))
-        term = F.when(2 * s_j > F.col("n"), F.lit(1 << j).cast("long")).otherwise(F.lit(0))
-        simhash = term if simhash is None else simhash + term
-    return sums.select(id_col, simhash.alias("simhash"))
-
-
-def simhash64(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per document — the corpus-scale variant.
-
-    Same packed-lane vote aggregation as ``simhash32`` (which documents
-    the design), doubled: 64 bit-votes ride in 16 longs with 16-bit
-    lanes. Why 64 bits matters at scale: with pigeonhole banding at
-    ``max_hamming=3`` the four bands carry 16 bits each (65536 buckets
-    per band instead of 256), so candidate volume — which scales with
-    the sum of per-bucket squares — drops by orders of magnitude while
-    recall stays exactly 1.0. Bits come from the first 16 md5 hex chars
-    decoded as two 32-bit halves (a single 16-char conv would overflow
-    signed long); bit j of the hash is bit (j%4) of hex nibble (j//4),
-    identical to the SQL oracle's strpos formulation.
-    """
-    toks = df.select(F.col(id_col),
-                     F.explode(F.array_distinct(F.transform(tokens(text_col), F.lower)))
-                     .alias("tok"))
-    hA = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-    hB = F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long")
-
-    def packed(g):  # lanes j = 4g..4g+3, 16 bits apart
-        # one multiply spreads nibble (7 - g%8) of the group's hash
-        # half to the 16-bit lanes — see simhash32.packed for the
-        # derivation and the r10 measurement (bit-identical sums)
-        h = hA if g < 8 else hB
-        nib = F.shiftright(h, 4 * (7 - (g % 8))).bitwiseAND(F.lit(15))
-        return (nib * F.lit(0x200040008001)) \
-            .bitwiseAND(F.lit(0x1000100010001)).alias(f"p{g}")
-
-    voted = toks.select(F.col(id_col), *[packed(g) for g in range(16)])
-    sums = voted.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.col(f"p{g}")).alias(f"S{g}") for g in range(16)])
-    simhash = None
-    for j in range(64):
+        *[F.sum(F.col(f"p{g}")).alias(f"S{g}") for g in range(groups)])
+    out = None
+    for j in range(bits):
         s_j = F.shiftright(F.col(f"S{j//4}"), 16 * (j % 4)).bitwiseAND(F.lit(0xFFFF))
         # bit 63 of a signed long is the sign bit: its "1 << 63" is the
         # most negative long, not a positive power of two
         weight = F.lit(-(1 << 63)) if j == 63 else F.lit(1 << j).cast("long")
         term = F.when(2 * s_j > F.col("n"), weight).otherwise(F.lit(0).cast("long"))
-        simhash = term if simhash is None else simhash + term
-    return sums.select(id_col, simhash.alias("simhash"))
+        out = term if out is None else out + term
+    return sums.select(id_col, out.alias("simhash"))
 
 
 def simhash_band_rows(sim: DataFrame, *, id_col: str = "doc_id",
@@ -1259,8 +1229,8 @@ def dedup_method_eval(df: DataFrame, *, text_col: str = "text",
         .select("id_a", "id_b"))
     mh = minhash_lsh_candidates(df, text_col=text_col, id_col=id_col,
                                 ngram=3, shingles=sh)
-    bands = (simhash_band_rows(simhash64(df, text_col=text_col,
-                                         id_col=id_col),
+    bands = (simhash_band_rows(simhash(df, bits=64, text_col=text_col,
+                                       id_col=id_col),
                                id_col=id_col, bits=64, max_hamming=3)
              .hint("merge"))
     bands = track_persist(bands)

@@ -36,6 +36,13 @@ from pyspark.sql import functions as F
 #: policy the audits' docstrings promise ("sampled in production").
 DEFAULT_EVAL_FLOP_BUDGET = 2_000_000_000_000
 
+#: Most vectors per block of the triangular self-pair scan: one
+#: block-pair cell holds at most ROWS_PER_BLOCK^2 float64 sims (32 MB).
+ROWS_PER_BLOCK = 2048
+
+#: (query blocks, index shards) of the query x index top-k grid.
+KNN_GRID = (8, 4)
+
 
 def as_double(vec: Column | str) -> Column:
     v = F.col(vec) if isinstance(vec, str) else vec
@@ -121,6 +128,52 @@ def _np_quantized_cosine_micro(qmat_a, qmat_b, scale: int = 1_000_000):
                    * scale).astype(np.int64)
 
 
+def _np_cosine(a, b, round_dp: int):
+    """(n,d) x (m,d) float64 -> (n,m) rounded raw-dot cosine: the
+    oracle formula dot / (norm * norm), rounded to ``round_dp``."""
+    import numpy as np
+    return np.round((a @ b.T)
+                    / (np.linalg.norm(a, axis=1)[:, None]
+                       * np.linalg.norm(b, axis=1)[None, :]),
+                    round_dp)
+
+
+def _np_adc_cosine(qa, codes, rn, cb, round_dp: int):
+    """PQ asymmetric-distance cosine of (b,d) raw queries against (n,m)
+    codes with reconstruction norms ``rn`` under the (m, ksub, d/m)
+    codebooks ``cb``: LUT[q, s, j] = dot(q_sub_s, centroid_{s,j}) in
+    one einsum, approx_dot = sum_s LUT[q, s, code[s]] as a table
+    gather (no decode), divided by |q| * |recon| and rounded."""
+    import numpy as np
+    n_m, _, sd = cb.shape
+    lut = np.einsum("bmd,mkd->bmk", qa.reshape(len(qa), n_m, sd), cb)
+    adot = np.zeros((len(qa), len(codes)), dtype=np.float64)
+    for s in range(n_m):
+        adot += lut[:, s, codes[:, s]]
+    return np.round(adot / (np.linalg.norm(qa, axis=1)[:, None]
+                            * rn[None, :]), round_dp)
+
+
+def _pairs(id_a=(), id_b=(), sim=()):
+    """(id_a long, id_b long, sim double) pandas frame of a pair UDF."""
+    import numpy as np
+    import pandas as pd
+    return pd.DataFrame({"id_a": np.asarray(id_a, dtype=np.int64),
+                         "id_b": np.asarray(id_b, dtype=np.int64),
+                         "sim": np.asarray(sim, dtype=np.float64)})
+
+
+def _top_k(pairs: DataFrame, *, id_col: str, k: int) -> DataFrame:
+    """Top-k (id_a, id_b, sim) pairs per id_a under (sim desc, id_b asc),
+    as (id_col, neighbor_id, sim, rank)."""
+    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
+    return (pairs.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select(F.col("id_a").alias(id_col),
+                    F.col("id_b").alias("neighbor_id"),
+                    "sim", F.col("rank").cast("int").alias("rank")))
+
+
 def brute_force_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
                     k: int = 5, round_dp: int = 6) -> DataFrame:
     """Exact top-k cosine neighbors for every vector (cross join).
@@ -139,11 +192,7 @@ def brute_force_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "em
              .select("id_a", "id_b",
                      quantized_cosine(F.col("va"), F.col("vb"),
                                       scale).alias("sim")))
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("id_a").alias(id_col), F.col("id_b").alias("neighbor_id"),
-                    "sim", "rank"))
+    return _top_k(pairs, id_col=id_col, k=k)
 
 
 def auto_nbits(n: int, dim: int, target_bucket: int = 8) -> int:
@@ -238,32 +287,105 @@ def sign_lsh_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embed
                     F.col("id_b").alias("neighbor_id"), "sim", "rank"))
 
 
-def cosine_near_dup(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
-                    threshold: float = 0.9, round_dp: int = 6,
-                    num_blocks: int = 8,
-                    flop_budget: int | None = DEFAULT_EVAL_FLOP_BUDGET
-                    ) -> DataFrame:
-    """EXACT embedding-cosine near-duplicate pairs (id_a < id_b, sim >= t).
+def _scan_blocks(n: int) -> int:
+    """Block count B of the triangular self-pair scan over ``n``
+    vectors: at least 8, and enough that a block (ids spread over
+    ``pmod(id, B)``) holds at most ROWS_PER_BLOCK vectors, so one
+    cell's sims matrix stays bounded at any corpus size."""
+    return max(8, -(-n // ROWS_PER_BLOCK))
 
-    Blocked distributed pair scan — no BroadcastNestedLoopJoin, no
-    driver collect, no single giant task:
 
-      * every vector belongs to block ``b = pmod(id, B)``;
+def _pair_scan(df: DataFrame, *, id_col: str, vec_col: str, n: int,
+               threshold: float, round_dp: int,
+               bands: list[tuple[int, int]] | None = None) -> DataFrame:
+    """Blocked triangular self-pair scan: every pair (id_a < id_b) with
+    rounded cosine ``sim >= threshold`` — and, when ``bands`` (a
+    ``_band_layout``) is given, sharing at least one sign-bit band.
+
+      * every vector belongs to block ``b = pmod(id, B)``, B from
+        ``_scan_blocks(n)``;
       * "left" role: replicate to cogroup keys (b, j) for j >= b;
         "right" role: keys (i, b) for i <= b — so the unordered block
         pair (i, j), i <= j, meets exactly once, and each vector is
         shipped B+1 times total (vs N times in a naive cross join);
       * each cogroup runs ONE numpy/BLAS matmul over its two blocks and
-        emits only the pairs above threshold.
+        emits only the qualifying pairs.
+
+    The band predicate is a function of the two sign buckets alone:
+    xor the buckets, and a shared band is an all-zero band of the xor.
+    """
+    import numpy as np
+
+    B = _scan_blocks(n)
+    bkt = ([sign_bucket(vec_col, sum(size for _, size in bands)).alias("bkt")]
+           if bands else [])
+    # NB: cogroup matches groups by key VALUE AND TYPE — pmod(long col)
+    # yields long while explode(sequence(int)) yields int, and mixed
+    # types silently split each (bi, bj) into two disjoint groups. Cast
+    # every grouping key to int on both sides.
+    base = df.select(F.col(id_col), as_double(vec_col).alias("v"), *bkt,
+                     F.pmod(F.col(id_col), F.lit(B)).cast("int").alias("blk"))
+    ge = F.filter(F.sequence(F.lit(0), F.lit(B - 1)),
+                  lambda j: j >= F.col("blk"))
+    le = F.filter(F.sequence(F.lit(0), F.lit(B - 1)),
+                  lambda i: i <= F.col("blk"))
+    kl = [F.col("bkt").alias("kl")] if bands else []
+    kr = [F.col("bkt").alias("kr")] if bands else []
+    left = base.select(F.col("blk").alias("bi"), F.explode(ge).alias("bj"),
+                       F.col(id_col).alias("id_l"), F.col("v").alias("vl"),
+                       *kl)
+    right = base.select(F.explode(le).alias("bi"), F.col("blk").alias("bj"),
+                        F.col(id_col).alias("id_r"), F.col("v").alias("vr"),
+                        *kr)
+
+    def _scan(key, lpdf, rpdf):
+        if lpdf.empty or rpdf.empty:
+            return _pairs()
+        la = np.array(list(lpdf["vl"]), dtype=np.float64)
+        ra = np.array(list(rpdf["vr"]), dtype=np.float64)
+        il = lpdf["id_l"].to_numpy(dtype=np.int64)
+        ir = rpdf["id_r"].to_numpy(dtype=np.int64)
+        sims = _np_cosine(la, ra, round_dp)
+        # diagonal groups (i == j) see the same block on both sides:
+        # keep il < ir to emit each pair once. Off-diagonal blocks are
+        # disjoint id sets (ids interleave mod B), so every cross pair
+        # is unique — emit as (min, max) to honor the id_a < id_b
+        # output contract.
+        if key[0] == key[1]:
+            keep = il[:, None] < ir[None, :]
+        else:
+            keep = il[:, None] != ir[None, :]
+        keep &= sims >= threshold
+        if bands:
+            xor = (lpdf["kl"].to_numpy(dtype=np.int64)[:, None]
+                   ^ rpdf["kr"].to_numpy(dtype=np.int64)[None, :])
+            share = np.zeros(xor.shape, dtype=bool)
+            for start, size in bands:
+                share |= ((xor >> start) & ((1 << size) - 1)) == 0
+            keep &= share
+        ai, bi = np.nonzero(keep)
+        ida, idb = il[ai], ir[bi]
+        return _pairs(np.minimum(ida, idb), np.maximum(ida, idb),
+                      sims[ai, bi])
+
+    return (left.groupBy("bi", "bj").cogroup(right.groupBy("bi", "bj"))
+            .applyInPandas(_scan, schema="id_a long, id_b long, sim double"))
+
+
+def cosine_near_dup(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
+                    threshold: float = 0.9, round_dp: int = 6,
+                    flop_budget: int | None = DEFAULT_EVAL_FLOP_BUDGET
+                    ) -> DataFrame:
+    """EXACT embedding-cosine near-duplicate pairs (id_a < id_b, sim >= t)
+    by the blocked pair scan (``_pair_scan``): no nested-loop join, no
+    driver collect, no single giant task.
 
     Work is inherently O(N^2) FLOPs — exact near-dup at a weak
     threshold admits nothing less (sign-LSH at cos 0.5 = 60 deg has
     per-bit disagreement 1/3, so no banding gives recall 1; measured on
-    the testdata: true pairs differ in up to 9 of 16 sign bits). The
-    blocking makes the FLOPs embarrassingly parallel BLAS with bounded
-    per-task memory (B sized so 2 blocks fit an executor). For the
-    recall<1 bucketed path that avoids the quadratic work entirely, see
-    ``cosine_near_dup_lsh``.
+    the testdata: true pairs differ in up to 9 of 16 sign bits). For
+    the recall<1 bucketed path that avoids the quadratic work entirely,
+    see ``cosine_near_dup_lsh``.
 
     The quadratic contract is GUARDED IN CODE: past ``flop_budget``
     (int-ops; default DEFAULT_EVAL_FLOP_BUDGET) the call raises loudly
@@ -271,66 +393,17 @@ def cosine_near_dup(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "em
     pass — pass flop_budget=None only when the quadratic cost is an
     explicit decision.
     """
-    import numpy as np
-    import pandas as pd
-
     if flop_budget is not None:
-        guard_eval_flops(df, id_col=id_col, vec_col=vec_col,
-                         budget=flop_budget, op="cosine_near_dup",
-                         remedy="Use cosine_near_dup_lsh (bucketed, "
-                                "sub-quadratic) or pass "
-                                "flop_budget=None if the exact N^2 "
-                                "pass is an explicit decision.")
-    B = num_blocks
-    # NB: cogroup matches groups by key VALUE AND TYPE — pmod(long col)
-    # yields long while explode(sequence(int)) yields int, and mixed
-    # types silently split each (bi, bj) into two disjoint groups. Cast
-    # every grouping key to int on both sides.
-    base = df.select(F.col(id_col), as_double(vec_col).alias("v"),
-                     F.pmod(F.col(id_col), F.lit(B)).cast("int").alias("blk"))
-    ge = F.filter(F.sequence(F.lit(0), F.lit(B - 1)),
-                  lambda j: j >= F.col("blk"))
-    le = F.filter(F.sequence(F.lit(0), F.lit(B - 1)),
-                  lambda i: i <= F.col("blk"))
-    left = base.select(F.col("blk").alias("bi"),
-                       F.explode(ge).alias("bj"),
-                       F.col(id_col).alias("id_l"), F.col("v").alias("vl"))
-    right = base.select(F.explode(le).alias("bi"),
-                        F.col("blk").alias("bj"),
-                        F.col(id_col).alias("id_r"), F.col("v").alias("vr"))
-
-    def _scan(key, lpdf, rpdf):
-        if lpdf.empty or rpdf.empty:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        la = np.array(list(lpdf["vl"]), dtype=np.float64)
-        ra = np.array(list(rpdf["vr"]), dtype=np.float64)
-        il = lpdf["id_l"].to_numpy(dtype=np.int64)
-        ir = rpdf["id_r"].to_numpy(dtype=np.int64)
-        # exact oracle formula: raw dot / (norm * norm), rounded
-        sims = np.round(
-            (la @ ra.T)
-            / (np.linalg.norm(la, axis=1)[:, None]
-               * np.linalg.norm(ra, axis=1)[None, :]),
-            round_dp)
-        # diagonal groups (i == j) see the same block on both sides:
-        # keep il < ir to emit each pair once. Off-diagonal blocks are
-        # disjoint id sets (ids interleave mod B), so every cross pair
-        # is unique — emit as (min, max) to honor the id_a < id_b
-        # output contract.
-        if key[0] == key[1]:
-            mask = il[:, None] < ir[None, :]
-        else:
-            mask = il[:, None] != ir[None, :]
-        ai, bi = np.nonzero((sims >= threshold) & mask)
-        ida, idb = il[ai], ir[bi]
-        return pd.DataFrame({"id_a": np.minimum(ida, idb),
-                             "id_b": np.maximum(ida, idb),
-                             "sim": sims[ai, bi]})
-
-    return (left.groupBy("bi", "bj").cogroup(right.groupBy("bi", "bj"))
-            .applyInPandas(_scan, schema="id_a long, id_b long, sim double"))
+        n = guard_eval_flops(df, id_col=id_col, vec_col=vec_col,
+                             budget=flop_budget, op="cosine_near_dup",
+                             remedy="Use cosine_near_dup_lsh (bucketed, "
+                                    "sub-quadratic) or pass "
+                                    "flop_budget=None if the exact N^2 "
+                                    "pass is an explicit decision.")
+    else:
+        n = df.count()
+    return _pair_scan(df, id_col=id_col, vec_col=vec_col, n=n,
+                      threshold=threshold, round_dp=round_dp)
 
 
 def sign_band_rows(df: DataFrame, *, id_col: str = "vec_id",
@@ -366,9 +439,7 @@ def _band_layout(nbits: int, nbands: int) -> list[tuple[int, int]]:
 def cosine_near_dup_lsh(df: DataFrame, *, id_col: str = "vec_id",
                         vec_col: str = "embedding", threshold: float = 0.5,
                         round_dp: int = 6, nbits: int = 16,
-                        max_band_hamming: int = 4,
-                        dense_switch_micro: int | None = None,
-                        num_blocks: int = 8) -> DataFrame:
+                        max_band_hamming: int = 4) -> DataFrame:
     """APPROXIMATE near-dup pairs: banded sign-LSH candidates + exact
     cosine verify.
 
@@ -380,51 +451,53 @@ def cosine_near_dup_lsh(df: DataFrame, *, id_col: str = "vec_id",
     found. Raise max_band_hamming (more, shorter bands) for recall;
     raise nbits for precision.
 
-    TWO physical plans for the same result set (r10, guide §1.1
-    first-principles + §2.5 skew):
+    TWO physical plans for the same result set, picked by a runtime
+    band-occupancy estimate (one tiny agg over the band-key histogram:
+    sum of per-bucket n*(n-1)/2 against all pairs):
 
-    * **bucketed** (default): band rows self-equi-join on
-      (band, band_key), distinct the id pairs, re-attach vectors, JVM
-      cosine per candidate. Right when the bands actually prune — the
-      sparse regime.
-    * **dense blocked scan** (``dense_switch_micro`` set): when a
-      runtime BAND-OCCUPANCY estimate (one tiny agg over the band-key
-      histogram — sum of per-bucket n*(n-1)/2 vs all pairs) shows the
-      bands retain >= dense_switch_micro/1e6 of the whole pair space,
-      the bucketed plan is a false economy: it shuffles and
-      distinct-dedups ~the quadratic pair space as ROWS, then pays two
-      joins and an interpreted array fold per pair. Short wide bands
-      (e.g. the 16-bit/6-band near-dup config: 2-3-bit keys collide
-      w.p. ~1/8-1/4, so ~2/3 of ALL pairs are candidates at ANY corpus
-      size) are structurally in this regime. The dense plan reuses
-      ``cosine_near_dup``'s blocked cogroup pair scan — one BLAS matmul
-      per block pair, bounded per-task memory, no pair-row shuffle at
-      all — with the band predicate evaluated INSIDE the batch from
-      each vector's own sign bucket (xor + per-band mask), which is the
-      same pair set by definition. Hot buckets cannot skew it: work is
-      partitioned by block pair, not by band key.
+    * under 1% of all pairs collide: the band equi-join
+      (``_near_dup_lsh_bucketed``) — the bands prune;
+    * otherwise: ``cosine_near_dup``'s blocked pair scan with the band
+      predicate evaluated in-batch from each vector's sign bucket — the
+      same pair set with no pair-row shuffle, distinct or per-pair
+      interpreted fold, and no hot-bucket skew. Short wide bands (the
+      16-bit/6-band config: 2-3-bit keys, ~2/3 of ALL pairs collide at
+      any corpus size) land here. The quadratic scan runs the
+      DEFAULT_EVAL_FLOP_BUDGET guard, whose remedy is longer bands.
 
     ``cosine_near_dup`` is the exact quadratic sibling (recall 1).
     """
-    if dense_switch_micro is not None:
-        import numpy as np
+    layout = _band_layout(nbits, max_band_hamming + 1)
+    occ = (sign_band_rows(df, id_col=id_col, vec_col=vec_col, nbits=nbits,
+                          max_band_hamming=max_band_hamming)
+           .groupBy("band", "band_key")
+           .agg(F.count(F.lit(1)).alias("n"), F.max(F.size("v")).alias("d"))
+           .agg(F.sum(F.expr("n * (n - 1) div 2")).alias("coll"),
+                F.sum("n").alias("rows"), F.max("d").alias("d"))
+           .collect()[0])
+    n_vec = int(occ["rows"] or 0) // len(layout)
+    coll = int(occ["coll"] or 0)  # >= |candidates| (multi-band dups)
+    all_pairs = n_vec * (n_vec - 1) // 2
+    if all_pairs > 0 and coll * 100 >= all_pairs:
+        _check_flops(n_vec, n_vec, max(int(occ["d"] or 1), 1),
+                     DEFAULT_EVAL_FLOP_BUDGET,
+                     op="cosine_near_dup_lsh (dense scan: band collisions "
+                        f"reach {coll / all_pairs:.0%} of all pairs)",
+                     remedy="Use longer bands, which prune: raise nbits "
+                            "or lower max_band_hamming.")
+        return _pair_scan(df, id_col=id_col, vec_col=vec_col, n=n_vec,
+                          threshold=threshold, round_dp=round_dp,
+                          bands=layout)
+    return _near_dup_lsh_bucketed(df, id_col=id_col, vec_col=vec_col,
+                                  threshold=threshold, round_dp=round_dp,
+                                  nbits=nbits,
+                                  max_band_hamming=max_band_hamming)
 
-        nbands = max_band_hamming + 1
-        bands_only = sign_band_rows(
-            df, id_col=id_col, vec_col=vec_col, nbits=nbits,
-            max_band_hamming=max_band_hamming).select("band", "band_key")
-        occ = (bands_only.groupBy("band", "band_key")
-               .agg(F.count(F.lit(1)).alias("n"))
-               .agg(F.sum(F.expr("n * (n - 1) div 2")).alias("coll"),
-                    F.sum("n").alias("rows")).collect()[0])
-        n_vec = int(occ["rows"] or 0) // nbands
-        coll = int(occ["coll"] or 0)  # >= |candidates| (multi-band dups)
-        all_pairs = n_vec * (n_vec - 1) // 2
-        if all_pairs > 0 and coll * 1_000_000 >= dense_switch_micro * all_pairs:
-            return _cosine_near_dup_lsh_dense(
-                df, id_col=id_col, vec_col=vec_col, threshold=threshold,
-                round_dp=round_dp, nbits=nbits,
-                max_band_hamming=max_band_hamming, num_blocks=num_blocks)
+
+def _near_dup_lsh_bucketed(df: DataFrame, *, id_col: str, vec_col: str,
+                           threshold: float, round_dp: int, nbits: int,
+                           max_band_hamming: int) -> DataFrame:
+    """Sparse-regime plan of ``cosine_near_dup_lsh``: band equi-join."""
     # bands carry ONLY (id, band, band_key): the former shape attached
     # both full vectors to every candidate row, so the pair-dedup
     # shuffle moved ~1 KB per candidate (guide §2.3/§8 — shuffle keys,
@@ -467,76 +540,6 @@ def cosine_near_dup_lsh(df: DataFrame, *, id_col: str = "vec_id",
             .where(F.col("sim") >= threshold))
 
 
-def _cosine_near_dup_lsh_dense(df: DataFrame, *, id_col: str,
-                               vec_col: str, threshold: float,
-                               round_dp: int, nbits: int,
-                               max_band_hamming: int,
-                               num_blocks: int) -> DataFrame:
-    """Dense-regime plan for ``cosine_near_dup_lsh`` — the SAME result
-    set via ``cosine_near_dup``'s blocked cogroup pair scan (one BLAS
-    matmul per block pair, every unordered block pair met exactly once,
-    bounded per-task memory) with the band-share candidate predicate
-    evaluated in-batch: pair (a, b) is a candidate iff some band of
-    a's sign bucket equals b's — a function of the two buckets alone,
-    so the band-row explode, the pair-row shuffle and the distinct all
-    disappear. See cosine_near_dup for the block-replication scheme."""
-    import numpy as np
-    import pandas as pd
-
-    B = num_blocks
-    layout = _band_layout(nbits, max_band_hamming + 1)
-    base = df.select(F.col(id_col), as_double(vec_col).alias("v"),
-                     sign_bucket(vec_col, nbits).alias("bkt"),
-                     F.pmod(F.col(id_col), F.lit(B)).cast("int").alias("blk"))
-    ge = F.filter(F.sequence(F.lit(0), F.lit(B - 1)),
-                  lambda j: j >= F.col("blk"))
-    le = F.filter(F.sequence(F.lit(0), F.lit(B - 1)),
-                  lambda i: i <= F.col("blk"))
-    left = base.select(F.col("blk").alias("bi"), F.explode(ge).alias("bj"),
-                       F.col(id_col).alias("id_l"), F.col("v").alias("vl"),
-                       F.col("bkt").alias("kl"))
-    right = base.select(F.explode(le).alias("bi"), F.col("blk").alias("bj"),
-                        F.col(id_col).alias("id_r"), F.col("v").alias("vr"),
-                        F.col("bkt").alias("kr"))
-
-    def _scan(key, lpdf, rpdf):
-        if lpdf.empty or rpdf.empty:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        la = np.array(list(lpdf["vl"]), dtype=np.float64)
-        ra = np.array(list(rpdf["vr"]), dtype=np.float64)
-        il = lpdf["id_l"].to_numpy(dtype=np.int64)
-        ir = rpdf["id_r"].to_numpy(dtype=np.int64)
-        kl = lpdf["kl"].to_numpy(dtype=np.int64)
-        kr = rpdf["kr"].to_numpy(dtype=np.int64)
-        # band-share predicate from the buckets alone: xor the sign
-        # buckets; a shared band is an all-zero band in the xor
-        xor = kl[:, None] ^ kr[None, :]
-        share = np.zeros(xor.shape, dtype=bool)
-        for start, size in layout:
-            share |= ((xor >> start) & ((1 << size) - 1)) == 0
-        # exact oracle formula: raw dot / (norm * norm), rounded —
-        # identical arithmetic to cosine_near_dup's oracle-green scan
-        sims = np.round(
-            (la @ ra.T)
-            / (np.linalg.norm(la, axis=1)[:, None]
-               * np.linalg.norm(ra, axis=1)[None, :]),
-            round_dp)
-        if key[0] == key[1]:
-            mask = il[:, None] < ir[None, :]
-        else:
-            mask = il[:, None] != ir[None, :]
-        ai, bi = np.nonzero((sims >= threshold) & share & mask)
-        ida, idb = il[ai], ir[bi]
-        return pd.DataFrame({"id_a": np.minimum(ida, idb),
-                             "id_b": np.maximum(ida, idb),
-                             "sim": sims[ai, bi]})
-
-    return (left.groupBy("bi", "bj").cogroup(right.groupBy("bi", "bj"))
-            .applyInPandas(_scan, schema="id_a long, id_b long, sim double"))
-
-
 def eval_query_sample(df: DataFrame, *, id_col: str = "vec_id",
                       n: int = 200) -> DataFrame:
     """Deterministic n-query evaluation sample: the ``n`` ids with the
@@ -575,45 +578,90 @@ def guard_eval_flops(df: DataFrame, *, id_col: str = "vec_id",
     drow = df.select(F.size(F.col(vec_col)).alias("d")).first()
     d = max(int(drow["d"] or 1), 1)
     nq = n if n_queries is None else min(n_queries, n)
-    flops = nq * n * d
-    if flops > budget:
-        fix = remedy or ("Pass sample_n_queries=<n> (a deterministic "
-                         "md5-ordered pick via eval_query_sample — "
-                         "oracle-replayable) or raise flop_budget "
-                         "explicitly.")
-        raise ValueError(
-            f"{op}: unsampled exact evaluation needs ~{flops:.2e} "
-            f"integer ops ({nq} queries x {n} index vectors x dim {d}) "
-            f"> budget {budget:.2e}. {fix}")
+    _check_flops(nq, n, d, budget, op=op,
+                 remedy=remedy or ("Pass sample_n_queries=<n> (a "
+                                   "deterministic md5-ordered pick via "
+                                   "eval_query_sample — oracle-"
+                                   "replayable) or raise flop_budget "
+                                   "explicitly."))
     return n
 
 
+def _check_flops(nq: int, n: int, d: int, budget: int, *, op: str,
+                 remedy: str) -> None:
+    """Raise when an exact pass of ``nq`` queries x ``n`` vectors x dim
+    ``d`` would exceed ``budget`` integer ops, naming ``remedy``."""
+    flops = nq * n * d
+    if flops > budget:
+        raise ValueError(
+            f"{op}: the exact pass needs ~{flops:.2e} integer ops "
+            f"({nq} queries x {n} index vectors x dim {d}) > budget "
+            f"{budget:.2e}. {remedy}")
+
+
+def _grid_topk(q: DataFrame, ix: DataFrame, *, id_col: str, k: int,
+               cell) -> DataFrame:
+    """EXACT top-k of every query over an index on the ``KNN_GRID``
+    query x index grid — the core of ``block_knn`` and ``pq_adc_knn``.
+
+    ``q`` carries (id_a, query payload), ``ix`` (id_b, index payload).
+    Queries hash into KNN_GRID[0] blocks and replicate to all
+    KNN_GRID[1] index shards; index rows hash into shards and replicate
+    to all blocks, so each row moves (blocks + shards) times, never N.
+    Each cogroup cell calls ``cell(qpdf, ipdf)`` for its (b, n) sims
+    (excluded candidates at -inf; real sims are finite or NaN), drops
+    self-matches and keeps its local top-k per query. The global top-k
+    of that union is the true top-k under (sim desc, id asc): every
+    query meets every index row in exactly one cell.
+    """
+    import numpy as np
+
+    Q, S = KNN_GRID
+    # grouping keys cast to int on BOTH sides: cogroup silently splits
+    # groups whose key types differ (pmod -> long vs explode -> int)
+    q = q.select(F.pmod(F.col("id_a"), F.lit(Q)).cast("int").alias("qb"),
+                 F.explode(F.sequence(F.lit(0), F.lit(S - 1))).alias("sb"),
+                 *q.columns)
+    ix = ix.select(F.explode(F.sequence(F.lit(0), F.lit(Q - 1))).alias("qb"),
+                   F.pmod(F.col("id_b"), F.lit(S)).cast("int").alias("sb"),
+                   *ix.columns)
+
+    def _local_topk(key, qpdf, ipdf):
+        if qpdf.empty or ipdf.empty:
+            return _pairs()
+        # index side sorted by id so that a STABLE row-wise argsort of
+        # -sims breaks ties id-ascending — the per-query
+        # np.lexsort((ids, -sims)) order, fully vectorized
+        ipdf = ipdf.sort_values("id_b")
+        qids = qpdf["id_a"].to_numpy(dtype=np.int64)
+        iids = ipdf["id_b"].to_numpy(dtype=np.int64)
+        sims = cell(qpdf, ipdf)
+        # excluded candidates sink below every real sim and are dropped
+        # after selection, so a query with fewer than k valid candidates
+        # emits fewer rows
+        np.copyto(sims, -np.inf, where=iids[None, :] == qids[:, None])
+        kk = min(k, sims.shape[1])
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
+        svals = np.take_along_axis(sims, order, axis=1).ravel()
+        keep = svals != -np.inf
+        return _pairs(np.repeat(qids, kk)[keep], iids[order.ravel()][keep],
+                      svals[keep])
+
+    return _top_k(q.groupBy("qb", "sb").cogroup(ix.groupBy("qb", "sb"))
+                  .applyInPandas(_local_topk,
+                                 schema="id_a long, id_b long, sim double"),
+                  id_col=id_col, k=k)
+
+
 def block_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
-              k: int = 5, query_blocks: int = 8, index_shards: int = 4,
-              round_dp: int = 6,
+              k: int = 5, round_dp: int = 6,
               exclude_match_col: str | None = None,
               queries_df: DataFrame | None = None,
               index_df: DataFrame | None = None) -> DataFrame:
     """EXACT cosine top-k for every vector, fully distributed — the
-    scale-safe replacement for driver-collect brute force.
-
-    2-D blocked matrix product:
-      * queries hash into ``query_blocks`` blocks and are replicated to
-        every index shard; index vectors hash into ``index_shards``
-        shards and are replicated to every query block — each vector
-        moves (query_blocks + index_shards) times, never N times, and no
-        full copy ever sits on the driver or a single task;
-      * each (block, shard) cogroup runs one numpy/BLAS matmul and emits
-        its LOCAL top-k per query (k rows per query per shard — the
-        only data that leaves the stage);
-      * global top-k per query over the shard winners (window over
-        <= k * index_shards rows per query).
-
-    Exact because every query meets every index vector in exactly one
-    cogroup, and the global top-k of a union of per-shard top-k's equals
-    the true top-k under the same (sim desc, id asc) total order.
-    Size blocks/shards so two sub-matrices fit an executor's memory at
-    the target scale.
+    scale-safe replacement for driver-collect brute force: a 2-D
+    blocked matrix product on the ``KNN_GRID`` query x index grid
+    (``_grid_topk``), one numpy/BLAS matmul per cell.
 
     ENGINE-EXACT similarities: vectors are quantized to micro-unit
     int64 (``quantized_vec``) and sims computed by
@@ -650,11 +698,7 @@ def block_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embeddin
     blocked product never cared that the two sides were the same frame.
     """
     import numpy as np
-    import pandas as pd
 
-    Q, S = query_blocks, index_shards
-    # grouping keys cast to int on BOTH sides: cogroup silently splits
-    # groups whose key types differ (pmod -> long vs explode -> int)
     if exclude_match_col:
         df = df.where(F.col(exclude_match_col).isNotNull())
     xcols = [F.col(exclude_match_col)] if exclude_match_col else []
@@ -674,71 +718,50 @@ def block_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embeddin
     if queries_df is not None:
         qbase = base.join(F.broadcast(queries_df.select(id_col)),
                           id_col, "left_semi")
-    q = qbase.select(F.pmod(F.col(id_col), F.lit(Q)).cast("int").alias("qb"),
-                    F.explode(F.sequence(F.lit(0), F.lit(S - 1))).alias("sb"),
-                    F.col(id_col).alias("id_a"), F.col("v").alias("va"), *la)
-    ix = ibase.select(F.explode(F.sequence(F.lit(0), F.lit(Q - 1))).alias("qb"),
-                     F.pmod(F.col(id_col), F.lit(S)).cast("int").alias("sb"),
-                     F.col(id_col).alias("id_b"), F.col("v").alias("vb"), *lb)
+    q = qbase.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), *la)
+    ix = ibase.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), *lb)
 
-    def _local_topk(key, qpdf, ipdf):
-        if qpdf.empty or ipdf.empty:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        # index side sorted by id so that a STABLE row-wise argsort of
-        # -sims breaks ties id-ascending — exactly the old per-query
-        # np.lexsort((cids, -csims)) order, but fully vectorized (r9:
-        # the Python loop over queries was ~half the cogroup time)
-        ipdf = ipdf.sort_values("id_b")
-        qa = np.array(list(qpdf["va"]), dtype=np.float64)
-        ib = np.array(list(ipdf["vb"]), dtype=np.float64)
-        qids = qpdf["id_a"].to_numpy(dtype=np.int64)
-        iids = ipdf["id_b"].to_numpy(dtype=np.int64)
+    def _cell(qpdf, ipdf):
         # inputs arrive micro-unit quantized; sims are bit-exact in
         # every engine (integer dot/norms + one IEEE division)
-        sims = _np_quantized_cosine(qa, ib, scale)
-        # excluded candidates sink below every real sim (cosines are
-        # finite) and are dropped after selection, so a query with
-        # fewer than k valid candidates emits fewer rows — identical
-        # to the old mask-then-topk
-        excl = iids[None, :] == qids[:, None]
+        sims = _np_quantized_cosine(
+            np.array(list(qpdf["va"]), dtype=np.float64),
+            np.array(list(ipdf["vb"]), dtype=np.float64), scale)
         if exclude_match_col:
-            qlabels = qpdf["la"].to_numpy()
-            ilabels = ipdf["lb"].to_numpy()
-            excl |= ilabels[None, :] == qlabels[:, None]
-        np.copyto(sims, -np.inf, where=excl)
-        kk = min(k, sims.shape[1])
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        svals = np.take_along_axis(sims, order, axis=1).ravel()
-        keep = svals != -np.inf
-        return pd.DataFrame({
-            "id_a": np.repeat(qids, kk)[keep],
-            "id_b": iids[order.ravel()][keep],
-            "sim": svals[keep]})
+            np.copyto(sims, -np.inf,
+                      where=(ipdf["lb"].to_numpy()[None, :]
+                             == qpdf["la"].to_numpy()[:, None]))
+        return sims
 
-    cand = (q.groupBy("qb", "sb").cogroup(ix.groupBy("qb", "sb"))
-            .applyInPandas(_local_topk, schema="id_a long, id_b long, sim double"))
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("id_a").alias(id_col),
-                    F.col("id_b").alias("neighbor_id"),
-                    "sim", F.col("rank").cast("int").alias("rank")))
+    return _grid_topk(q, ix, id_col=id_col, k=k, cell=_cell)
 
 
-def _ivf_codebook_mat(base: DataFrame, id_col: str, nlist: int,
+def _ivf_codebook_mat(base: DataFrame, id_col: str, nlist: int | str,
                       codebook) -> "np.ndarray":
     """IVF codebook as a driver-resident (nlist x d) matrix: the caller's
     trained codebook if given (e.g. train_codebook()), else the
-    deterministic lowest-id subset — bounded index metadata, the one
-    collect every IVF system performs."""
+    deterministic lowest-id subset (``nlist="auto"``: ``auto_nlist`` of
+    the corpus count) — bounded index metadata, the one collect every
+    IVF system performs. An empty codebook fails here, loudly, instead
+    of as a numpy shape error inside the executor routing closure."""
     import numpy as np
     if codebook is not None:
-        return np.asarray(codebook, dtype=np.float64)
-    cent_rows = sorted(base.where(F.col(id_col) < nlist).collect(),
-                       key=lambda r: r[0])
-    return np.array([r["v"] for r in cent_rows], dtype=np.float64)
+        c_mat = np.asarray(codebook, dtype=np.float64)
+    else:
+        if nlist == "auto":
+            nlist = auto_nlist(base.count())
+        cent_rows = sorted(base.where(F.col(id_col) < nlist).collect(),
+                           key=lambda r: r[0])
+        if not cent_rows:
+            raise ValueError(
+                f"no vectors with {id_col} < {nlist} to build the IVF "
+                "codebook — ids must start near 0, or pass the codebook "
+                "explicitly")
+        c_mat = np.array([r["v"] for r in cent_rows], dtype=np.float64)
+    if c_mat.ndim != 2 or len(c_mat) == 0:
+        raise ValueError("the IVF codebook must be a non-empty 2-D array, "
+                         f"got shape {c_mat.shape}")
+    return c_mat
 
 
 def _ivf_routes(base: DataFrame, c_mat, *, id_col: str, nprobe: int,
@@ -750,15 +773,12 @@ def _ivf_routes(base: DataFrame, c_mat, *, id_col: str, nprobe: int,
     import numpy as np
     import pandas as pd
     c_ids = np.arange(len(c_mat), dtype=np.int64)
-    c_len = np.linalg.norm(c_mat, axis=1)
 
     def _route(batches):
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.array(list(pdf["v"]), dtype=np.float64)
-            sims = np.round((q @ c_mat.T)
-                            / (np.linalg.norm(q, axis=1)[:, None] * c_len[None, :]),
-                            round_dp)
+            sims = _np_cosine(np.array(list(pdf["v"]), dtype=np.float64),
+                              c_mat, round_dp)
             out_id, out_cid, out_crn = [], [], []
             for i, row in enumerate(sims):
                 order = np.lexsort((c_ids, -row))[:max(nprobe, 1)]
@@ -811,12 +831,8 @@ def ivf_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
     recall.
     """
     import numpy as np
-    import pandas as pd
 
     base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
-    if nlist == "auto":
-        # scalar index metadata, like the codebook collect below
-        nlist = auto_nlist(df.count())
     c_mat = _ivf_codebook_mat(base, id_col, nlist, codebook)
     routed = _ivf_routes(base, c_mat, id_col=id_col, nprobe=nprobe,
                          round_dp=round_dp)
@@ -830,29 +846,20 @@ def ivf_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
 
     def _rerank(key, probe_pdf, member_pdf):
         if probe_pdf.empty or member_pdf.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
-        qa = np.array(list(probe_pdf["va"]), dtype=np.float64)
-        qb = np.array(list(member_pdf["vb"]), dtype=np.float64)
-        # exact oracle formula: raw dot / (norm * norm), rounded
-        sims = np.round(
-            (qa @ qb.T)
-            / (np.linalg.norm(qa, axis=1)[:, None] * np.linalg.norm(qb, axis=1)[None, :]),
-            round_dp)
+            return _pairs()
+        sims = _np_cosine(np.array(list(probe_pdf["va"]), dtype=np.float64),
+                          np.array(list(member_pdf["vb"]), dtype=np.float64),
+                          round_dp)
         ia = probe_pdf["id_a"].to_numpy(dtype=np.int64)
         ib = member_pdf["id_b"].to_numpy(dtype=np.int64)
         a_idx, b_idx = np.nonzero(ia[:, None] != ib[None, :])
-        return pd.DataFrame({"id_a": ia[a_idx], "id_b": ib[b_idx],
-                             "sim": sims[a_idx, b_idx]})
+        return _pairs(ia[a_idx], ib[b_idx], sims[a_idx, b_idx])
 
     pairs = (probes.groupBy("cid").cogroup(members.groupBy("cid_m"))
              .applyInPandas(_rerank, schema="id_a long, id_b long, sim double"))
     # a pair can surface via several probed lists with the same sim
-    pairs = pairs.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim"))
-    wk = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (pairs.withColumn("rank", F.row_number().over(wk))
-            .where(F.col("rank") <= k)
-            .select(F.col("id_a").alias(id_col), F.col("id_b").alias("neighbor_id"),
-                    "sim", F.col("rank").cast("int").alias("rank")))
+    return _top_k(pairs.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim")),
+                  id_col=id_col, k=k)
 
 
 def train_codebook(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
@@ -1401,19 +1408,17 @@ def pq_encode(df: DataFrame, codebooks, *, id_col: str = "vec_id",
 
 
 def pq_adc_knn(df: DataFrame, codebooks, *, id_col: str = "vec_id",
-               vec_col: str = "embedding", k: int = 3,
-               query_blocks: int = 8, index_shards: int = 4,
-               round_dp: int = 6,
+               vec_col: str = "embedding", k: int = 3, round_dp: int = 6,
                encoded: DataFrame | None = None) -> DataFrame:
     """Compressed-domain exact-scan ANN (FAISS IndexPQ): every query
-    meets every CODE, never every vector — the ``block_knn`` 2-D
-    blocked-cogroup shape with the index side carrying m-byte PQ codes
-    + one norm instead of dim floats. Asymmetric distance computation:
-    each cogroup builds the query-side lookup table
-    LUT[q, s, j] = dot(q_sub_s, centroid_{s,j}) with one einsum
-    (b x m x ksub floats), then approx_dot(q, v) = sum_s LUT[q, s,
-    code_v[s]] is a pure table gather — no decode, no per-pair float
-    dot. approx_cos = approx_dot / (|q| * |recon_v|), rounded, id
+    meets every CODE, never every vector — the ``block_knn`` query x
+    index grid (``_grid_topk``) with the index side carrying m-byte PQ
+    codes + one norm instead of dim floats. Asymmetric distance
+    computation (``_np_adc_cosine``): each cell builds the query-side
+    lookup table LUT[q, s, j] = dot(q_sub_s, centroid_{s,j}) with one
+    einsum (b x m x ksub floats), then approx_dot(q, v) = sum_s LUT[q,
+    s, code_v[s]] is a pure table gather — no decode, no per-pair
+    float dot. approx_cos = approx_dot / (|q| * |recon_v|), rounded, id
     tie-break.
 
     Scale: the index side of the shuffle is codes-only (m bytes +
@@ -1426,67 +1431,27 @@ def pq_adc_knn(df: DataFrame, codebooks, *, id_col: str = "vec_id",
     DataFrame to reuse an existing code table (the IndexPQ "build once,
     query many" shape)."""
     import numpy as np
-    import pandas as pd
 
     cb = np.asarray(codebooks, dtype=np.float64)
-    n_m, n_k, sd = cb.shape
-    Q, S = query_blocks, index_shards
     if encoded is None:
         encoded = pq_encode(df, cb, id_col=id_col, vec_col=vec_col)
-    base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
-    q = base.select(F.pmod(F.col(id_col), F.lit(Q)).cast("int").alias("qb"),
-                    F.explode(F.sequence(F.lit(0), F.lit(S - 1))).alias("sb"),
-                    F.col(id_col).alias("id_a"), F.col("v").alias("va"))
-    ix = encoded.select(
-        F.explode(F.sequence(F.lit(0), F.lit(Q - 1))).alias("qb"),
-        F.pmod(F.col(id_col), F.lit(S)).cast("int").alias("sb"),
-        F.col(id_col).alias("id_b"), F.col("codes").alias("cb_codes"),
-        F.col("recon_norm").alias("rnorm"))
+    q = df.select(F.col(id_col).alias("id_a"), as_double(vec_col).alias("va"))
+    ix = encoded.select(F.col(id_col).alias("id_b"),
+                        F.col("codes").alias("cb_codes"),
+                        F.col("recon_norm").alias("rnorm"))
 
-    def _local_topk(key, qpdf, ipdf):
-        if qpdf.empty or ipdf.empty:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        qa = np.array(list(qpdf["va"]), dtype=np.float64)
-        qs = qa.reshape(len(qa), n_m, sd)
-        qn = np.linalg.norm(qa, axis=1)
-        codes = np.array(list(ipdf["cb_codes"]), dtype=np.int64)  # (n, m)
-        rn = ipdf["rnorm"].to_numpy(dtype=np.float64)
-        qids = qpdf["id_a"].to_numpy(dtype=np.int64)
-        iids = ipdf["id_b"].to_numpy(dtype=np.int64)
-        # LUT: (b, m, ksub); ADC gather-sum -> (b, n) approx dots
-        lut = np.einsum("bmd,mkd->bmk", qs, cb)
-        adot = np.zeros((len(qa), len(codes)), dtype=np.float64)
-        for s in range(n_m):
-            adot += lut[:, s, codes[:, s]]
-        sims = np.round(adot / (qn[:, None] * rn[None, :]), round_dp)
-        out_a, out_b, out_s = [], [], []
-        for j, (qi, row) in enumerate(zip(qids, sims)):
-            mask = iids != qi
-            cids, csims = iids[mask], row[mask]
-            order = np.lexsort((cids, -csims))[:k]
-            out_a.extend([qi] * len(order))
-            out_b.extend(cids[order])
-            out_s.extend(csims[order])
-        return pd.DataFrame({"id_a": np.array(out_a, dtype="int64"),
-                             "id_b": np.array(out_b, dtype="int64"),
-                             "sim": np.array(out_s, dtype="float64")})
+    def _cell(qpdf, ipdf):
+        return _np_adc_cosine(
+            np.array(list(qpdf["va"]), dtype=np.float64),
+            np.array(list(ipdf["cb_codes"]), dtype=np.int64),
+            ipdf["rnorm"].to_numpy(dtype=np.float64), cb, round_dp)
 
-    cand = (q.groupBy("qb", "sb").cogroup(ix.groupBy("qb", "sb"))
-            .applyInPandas(_local_topk, schema="id_a long, id_b long, sim double"))
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("id_a").alias(id_col),
-                    F.col("id_b").alias("neighbor_id"),
-                    "sim", F.col("rank").cast("int").alias("rank")))
+    return _grid_topk(q, ix, id_col=id_col, k=k, cell=_cell)
 
 
 def pq_rerank_knn(df: DataFrame, codebooks, *, id_col: str = "vec_id",
                   vec_col: str = "embedding", k: int = 3,
-                  shortlist: int = 20, round_dp: int = 6,
-                  query_blocks: int = 8, index_shards: int = 4) -> DataFrame:
+                  shortlist: int = 20, round_dp: int = 6) -> DataFrame:
     """The production PQ composition (FAISS IndexPQ + refine): ADC over
     codes produces a ``shortlist``-sized candidate set per query, then
     ONLY those N*shortlist pairs are re-scored with exact full-precision
@@ -1502,8 +1467,17 @@ def pq_rerank_knn(df: DataFrame, codebooks, *, id_col: str = "vec_id",
     window top-k. Exactness of the re-rank: rounded raw-dot cosine,
     id tie-break — the block_knn/ivf_knn oracle formula."""
     cand = pq_adc_knn(df, codebooks, id_col=id_col, vec_col=vec_col,
-                      k=shortlist, round_dp=round_dp,
-                      query_blocks=query_blocks, index_shards=index_shards)
+                      k=shortlist, round_dp=round_dp)
+    return _exact_rerank(cand, df, id_col=id_col, vec_col=vec_col, k=k,
+                         round_dp=round_dp)
+
+
+def _exact_rerank(cand: DataFrame, df: DataFrame, *, id_col: str,
+                  vec_col: str, k: int, round_dp: int) -> DataFrame:
+    """Re-score (id_col, neighbor_id) candidates with the exact
+    full-precision rounded raw-dot cosine, then the global top-k: two
+    hash joins rehydrate the raw vectors (each crosses the wire once
+    per shortlist membership), one window."""
     base = df.select(F.col(id_col), as_double(vec_col).alias("v"),
                      norm(as_double(vec_col)).alias("n"))
     qa = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
@@ -1517,12 +1491,7 @@ def pq_rerank_knn(df: DataFrame, codebooks, *, id_col: str = "vec_id",
                      F.round(dot(F.col("va"), F.col("vb"))
                              / (F.col("na") * F.col("nb")),
                              round_dp).alias("sim")))
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (exact.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("id_a").alias(id_col),
-                    F.col("id_b").alias("neighbor_id"),
-                    "sim", F.col("rank").cast("int").alias("rank")))
+    return _top_k(exact, id_col=id_col, k=k)
 
 
 def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
@@ -1550,58 +1519,15 @@ def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
     many candidates per query and exact full-precision cosine re-ranks
     them to the final top-k (the refine stage)."""
     import numpy as np
-    import pandas as pd
 
     base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
-    if coarse_codebook is not None:
-        # nlist is irrelevant with a supplied codebook — resolving
-        # 'auto' here would run a full corpus count() just to discard it
-        c_mat = np.asarray(coarse_codebook, dtype=np.float64)
-        if c_mat.ndim != 2 or len(c_mat) == 0:
-            raise ValueError("coarse_codebook must be a non-empty 2-D "
-                             f"array, got shape {c_mat.shape}")
-    else:
-        if nlist == "auto":
-            nlist = auto_nlist(df.count())
-        cent_rows = sorted(base.where(F.col(id_col) < nlist).collect(),
-                           key=lambda r: r[0])
-        if not cent_rows:
-            # loud build-time failure (the fixed_pq_codebooks contract):
-            # an empty codebook would otherwise die as an opaque numpy
-            # shape error inside the executor routing closure
-            raise ValueError(
-                f"ivf_pq_knn: no vectors with {id_col} < {nlist} to build "
-                "the coarse codebook — ids must start near 0, or pass "
-                "coarse_codebook= explicitly")
-        c_mat = np.array([r["v"] for r in cent_rows], dtype=np.float64)
+    c_mat = _ivf_codebook_mat(base, id_col, nlist, coarse_codebook)
     if pq_codebooks is None:
         pq_codebooks = fixed_pq_codebooks(df, id_col=id_col,
                                           vec_col=vec_col, m=m, ksub=ksub)
     cb = np.asarray(pq_codebooks, dtype=np.float64)
-    n_m, n_k, sd = cb.shape
-    c_ids = np.arange(len(c_mat), dtype=np.int64)
-    c_len = np.linalg.norm(c_mat, axis=1)
-
-    def _route(batches):
-        # identical routing math to ivf_knn: rounded cosine, cid
-        # tie-break; crn=1 is the inverted-list assignment
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.array(list(pdf["v"]), dtype=np.float64)
-            sims = np.round(
-                (q @ c_mat.T)
-                / (np.linalg.norm(q, axis=1)[:, None] * c_len[None, :]),
-                round_dp)
-            out_id, out_cid, out_crn = [], [], []
-            for i, row in enumerate(sims):
-                order = np.lexsort((c_ids, -row))[:max(nprobe, 1)]
-                out_id.extend([ids[i]] * len(order))
-                out_cid.extend(c_ids[order])
-                out_crn.extend(range(1, len(order) + 1))
-            yield pd.DataFrame({id_col: out_id, "cid": out_cid,
-                                "crn": out_crn})
-
-    routed = base.mapInPandas(_route, schema=f"{id_col} long, cid long, crn int")
+    routed = _ivf_routes(base, c_mat, id_col=id_col, nprobe=nprobe,
+                         round_dp=round_dp)
     enc = pq_encode(df, cb, id_col=id_col, vec_col=vec_col)
     members = (routed.where(F.col("crn") == 1).drop("crn")
                .join(enc, id_col)
@@ -1616,51 +1542,25 @@ def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
 
     def _adc(key, probe_pdf, member_pdf):
         if probe_pdf.empty or member_pdf.empty:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        qa = np.array(list(probe_pdf["va"]), dtype=np.float64)
-        qs = qa.reshape(len(qa), n_m, sd)
-        qn = np.linalg.norm(qa, axis=1)
-        codes = np.array(list(member_pdf["cb_codes"]), dtype=np.int64)
-        rn = member_pdf["rnorm"].to_numpy(dtype=np.float64)
+            return _pairs()
+        sims = _np_adc_cosine(
+            np.array(list(probe_pdf["va"]), dtype=np.float64),
+            np.array(list(member_pdf["cb_codes"]), dtype=np.int64),
+            member_pdf["rnorm"].to_numpy(dtype=np.float64), cb, round_dp)
         ia = probe_pdf["id_a"].to_numpy(dtype=np.int64)
         ib = member_pdf["id_b"].to_numpy(dtype=np.int64)
-        lut = np.einsum("bmd,mkd->bmk", qs, cb)
-        adot = np.zeros((len(qa), len(codes)), dtype=np.float64)
-        for s in range(n_m):
-            adot += lut[:, s, codes[:, s]]
-        sims = np.round(adot / (qn[:, None] * rn[None, :]), round_dp)
         a_idx, b_idx = np.nonzero(ia[:, None] != ib[None, :])
-        return pd.DataFrame({"id_a": ia[a_idx], "id_b": ib[b_idx],
-                             "sim": sims[a_idx, b_idx]})
+        return _pairs(ia[a_idx], ib[b_idx], sims[a_idx, b_idx])
 
     pairs = (probes.groupBy("cid").cogroup(members.groupBy("cid_m"))
              .applyInPandas(_adc, schema="id_a long, id_b long, sim double"))
     # a pair can surface via several probed lists with the same ADC sim
     pairs = pairs.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim"))
-    kk = rerank_shortlist if rerank_shortlist is not None else k
-    wk = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    cand = (pairs.withColumn("rank", F.row_number().over(wk))
-            .where(F.col("rank") <= kk))
     if rerank_shortlist is None:
-        return cand.select(F.col("id_a").alias(id_col),
-                           F.col("id_b").alias("neighbor_id"),
-                           "sim", F.col("rank").cast("int").alias("rank"))
-    qa = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
-                     norm(F.col("v")).alias("na"))
-    ib = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
-                     norm(F.col("v")).alias("nb"))
-    exact = (cand.select("id_a", "id_b").join(qa, "id_a").join(ib, "id_b")
-             .select("id_a", "id_b",
-                     F.round(dot(F.col("va"), F.col("vb"))
-                             / (F.col("na") * F.col("nb")),
-                             round_dp).alias("sim")))
-    return (exact.withColumn("rank", F.row_number().over(wk))
-            .where(F.col("rank") <= k)
-            .select(F.col("id_a").alias(id_col),
-                    F.col("id_b").alias("neighbor_id"),
-                    "sim", F.col("rank").cast("int").alias("rank")))
+        return _top_k(pairs, id_col=id_col, k=k)
+    return _exact_rerank(_top_k(pairs, id_col=id_col, k=rerank_shortlist),
+                         df, id_col=id_col, vec_col=vec_col, k=k,
+                         round_dp=round_dp)
 
 
 # ---------------------------------------------------------------------------
@@ -2099,8 +1999,6 @@ FROM proj"""
 
 def ann_recall_against_exact(df: DataFrame, approx: DataFrame, *,
                              id_col: str = "vec_id", k: int = 5,
-                             query_blocks: int = 8,
-                             index_shards: int = 4,
                              vec_col: str = "embedding",
                              sample_n_queries: int | None = None,
                              flop_budget: int | None = None) -> DataFrame:
@@ -2132,9 +2030,8 @@ def ann_recall_against_exact(df: DataFrame, approx: DataFrame, *,
     elif flop_budget is not None:
         guard_eval_flops(df, id_col=id_col, vec_col=vec_col,
                          budget=flop_budget, op="ann_recall_against_exact")
-    exact = block_knn(df, k=k, query_blocks=query_blocks,
-                      index_shards=index_shards, queries_df=sample) \
-        .select(id_col, "neighbor_id")
+    exact = block_knn(df, id_col=id_col, vec_col=vec_col, k=k,
+                      queries_df=sample).select(id_col, "neighbor_id")
     # distinct + clamp: duplicate (id, neighbor) rows in a sloppy approx
     # list (or lists longer than k) must not inflate hits past k, else
     # recall_at_k could exceed 1.0

@@ -629,15 +629,20 @@ def nfc(text: Column | str) -> Column:
 
 
 def normalize_text(text: Column | str, *, unicode_nfc: bool = True) -> Column:
-    """The full cleaning chain: mojibake repair -> NFC -> control strip
+    """The full cleaning chain: control strip -> mojibake repair -> NFC
     -> whitespace collapse. Per-row and shuffle-free; the only Python
     hop is the NFC step (skippable via ``unicode_nfc=False`` for
-    ASCII-known corpora, making the whole chain JVM codegen)."""
+    ASCII-known corpora, making the whole chain JVM codegen).
+
+    Controls go first: one between a base letter and its combining
+    mark (a, U+001F, U+0300) or inside a mojibake sequence would
+    otherwise be stripped only after NFC / repair had run, so a second
+    pass would change the text."""
     c = F.col(text) if isinstance(text, str) else text
-    c = repair_mojibake(c)
+    c = repair_mojibake(strip_controls(c))
     if unicode_nfc:
         c = nfc(c)
-    return collapse_whitespace(strip_controls(c))
+    return collapse_whitespace(c)
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,29 @@ def _cols(cs: Sequence[Column | str]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in cs]
 
 
+def _windowed(ts: str | Column, window, aggs: Sequence[Column],
+              keys: Sequence[Column | str], watermark: str | None,
+              name: str) -> Flow:
+    """The one windowed-aggregate body: optional watermark on ``ts``,
+    groupBy(keys, window(ts)).agg(...), then ``window_start`` /
+    ``window_end`` columns in place of the window struct. ``window``
+    maps the ts Column to the window grouping column."""
+    tcol = F.col(ts) if isinstance(ts, str) else ts
+
+    def _apply(df: DataFrame) -> DataFrame:
+        if watermark:
+            # withWatermark takes a column NAME, not a Column
+            df = df.withWatermark(ts if isinstance(ts, str) else ts._jc.toString(), watermark)
+        out = df.groupBy(*_cols(keys), window(tcol).alias("w")).agg(*aggs)
+        return out.select(
+            *[c for c in out.columns if c != "w"],
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+        ).drop("w")
+
+    return Flow(_apply, name=name)
+
+
 def tumbling_window(ts: str | Column, size: str, *aggs: Column,
                     keys: Sequence[Column | str] = (),
                     watermark: str | None = None) -> Flow:
@@ -42,19 +65,8 @@ def tumbling_window(ts: str | Column, size: str, *aggs: Column,
     Non-empty-window-only emission matches Spark (groups only exist for
     observed rows).
     """
-    tcol = F.col(ts) if isinstance(ts, str) else ts
-
-    def _apply(df: DataFrame) -> DataFrame:
-        if watermark:
-            df = df.withWatermark(ts if isinstance(ts, str) else ts._jc.toString(), watermark)
-        out = df.groupBy(*_cols(keys), F.window(tcol, size).alias("w")).agg(*aggs)
-        return out.select(
-            *[c for c in out.columns if c != "w"],
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        ).drop("w")
-
-    return Flow(_apply, name="tumbling_window")
+    return _windowed(ts, lambda t: F.window(t, size), aggs, keys, watermark,
+                     "tumbling_window")
 
 
 def sliding_window(ts: str | Column, size: str, slide: str, *aggs: Column,
@@ -72,19 +84,8 @@ def sliding_window(ts: str | Column, size: str, slide: str, *aggs: Column,
     the early-emission behavior (demonstrated in
     test_streaming.py::test_sliding_window_emit_partial_update_mode).
     """
-    tcol = F.col(ts) if isinstance(ts, str) else ts
-
-    def _apply(df: DataFrame) -> DataFrame:
-        if watermark:
-            df = df.withWatermark(ts, watermark)
-        out = df.groupBy(*_cols(keys), F.window(tcol, size, slide).alias("w")).agg(*aggs)
-        return out.select(
-            *[c for c in out.columns if c != "w"],
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        ).drop("w")
-
-    return Flow(_apply, name="sliding_window")
+    return _windowed(ts, lambda t: F.window(t, size, slide), aggs, keys,
+                     watermark, "sliding_window")
 
 
 def session_window(ts: str | Column, gap: str, *aggs: Column,
@@ -92,19 +93,8 @@ def session_window(ts: str | Column, gap: str, *aggs: Column,
                    watermark: str | None = None) -> Flow:
     """Inactivity-gap sessions — built-in ``session_window()``
     (``flow/session_window.go:102-140``)."""
-    tcol = F.col(ts) if isinstance(ts, str) else ts
-
-    def _apply(df: DataFrame) -> DataFrame:
-        if watermark:
-            df = df.withWatermark(ts, watermark)
-        out = df.groupBy(*_cols(keys), F.session_window(tcol, gap).alias("w")).agg(*aggs)
-        return out.select(
-            *[c for c in out.columns if c != "w"],
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        ).drop("w")
-
-    return Flow(_apply, name="session_window")
+    return _windowed(ts, lambda t: F.session_window(t, gap), aggs, keys,
+                     watermark, "session_window")
 
 
 def keyed(keys: Sequence[Column | str], *aggs: Column) -> Flow:

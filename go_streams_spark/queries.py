@@ -572,43 +572,28 @@ WITH dirty AS (
          || chr(194) || chr(160) || text || ' ' || chr(9) || ' end'
          || chr(13) || chr(10) || 'line' || repeat(chr(10), 4) || 'fin ' AS t
   FROM documents
+), clean AS (
+  SELECT doc_id,
+         trim(regexp_replace(regexp_replace(regexp_replace(nfc_normalize(
+           replace(replace(replace(replace(replace(replace(replace(replace(replace(
+             regexp_replace(replace(t, chr(13)||chr(10), chr(10)),
+                            '[\\x00-\\x08\\x0b-\\x1f\\x7f\\x80-\\x9f]', '', 'g'),
+             chr(226)||chr(8364)||chr(8482), ''''),
+             chr(226)||chr(8364)||chr(8220), '-'),
+             chr(226)||chr(8364)||chr(339), '"'),
+             chr(195)||chr(169), chr(233)),
+             chr(195)||chr(168), chr(232)),
+             chr(195)||chr(188), chr(252)),
+             chr(195)||chr(182), chr(246)),
+             chr(195)||chr(177), chr(241)),
+             chr(194)||chr(160), ' ')),
+           '[ \\t]+', ' ', 'g'),
+           ' ?\\n ?', chr(10), 'g'),
+           '\\n{3,}', chr(10)||chr(10), 'g')) AS norm_text
+  FROM dirty
 )
-SELECT doc_id,
-       trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-         replace(nfc_normalize(
-           replace(replace(replace(replace(replace(replace(replace(replace(replace(t,
-             chr(226)||chr(8364)||chr(8482), ''''),
-             chr(226)||chr(8364)||chr(8220), '-'),
-             chr(226)||chr(8364)||chr(339), '"'),
-             chr(195)||chr(169), chr(233)),
-             chr(195)||chr(168), chr(232)),
-             chr(195)||chr(188), chr(252)),
-             chr(195)||chr(182), chr(246)),
-             chr(195)||chr(177), chr(241)),
-             chr(194)||chr(160), ' ')),
-         chr(13)||chr(10), chr(10)),
-         '[\\x00-\\x08\\x0b-\\x1f\\x7f\\x80-\\x9f]', '', 'g'),
-         '[ \\t]+', ' ', 'g'),
-         ' ?\\n ?', chr(10), 'g'),
-         '\\n{3,}', chr(10)||chr(10), 'g')) AS norm_text,
-       length(trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-         replace(nfc_normalize(
-           replace(replace(replace(replace(replace(replace(replace(replace(replace(t,
-             chr(226)||chr(8364)||chr(8482), ''''),
-             chr(226)||chr(8364)||chr(8220), '-'),
-             chr(226)||chr(8364)||chr(339), '"'),
-             chr(195)||chr(169), chr(233)),
-             chr(195)||chr(168), chr(232)),
-             chr(195)||chr(188), chr(252)),
-             chr(195)||chr(182), chr(246)),
-             chr(195)||chr(177), chr(241)),
-             chr(194)||chr(160), ' ')),
-         chr(13)||chr(10), chr(10)),
-         '[\\x00-\\x08\\x0b-\\x1f\\x7f\\x80-\\x9f]', '', 'g'),
-         '[ \\t]+', ' ', 'g'),
-         ' ?\\n ?', chr(10), 'g'),
-         '\\n{3,}', chr(10)||chr(10), 'g')))::BIGINT AS n_chars
-FROM dirty
+SELECT doc_id, norm_text, length(norm_text)::BIGINT AS n_chars
+FROM clean
 """)
 def text_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode/text normalization — step zero of a web-corpus pipeline
@@ -616,10 +601,10 @@ def text_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before any dedup or quality pass). The query injects a
     deterministic dirt prefix/suffix (combining accent, BEL control,
     cp1252 mojibake, nbsp, CRLF, tab runs, 4-newline run) around each
-    real document and runs the full cleaning chain: mojibake repair ->
-    NFC (the one Python hop: pandas' vectorized str.normalize; agrees
-    exactly with DuckDB's nfc_normalize) -> control strip -> whitespace
-    collapse. Per-row and shuffle-free — scales as a pure map over
+    real document and runs the full cleaning chain: control strip ->
+    mojibake repair -> NFC (the one Python hop: pandas' vectorized
+    str.normalize; agrees exactly with DuckDB's nfc_normalize) ->
+    whitespace collapse. Per-row and shuffle-free — scales as a pure map over
     input splits."""
     docs = _t(spark, sf_dir, "documents")
     dirty = F.concat(
@@ -1844,7 +1829,7 @@ FROM sums GROUP BY doc_id
 def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (md5 bit votes over distinct tokens)."""
     docs = _t(spark, sf_dir, "documents")
-    return D.simhash32(docs)
+    return D.simhash(docs, bits=32)
 
 
 @query("simhash_near_pairs", """
@@ -1872,7 +1857,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: hamming distance <= 6 on 32-bit hashes."""
     docs = _t(spark, sf_dir, "documents")
-    sim = D.simhash32(docs)
+    sim = D.simhash(docs, bits=32)
     out = D.simhash_pairs(sim, max_hamming=6)
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
@@ -1902,7 +1887,7 @@ def simhash64_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per document — the corpus-scale hash width (16-bit
     pigeonhole bands at max_hamming=3)."""
     docs = _t(spark, sf_dir, "documents")
-    return D.simhash64(docs)
+    return D.simhash(docs, bits=64)
 
 
 @query("simhash64_near_pairs", """
@@ -1939,7 +1924,7 @@ def simhash64_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     it (per-band equi-join + exact hamming verify, recall 1.0 by
     pigeonhole)."""
     docs = _t(spark, sf_dir, "documents")
-    sim = D.simhash64(docs)
+    sim = D.simhash(docs, bits=64)
     out = D.simhash_pairs(sim, max_hamming=3, bits=64)
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
@@ -2015,8 +2000,7 @@ def embedding_knn(spark: SparkSession, sf_dir: str,
         sample = S.eval_query_sample(emb, n=sample_n_queries)
     else:
         S.guard_eval_flops(emb, op="embedding_knn")
-    out = S.block_knn(emb, k=5, query_blocks=8, index_shards=4,
-                      queries_df=sample)
+    out = S.block_knn(emb, k=5, queries_df=sample)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -2110,12 +2094,9 @@ def ann_filtered_recall_audit(spark: SparkSession, sf_dir: str,
     else:
         S.guard_eval_flops(emb, op="ann_filtered_recall_audit")
     pred = (F.col("label") % 2) == 0
-    truth = (S.block_knn(emb.where(pred), k=3,
-                         query_blocks=8, index_shards=4,
-                         queries_df=sample)
+    truth = (S.block_knn(emb.where(pred), k=3, queries_df=sample)
              .select("vec_id", "neighbor_id"))
-    full = S.block_knn(emb, k=9, query_blocks=8, index_shards=4,
-                       queries_df=sample)
+    full = S.block_knn(emb, k=9, queries_df=sample)
     labels = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
     from pyspark.sql import Window
     post = (full
@@ -2272,7 +2253,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str,
     approx = S.sign_lsh_knn(emb, k=5, nbits="auto") \
         .select("vec_id", "neighbor_id")
     return S.ann_recall_against_exact(
-        emb, approx, id_col="vec_id", k=5, query_blocks=8, index_shards=4,
+        emb, approx, id_col="vec_id", k=5,
         sample_n_queries=sample_n_queries,
         flop_budget=S.DEFAULT_EVAL_FLOP_BUDGET)
 
@@ -2387,8 +2368,7 @@ def ann_ndcg_report(spark: SparkSession, sf_dir: str,
         sysd = sysd.join(F.broadcast(sample), "vec_id", "left_semi")
     from .plans.caching import track_persist
     sysd = track_persist(sysd)  # two consumers: rel + n_sys
-    ideal = (S.block_knn(emb, k=5, query_blocks=8, index_shards=4,
-                         queries_df=sample)
+    ideal = (S.block_knn(emb, k=5, queries_df=sample)
              .select("vec_id", "neighbor_id"))
     wts = F.array(F.lit(1000000), F.lit(630930), F.lit(500000))
     rel = (sysd.join(ideal, ["vec_id", "neighbor_id"], "left_semi")
@@ -2476,7 +2456,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract at a weak threshold; ``embedding_near_dup_lsh`` is the
     sub-quadratic bucketed path)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return S.cosine_near_dup(emb, threshold=0.5, num_blocks=8)
+    return S.cosine_near_dup(emb, threshold=0.5)
 
 
 @query("embedding_near_dup_lsh", """
@@ -2538,16 +2518,12 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests (a cos-0.5 pair disagrees per sign bit w.p. ~1/3 — weak
     thresholds are inherently recall-lossy under LSH)."""
     emb = _t(spark, sf_dir, "embeddings")
-    # dense_switch_micro (r10): one band-occupancy agg decides the plan
-    # at runtime — this config's 2-3-bit band keys retain ~2/3 of ALL
-    # pairs at any corpus size (measured: 1.34M of 2.0M at sf0.1), so
-    # the bucketed join's pair-row shuffle + distinct + per-pair
-    # interpreted folds are a false economy; past 1% retention the
-    # blocked BLAS scan with the in-batch band predicate computes the
-    # identical result set for ~1/100 the per-pair cost (guide §4.2).
+    # one band-occupancy agg decides the plan at runtime — this
+    # config's 2-3-bit band keys retain ~2/3 of ALL pairs at any corpus
+    # size (measured: 1.34M of 2.0M at sf0.1), so it runs the blocked
+    # BLAS scan with the in-batch band predicate, not the band join
     return S.cosine_near_dup_lsh(emb, threshold=0.5, nbits=16,
-                                 max_band_hamming=5,
-                                 dense_switch_micro=10_000)
+                                 max_band_hamming=5)
 
 
 @query("multimodal_meta", """
@@ -6288,8 +6264,7 @@ def hard_negatives_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul as the exact kNN gate, with the class filter applied inside
     each cogroup before its local top-k so exactness is preserved."""
     emb = _t(spark, sf_dir, "embeddings")
-    return S.block_knn(emb, k=3, query_blocks=8, index_shards=4,
-                       exclude_match_col="label")
+    return S.block_knn(emb, k=3, exclude_match_col="label")
 
 
 @query("cohort_retention_weekly", """
@@ -6750,11 +6725,9 @@ def sq_int8_recall_audit(spark: SparkSession, sf_dir: str,
                    * (F.element_at(hi, i) - F.element_at(lo, i))
                    + F.element_at(lo, i)))
     deq = emb.select("vec_id", dv.alias("embedding"))
-    exact = (S.block_knn(emb, k=5, query_blocks=8, index_shards=4,
-                         queries_df=sample)
+    exact = (S.block_knn(emb, k=5, queries_df=sample)
              .select("vec_id", "neighbor_id"))
-    approx = (S.block_knn(deq, k=5, query_blocks=8, index_shards=4,
-                          queries_df=sample)
+    approx = (S.block_knn(deq, k=5, queries_df=sample)
               .select("vec_id", "neighbor_id"))
     ap2 = approx.select(F.col("vec_id").alias("__qid"),
                         F.col("neighbor_id").alias("__nb"))

@@ -36,7 +36,7 @@ def test_minhash_lsh_finds_near_dups(docs):
 
 
 def test_simhash_close_for_similar(docs):
-    sim = {r["doc_id"]: r["simhash"] for r in D.simhash32(docs).collect()}
+    sim = {r["doc_id"]: r["simhash"] for r in D.simhash(docs, bits=32).collect()}
     assert sim[0] == sim[1]  # identical text -> identical simhash
     ham_near = bin(sim[0] ^ sim[2]).count("1")
     ham_far = bin(sim[0] ^ sim[3]).count("1")
@@ -66,7 +66,7 @@ def test_simhash_banded_pairs_match_all_pairs(spark, sf_dir):
     """Pigeonhole banding must be lossless: the banded equi-join finds
     exactly the pairs the O(N^2) formulation finds, for several k."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    sim = D.simhash32(docs).cache()
+    sim = D.simhash(docs, bits=32).cache()
     a = sim.selectExpr("doc_id id_a", "simhash h_a")
     b = sim.selectExpr("doc_id id_b", "simhash h_b")
     for k in (1, 3, 6):
@@ -82,15 +82,16 @@ def test_simhash_banded_pairs_match_all_pairs(spark, sf_dir):
     sim.unpersist()
 
 
-def test_block_knn_matches_brute_force(spark, sf_dir):
+def test_block_knn_matches_brute_force(spark, sf_dir, monkeypatch):
     """The 2-D blocked distributed kNN is EXACT: identical to the
     cross-join brute force (same rounded sims, same tie-breaks) —
-    including block counts that do not divide N."""
+    including a 7 x 3 grid whose block counts do not divide N."""
+    monkeypatch.setattr(S, "KNN_GRID", (7, 3))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(90)
     want = {(r["vec_id"], r["rank"]): (r["neighbor_id"], r["sim"])
             for r in S.brute_force_knn(emb, k=4).collect()}
     got = {(r["vec_id"], r["rank"]): (r["neighbor_id"], r["sim"])
-           for r in S.block_knn(emb, k=4, query_blocks=7, index_shards=3).collect()}
+           for r in S.block_knn(emb, k=4).collect()}
     assert got == want
 
 
@@ -137,7 +138,7 @@ def test_cosine_near_dup_blocked_exact(spark):
         if round(dot / (na * nb), 6) >= 0.9:
             want.add((i, j))
     got = [(r["id_a"], r["id_b"])
-           for r in S.cosine_near_dup(emb, threshold=0.9, num_blocks=4).collect()]
+           for r in S.cosine_near_dup(emb, threshold=0.9).collect()]
     assert sorted(got) == sorted(want)       # no pair missed
     assert len(got) == len(set(got))         # no pair duplicated
     assert len(want) > 10                    # the fixture actually exercises it
@@ -169,20 +170,54 @@ def test_cosine_near_dup_lsh_recall_documented(spark, sf_dir):
 
 
 def test_cosine_near_dup_lsh_dense_plan_equivalent(spark, sf_dir):
-    """The r10 dense blocked-scan plan (band predicate evaluated
-    in-batch from the sign buckets) returns EXACTLY the bucketed
-    band-join plan's rows — same pairs, same sims. dense_switch_micro=1
-    forces the occupancy switch; None forces the bucketed plan."""
+    """The dense blocked-scan plan (band predicate evaluated in-batch
+    from the sign buckets) returns EXACTLY the bucketed band-join
+    plan's rows — same pairs, same sims; and the occupancy switch picks
+    the scan for the 16-bit/6-band config, the band join for one
+    16-bit band."""
+    from go_streams_spark.plans import explain_str
     emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
            .select("vec_id", "embedding").limit(200))
-    kw = dict(threshold=0.05, nbits=16, max_band_hamming=5)
+    kw = dict(id_col="vec_id", vec_col="embedding", threshold=0.05,
+              round_dp=6)
     bucketed = {(r["id_a"], r["id_b"]): r["sim"]
-                for r in S.cosine_near_dup_lsh(emb, **kw).collect()}
+                for r in S._near_dup_lsh_bucketed(
+                    emb, nbits=16, max_band_hamming=5, **kw).collect()}
     dense = {(r["id_a"], r["id_b"]): r["sim"]
-             for r in S.cosine_near_dup_lsh(
-                 emb, dense_switch_micro=1, **kw).collect()}
+             for r in S._pair_scan(emb, n=200, bands=S._band_layout(16, 6),
+                                   **kw).collect()}
     assert dense == bucketed
     assert len(bucketed) > 0                 # fixture exercises the path
+
+    def plan(max_band_hamming):
+        return explain_str(S.cosine_near_dup_lsh(
+            emb, threshold=0.05, nbits=16,
+            max_band_hamming=max_band_hamming), "simple")
+    six_bands, one_band = plan(5), plan(0)
+    assert "FlatMapCoGroupsInPandas" in six_bands
+    assert "band_key" not in six_bands
+    assert "FlatMapCoGroupsInPandas" not in one_band
+    assert "band_key" in one_band
+
+
+def test_pair_scan_block_count_bounds_cell_size():
+    """The triangular scan's block count grows with the vector count so
+    a block never holds more than ROWS_PER_BLOCK vectors; at test-data
+    sizes it stays 8, so plans and hashes there do not move."""
+    import math
+    assert S._scan_blocks(2_000) == 8
+    for n in (2_000, 1_000_000):
+        assert math.ceil(n / S._scan_blocks(n)) <= S.ROWS_PER_BLOCK
+
+
+def test_cosine_near_dup_lsh_dense_flop_guard(spark, sf_dir, monkeypatch):
+    """The dense branch runs the flop guard from the probe's vector
+    count: past the budget it raises, naming longer bands."""
+    monkeypatch.setattr(S, "DEFAULT_EVAL_FLOP_BUDGET", 1_000)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(60)
+    with pytest.raises(ValueError, match="nbits.*max_band_hamming"):
+        S.cosine_near_dup_lsh(emb, threshold=0.5, nbits=16,
+                              max_band_hamming=5)
 
 
 def test_text_functions(spark):
@@ -498,7 +533,7 @@ def test_simhash64_band_equijoin_matches_brute_force(spark):
     rows = [(i, f"tok{i} alpha beta gamma delta epsilon zeta common words "
                 f"shared across documents {i % 3}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sim = D.simhash64(df)
+    sim = D.simhash(df, bits=64)
     sims = {r["doc_id"]: r["simhash"] for r in sim.collect()}
     brute = sorted(
         (a, b) for a in sims for b in sims
@@ -702,17 +737,17 @@ def test_sign_lsh_multiprobe_recall(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ann_recall_evaluator_multiprobe_uplift(spark, sf_dir):
+def test_ann_recall_evaluator_multiprobe_uplift(spark, sf_dir, monkeypatch):
     """The in-engine recall evaluator agrees with a hand-computed
     recall and reports strictly higher recall@k for multi-probe than
     single-probe sign-LSH on the same data — the after-index-rebuild
     quality check a vector store runs, expressed as one engine op."""
+    monkeypatch.setattr(S, "KNN_GRID", (4, 2))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
 
     def report(approx):
         row = S.ann_recall_against_exact(
-            emb, approx.select("vec_id", "neighbor_id"), k=3,
-            query_blocks=4, index_shards=2).collect()[0]
+            emb, approx.select("vec_id", "neighbor_id"), k=3).collect()[0]
         # internal consistency of the report row
         assert row["possible"] == row["n_queries"] * 3
         assert 0 <= row["total_hits"] <= row["possible"]
@@ -735,6 +770,21 @@ def test_ann_recall_evaluator_multiprobe_uplift(spark, sf_dir):
         got.setdefault(r["vec_id"], set()).add(r["neighbor_id"])
     hand = sum(len(got.get(q, set()) & t) for q, t in truth.items())
     assert single["total_hits"] == hand
+
+
+def test_ann_recall_against_exact_named_columns(spark, sf_dir):
+    """ann_recall_against_exact reads the frame through its own
+    id_col/vec_col: a (doc_id, emb) frame reports the same recall as
+    the (vec_id, embedding) original."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(100)
+    approx = S.sign_lsh_knn(emb, k=3, nbits=8).select("vec_id", "neighbor_id")
+    want = S.ann_recall_against_exact(emb, approx, k=3).collect()[0]
+    renamed = emb.select(F.col("vec_id").alias("doc_id"),
+                         F.col("embedding").alias("emb"))
+    got = S.ann_recall_against_exact(
+        renamed, approx.withColumnRenamed("vec_id", "doc_id"),
+        id_col="doc_id", vec_col="emb", k=3).collect()[0]
+    assert got == want and want["n_queries"] == 100
 
 
 def test_count_min_never_undercounts(spark, sf_dir):
@@ -987,22 +1037,23 @@ def test_label_propagation_two_cliques(spark):
     assert got[2] != got[13]
 
 
-def test_block_knn_hard_negative_exclusion(spark):
+def test_block_knn_hard_negative_exclusion(spark, monkeypatch):
     """exclude_match_col filters same-class candidates inside every
     cogroup: every returned neighbor has a different label than its
     query, results equal a per-pair reference with the same rule, and
     the unfiltered path is unchanged."""
     import itertools
     import math
-    # label = i % 5 is deliberately CO-PRIME with query_blocks=3: each
+    # label = i % 5 is deliberately CO-PRIME with 3 query blocks: each
     # cogroup mixes query labels, so a bug using a group-constant query
     # label (instead of per-row) cannot pass
+    monkeypatch.setattr(S, "KNN_GRID", (3, 2))
     vecs = [(i, [math.cos(i * 0.37), math.sin(i * 0.37), 0.25], i % 5)
             for i in range(24)]
     emb = spark.createDataFrame(
         vecs, "vec_id long, embedding array<float>, label int")
     got = {(r["vec_id"], r["rank"]): (r["neighbor_id"], r["sim"])
-           for r in S.block_knn(emb, k=2, query_blocks=3, index_shards=2,
+           for r in S.block_knn(emb, k=2,
                                 exclude_match_col="label").collect()}
     labels = {i: lb for i, _, lb in vecs}
     assert all(labels[q] != labels[n] for (q, _), (n, _) in got.items())
@@ -1194,6 +1245,31 @@ def test_pq_rerank_recall_monotone(spark, sf_dir):
     plan = explain_str(S.pq_adc_knn(emb, cb, k=3), "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_pq_adc_knn_matches_per_query_reference(spark, sf_dir, monkeypatch):
+    """The grid's vectorized local top-k selects exactly what a
+    per-query (sim desc, id asc) lexsort over all other codes selects,
+    on an uneven 3 x 2 grid."""
+    import numpy as np
+    monkeypatch.setattr(S, "KNN_GRID", (3, 2))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(60)
+    cb = np.asarray(S.fixed_pq_codebooks(emb, m=4, ksub=8))
+    got = {(r["vec_id"], r["rank"]): (r["neighbor_id"], r["sim"])
+           for r in S.pq_adc_knn(emb, cb, k=3).collect()}
+    enc = {r["vec_id"]: r for r in S.pq_encode(emb, cb).collect()}
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    ids = np.array(sorted(vecs), dtype=np.int64)
+    sims = S._np_adc_cosine(
+        np.array([vecs[i] for i in ids], dtype=np.float64),
+        np.array([enc[i]["codes"] for i in ids], dtype=np.int64),
+        np.array([enc[i]["recon_norm"] for i in ids]), cb, 6)
+    want = {}
+    for a, row in zip(ids, sims):
+        cids, csims = ids[ids != a], row[ids != a]
+        for rank, o in enumerate(np.lexsort((cids, -csims))[:3], 1):
+            want[(int(a), rank)] = (int(cids[o]), float(csims[o]))
+    assert got == want and len(want) == 180
 
 
 def test_dsir_matches_python_reference(spark):

@@ -203,6 +203,16 @@ def test_pq_invalid_arguments(spark):
         fixed_pq_codebooks(df, m=2, ksub=8)   # only 4 vectors exist
 
 
+def test_ivf_knn_empty_codebook(spark):
+    """ivf_knn on a frame with no id below nlist fails at build time
+    naming the cause, not as a numpy axis error in the routing pass."""
+    rows = [(1000 + i, [float(i), 1.0, -1.0]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    from go_streams_spark.functions.similarity import ivf_knn
+    with pytest.raises(ValueError, match="no vectors with vec_id < 16"):
+        ivf_knn(df, k=3, nlist=16, nprobe=2).collect()
+
+
 def test_stream_interval_join_invalid(spark):
     """stream_interval_join fails loudly at build time: unknown join
     type, missing key/timestamp columns, and non-key column collisions

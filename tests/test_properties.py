@@ -263,7 +263,7 @@ def test_simhash64_banding_recall_property(spark, docs, k):
     from go_streams_spark.functions import dedup as D
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sim = D.simhash64(df)
+    sim = D.simhash(df, bits=64)
     sims = {r["doc_id"]: r["simhash"] for r in sim.collect()}
     brute = sorted(
         (a, b) for a in sims for b in sims

@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_streams_spark.api import Source
-from go_streams_spark.operators import sliding_window, tumbling_window
+from go_streams_spark.operators import (
+    session_window, sliding_window, tumbling_window,
+)
 from go_streams_spark.streaming import file_stream_source, memory_sink
 
 
@@ -48,6 +50,25 @@ def test_sliding_window_event_time_assignment(spark):
         100: ["g", "i", "h"],  # h included: event-time, not arrival-time
         120: ["h"],
     }
+
+
+@pytest.mark.parametrize("make", [
+    lambda ts, agg, wm: tumbling_window(ts, "10 seconds", agg, watermark=wm),
+    lambda ts, agg, wm: sliding_window(ts, "10 seconds", "5 seconds", agg,
+                                       watermark=wm),
+    lambda ts, agg, wm: session_window(ts, "5 seconds", agg, watermark=wm),
+], ids=["tumbling", "sliding", "session"])
+def test_window_column_ts_with_watermark(spark, make):
+    """Every window takes ``ts`` as a name or a Column, also with a
+    watermark, and both forms give the same windows."""
+    df = spark.createDataFrame([(s,) for s in (1, 3, 12, 14, 31)], "s long") \
+        .select(F.timestamp_seconds("s").alias("ts"))
+
+    def rows(ts):
+        out = make(ts, F.count(F.lit(1)).alias("n"), "2 minutes")(df)
+        return sorted(tuple(r) for r in out.collect())
+    assert rows(F.col("ts")) == rows("ts")
+    assert len(rows("ts")) > 0
 
 
 def test_streaming_watermark_late_event_delta(spark, tmp_path):
