@@ -369,7 +369,7 @@ EXCLUDED = {
     "minhash_signatures": "sub-stage of benched dedup_minhash_pairs (signatures only, no join)",
     "pq_encode_codes": "sub-stage of benched ann_ivf_pq / pq_adc_topk (codes only, no search)",
     "simhash64_docs": "sub-stage of benched simhash64_near_pairs (hashes only, no band join)",
-    "simhash_near_pairs": "32-bit twin of benched simhash64_near_pairs (same plan, narrower hash)",
+    "simhash_near_pairs": "32-bit twin of benched simhash64_near_pairs, but 5.6x its cost: 13.8 s warm at sf0.1 on 4 cores against 2.5 s, because its 7 pigeonhole bands of 4-5 bits give 30.3M candidate pairs before distinct (2.4x the 12.5M pairs among 5,000 docs)",
     "q8_market_share": "DataFrame twin of benched sql_surface_market_share (identical plan via SQL API)",
     "text_redact_pii": "same regex-scrub plan class as benched pii_scrub_docs",
     "multimodal_meta": "binary-plumbing pin with deterministic fake codec; real-codec twin multimodal_features_real_bmp is benched",

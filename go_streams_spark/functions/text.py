@@ -611,38 +611,46 @@ def collapse_whitespace(text: Column | str) -> Column:
     return F.trim(c)
 
 
-def nfc(text: Column | str) -> Column:
-    """Unicode NFC normalization. Spark has no built-in normalizer, so
-    this is the one Python step of the cleaning chain -- an Arrow
-    pandas_udf riding pandas' vectorized ``str.normalize`` (C-level
-    loop, never per-row Python). Agrees exactly with DuckDB's
-    ``nfc_normalize`` (both implement canonical composition;
-    agreement test-pinned)."""
+def normalize_text(text: Column | str, *, unicode_nfc: bool = True) -> Column:
+    """The full cleaning chain: control strip -> NFC -> mojibake repair
+    -> NFC -> whitespace collapse. Per-row and shuffle-free; the only
+    Python hop is NFC -> repair -> NFC (skippable via
+    ``unicode_nfc=False`` for ASCII-known corpora, making the whole
+    chain JVM codegen: control strip -> repair -> whitespace collapse).
+
+    The order makes the chain idempotent. Controls go first: one
+    between a base letter and its combining mark (a, U+001F, U+0300) or
+    inside a mojibake sequence would otherwise be stripped only after
+    NFC / repair had run. NFC runs on both sides of the repair: NFC can
+    compose a mojibake sequence (A, U+0303, U+00A9 -> U+00C3 U+00A9),
+    which only a repair after it fixes, and a repaired letter can
+    compose with a following mark (U+00C3 U+00BC, U+0301 -> U+00FC
+    U+0301 -> U+01D8), which only an NFC after it folds."""
+    c = strip_controls(F.col(text) if isinstance(text, str) else text)
+    c = _nfc_repair_nfc(c) if unicode_nfc else repair_mojibake(c)
+    return collapse_whitespace(c)
+
+
+def _nfc_repair_nfc(text: Column) -> Column:
+    """NFC -> mojibake repair -> NFC in ONE Arrow pandas hop. Spark has
+    no built-in normalizer, so this is the one Python step of the
+    cleaning chain, riding pandas' vectorized ``str.normalize`` (C-level
+    loop, never per-row Python); it agrees exactly with DuckDB's
+    ``nfc_normalize`` (both implement canonical composition; agreement
+    test-pinned). The repair is ``repair_mojibake``'s exact-substring
+    chain over MOJIBAKE_TABLE, run as pandas ``str.replace`` between the
+    two normalizations instead of as a JVM step between two Python
+    hops."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("string")
-    def _nfc(s: pd.Series) -> pd.Series:
+    def _chain(s: pd.Series) -> pd.Series:
+        s = s.str.normalize("NFC")
+        for bad, good in MOJIBAKE_TABLE:
+            s = s.str.replace(bad, good, regex=False)
         return s.str.normalize("NFC")
 
-    c = F.col(text) if isinstance(text, str) else text
-    return _nfc(c)
-
-
-def normalize_text(text: Column | str, *, unicode_nfc: bool = True) -> Column:
-    """The full cleaning chain: control strip -> mojibake repair -> NFC
-    -> whitespace collapse. Per-row and shuffle-free; the only Python
-    hop is the NFC step (skippable via ``unicode_nfc=False`` for
-    ASCII-known corpora, making the whole chain JVM codegen).
-
-    Controls go first: one between a base letter and its combining
-    mark (a, U+001F, U+0300) or inside a mojibake sequence would
-    otherwise be stripped only after NFC / repair had run, so a second
-    pass would change the text."""
-    c = F.col(text) if isinstance(text, str) else text
-    c = repair_mojibake(strip_controls(c))
-    if unicode_nfc:
-        c = nfc(c)
-    return collapse_whitespace(c)
+    return _chain(text)
 
 
 # ---------------------------------------------------------------------------

@@ -576,8 +576,8 @@ WITH dirty AS (
   SELECT doc_id,
          trim(regexp_replace(regexp_replace(regexp_replace(nfc_normalize(
            replace(replace(replace(replace(replace(replace(replace(replace(replace(
-             regexp_replace(replace(t, chr(13)||chr(10), chr(10)),
-                            '[\\x00-\\x08\\x0b-\\x1f\\x7f\\x80-\\x9f]', '', 'g'),
+             nfc_normalize(regexp_replace(replace(t, chr(13)||chr(10), chr(10)),
+                            '[\\x00-\\x08\\x0b-\\x1f\\x7f\\x80-\\x9f]', '', 'g')),
              chr(226)||chr(8364)||chr(8482), ''''),
              chr(226)||chr(8364)||chr(8220), '-'),
              chr(226)||chr(8364)||chr(339), '"'),
@@ -602,8 +602,8 @@ def text_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic dirt prefix/suffix (combining accent, BEL control,
     cp1252 mojibake, nbsp, CRLF, tab runs, 4-newline run) around each
     real document and runs the full cleaning chain: control strip ->
-    mojibake repair -> NFC (the one Python hop: pandas' vectorized
-    str.normalize; agrees exactly with DuckDB's nfc_normalize) ->
+    NFC -> mojibake repair -> NFC (the one Python hop: pandas' vectorized
+    str.normalize, which agrees exactly with DuckDB's nfc_normalize) ->
     whitespace collapse. Per-row and shuffle-free — scales as a pure map over
     input splits."""
     docs = _t(spark, sf_dir, "documents")
@@ -6909,8 +6909,8 @@ WHERE event_type = 'purchase'
 """)
 def stream_fold_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Fold (flow/fold.go:83-90 per-element emission) through
-    the REAL stateful machinery: applyInPandasWithState keyed on
-    user_id, accumulator in the state store, run as a Structured
+    the REAL stateful machinery: applyInPandasWithState, one
+    accumulator per user_id in 8 state buckets, run as a Structured
     Streaming query (availableNow -> append memory sink) and
     hash-matched against the prefix-sum oracle. The streaming twin of
     the batch `fold_running_sum` window query."""
@@ -6920,12 +6920,12 @@ def stream_fold_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (_events_stream(spark, sf_dir)
            .where("event_type = 'purchase'")
            .select("user_id", "event_id", "value"))
-    folded = running_fold_stream(
-        src, key_cols=["user_id"], value_col="value", order_col="event_id",
-        fold_fn=lambda v, a: a + v, init=0.0,
-        output_schema="user_id long, event_id long, value double, acc double")
     name = "fold_stream_" + _uuid.uuid4().hex[:10]
     with state_sized_partitions(spark, 8):
+        folded = running_fold_stream(
+            src, key_cols=["user_id"], value_col="value", order_col="event_id",
+            fold_fn=lambda v, a: a + v, init=0.0,
+            output_schema="user_id long, event_id long, value double, acc double")
         Source(folded).to(memory_sink(name, output_mode="append"))
     return spark.table(name).select(
         "user_id", "event_id", F.round("acc", 4).alias("acc"))
@@ -12210,10 +12210,11 @@ WHERE r.rn > 24 AND r.rn < mx.mr
 def hw_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Holt-Winters through the REAL stateful machinery
     (streaming/stateful.py::holt_winters_stream): one
-    applyInPandasWithState pass per event_type fuses the hourly-slot
-    close (a slot completes when a later-slot row arrives) with the
-    seasonal forecast fold; state = the open slot's partial sum + the
-    init buffer or (l, b, 24-slot seasonal vector), all exact int64.
+    applyInPandasWithState fold per event_type (8 state buckets) fuses
+    the hourly-slot close (a slot completes when a later-slot row
+    arrives) with the seasonal forecast fold; state = the open slot's
+    partial sum + the init buffer or (l, b, 24-slot seasonal vector),
+    all exact int64.
     Run availableNow into an append memory sink and hash-matched
     against the SAME recursive-CTE replay as the batch twin
     (holt_winters_hourly) minus each key's FINAL hour — the append-mode
@@ -12227,10 +12228,10 @@ def hw_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.date_trunc("hour", "ts").alias("hour"),
                    F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
                    .cast("long").alias("y")))
-    out = holt_winters_stream(src, key_col="event_type", hour_col="hour",
-                              value_col="y", period=24)
     name = "hw_stream_" + _uuid.uuid4().hex[:10]
     with state_sized_partitions(spark, 8):
+        out = holt_winters_stream(src, key_col="event_type", hour_col="hour",
+                                  value_col="y", period=24)
         Source(out).to(memory_sink(name, output_mode="append"))
     return spark.table(name).select(
         "event_type", "hour", "y_micro",

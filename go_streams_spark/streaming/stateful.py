@@ -6,10 +6,26 @@ Structured Streaming does not ship (SURVEY §4.2):
   2. Count-OR-time Batch (flow/batch.go:86-112): emit a batch when the
      buffer reaches max_size OR the interval elapses, whichever first.
 
-Both build on ``applyInPandasWithState``: state is partitioned by key
-(Spark's per-key state store — RocksDB-backed on a real cluster, so
-state size scales horizontally), and each micro-batch processes a key's
-new rows as Arrow batches.
+All build on ``applyInPandasWithState`` (Spark's state store —
+RocksDB-backed on a real cluster, so state scales horizontally).
+
+State is kept per BUCKET, not per key, for the per-key folds
+(``running_fold_stream`` and through it ``global_fold_stream``,
+``token_bucket_stream``, ``holt_winters_stream``): a key's rows route to
+bucket ``pmod(xxhash64(keys), B)``, B = ``spark.sql.shuffle.partitions``
+when the frame is built, and one state group per bucket carries every
+key of the bucket — its state row holds B, the keys and each per-key
+state field as parallel arrays (``_bucketed_state``). pyspark's
+serializer pays a fixed cost per state group per micro-batch (one
+Arrow-to-pandas conversion, one state JSON, one concat), so this pays it
+at most B times per trigger instead of once per active key. A bucket's
+pandas frame holds one trigger's rows of its keys, so it is bounded by
+trigger size, never by stream volume; its state row grows with the
+number of keys in the bucket and is rewritten whenever the bucket sees
+rows. ``heavy_hitters_stream`` keys its sketches by the same bucket
+expression. ``count_or_time_batch_stream`` and ``cep_stream`` stay per
+key: they arm a timeout per key, and Spark's timeouts are per state
+group.
 
 Ordering contract: the reference is globally ordered (one goroutine);
 a distributed engine can only promise per-key order. Rows are sorted by
@@ -20,14 +36,197 @@ documented (SURVEY §7 "what's hard" #1).
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Any, Callable, Iterable
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import TaskContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import (ArrayType, DataType, IntegerType,
+                               IntegralType, StructField, StructType)
 
 from ..operators.aggregate import _tdiv
+
+
+def _bucket(cols: list[str], n: int) -> Column:
+    """The state-bucket expression: ``pmod(xxhash64(cols), n)``."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
+
+
+def _murmur3_int(v: int) -> int:
+    """Spark's ``hash()`` of an int column value (Murmur3 x86_32
+    ``hashInt``, seed 42), the hash its hash partitioning uses."""
+    m = 0xFFFFFFFF
+    k = (v & m) * 0xCC9E2D51 & m
+    k = ((k << 15) | (k >> 17)) * 0x1B873593 & m
+    h = 42 ^ k
+    h = (((h << 13) | (h >> 19)) & m) * 5 + 0xE6546B64 & m
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & m
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _slots(n: int) -> list[int]:
+    """For each partition p < n, the smallest int that Spark's hash
+    partitioning into n partitions sends to p. Grouping on slot[bucket]
+    puts bucket b in state partition b: one bucket per task, where
+    hashing the bucket numbers themselves would leave about a third of
+    the partitions empty and stack buckets in the others."""
+    slot: dict[int, int] = {}
+    v = 0
+    while len(slot) < n:
+        slot.setdefault(_murmur3_int(v) % n, v)
+        v += 1
+    return [slot[p] for p in range(n)]
+
+
+def _py(v):
+    """A state value as the plain Python object Spark's state encoder
+    takes (numpy scalars and arrays, pandas timestamps converted)."""
+    if isinstance(v, np.ndarray):
+        return v.tolist()
+    if isinstance(v, np.generic):
+        return v.item()
+    if isinstance(v, pd.Timestamp):
+        return v.to_pydatetime()
+    return v
+
+
+def _concat(pieces: list):
+    """One output column from every key's piece. A piece turns float64
+    where its key's rows hold a null in an integral column; pieces of
+    mixed dtypes join as objects, so one key's null does not round
+    another key's values through float64."""
+    if len(pieces) == 1:
+        return pieces[0]
+    if not isinstance(pieces[0], np.ndarray):
+        return list(chain.from_iterable(pieces))
+    if len({p.dtype for p in pieces}) > 1:
+        return np.concatenate([p.astype(object) for p in pieces])
+    return np.concatenate(pieces)
+
+
+def _bucketed_state(df: DataFrame, *, key_cols: list[str],
+                    order_cols: list[str], state_schema: str,
+                    step: Callable, output_schema: str,
+                    output_mode: str = "append") -> DataFrame:
+    """Per-key state carried in state buckets (module docstring).
+
+    Per micro-batch and bucket, the bucket's rows are stably sorted ONCE
+    by (key, *order_cols) — ties keep arrival order, nulls sort last —
+    and ``step(key, rows, state)`` runs for each key in the batch:
+
+    - ``key``: tuple of the key values, null as None (so null keys fold
+      as one key, like ``groupBy``);
+    - ``rows``: the key's rows, ``{column: ndarray}``;
+    - ``state``: the key's ``state_schema`` tuple, None for a new key.
+
+    It returns (new state tuple, output columns ``{name: list|ndarray}``
+    or None); the bucket emits one frame of every key's output columns
+    concatenated. The step sees each key's rows as a per-key group
+    would: pyspark hands pandas an integer column holding a null as
+    float64 (exact only to 2**53), so integral columns reach pandas
+    null-free beside a null flag, and only a key whose own rows hold a
+    null sees that column as float64 with NaN (key columns: as Python
+    ints and None).
+
+    Bucket b runs in state partition b (``_slots``). A restart that
+    builds the query under another ``spark.sql.shuffle.partitions``
+    than its checkpoint's state partition count would re-route keys to
+    other buckets and silently restart their state, so every bucket
+    call compares the bucket count with the state partition count the
+    stream runs with (Spark's internal
+    ``spark.sql.streaming.internal.stateStore.partitions``, which the
+    checkpoint fixes and every task receives) and with the count stored
+    in the bucket's state, and raises on a mismatch. So the query must
+    be started under the ``spark.sql.shuffle.partitions`` it was built
+    under.
+    """
+    nb = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    key_types = [df.schema[k].dataType for k in key_cols]
+    fields = DataType.fromDDL(state_schema).fields
+    bucket_state = StructType(
+        [StructField("buckets", IntegerType())]
+        + [StructField(f"key{i}", ArrayType(t)) for i, t in enumerate(key_types)]
+        + [StructField(f.name, ArrayType(f.dataType)) for f in fields])
+    nk = len(key_cols)
+    ints = {f.name: f.dataType for f in df.schema
+            if isinstance(f.dataType, IntegralType)}
+
+    def run(group, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        # the state partition count the stream runs with: the checkpoint
+        # fixes it, and Spark passes it to every task of a streaming batch
+        runs = TaskContext.get().getLocalProperty(
+            "spark.sql.streaming.internal.stateStore.partitions")
+        for written in (int(runs or nb), state.get[0] if state.exists else nb):
+            if written != nb:
+                raise RuntimeError(
+                    f"state bucket count mismatch: the checkpoint's state "
+                    f"was written with {written} buckets, this query was "
+                    f"built with {nb} (spark.sql.shuffle.partitions); build "
+                    f"it with spark.sql.shuffle.partitions={written} or "
+                    f"start from a new checkpoint")
+        store: dict = {}
+        if state.exists:
+            arrays = state.get[1:]
+            store = dict(zip(zip(*arrays[:nk]), zip(*arrays[nk:])))
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
+            return
+        rows = (pd.concat(chunks, ignore_index=True)
+                if len(chunks) > 1 else chunks[0])
+        nulls = []
+        for c in ints:
+            flag = f"__null_{c}"
+            if not rows[flag].any():
+                del rows[flag]
+            elif c in key_cols:
+                rows[c] = rows[c].astype(object).where(~rows.pop(flag), None)
+            else:
+                nulls.append(c)
+        rows["__key"] = rows.groupby(key_cols, sort=False,
+                                     dropna=False).ngroup()
+        order = [o for c in order_cols
+                 for o in ((f"__null_{c}", c) if c in nulls else (c,))]
+        rows = rows.sort_values(["__key", *order], kind="stable")
+        cols = {c: rows[c].to_numpy() for c in rows.columns}
+        flags = {c: cols.pop(f"__null_{c}") for c in nulls}
+        cuts = (np.flatnonzero(np.diff(cols["__key"])) + 1).tolist()
+        starts = [0, *cuts]
+        keys = zip(*([None if pd.isna(v) else v
+                      for v in rows[k].iloc[starts].tolist()]
+                     for k in key_cols))
+        out: dict = {}
+        for key, lo, hi in zip(keys, starts, [*cuts, len(rows)]):
+            part = {c: a[lo:hi] for c, a in cols.items()}
+            for c, flag in flags.items():
+                if flag[lo:hi].any():
+                    part[c] = np.where(flag[lo:hi], np.nan, part[c])
+            new, emitted = step(key, part, store.get(key))
+            store[key] = new
+            for c, v in (emitted or {}).items():
+                out.setdefault(c, []).append(v)
+        state.update((nb,
+                      *([_py(k[i]) for k in store] for i in range(nk)),
+                      *([_py(s[j]) for s in store.values()]
+                        for j in range(len(fields)))))
+        if out:
+            yield pd.DataFrame({c: _concat(p) for c, p in out.items()})
+
+    slot = F.element_at(F.array(*map(F.lit, _slots(nb))),
+                        _bucket(key_cols, nb) + 1).alias("__slot")
+    cols = [F.coalesce(c, F.lit(0).cast(ints[c])).alias(c) if c in ints
+            else c for c in df.columns]
+    flags = [F.col(c).isNull().alias(f"__null_{c}") for c in ints]
+    return (df.select(*cols, *flags, slot)
+            .groupBy("__slot")
+            .applyInPandasWithState(run, output_schema, bucket_state,
+                                    output_mode, GroupStateTimeout.NoTimeout))
 
 
 def running_fold_stream(df: DataFrame, *, key_cols: list[str], value_col: str,
@@ -39,37 +238,28 @@ def running_fold_stream(df: DataFrame, *, key_cols: list[str], value_col: str,
 
     Output rows = input rows (one per element, with ``acc`` column),
     matching the reference's per-element emission. The accumulator
-    persists in the state store across micro-batches.
+    (``state_schema``, one field) persists in the state store across
+    micro-batches, in the key's state bucket (``_bucketed_state``).
 
-    The group's Arrow chunks are buffered and sorted as ONE frame per
-    micro-batch (per-chunk sorting would fold interleaved ``order_col``
-    values out of order whenever a key's rows span >1 chunk); the
-    buffer is one micro-batch of one key — bounded by trigger size,
-    never total stream volume.
+    A key's rows of one micro-batch fold in ``order_col`` order as ONE
+    sorted run (per-chunk sorting would fold interleaved ``order_col``
+    values out of order whenever a key's rows span >1 Arrow chunk).
     """
 
     out_cols = [c.strip().split(" ")[0] for c in output_schema.split(",")]
 
-    def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        acc = state.get[0] if state.exists else init
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((acc,))
-            return
-        allrows = (pd.concat(chunks, ignore_index=True)
-                   if len(chunks) > 1 else chunks[0])
-        allrows = allrows.sort_values(order_col, kind="mergesort")
+    def step(key, rows, state):
+        acc = init if state is None else state[0]
         accs = []
-        for v in allrows[value_col]:
+        for v in rows[value_col]:
             acc = fold_fn(v, acc)
             accs.append(acc)
-        allrows["acc"] = accs
-        state.update((acc,))
-        yield allrows[out_cols]
+        return (acc,), {c: accs if c == "acc" else rows[c] for c in out_cols}
 
-    return (df.groupBy(*key_cols)
-            .applyInPandasWithState(fold, output_schema, state_schema,
-                                    output_mode, GroupStateTimeout.NoTimeout))
+    return _bucketed_state(df, key_cols=key_cols, order_cols=[order_col],
+                           state_schema=state_schema, step=step,
+                           output_schema=output_schema,
+                           output_mode=output_mode)
 
 
 def global_fold_stream(df: DataFrame, *, value_col: str, order_col: str,
@@ -184,7 +374,8 @@ def heavy_hitters_stream(df: DataFrame, *, item_col: str,
     """
     if capacity < 1 or num_buckets < 1:
         raise ValueError("capacity and num_buckets must be >= 1")
-    keyed = _hh_keyed(df, item_col, num_buckets)
+    keyed = df.select(_bucket([item_col], num_buckets).alias("__bucket"),
+                      F.col(item_col).cast("string").alias("__item"))
 
     def _update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.exists:
@@ -199,18 +390,12 @@ def heavy_hitters_stream(df: DataFrame, *, item_col: str,
                       [track[i][1] for i in items]))
         yield _hh_frame(key[0], track)
 
-    return (keyed.groupBy("__hh_bucket")
+    return (keyed.groupBy("__bucket")
             .applyInPandasWithState(
                 _update,
                 "bucket int, item string, cnt long, err long",
                 "items array<string>, counts array<long>, errors array<long>",
                 output_mode, GroupStateTimeout.NoTimeout))
-
-
-def _hh_keyed(df: DataFrame, item_col: str, num_buckets: int) -> DataFrame:
-    bucket = F.pmod(F.xxhash64(F.col(item_col)), F.lit(num_buckets)) \
-        .cast("int").alias("__hh_bucket")
-    return df.select(bucket, F.col(item_col).cast("string").alias("__item"))
 
 
 def _spacesaving_ingest(track: dict, pdfs, capacity: int) -> None:
@@ -390,15 +575,18 @@ def token_bucket_stream(df: DataFrame, *, rate_micro_per_sec: int,
                         tiebreak_col: str = "event_id",
                         output_mode: str = "append") -> DataFrame:
     """Streaming twin of ``operators.throttle.token_bucket_admit``:
-    the per-key bucket (integer micro-tokens, last-seen second)
-    persists in the state store across micro-batches, so the admission
-    decisions over a stream equal the batch fold over the same rows
-    (parity test-pinned). State is two longs per key — bounded forever.
+    the per-key bucket (integer micro-tokens, last-seen second, null
+    before the key's first event) persists in the state store across
+    micro-batches, so the admission decisions over a stream equal the
+    batch fold over the same rows (parity test-pinned). State is two
+    longs per key, kept in the key's state bucket (``_bucketed_state``).
 
-    Ordering contract: rows sort by (ts, tiebreak) WITHIN a micro-batch;
-    cross-batch order is the source's (the usual per-key micro-batch
-    contract, same as running_fold_stream). Emits every input row plus
-    (admitted, tokens_after_micro).
+    Ordering contract: a key's rows of one micro-batch sort by
+    (ts, tiebreak) as one run; cross-batch order is the source's (the
+    usual per-key micro-batch contract, same as running_fold_stream).
+    The bucket refills by whole elapsed seconds, capped at
+    ``burst_micro``, and a row is admitted while ``cost_micro`` tokens
+    remain. Emits every input row plus (admitted, tokens_after_micro).
     """
     if rate_micro_per_sec < 0 or burst_micro < 1 or cost_micro < 1:
         raise ValueError(
@@ -409,58 +597,31 @@ def token_bucket_stream(df: DataFrame, *, rate_micro_per_sec: int,
     out_schema = ", ".join(
         f"{n} {t}" for n, t in df.dtypes) + ", admitted boolean, " \
         "tokens_after_micro bigint"
-    state_schema = "tokens bigint, last_sec bigint"
 
-    def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        tokens, last = (state.get if state.exists
-                        else (burst_micro, None))
-        if last is not None and last < 0:
-            last = None  # sentinel for "no event seen yet"
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            out, tokens, last = _token_bucket_apply(
-                pdf, cols, ts_col=ts_col, tiebreak_col=tiebreak_col,
-                tokens=tokens, last=last,
-                rate_micro_per_sec=rate_micro_per_sec,
-                burst_micro=burst_micro, cost_micro=cost_micro)
-            yield out
-        state.update((tokens, -1 if last is None else last))
+    def step(key, rows, state):
+        tokens, last = (burst_micro, None) if state is None else state
+        secs = (rows[ts_col].astype("datetime64[ns]").view("int64")
+                // 1_000_000_000).tolist()
+        admitted, after = [], []
+        for s in secs:
+            if last is not None:
+                tokens = min(burst_micro,
+                             tokens + (s - last) * rate_micro_per_sec)
+            last = s
+            ok = tokens >= cost_micro
+            if ok:
+                tokens -= cost_micro
+            admitted.append(ok)
+            after.append(tokens)
+        return (tokens, last), {**{c: rows[c] for c in cols},
+                                "admitted": admitted,
+                                "tokens_after_micro": after}
 
-    return (df.groupBy(key_col)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    output_mode,
-                                    GroupStateTimeout.NoTimeout))
-
-
-def _token_bucket_apply(pdf, cols, *, ts_col: str, tiebreak_col: str,
-                        tokens: int, last, rate_micro_per_sec: int,
-                        burst_micro: int, cost_micro: int):
-    """One micro-batch of the integer token-bucket fold: rows sorted
-    by (ts, tiebreak), the bucket refilled by whole elapsed seconds and
-    capped at ``burst_micro``, a row admitted while ``cost_micro``
-    tokens remain. Returns (out_pdf, tokens, last)."""
-    pdf = pdf.sort_values([ts_col, tiebreak_col]).copy()
-    ser = pd.to_datetime(pdf[ts_col])
-    if getattr(ser.dt, "tz", None) is not None:
-        ser = ser.dt.tz_convert("UTC").dt.tz_localize(None)
-    secs = (ser.astype("datetime64[ns]").astype("int64")
-            // 1_000_000_000).tolist()
-    admitted, after = [], []
-    for s in secs:
-        if last is not None:
-            tokens = min(burst_micro,
-                         tokens + (s - last) * rate_micro_per_sec)
-        last = s
-        if tokens >= cost_micro:
-            tokens -= cost_micro
-            admitted.append(True)
-        else:
-            admitted.append(False)
-        after.append(tokens)
-    pdf["admitted"] = admitted
-    pdf["tokens_after_micro"] = after
-    return pdf[cols + ["admitted", "tokens_after_micro"]], tokens, last
+    return _bucketed_state(df, key_cols=[key_col],
+                           order_cols=[ts_col, tiebreak_col],
+                           state_schema="tokens bigint, last_sec bigint",
+                           step=step, output_schema=out_schema,
+                           output_mode=output_mode)
 
 
 def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
@@ -468,50 +629,41 @@ def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
     """Streaming Holt-Winters (additive) — the stateful twin of
     operators/aggregate.py::holt_winters_additive, fusing the hourly
     close and the forecast fold into ONE state pass: per key the state
-    carries the OPEN grid slot's partial sum plus the model
-    (init buffer, then l/b + the m-slot seasonal vector, all exact
-    int64); a slot closes when a later-slot row arrives, feeds the
-    fold, and (past the first-season init) emits its
+    carries the OPEN grid slot (its epoch-ns, null when none is open,
+    and partial sum) plus the model (init buffer, then l/b + the m-slot
+    seasonal vector, all exact int64), in the key's state bucket
+    (``_bucketed_state``); a slot closes when a later-slot row arrives,
+    feeds the fold, and (past the first-season init) emits its
     (level, trend, seasonal) row. The final open slot never closes —
     the append-mode final-window hold every streaming window op here
     documents — so batch parity is exactly "batch output minus each
     key's last hour", which is what the gate oracle replays.
 
-    Arrival-order contract: rows are processed in (hour) order within
-    a micro-batch — ALL of the group's Arrow chunks are concatenated
-    and sorted once before the fold (a per-chunk sort would let
+    Arrival-order contract: a key's rows of one micro-batch are folded
+    in (hour) order as ONE sorted run (a per-chunk sort would let
     interleaved hours across chunks close slots early and silently
-    corrupt the model; the buffered rows are one micro-batch of one
-    key's GRID rows, so the concat is bounded by hours-per-batch, not
-    event volume) — and batches must not regress across batches for a
-    key (the running_fold_stream contract; late slot rows after close
-    would need a watermark + retraction, which this integer fold
+    corrupt the model) — and batches must not regress across batches
+    for a key (the running_fold_stream contract; late slot rows after
+    close would need a watermark + retraction, which this integer fold
     deliberately does not attempt). State is m + O(1) longs per key;
-    the open slot is tracked by an explicit has_open flag, so pre-1970
-    (negative epoch-ns) hours are handled correctly rather than
-    colliding with a -1 sentinel.
+    pre-1970 (negative epoch-ns) hours are ordinary slot values.
     """
     if period < 2:
         raise ValueError("holt_winters_stream: period must be >= 2")
 
-    def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            has_open, cur_ns, hsum, buf, lv, tr, sea = state.get
-            buf, sea = list(buf), list(sea)
-            cur_ns = cur_ns if has_open else None
-        else:
-            cur_ns, hsum, buf, lv, tr, sea = None, 0, [], 0, 0, []
+    def step(key, rows, state):
+        cur, hsum, buf, lv, tr, sea = (
+            (None, 0, [], 0, 0, []) if state is None else state)
+        buf, sea = list(buf), list(sea)
         outs = []
 
         def close_slot(hour_ns: int, y: int):
-            nonlocal lv, tr
+            nonlocal lv, tr, sea
             if len(sea) < period:
                 buf.append(y)
                 if len(buf) == period:
-                    lv0 = _tdiv(sum(buf), period)
-                    lv = lv0
-                    tr = 0
-                    sea.extend(v - lv0 for v in buf)
+                    lv, tr = _tdiv(sum(buf), period), 0
+                    sea = [v - lv for v in buf]
                 return
             s_old = sea.pop(0)
             nl = _tdiv(y - s_old + 3 * (lv + tr), 4)
@@ -521,40 +673,30 @@ def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
             sea.append(ns)
             outs.append((hour_ns, y, lv, tr, ns))
 
-        # buffer the WHOLE group's micro-batch before folding: chunks
-        # arrive in arbitrary hour order relative to each other
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            allrows = (pd.concat(chunks, ignore_index=True)
-                       if len(chunks) > 1 else chunks[0])
-            allrows = allrows.sort_values(hour_col, kind="mergesort")
-            for h, y in zip(allrows[hour_col], allrows[value_col]):
-                h_ns = int(pd.Timestamp(h).value)
-                y = int(y)
-                if cur_ns is None:
-                    cur_ns, hsum = h_ns, y
-                elif h_ns == cur_ns:
-                    hsum += y
-                else:
-                    close_slot(cur_ns, hsum)
-                    cur_ns, hsum = h_ns, y
-        state.update((cur_ns is not None,
-                      cur_ns if cur_ns is not None else 0,
-                      hsum, buf, lv, tr, sea))
-        if outs:
-            yield pd.DataFrame({
-                key_col: [key[0]] * len(outs),
-                "hour": pd.to_datetime([o[0] for o in outs]),
-                "y_micro": pd.Series([o[1] for o in outs], dtype="int64"),
-                "level": pd.Series([o[2] for o in outs], dtype="int64"),
-                "trend": pd.Series([o[3] for o in outs], dtype="int64"),
-                "seasonal": pd.Series([o[4] for o in outs], dtype="int64")})
+        hours = rows[hour_col].astype("datetime64[ns]").view("int64")
+        for h, y in zip(hours.tolist(), rows[value_col].tolist()):
+            y = int(y)
+            if cur is None:
+                cur, hsum = h, y
+            elif h == cur:
+                hsum += y
+            else:
+                close_slot(cur, hsum)
+                cur, hsum = h, y
+        state = (cur, hsum, buf, lv, tr, sea)
+        if not outs:
+            return state, None
+        hour, *model = (list(c) for c in zip(*outs))
+        return state, {key_col: np.repeat(rows[key_col][:1], len(outs)),
+                       "hour": np.array(hour, dtype="datetime64[ns]"),
+                       **dict(zip(("y_micro", "level", "trend", "seasonal"),
+                                  model))}
 
     key_type = dict(df.dtypes)[key_col]
     out_schema = (f"{key_col} {key_type}, hour timestamp, y_micro long, "
                   "level long, trend long, seasonal long")
-    state_schema = ("has_open boolean, cur_ns long, hsum long, "
-                    "buf array<long>, l long, b long, sea array<long>")
-    return (df.groupBy(key_col)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return _bucketed_state(
+        df, key_cols=[key_col], order_cols=[hour_col],
+        state_schema=("cur_ns long, hsum long, buf array<long>, l long, "
+                      "b long, sea array<long>"),
+        step=step, output_schema=out_schema)

@@ -2,7 +2,7 @@
 plain-Python reference models — the upgrade over the reference's
 golden-only strategy (SURVEY §5)."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from go_streams_spark.api import Source
@@ -377,11 +377,15 @@ texts = st.lists(
 
 
 @given(ts=texts)
+@example(ts=["A\u0303\u00a9", "\u00c3\u00bc\u0301"])
 @settings(**SETTINGS)
 def test_normalize_text_idempotent(spark, ts):
     """normalize_text is a projection: applying it twice equals once
     (repairs produce no mojibake, NFC is idempotent, collapsed
-    whitespace has no runs left to collapse)."""
+    whitespace has no runs left to collapse). The explicit example
+    holds the two inputs that need NFC on both sides of the repair:
+    NFC composes A + U+0303 into the mojibake lead U+00C3, and the
+    repaired U+00FC composes with the following U+0301."""
     from go_streams_spark.functions.text import normalize_text
     df = spark.createDataFrame([(i, t) for i, t in enumerate(ts)],
                                "i int, t string")

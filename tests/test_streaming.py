@@ -100,6 +100,103 @@ def test_running_fold_stream(spark, stream_dir):
     assert [accs[(2, i)] for i in range(3)] == [10.0, 20.0, 30.0]
 
 
+def _fold_two_batches(spark, stream_dir, batches, buckets):
+    """Fold ``(k, seq, value)`` batches, one file per micro-batch, with
+    ``buckets`` state buckets; returns ({(k, seq): acc}, progress)."""
+    from go_streams_spark.streaming import state_sized_partitions
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, "k long, seq int, value double") \
+            .coalesce(1).write.mode("append" if i else "overwrite") \
+            .parquet(stream_dir)
+    src = file_stream_source(spark, stream_dir, fmt="parquet",
+                             schema="k long, seq int, value double",
+                             maxFilesPerTrigger=1)
+    name = _mem_name()
+    with state_sized_partitions(spark, buckets):
+        out = running_fold_stream(
+            src, key_cols=["k"], value_col="value", order_col="seq",
+            fold_fn=lambda v, acc: acc + v, init=0.0,
+            output_schema="k long, seq int, value double, acc double")
+        q = Source(out).to(memory_sink(name, output_mode="append"))
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"]] == [len(b) for b in batches]
+    return ({(r["k"], r["seq"]): r["acc"] for r in spark.table(name).collect()},
+            q.recentProgress)
+
+
+def test_running_fold_stream_null_key(spark, stream_dir):
+    """groupBy folds every null key as ONE key; so does the bucketed
+    state, though pyspark hands pandas a null in an integer column as
+    NaN (NaN != NaN) and turns the column float64. One bucket puts the
+    null key and the integer keys in the same pandas frame, the second
+    micro-batch must continue both accumulators from the stored state,
+    and a key above 2**53 must come out exact."""
+    big = 2 ** 60 + 1
+    first = [(None, 1, 1.0), (7, 1, 10.0), (None, 2, 2.0), (big, 1, 5.0)]
+    second = [(7, 2, 20.0), (None, 3, 4.0), (None, 4, 8.0), (big, 2, 1.0)]
+    accs, _ = _fold_two_batches(spark, stream_dir, [first, second], 1)
+    assert accs == {(None, 1): 1.0, (None, 2): 3.0, (None, 3): 7.0,
+                    (None, 4): 15.0, (7, 1): 10.0, (7, 2): 30.0,
+                    (big, 1): 5.0, (big, 2): 6.0}
+
+
+def test_running_fold_stream_nullable_long_column(spark, stream_dir):
+    """A nullable long pass-through column folds as in a per-key group:
+    a key whose own rows hold a null sees it as NaN (null out), and the
+    other keys' values in the same bucket stay exact above 2**53."""
+    from go_streams_spark.streaming import state_sized_partitions
+    big = 2 ** 60 + 1
+    schema = "k long, seq int, big long, value double"
+    spark.createDataFrame(
+        [(1, 1, big, 1.0), (2, 1, None, 2.0), (1, 2, big + 2, 3.0),
+         (2, 2, 7, 4.0)], schema).coalesce(1).write.mode("overwrite") \
+        .parquet(stream_dir)
+    src = file_stream_source(spark, stream_dir, fmt="parquet", schema=schema)
+    name = _mem_name()
+    with state_sized_partitions(spark, 1):
+        out = running_fold_stream(
+            src, key_cols=["k"], value_col="value", order_col="seq",
+            fold_fn=lambda v, acc: acc + v, init=0.0,
+            output_schema=f"{schema}, acc double")
+        Source(out).to(memory_sink(name, output_mode="append"))
+    got = sorted((r["k"], r["seq"], r["big"], r["acc"])
+                 for r in spark.table(name).collect())
+    assert got == [(1, 1, big, 1.0), (1, 2, big + 2, 4.0),
+                   (2, 1, None, 2.0), (2, 2, 7, 6.0)]
+
+
+@pytest.mark.parametrize("n", [1, 2, 8, 200])
+def test_state_slots_one_bucket_per_partition(spark, n):
+    """Slot b of n lands in partition b of Spark's n-way hash
+    partitioning, so each state bucket gets a task of its own."""
+    from go_streams_spark.streaming.stateful import _murmur3_int, _slots
+    slots = _slots(n)
+    got = spark.createDataFrame([(v,) for v in slots], "v int").select(
+        F.hash("v").alias("h"), F.pmod(F.hash("v"), F.lit(n)).alias("p"))
+    rows = got.collect()
+    assert [r["h"] for r in rows] == [_murmur3_int(v) for v in slots]
+    assert [r["p"] for r in rows] == list(range(n))
+
+
+@pytest.mark.parametrize("n_keys", [10, 5000])
+def test_running_fold_stream_bucket_state_two_sizes(spark, stream_dir, n_keys):
+    """At 10 and at 5,000 distinct keys, over two micro-batches, the
+    bucketed fold emits exactly the prefix sums, and the state store
+    holds one row per bucket (<= B), not one per key."""
+    buckets = 4
+    batches = [[(k, s, float(k % 7 + s)) for k in range(n_keys) for s in seqs]
+               for seqs in ((0, 1), (2,))]
+    accs, progress = _fold_two_batches(spark, stream_dir, batches, buckets)
+    want, run = {}, {}
+    for k, s, v in sorted(batches[0] + batches[1]):
+        run[k] = run.get(k, 0.0) + v
+        want[(k, s)] = run[k]
+    assert accs == want
+    rows = [p["stateOperators"][0]["numRowsTotal"] for p in progress
+            if p["stateOperators"]]
+    assert rows and max(rows) <= buckets
+
+
 def test_count_or_time_batch_stream(spark, stream_dir):
     rows = [(1, float(i)) for i in range(10)]
     spark.createDataFrame(rows, "k int, value double") \

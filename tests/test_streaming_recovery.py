@@ -323,3 +323,66 @@ def test_holt_winters_stream_checkpoint_recovery(spark, tmp_path):
                      r["trend"], r["seasonal"])
                     for r in batch.collect() if r["hour"].hour != 8)
     assert sorted(first + second) == expect
+
+
+def test_running_fold_stream_kill_restart(spark, tmp_path):
+    """Kill-restart the bucketed running fold: (1) a restart on the same
+    checkpoint and bucket count continues every key's sum from the
+    recovered state, with nothing re-emitted; (2) a restart built under
+    another ``spark.sql.shuffle.partitions`` would route keys to other
+    buckets and silently restart their sums, so it fails loudly and
+    names both bucket counts, (3) also when the count grew and the
+    batch touches one bucket only, which runs in the same state
+    partition as before and has no stored state."""
+    import pytest
+
+    from go_streams_spark.streaming import state_sized_partitions
+    from go_streams_spark.streaming.stateful import (_murmur3_int, _slots,
+                                                     running_fold_stream)
+
+    schema = "k long, seq int, value double"
+
+    def write(src, rows):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(src)
+
+    def run_once(run_dir, buckets):
+        out_dir = str(run_dir / "out")
+        with state_sized_partitions(spark, buckets):
+            out = running_fold_stream(
+                spark.readStream.schema(schema).parquet(str(run_dir / "src")),
+                key_cols=["k"], value_col="value", order_col="seq",
+                fold_fn=lambda v, acc: acc + v, init=0.0,
+                output_schema="k long, seq int, value double, acc double")
+            q = (out.writeStream.format("parquet").option("path", out_dir)
+                 .option("checkpointLocation", str(run_dir / "cp"))
+                 .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        return sorted((r["k"], r["seq"], r["acc"])
+                      for r in spark.read.parquet(out_dir).collect())
+
+    a, src = tmp_path / "a", str(tmp_path / "a" / "src")
+    keys = range(20)
+    write(src, [(k, 0, float(k)) for k in keys])
+    assert run_once(a, 4) == [(k, 0, float(k)) for k in keys]
+
+    write(src, [(k, 1, 1.0) for k in keys])
+    assert run_once(a, 4) == sorted([(k, 0, float(k)) for k in keys]
+                                    + [(k, 1, k + 1.0) for k in keys])
+
+    write(src, [(k, 2, 1.0) for k in keys])
+    with pytest.raises(Exception, match=r"written with 4 buckets.*built with 2"):
+        run_once(a, 2)
+
+    b, src = tmp_path / "b", str(tmp_path / "b" / "src")
+    write(src, [(k, 0, 1.0) for k in range(40)])
+    run_once(b, 4)
+    # bucket 2 of 8 runs in state partition 2 of the checkpoint's 4, and
+    # its group value is not the one bucket 2 of 4 stored its state under
+    s4, s8 = _slots(4), _slots(8)
+    assert _murmur3_int(s8[2]) % 4 == 2 and s8[2] not in s4
+    key = spark.range(40, 400).where(
+        F.pmod(F.xxhash64("id"), F.lit(8)) == 2).first()["id"]
+    write(src, [(key, 1, 1.0)])
+    with pytest.raises(Exception, match=r"written with 4 buckets.*built with 8"):
+        run_once(b, 8)

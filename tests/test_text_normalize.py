@@ -1,5 +1,5 @@
-"""Unicode/text normalization chain: mojibake repair -> NFC -> control
-strip -> whitespace collapse. Pins (a) exact agreement of the pandas NFC
+"""Unicode/text normalization chain: control strip -> NFC -> mojibake
+repair -> NFC -> whitespace collapse. Pins (a) exact agreement of the pandas NFC
 step with DuckDB's nfc_normalize (the oracle's normalizer), (b) chain
 semantics on hand-built edge cases vs an independent Python reference,
 (c) the no-shuffle plan shape of the JVM-only variant."""
@@ -16,11 +16,12 @@ from go_streams_spark.functions import text as T
 
 def _ref_chain(t: str) -> str:
     """Independent Python reference of the full cleaning chain."""
+    t = t.replace("\r\n", "\n")
+    t = re.sub("[\x00-\x08\x0b-\x1f\x7f\x80-\x9f]", "", t)
+    t = unicodedata.normalize("NFC", t)
     for bad, good in T.MOJIBAKE_TABLE:
         t = t.replace(bad, good)
     t = unicodedata.normalize("NFC", t)
-    t = t.replace("\r\n", "\n")
-    t = re.sub("[\x00-\x08\x0b-\x1f\x7f\x80-\x9f]", "", t)
     t = re.sub("[ \t]+", " ", t)
     t = re.sub(" ?\n ?", "\n", t)
     t = re.sub("\n{3,}", "\n\n", t)
@@ -42,6 +43,8 @@ EDGE_CASES = [
     " lead \n trail \n\n mixed  runs ",
     "â€™",                    # mojibake-only string
     "unicode: İstanbul Ａwide",     # NFKC-only stuff must survive
+    "A\u0303\u00a9",                        # NFC composes mojibake Ã©
+    "\u00c3\u00bc\u0301",                  # repaired ü composes with U+0301
 ]
 
 
@@ -55,16 +58,21 @@ def test_chain_matches_reference(spark):
 
 
 def test_nfc_matches_duckdb(spark):
-    """The pandas NFC step must agree byte-for-byte with DuckDB's
-    nfc_normalize — this equivalence is what makes the oracle exact."""
-    cases = ["Café", "Å", "Ａ", "ĲJ", "é́",
-             "½ already-NFC", "mixed Café and café"]
+    """The pandas NFC -> repair -> NFC step must agree byte-for-byte
+    with the same chain over DuckDB's nfc_normalize — this equivalence
+    is what makes the oracle exact."""
+    cases = ["Café", "Å", "Ａ", "ĲJ", "é́",
+             "½ already-NFC", "mixed Café and café",
+             "A\u0303\u00a9", "\u00c3\u00bc\u0301"]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(cases)],
                                "i int, t string")
     got = {r["i"]: r["c"] for r in
-           df.select("i", T.nfc("t").alias("c")).collect()}
+           df.select("i", T._nfc_repair_nfc(F.col("t")).alias("c")).collect()}
+    sql = "nfc_normalize(?)"
+    for bad, good in T.MOJIBAKE_TABLE:
+        sql = f"replace({sql}, '{bad}', '{good.replace(chr(39), chr(39) * 2)}')"
     for i, s in enumerate(cases):
-        db = duckdb.sql("select nfc_normalize(?)", params=[s]).fetchone()[0]
+        db = duckdb.sql(f"select nfc_normalize({sql})", params=[s]).fetchone()[0]
         assert got[i] == db, f"case {i}: {s!r}"
 
 
@@ -78,7 +86,8 @@ def test_jvm_only_variant_has_no_python_and_no_shuffle(spark):
     plan = explain_str(out, "formatted")
     assert "EvalPython" not in plan
     assert "Exchange" not in plan
-    # and the full chain keeps exactly one Python stage (the NFC hop);
+    # and the full chain keeps exactly one Python stage (the
+    # NFC -> repair -> NFC hop);
     # simple mode prints each physical node once
     plan_full = explain_str(
         df.select(T.normalize_text("t").alias("c")), "simple")
