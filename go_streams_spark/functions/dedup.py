@@ -9,16 +9,18 @@ Design for 100 TB:
     exploded into (band, band_key) buckets, and only same-bucket docs
     join — the candidate join is an equi-join Catalyst can shuffle-hash.
     Verification (exact Jaccard) runs only on candidates.
-  - SimHash packs a document into one 32-bit int; near-dup pairs are
-    candidates whose hamming distance <= k (self-equi-join on band
-    rotations would be the scale path; here candidates come from LSH or
-    small-N cross).
+  - SimHash packs a document into one 32- or 64-bit int; near-dup
+    pairs are pigeonhole band candidates whose hamming distance <= k.
+    Every banded candidate set (MinHash, SimHash, dHash, sign-LSH)
+    comes from one self equi-join, ``_band_pairs``.
 
 All hashing is md5-based so results are bit-identical to the DuckDB
 oracle SQL.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -144,6 +146,60 @@ def band_rows(mh_wide: DataFrame, *, id_col: str = "doc_id",
         F.posexplode(F.array(*keys)).alias("band", "band_key"))
 
 
+def _band_layout(nbits: int, nbands: int) -> list[tuple[int, int]]:
+    """(start_bit, size) of each contiguous pigeonhole band of an
+    ``nbits``-bit packed hash: two hashes within hamming distance
+    ``nbands - 1`` match exactly on at least one band. Shared by the
+    band-row explodes and the dense scan's in-batch band predicate
+    (``similarity._pair_scan``), so the candidate definitions cannot
+    drift."""
+    sizes = [nbits // nbands + (1 if i < nbits % nbands else 0)
+             for i in range(nbands)]
+    out, start = [], 0
+    for size in sizes:
+        out.append((start, size))
+        start += size
+    return out
+
+
+def _bit_bands(h: Column, nbits: int, nbands: int) -> Column:
+    """(band, band_key) posexplode of the ``_band_layout`` bands of the
+    packed hash ``h``: one shift+mask per band, pure codegen."""
+    # a 64-bit band is the whole signed long: mask -1, not 2^64 - 1
+    keys = [F.shiftright(h, start)
+            .bitwiseAND(F.lit((1 << size) - 1 if size < 64 else -1))
+            for start, size in _band_layout(nbits, nbands)]
+    return F.posexplode(F.array(*keys)).alias("band", "band_key")
+
+
+def _band_pairs(bands: DataFrame, *, id_col: str,
+                pair_cols: Sequence[Column] = ()) -> DataFrame:
+    """Distinct (id_a, id_b, *pair_cols) pairs, id_a < id_b, of the
+    ``bands`` rows — (id, band, band_key) plus any carried columns —
+    that share a (band, band_key) bucket: the banded self equi-join
+    behind every near-dup candidate set here (MinHash, SimHash, dHash,
+    sign-LSH). ``pair_cols`` are Columns over the carried columns of
+    the two sides, qualified ``a.`` and ``b.``.
+
+    MERGE, not broadcast and not shuffled-hash: band rows are a
+    corpus-scale intermediate (one row per band per doc) whose size
+    the stats undersell (the explode is invisible to estimates), so
+    un-hinted Catalyst would broadcast each side of the self-join, and
+    an SHJ build map of the band rows is the measured sf100 OOM
+    (SCALE.md §26). Sort-merge spills; AQE still splits skewed
+    buckets. The hint goes on once, before aliasing, so the two sides
+    stay one subtree and read one exchange (a ``ReusedExchange`` in
+    the final plan) — no pin needed.
+    """
+    bands = bands.hint("merge")
+    a, b = bands.alias("a"), bands.alias("b")
+    return (a.join(b, ["band", "band_key"])
+            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            .select(F.col(f"a.{id_col}").alias("id_a"),
+                    F.col(f"b.{id_col}").alias("id_b"), *pair_cols)
+            .distinct())
+
+
 def minhash_lsh_candidates(df: DataFrame, *, text_col: str = "text",
                            id_col: str = "doc_id", ngram: int = 3,
                            num_hashes: int = 12, rows_per_band: int = 3,
@@ -151,11 +207,9 @@ def minhash_lsh_candidates(df: DataFrame, *, text_col: str = "text",
                            with_sizes: bool = False) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >= 1 LSH bucket.
 
-    Plan shape: shingle rows -> signature rows -> band rows -> self
-    equi-join on (band, band_key) -> distinct pairs. The join is
-    key-bucketed, never all-pairs; distinct is one extra shuffle on the
-    pair. Boilerplate-heavy corpora skew some buckets — AQE skew-join
-    splits them at runtime.
+    Plan shape: shingle rows -> signature rows -> band rows -> the
+    banded pair core (``_band_pairs``: self equi-join on (band,
+    band_key), distinct pairs) — key-bucketed, never all-pairs.
 
     ``with_sizes=True`` adds ``ca``/``cb`` (each side's shingle-set
     size) to every pair: the size is aggregated in the SAME pass as
@@ -171,28 +225,9 @@ def minhash_lsh_candidates(df: DataFrame, *, text_col: str = "text",
         minhash_wide(shingles, id_col=id_col, num_hashes=num_hashes,
                      with_count=with_sizes),
         id_col=id_col, rows_per_band=rows_per_band)
-    # MERGE, not broadcast and not shuffled-hash: bands is a
-    # corpus-scale intermediate (num_bands rows per doc) whose size
-    # local parquet stats undersell (the explode/window expansion is
-    # invisible to estimates), so un-hinted Catalyst would broadcast
-    # EACH side of the self-join — five broadcast exchanges of the
-    # whole corpus at 100 TB. And an SHJ build map of the band rows is
-    # the measured sf100 OOM (stage-16 HashedRelation failure at 5M
-    # docs x 4 bands over 32 partitions, with the persisted shingle
-    # cache shrinking the unified execution pool — SCALE.md §26).
-    # Sort-merge spills; AQE still splits skewed buckets.
-    # hint applied once, BEFORE aliasing both sides: identical subtrees
-    # canonicalize to one ReusedExchange (a one-sided hint node broke
-    # that, recomputing the whole signature pipeline per side)
-    bands = bands.hint("merge")
-    a, b = bands.alias("a"), bands.alias("b")
     size_cols = ([F.col("a.c").alias("ca"), F.col("b.c").alias("cb")]
                  if with_sizes else [])
-    return (a.join(b, ["band", "band_key"])
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"), *size_cols)
-            .distinct())
+    return _band_pairs(bands, id_col=id_col, pair_cols=size_cols)
 
 
 def _pair_overlap(candidates: DataFrame, sh: DataFrame, *,
@@ -458,59 +493,33 @@ def simhash_band_rows(sim: DataFrame, *, id_col: str = "doc_id",
     bands; any pair within hamming distance ``max_hamming`` differs in at
     most ``max_hamming`` bands and therefore matches EXACTLY on at least
     one band (pigeonhole — guaranteed recall, unlike probabilistic LSH).
-    Band extraction is a shift+mask on the packed hash — pure codegen,
-    no arrays beyond the small posexplode.
+    Band extraction is a shift+mask on the packed hash (``_bit_bands``)
+    — pure codegen, no arrays beyond the small posexplode.
     """
-    nbands = max_hamming + 1
-    sizes = [bits // nbands + (1 if i < bits % nbands else 0)
-             for i in range(nbands)]
-    keys, start = [], 0
-    for size in sizes:
-        keys.append(F.shiftright(F.col("simhash"), start)
-                    .bitwiseAND(F.lit((1 << size) - 1)))
-        start += size
     return sim.select(F.col(id_col), F.col("simhash"),
-                      F.posexplode(F.array(*keys)).alias("band", "band_key"))
+                      _bit_bands(F.col("simhash"), bits, max_hamming + 1))
 
 
 def simhash_pairs(sim: DataFrame, *, id_col: str = "doc_id",
                   max_hamming: int = 3, bits: int = 32) -> DataFrame:
     """Near-dup pairs by simhash hamming distance <= max_hamming.
 
-    Banded pigeonhole LSH — the 100 TB shape: explode each doc into
-    ``max_hamming + 1`` (band, band_key) rows, self EQUI-join per band
-    (never all-pairs), verify exact hamming on the candidates, distinct
-    the pairs. Recall is exactly 1.0 by pigeonhole, so the output is
-    bit-identical to the O(N^2) formulation the oracle runs.
+    Banded pigeonhole LSH — the 100 TB shape: ``max_hamming + 1``
+    band rows per doc through the banded pair core (``_band_pairs``),
+    exact hamming verified on the candidates. Recall is exactly 1.0 by
+    pigeonhole, so the output is bit-identical to the O(N^2)
+    formulation the oracle runs.
 
     Candidate volume scales with sum of per-bucket squares, not N^2:
     with 32-bit hashes and k=6 the 4-5-bit bands are coarse (2^4..2^5
     buckets); at real corpus scale use a 64-bit simhash with k<=3 so
     bands carry 16 bits each — same plan, finer buckets.
     """
-    # persist the shared band subtree: the self-join's two branches do
-    # not canonicalize to one exchange, so without it the whole
-    # signature aggregation runs twice — same decision as
-    # ngram_jaccard_pairs; at 100 TB materialize the signatures to
-    # parquet once instead (the standard first stage). The shuffle_hash
-    # hint (never broadcast: bands is a corpus-scale intermediate, same
-    # rationale as minhash_lsh_candidates) is applied BEFORE persist so
-    # both join branches canonicalize to the cached plan — hinting one
-    # side afterwards made that side miss the cache and recompute the
-    # signatures.
-    bands = (simhash_band_rows(sim, id_col=id_col, bits=bits,
-                               max_hamming=max_hamming)
-             .hint("merge"))
-    bands = track_persist(bands)
-    a, b = bands.alias("a"), bands.alias("b")
+    bands = simhash_band_rows(sim, id_col=id_col, bits=bits,
+                              max_hamming=max_hamming)
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (a.join(b, ["band", "band_key"])
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                    ham.alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
-            .distinct())
+    return (_band_pairs(bands, id_col=id_col, pair_cols=[ham.alias("hamming")])
+            .where(F.col("hamming") <= max_hamming))
 
 
 def connected_components(pairs: DataFrame, *, src: str = "id_a", dst: str = "id_b",
@@ -1020,19 +1029,9 @@ def minhash_quality_report(df: DataFrame, *, text_col: str = "text",
         .groupBy(id_col)
         .agg(F.collect_list("s").alias("__ss"), *mh_aggs))
     mh_cols = [f"mh{i}" for i in range(num_hashes)]
-    keys = [F.md5(F.concat_ws("|", *mh_cols[b:b + rows_per_band]))
-            for b in range(0, num_hashes, rows_per_band)]
-    # merge hint before aliasing, as in minhash_lsh_candidates: band
-    # rows are fan-out-sized (never broadcast / SHJ-build at scale)
-    bands = feat.select(
-        F.col(id_col), F.posexplode(F.array(*keys)).alias("band", "band_key")
-    ).hint("merge")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (a.join(b, ["band", "band_key"])
-             .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
-             .distinct())
+    cands = _band_pairs(band_rows(feat.select(id_col, *mh_cols),
+                                  id_col=id_col, rows_per_band=rows_per_band),
+                        id_col=id_col)
     fa = feat.select(F.col(id_col).alias("id_a"),
                      F.col("__ss").alias("__ssa"),
                      *[F.col(c).alias(f"a_{c}") for c in mh_cols])
@@ -1229,17 +1228,11 @@ def dedup_method_eval(df: DataFrame, *, text_col: str = "text",
         .select("id_a", "id_b"))
     mh = minhash_lsh_candidates(df, text_col=text_col, id_col=id_col,
                                 ngram=3, shingles=sh)
-    bands = (simhash_band_rows(simhash(df, bits=64, text_col=text_col,
-                                       id_col=id_col),
-                               id_col=id_col, bits=64, max_hamming=3)
-             .hint("merge"))
-    bands = track_persist(bands)
-    a, b = bands.alias("a"), bands.alias("b")
-    shc = (a.join(b, ["band", "band_key"])
-           .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-           .select(F.col(f"a.{id_col}").alias("id_a"),
-                   F.col(f"b.{id_col}").alias("id_b"))
-           .distinct())
+    shc = _band_pairs(
+        simhash_band_rows(simhash(df, bits=64, text_col=text_col,
+                                  id_col=id_col),
+                          id_col=id_col, bits=64, max_hamming=3),
+        id_col=id_col)
     f2 = capped_winnow_fingerprints(df, text_col=text_col, id_col=id_col)
     fa = f2.select(F.col(id_col).alias("id_a"), "fp_hash")
     fb = f2.select(F.col(id_col).alias("id_b"), "fp_hash")

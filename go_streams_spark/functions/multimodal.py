@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import simhash_pairs
+
 MEDIA_SCHEMA = (
     "doc_id long, media binary, media_type string, byte_len long, content_hash string"
 )
@@ -555,33 +557,19 @@ def decode_bmp_dhash(df: DataFrame, *, image_col: str = "image",
 
 def dhash_neardup_pairs(feat: DataFrame, *, id_col: str = "doc_id",
                         max_hamming: int = 3) -> DataFrame:
-    """Image near-dup pairs from dHash bands: pigeonhole over the 4
-    16-bit bands (hamming <= 3 across 64 bits => at least one band is
-    EQUAL), candidates from per-band equi-joins, exact hamming =
-    sum of bit_count(xor) verified on candidates only — the SimHash
-    banding plan shape, never all-pairs."""
+    """Image near-dup pairs (id_a < id_b, hamming <= max_hamming) over
+    the 64-bit dHash: b0..b3 packed into one long (b_k in bits
+    16k..16k+15) and handed to ``dedup.simhash_pairs``, i.e. the
+    banded pair core (``dedup._band_pairs``) and its exact
+    bit_count(xor) verify. At max_hamming = 3 its four 16-bit
+    pigeonhole bands are exactly b0..b3."""
     if not 0 <= max_hamming <= 3:
         raise ValueError(f"pigeonhole over 4 bands covers hamming <= 3, "
                          f"got {max_hamming}")
-    bands = feat.select(
-        F.col(id_col), "b0", "b1", "b2", "b3",
-        F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("k", "bv"))
-    a = bands.select(F.col(id_col).alias("id_a"), F.col("b0").alias("a0"),
-                     F.col("b1").alias("a1"), F.col("b2").alias("a2"),
-                     F.col("b3").alias("a3"), "k", "bv")
-    b = bands.select(F.col(id_col).alias("id_b"), F.col("b0").alias("c0"),
-                     F.col("b1").alias("c1"), F.col("b2").alias("c2"),
-                     F.col("b3").alias("c3"), "k", "bv")
-    cand = (a.join(b.hint("shuffle_hash"), ["k", "bv"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "a0", "a1", "a2", "a3",
-                    "c0", "c1", "c2", "c3")
-            .distinct())
-    ham = sum(F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"c{i}")))
-              for i in range(4))
-    return (cand.select("id_a", "id_b",
-                        ham.cast("int").alias("hamming"))
-            .where(F.col("hamming") <= max_hamming))
+    packed = sum(F.shiftleft(F.col(f"b{k}").cast("long"), 16 * k)
+                 for k in range(4))
+    return simhash_pairs(feat.select(F.col(id_col), packed.alias("simhash")),
+                         id_col=id_col, max_hamming=max_hamming, bits=64)
 
 
 # ---------------------------------------------------------------------------

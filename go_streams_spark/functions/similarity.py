@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _band_layout, _band_pairs, _bit_bands
+
 
 #: Default integer-multiply-add budget for the EXACT-evaluator pass of
 #: the eval-audit family (recall / nDCG / quantization audits). An
@@ -416,24 +418,9 @@ def sign_band_rows(df: DataFrame, *, id_col: str = "vec_id",
     patterns differ in <= max_band_hamming bits share at least one exact
     band. Candidate generation for ``cosine_near_dup_lsh``.
     """
-    bucket = sign_bucket(vec_col, nbits)
-    keys = [F.shiftright(bucket, start).bitwiseAND(F.lit((1 << size) - 1))
-            for start, size in _band_layout(nbits, max_band_hamming + 1)]
     return df.select(F.col(id_col), as_double(vec_col).alias("v"),
-                     F.posexplode(F.array(*keys)).alias("band", "band_key"))
-
-
-def _band_layout(nbits: int, nbands: int) -> list[tuple[int, int]]:
-    """(start_bit, size) of each contiguous pigeonhole band — shared by
-    the band-row explode and the dense scan's in-batch band predicate
-    so the two candidate definitions cannot drift."""
-    sizes = [nbits // nbands + (1 if i < nbits % nbands else 0)
-             for i in range(nbands)]
-    out, start = [], 0
-    for size in sizes:
-        out.append((start, size))
-        start += size
-    return out
+                     _bit_bands(sign_bucket(vec_col, nbits), nbits,
+                                max_band_hamming + 1))
 
 
 def cosine_near_dup_lsh(df: DataFrame, *, id_col: str = "vec_id",
@@ -498,25 +485,15 @@ def _near_dup_lsh_bucketed(df: DataFrame, *, id_col: str, vec_col: str,
                            threshold: float, round_dp: int, nbits: int,
                            max_band_hamming: int) -> DataFrame:
     """Sparse-regime plan of ``cosine_near_dup_lsh``: band equi-join."""
-    # bands carry ONLY (id, band, band_key): the former shape attached
-    # both full vectors to every candidate row, so the pair-dedup
-    # shuffle moved ~1 KB per candidate (guide §2.3/§8 — shuffle keys,
-    # not payloads; at sf0.1's ~9M raw band collisions that was GBs of
-    # shuffled array payload and the source of 5-50 s run-to-run GC
-    # swings). Vectors re-attach AFTER the distinct, via two doc-grain
-    # joins — the id-pair dedup now moves 16 bytes per candidate.
-    bands = (sign_band_rows(df, id_col=id_col, vec_col=vec_col,
-                            nbits=nbits, max_band_hamming=max_band_hamming)
-             .select(F.col(id_col), "band", "band_key"))
-    # merge, same rationale as minhash_lsh_candidates: fan-out-sized
-    # self-join side (nb band rows per vector) — spillable, never an
-    # un-spillable SHJ build map, never a corpus broadcast
-    a, b = bands.alias("a"), bands.hint("merge").alias("b")
-    cand = (a.join(b, ["band", "band_key"])
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
-            .distinct())
+    # candidates carry ids only: the vectors re-attach AFTER the
+    # distinct, via two doc-grain joins, so the pair-dedup shuffle
+    # moves 16 bytes per candidate, not both vectors (~1 KB; guide
+    # §2.3/§8 — shuffle keys, not payloads)
+    cand = _band_pairs(
+        sign_band_rows(df, id_col=id_col, vec_col=vec_col, nbits=nbits,
+                       max_band_hamming=max_band_hamming)
+        .select(F.col(id_col), "band", "band_key"),
+        id_col=id_col)
     # per-vector squared norm folded once on the doc-grain side (not
     # per candidate pair): same fold over the same doubles -> the
     # sqrt/division/round below is bit-identical to cosine(), at one

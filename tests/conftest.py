@@ -20,3 +20,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def final_plan(df) -> str:
+    """Tree string of an executed DataFrame's AQE final plan only (the
+    top-level string also prints the initial plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_streams_spark.functions import text as T, dedup as D, similarity as S, multimodal as M
+from conftest import final_plan
 
 
 @pytest.fixture(scope="module")
@@ -64,22 +65,33 @@ def test_sign_lsh_buckets_split_join(spark):
 
 def test_simhash_banded_pairs_match_all_pairs(spark, sf_dir):
     """Pigeonhole banding must be lossless: the banded equi-join finds
-    exactly the pairs the O(N^2) formulation finds, for several k."""
+    exactly the pairs the O(N^2) formulation finds, for several k — on
+    32-bit SimHash and on the four 16-bit dHash bands (hamming =
+    sum of bit_count(b_i xor c_i), an int)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
     sim = D.simhash(docs, bits=32).cache()
-    a = sim.selectExpr("doc_id id_a", "simhash h_a")
-    b = sim.selectExpr("doc_id id_b", "simhash h_b")
-    for k in (1, 3, 6):
+    feat = M.decode_bmp_dhash(M.synth_bmp(docs)).cache()
+    cases = [(k, sim, ["simhash"], D.simhash_pairs(sim, max_hamming=k))
+             for k in (1, 3, 6)]
+    cases += [(k, feat, [f"b{i}" for i in range(4)],
+               M.dhash_neardup_pairs(feat, max_hamming=k))
+              for k in range(4)]
+    for k, h, cols, banded in cases:
+        a = h.select(F.col("doc_id").alias("id_a"),
+                     *[F.col(c).alias(f"a_{c}") for c in cols])
+        b = h.select(F.col("doc_id").alias("id_b"),
+                     *[F.col(c).alias(f"b_{c}") for c in cols])
+        ham = sum(F.bit_count(F.col(f"a_{c}").bitwiseXOR(F.col(f"b_{c}")))
+                  for c in cols)
         naive = (a.join(b, F.col("id_a") < F.col("id_b"))
-                 .select("id_a", "id_b",
-                         F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-                         .alias("hamming"))
+                 .select("id_a", "id_b", ham.alias("hamming"))
                  .where(F.col("hamming") <= k))
-        banded = D.simhash_pairs(sim, max_hamming=k)
+        assert dict(banded.dtypes)["hamming"] == "int"
         expected = {(r["id_a"], r["id_b"], r["hamming"]) for r in naive.collect()}
         got = {(r["id_a"], r["id_b"], r["hamming"]) for r in banded.collect()}
-        assert got == expected, f"k={k}: banded != all-pairs"
+        assert got == expected, f"{cols[0]} k={k}: banded != all-pairs"
     sim.unpersist()
+    feat.unpersist()
 
 
 def test_block_knn_matches_brute_force(spark, sf_dir, monkeypatch):
@@ -2269,15 +2281,6 @@ def test_capped_winnow_fingerprints_cap_and_null_ids(spark):
     assert sorted(r["doc_id"] for r in got) == list(range(20))
 
 
-def _final_plan(df) -> str:
-    """Tree string of an executed DataFrame's AQE final plan only (the
-    top-level string also prints the initial plan)."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    return plan.toString()
-
-
 def test_winnowing_fingerprint_pipeline_runs_once(spark, sf_dir):
     """The doc-frequency cap and the pair join read one fp_hash shuffle
     of the fingerprints: the final plan holds ONE posexplode subtree,
@@ -2289,10 +2292,10 @@ def test_winnowing_fingerprint_pipeline_runs_once(spark, sf_dir):
 
     q = QUERIES["winnowing_overlap_pairs"](spark, sf_dir)
     q.collect()
-    assert _final_plan(q).count("Generate posexplode") == 1
+    assert final_plan(q).count("Generate posexplode") == 1
     h = capped_winnow_fingerprints(_t(spark, sf_dir, "documents"))
     h.collect()
-    plan = _final_plan(h)
+    plan = final_plan(h)
     assert plan.count("Generate posexplode") == 1
     assert "ReusedExchange" in plan
 
@@ -2899,17 +2902,12 @@ def test_tokenizer_query_job_budget(spark, sf_dir, query):
     they replaced ran 6 to 54 jobs per query."""
     from go_streams_spark.plans import release_tracked
     from go_streams_spark.queries import QUERIES
+    from perfbench.probe import StatusStore
 
-    sc = spark.sparkContext._jsc.sc()
-
-    def last_job_id():
-        sc.listenerBus().waitUntilEmpty()
-        jobs = sc.statusStore().jobsList(None)  # newest first
-        return jobs.apply(0).jobId() if jobs.size() else -1
-
-    before = last_job_id()
+    store = StatusStore(spark)
+    before = store.mark()
     rows = QUERIES[query](spark, sf_dir).collect()
-    jobs = last_job_id() - before
+    jobs = store.since(before)["jobs"]
     release_tracked()
     assert rows
     assert 1 <= jobs <= _TOKENIZER_JOB_BUDGETS[query], jobs

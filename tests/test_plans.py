@@ -8,6 +8,8 @@ from go_streams_spark.plans import (
 )
 from go_streams_spark.queries import QUERIES
 
+from conftest import final_plan
+
 
 def test_q1_filter_pushdown_and_pruning(spark, sf_dir):
     df = QUERIES["q1_pricing_summary"](spark, sf_dir)
@@ -69,8 +71,10 @@ def test_simhash_pairs_banded_equi_join(spark, sf_dir):
     """simhash near-pairs candidates must come from the pigeonhole
     band equi-join — never an all-pairs non-equi self-join (the O(N^2)
     plan VERDICT r1 flagged). Shuffle joins only: the band rows are a
-    corpus-scale intermediate."""
-    from go_streams_spark.plans import explain_str
+    corpus-scale intermediate. Both sides of the self-join read one
+    band exchange: the AQE final plan reuses it (ReusedExchange) and
+    pins nothing (no InMemoryRelation)."""
+    from go_streams_spark.plans import explain_str, release_tracked
     df = QUERIES["simhash_near_pairs"](spark, sf_dir)
     plan = explain_str(df, "simple")
     assert "CartesianProduct" not in plan
@@ -78,6 +82,11 @@ def test_simhash_pairs_banded_equi_join(spark, sf_dir):
     assert "band_key" in plan and ("ShuffledHashJoin" in plan
                                    or "SortMergeJoin" in plan)
     assert "BroadcastHashJoin" not in plan
+    df._jdf.queryExecution().toRdd().count()
+    final = final_plan(df)
+    release_tracked()
+    assert "ReusedExchange" in final
+    assert "InMemoryRelation" not in final
 
 
 def test_embedding_near_dup_no_nested_loop(spark, sf_dir):
@@ -262,13 +271,9 @@ def test_timed_runs_releases_pins_after_each_run(spark, sf_dir):
     from threads that do not carry the caller's job group."""
     from bench import timed_runs
     from go_streams_spark.plans import release_tracked
+    from perfbench.probe import StatusStore
     release_tracked()
-    jsc = spark.sparkContext._jsc.sc()
-
-    def newest_job_id():
-        jsc.listenerBus().waitUntilEmpty()
-        jobs = jsc.statusStore().jobsList(None)  # newest first
-        return jobs.apply(0).jobId() if jobs.size() else -1
+    store = StatusStore(spark)
 
     def persisted_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
@@ -277,12 +282,12 @@ def test_timed_runs_releases_pins_after_each_run(spark, sf_dir):
     marks: list[int] = []
 
     def build():
-        marks.append(newest_job_id())
+        marks.append(store.mark()[0])
         return QUERIES["tfidf_top_terms"](spark, sf_dir)
 
     baseline = persisted_ids()
     times = timed_runs(build, 2)
-    marks.append(newest_job_id())
+    marks.append(store.mark()[0])
     assert len(times) == 2 and all(t > 0 for t in times)
     run1, run2 = marks[1] - marks[0], marks[2] - marks[1]
     assert run1 > 0
