@@ -53,6 +53,7 @@ BENCH_QUERIES = [
     "q17_small_quantity_revenue",
     "q18_large_orders",
     "q7_nation_volume",
+    "q8_market_share",
     "q9_product_profit",
     "q10_returned_items",
     "q13_customer_distribution",
@@ -90,7 +91,6 @@ BENCH_QUERIES = [
     "ann_filtered_recall_audit",
     "hard_negatives_by_label",
     "semdedup_prune",
-    "semdedup_fixed_codebook",
     "kcenter_coreset_select",
     "kcenter_cover_summary",
     "margin_mining_pairs",
@@ -360,7 +360,6 @@ EXCLUDED = {
     "batch_collect_flatten": "deliberately driver-bounded collect-and-flatten contract pin; benching would time the collect the engine forbids in hot paths",
     "bpe_encode_corpus": "encode stage benched inside bpe_fertility_by_lang (same Arrow encode path + one extra agg)",
     "cep_error_burst": "same sessionize-once + regex-per-session plan as benched cep_funnel_pattern",
-    "cube_status_flag": "strict subset of benched cube_status_flag_metrics (same CUBE, fewer measures)",
     "dedup_components": "same MinHash->connected-components pipeline benched via leakage_safe_split",
     "neardup_keep_best": "same MinHash->connected-components pipeline benched via leakage_safe_split",
     "embedding_near_dup": "exact O(N^2)-FLOP contract (quadratic by design); benched production sibling is embedding_near_dup_lsh",
@@ -370,7 +369,6 @@ EXCLUDED = {
     "pq_encode_codes": "sub-stage of benched ann_ivf_pq / pq_adc_topk (codes only, no search)",
     "simhash64_docs": "sub-stage of benched simhash64_near_pairs (hashes only, no band join)",
     "simhash_near_pairs": "32-bit twin of benched simhash64_near_pairs, but 5.6x its cost: 13.8 s warm at sf0.1 on 4 cores against 2.5 s, because its 7 pigeonhole bands of 4-5 bits give 30.3M candidate pairs before distinct (2.4x the 12.5M pairs among 5,000 docs)",
-    "q8_market_share": "DataFrame twin of benched sql_surface_market_share (identical plan via SQL API)",
     "text_redact_pii": "same regex-scrub plan class as benched pii_scrub_docs",
     "multimodal_meta": "binary-plumbing pin with deterministic fake codec; real-codec twin multimodal_features_real_bmp is benched",
     "multimodal_features": "binary-plumbing pin with deterministic fake codec; real-codec twin multimodal_features_real_bmp is benched",

@@ -716,7 +716,7 @@ def block_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embeddin
 def _ivf_codebook_mat(base: DataFrame, id_col: str, nlist: int | str,
                       codebook) -> "np.ndarray":
     """IVF codebook as a driver-resident (nlist x d) matrix: the caller's
-    trained codebook if given (e.g. train_codebook()), else the
+    trained codebook if given (e.g. train_codebook_exact()), else the
     deterministic lowest-id subset (``nlist="auto"``: ``auto_nlist`` of
     the corpus count) — bounded index metadata, the one collect every
     IVF system performs. An empty codebook fails here, loudly, instead
@@ -767,6 +767,42 @@ def _ivf_routes(base: DataFrame, c_mat, *, id_col: str, nprobe: int,
     return base.mapInPandas(_route, schema=f"{id_col} long, cid long, crn int")
 
 
+def _ivf_probe_pairs(routed: DataFrame, base: DataFrame, members: DataFrame,
+                     *, id_col: str, cell) -> DataFrame:
+    """The IVF probe skeleton both IVF searches share: crn=1 routes
+    join ``members`` (id plus the member columns ``cell`` reads) into
+    the inverted lists, every route joins ``base``'s raw ``v`` as the
+    probe vector ``va``, and probes COGROUP lists on the list id.
+    ``cell(probe_pdf, member_pdf)`` returns the (probes x members) sims
+    matrix of one list; self-pairs are dropped. A pair can surface via
+    several probed lists with the same sim, so the max per pair is the
+    one returned: (id_a, id_b, sim)."""
+    import numpy as np
+
+    member_cols = [c for c in members.columns if c != id_col]
+    lists = (routed.where(F.col("crn") == 1).drop("crn")
+             .join(members, id_col)
+             .select(F.col("cid").alias("cid_m"), F.col(id_col).alias("id_b"),
+                     *member_cols))
+    probes = (routed.drop("crn")
+              .join(base, id_col)
+              .select("cid", F.col(id_col).alias("id_a"), F.col("v").alias("va")))
+
+    def _list_pairs(key, probe_pdf, member_pdf):
+        if probe_pdf.empty or member_pdf.empty:
+            return _pairs()
+        sims = cell(probe_pdf, member_pdf)
+        ia = probe_pdf["id_a"].to_numpy(dtype=np.int64)
+        ib = member_pdf["id_b"].to_numpy(dtype=np.int64)
+        a_idx, b_idx = np.nonzero(ia[:, None] != ib[None, :])
+        return _pairs(ia[a_idx], ib[b_idx], sims[a_idx, b_idx])
+
+    pairs = (probes.groupBy("cid").cogroup(lists.groupBy("cid_m"))
+             .applyInPandas(_list_pairs,
+                            schema="id_a long, id_b long, sim double"))
+    return pairs.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim"))
+
+
 def auto_nlist(n: int) -> int:
     """Data-adaptive IVF list count: the classic nlist ~ 4*sqrt(N) rule
     (FAISS guideline). With nlist FIXED, inverted-list length grows
@@ -813,196 +849,16 @@ def ivf_knn(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
     c_mat = _ivf_codebook_mat(base, id_col, nlist, codebook)
     routed = _ivf_routes(base, c_mat, id_col=id_col, nprobe=nprobe,
                          round_dp=round_dp)
-    members = (routed.where(F.col("crn") == 1).drop("crn")
-               .join(base, id_col)
-               .select(F.col("cid").alias("cid_m"), F.col(id_col).alias("id_b"),
-                       F.col("v").alias("vb")))
-    probes = (routed.drop("crn")
-              .join(base, id_col)
-              .select("cid", F.col(id_col).alias("id_a"), F.col("v").alias("va")))
 
-    def _rerank(key, probe_pdf, member_pdf):
-        if probe_pdf.empty or member_pdf.empty:
-            return _pairs()
-        sims = _np_cosine(np.array(list(probe_pdf["va"]), dtype=np.float64),
+    def _cell(probe_pdf, member_pdf):
+        return _np_cosine(np.array(list(probe_pdf["va"]), dtype=np.float64),
                           np.array(list(member_pdf["vb"]), dtype=np.float64),
                           round_dp)
-        ia = probe_pdf["id_a"].to_numpy(dtype=np.int64)
-        ib = member_pdf["id_b"].to_numpy(dtype=np.int64)
-        a_idx, b_idx = np.nonzero(ia[:, None] != ib[None, :])
-        return _pairs(ia[a_idx], ib[b_idx], sims[a_idx, b_idx])
 
-    pairs = (probes.groupBy("cid").cogroup(members.groupBy("cid_m"))
-             .applyInPandas(_rerank, schema="id_a long, id_b long, sim double"))
-    # a pair can surface via several probed lists with the same sim
-    return _top_k(pairs.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim")),
+    members = base.select(id_col, F.col("v").alias("vb"))
+    return _top_k(_ivf_probe_pairs(routed, base, members, id_col=id_col,
+                                   cell=_cell),
                   id_col=id_col, k=k)
-
-
-def train_codebook(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
-                   k: int = 16, iterations: int = 5) -> "np.ndarray":
-    """Lloyd's k-means codebook for IVF, distributed and deterministic.
-
-    Init = the k lowest-id vectors (reproducible). Each iteration:
-      1. one vectorized mapInPandas pass assigns every vector to its
-         nearest (cosine) centroid — the codebook rides in the closure
-         (k x d floats, driver-resident index metadata);
-      2. new centroids = per-cluster mean via posexplode(dim) + hash agg
-         (one shuffle of (cluster, dim, value) rows with map-side
-         partials — never collects vectors to the driver; only the k x d
-         means come back.
-    Empty clusters keep their previous centroid. Returns the (k x d)
-    numpy codebook to pass to ``ivf_knn(codebook=...)``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
-    init = sorted(base.where(F.col(id_col) < k).collect(), key=lambda r: r[0])
-    codebook = np.array([r["v"] for r in init], dtype=np.float64)
-
-    for _ in range(iterations):
-        cb_n = codebook / np.linalg.norm(codebook, axis=1, keepdims=True)
-
-        def _assign(batches, cb_n=cb_n):
-            for pdf in batches:
-                q = np.array(list(pdf["v"]), dtype=np.float64)
-                qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-                cid = np.argmax(qn @ cb_n.T, axis=1)
-                yield pd.DataFrame({"cid": cid.astype("int64"), "v": pdf["v"]})
-
-        assigned = base.mapInPandas(_assign, schema="cid long, v array<double>")
-        means = (assigned
-                 .select("cid", F.posexplode("v").alias("dim", "x"))
-                 .groupBy("cid", "dim").agg(F.avg("x").alias("m"))
-                 .collect())
-        new = codebook.copy()  # empty clusters keep previous centroid
-        for r in means:
-            new[r["cid"], r["dim"]] = r["m"]
-        codebook = new
-    return codebook
-
-
-def assign_clusters(df: DataFrame, codebook, *, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    round_dp: int | None = None) -> DataFrame:
-    """Nearest-centroid (cosine) cluster assignment in ONE vectorized
-    mapInPandas pass — the codebook rides in the closure (k x d floats,
-    driver-resident index metadata, same decision as a broadcast join).
-    Returns (id, cid, v) with v the double-cast vector.
-
-    ``round_dp``: round sims before the argmax with lowest-cid
-    tie-break (the ivf_knn routing convention) — makes the assignment
-    reproducible by a SQL oracle; None = raw argmax."""
-    import numpy as np
-    import pandas as pd
-
-    cb = np.asarray(codebook, dtype=np.float64)
-    # zero-norm guard: a zero vector/centroid must yield 0 sims (and a
-    # deterministic lowest-cid assignment), never NaN rows whose
-    # ordering is engine-dependent
-    cb_norm = np.linalg.norm(cb, axis=1, keepdims=True)
-    cb_n = cb / np.where(cb_norm == 0, 1.0, cb_norm)
-    c_ids = np.arange(len(cb), dtype=np.int64)
-
-    def _assign(batches):
-        for pdf in batches:
-            q = np.array(list(pdf["v"]), dtype=np.float64)
-            q_norm = np.linalg.norm(q, axis=1, keepdims=True)
-            qn = q / np.where(q_norm == 0, 1.0, q_norm)
-            sims = qn @ cb_n.T
-            if round_dp is not None:
-                sims = np.round(sims, round_dp)
-                cid = np.array([np.lexsort((c_ids, -row))[0] for row in sims])
-            else:
-                cid = np.argmax(sims, axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "cid": cid.astype("int64"), "v": pdf["v"]})
-
-    base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
-    return base.mapInPandas(_assign,
-                            schema=f"{id_col} long, cid long, v array<double>")
-
-
-def semdedup_pairs(df: DataFrame, *, id_col: str = "vec_id",
-                   vec_col: str = "embedding", threshold: float = 0.95,
-                   nlist: int = 16, iterations: int = 3,
-                   codebook=None, round_dp: int = 6,
-                   assign_round_dp: int | None = None,
-                   assigned: DataFrame | None = None) -> DataFrame:
-    """SemDeDup candidate pairs (Abbas et al. 2023, arXiv:2303.09540):
-    k-means the embedding space, then compare pairs ONLY within a
-    cluster — semantic duplicates land in the same centroid cell, so
-    the O(N²) pair scan shrinks to sum-of-cluster-sizes² without any
-    text overlap requirement (catches paraphrases MinHash misses).
-
-    Scale shape: codebook via ``train_codebook`` (distributed Lloyd's,
-    k x d driver metadata), one vectorized assignment pass, then a
-    per-cluster applyInPandas BLAS matmul — one shuffle keyed on cid.
-    Cluster population is the scale knob exactly as in IVF: grow
-    ``nlist`` with N to bound per-cell pair volume; skew in cell sizes
-    is data skew, the same mitigation (finer codebook) as hot keys.
-    Emits (id_a < id_b, cid, sim) with rounded sims.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if assigned is None:
-        if codebook is None:
-            codebook = train_codebook(df, id_col=id_col, vec_col=vec_col,
-                                      k=nlist, iterations=iterations)
-        assigned = assign_clusters(df, codebook, id_col=id_col,
-                                   vec_col=vec_col,
-                                   round_dp=assign_round_dp)
-
-    def _scan(key, pdf):
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy()
-        v = np.array(list(pdf["v"]), dtype=np.float64)
-        if len(ids) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cid": [],
-                                 "sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64",
-                 "cid": "int64", "sim": "float64"})
-        v_norm = np.linalg.norm(v, axis=1, keepdims=True)
-        vn = v / np.where(v_norm == 0, 1.0, v_norm)  # zero-norm guard
-        s = np.round(vn @ vn.T, round_dp)
-        ia, ib = np.triu_indices(len(ids), 1)
-        keep = s[ia, ib] >= threshold
-        return pd.DataFrame({"id_a": ids[ia[keep]], "id_b": ids[ib[keep]],
-                             "cid": key[0], "sim": s[ia, ib][keep]})
-
-    return (assigned.groupBy("cid")
-            .applyInPandas(_scan,
-                           schema="id_a long, id_b long, cid long, sim double"))
-
-
-def semdedup_prune(df: DataFrame, *, id_col: str = "vec_id",
-                   vec_col: str = "embedding", threshold: float = 0.95,
-                   nlist: int = 16, iterations: int = 3,
-                   codebook=None, assign_round_dp: int | None = None) -> DataFrame:
-    """SemDeDup keep/drop verdict per vector: a vector is DROPPED when a
-    lower-id vector in its cluster is cosine-similar above ``threshold``
-    (the paper's keep-one-representative rule made deterministic by id
-    order). Returns (id, cid, kept boolean) — filter ``kept`` to get the
-    pruned corpus; one extra left-anti-shaped join over the pair set."""
-    if codebook is None:
-        codebook = train_codebook(df, id_col=id_col, vec_col=vec_col,
-                                  k=nlist, iterations=iterations)
-    # ONE assignment pass feeds both the verdict table and the pair
-    # scan (a second mapInPandas over the whole corpus would double the
-    # cost of the most expensive non-training stage)
-    assigned = assign_clusters(df, codebook, id_col=id_col, vec_col=vec_col,
-                               round_dp=assign_round_dp)
-    pairs = semdedup_pairs(df, id_col=id_col, vec_col=vec_col,
-                           threshold=threshold, codebook=codebook,
-                           assign_round_dp=assign_round_dp,
-                           assigned=assigned)
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return (assigned.select(id_col, "cid")
-            .join(dropped.withColumn("__d", F.lit(True)), id_col, "left")
-            .select(id_col, "cid",
-                    F.coalesce(~F.col("__d"), F.lit(True)).alias("kept")))
 
 
 def _trunc_div(s: int, n: int) -> int:
@@ -1034,8 +890,9 @@ def train_codebook_exact(df: DataFrame, *, id_col: str = "vec_id",
          range so norms never overflow at any N. Empty clusters keep
          their previous centroid.
     Init = the k lowest-id vectors (cid = rank in id order — no dense-id
-    requirement). Returns the k x d codebook as Python int lists;
-    driver-resident index metadata, same class as ``train_codebook``.
+    requirement). Returns the k x d codebook as Python int lists —
+    driver-resident index metadata; cosine routing is scale-invariant,
+    so it also serves as an ``ivf_knn(codebook=...)`` coarse codebook.
     Unrolled chained CTEs reproduce this exactly
     (``semdedup_exact_oracle_sql``)."""
     import numpy as np
@@ -1095,15 +952,25 @@ def semdedup_prune_exact(df: DataFrame, *, id_col: str = "vec_id",
                          threshold_micro: int = 400_000,
                          nlist: int = 8, iterations: int = 2,
                          scale: int = 1_000_000) -> DataFrame:
-    """SemDeDup keep/drop verdicts with a TRAINED codebook and a SQL
-    oracle: ``train_codebook_exact`` integer k-means, one exact
+    """SemDeDup keep/drop verdicts (Abbas et al. 2023,
+    arXiv:2303.09540): k-means the embedding space and compare pairs
+    ONLY within a cluster — semantic duplicates land in the same
+    centroid cell, so the O(N^2) pair scan shrinks to
+    sum-of-cluster-sizes^2 without any text overlap requirement.
+
+    Steps: ``train_codebook_exact`` integer k-means, one exact
     assignment pass, per-cluster quantized-cosine pair scan with an
-    integer micro-unit threshold, drop-vs-lower-id. Every arithmetic
-    step is exact in int64, so the whole pipeline — training included —
-    hash-matches the generated chained-CTE oracle
-    (``semdedup_exact_oracle_sql``). Same scale shape as
-    ``semdedup_prune``: codebook = driver metadata, one cid-keyed
-    shuffle for the pair scan, cluster population bounded by nlist."""
+    integer micro-unit threshold, and a vector is DROPPED when a
+    lower-id cluster-mate reaches ``threshold_micro`` (the paper's
+    keep-one-representative rule made deterministic by id order).
+    Every arithmetic step is exact in int64, so the whole pipeline —
+    training included — hash-matches the generated chained-CTE oracle
+    (``semdedup_exact_oracle_sql``). Returns (id, cid, kept).
+
+    Scale shape: codebook = k x d driver metadata, one cid-keyed
+    shuffle for the pair scan; ``nlist`` bounds per-cell pair volume
+    (skew in cell sizes is data skew — a finer codebook mitigates it,
+    as for hot keys)."""
     import numpy as np
     import pandas as pd
 
@@ -1491,7 +1358,7 @@ def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
     queries bring raw vectors and build their (m x ksub) LUT once per
     list. Deterministic codebooks (vec_id<nlist coarse, vec_id<ksub
     sub-codebooks) keep it oracle-reproducible; plug in
-    ``train_codebook``/``train_pq_codebooks`` output for production —
+    ``train_codebook_exact``/``train_pq_codebooks`` output for production —
     identical plan. ``rerank_shortlist``: when set, ADC produces that
     many candidates per query and exact full-precision cosine re-ranks
     them to the final top-k (the refine stage)."""
@@ -1506,33 +1373,16 @@ def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
     routed = _ivf_routes(base, c_mat, id_col=id_col, nprobe=nprobe,
                          round_dp=round_dp)
     enc = pq_encode(df, cb, id_col=id_col, vec_col=vec_col)
-    members = (routed.where(F.col("crn") == 1).drop("crn")
-               .join(enc, id_col)
-               .select(F.col("cid").alias("cid_m"),
-                       F.col(id_col).alias("id_b"),
-                       F.col("codes").alias("cb_codes"),
-                       F.col("recon_norm").alias("rnorm")))
-    probes = (routed.drop("crn")
-              .join(base, id_col)
-              .select("cid", F.col(id_col).alias("id_a"),
-                      F.col("v").alias("va")))
 
-    def _adc(key, probe_pdf, member_pdf):
-        if probe_pdf.empty or member_pdf.empty:
-            return _pairs()
-        sims = _np_adc_cosine(
+    def _adc(probe_pdf, member_pdf):
+        return _np_adc_cosine(
             np.array(list(probe_pdf["va"]), dtype=np.float64),
             np.array(list(member_pdf["cb_codes"]), dtype=np.int64),
             member_pdf["rnorm"].to_numpy(dtype=np.float64), cb, round_dp)
-        ia = probe_pdf["id_a"].to_numpy(dtype=np.int64)
-        ib = member_pdf["id_b"].to_numpy(dtype=np.int64)
-        a_idx, b_idx = np.nonzero(ia[:, None] != ib[None, :])
-        return _pairs(ia[a_idx], ib[b_idx], sims[a_idx, b_idx])
 
-    pairs = (probes.groupBy("cid").cogroup(members.groupBy("cid_m"))
-             .applyInPandas(_adc, schema="id_a long, id_b long, sim double"))
-    # a pair can surface via several probed lists with the same ADC sim
-    pairs = pairs.groupBy("id_a", "id_b").agg(F.max("sim").alias("sim"))
+    members = enc.select(id_col, F.col("codes").alias("cb_codes"),
+                         F.col("recon_norm").alias("rnorm"))
+    pairs = _ivf_probe_pairs(routed, base, members, id_col=id_col, cell=_adc)
     if rerank_shortlist is None:
         return _top_k(pairs, id_col=id_col, k=k)
     return _exact_rerank(_top_k(pairs, id_col=id_col, k=rerank_shortlist),
@@ -1595,105 +1445,12 @@ def embedding_second_moments(df: DataFrame, *, vec_col: str = "embedding",
             .agg(F.sum(F.col("s_part").cast("decimal(38,0)")).alias("s")))
 
 
-def mahalanobis_scores(df: DataFrame, *, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       ridge: float = 1e-3) -> DataFrame:
-    """Embedding-space outlier scores: squared Mahalanobis distance of
-    every vector from the corpus mean under the (ridge-regularized)
-    covariance — the whitening-based hygiene gate that catches
-    degenerate/corrupt embeddings a plain L2-norm check misses.
-    Basis-independent (eigenvector sign/order cannot change it), which
-    is what makes the numpy parity test in tests/ meaningful even
-    though the eigendecomposition itself is engine-specific.
-
-    Plan: exact integer second moments + per-dim sums reduce the
-    corpus to DxD + D + 1 numbers (two bounded aggregations); the
-    driver inverts the DxD covariance (numpy, D<=a few hundred) and
-    broadcasts the whitening matrix back into one vectorized
-    mapInPandas scoring pass. Returns (id, maha2) rounded to 6dp.
-    """
-    import numpy as np
-    import pandas as pd
-
-    mom = embedding_second_moments(df, vec_col=vec_col).collect()
-    d = max(r["i"] for r in mom) + 1
-    S = np.zeros((d, d))
-    for r in mom:
-        S[r["i"], r["j"]] = float(r["s"]) / 1e12   # micro-unit^2 -> units
-    sums = (df.select(F.posexplode(as_double(vec_col)).alias("i", "x"))
-            .groupBy("i").agg(F.sum("x").alias("sx"),
-                              F.count(F.lit(1)).alias("n")).collect())
-    n = sums[0]["n"]
-    mu = np.zeros(d)
-    for r in sums:
-        mu[r["i"]] = r["sx"] / n
-    cov = S / n - np.outer(mu, mu)
-    cov += ridge * np.eye(d)
-    w = np.linalg.inv(cov)   # symmetric PD after ridge
-    bw = df.sparkSession.sparkContext.broadcast((w, mu))
-
-    def _score(batches):
-        wm, m = bw.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64) - m
-            maha = np.einsum("nd,de,ne->n", x, wm, x)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "maha2": np.round(maha, 6)})
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, vec_col).mapInPandas(
-        _score, schema=f"{id_col} {id_type}, maha2 double")
-
-
-def _maha_exact_params(s_mat, colsum, n: int, *, ridge: float,
-                       scale: int, wscale: int):
-    """Shared driver-side derivation for the ENGINE-EXACT Mahalanobis
-    path: from the EXACT integer second moments ``s_mat`` (DxD int
-    micro-unit^2), integer column sums ``colsum`` (D), and row count
-    ``n``, derive (mu_q, w_q, den):
-      * mu_q[i] = half-up-rounded integer micro-unit mean
-        floor((2*colsum[i] + n) / (2n)) — exact integer arithmetic;
-      * w_q = the ridge-regularized covariance inverse quantized to
-        ``wscale`` units (floor(w*wscale + 0.5), symmetric) — the DxD
-        int literal a SQL oracle can carry;
-      * den = wscale * scale^2, the one divisor of the final score.
-    Both the engine and the oracle GENERATOR call this with the same
-    exact integers, so the derived literals are bit-identical even
-    though the inversion itself is float LAPACK."""
-    import numpy as np
-    d = len(colsum)
-    mu_q = [(2 * int(colsum[i]) + n) // (2 * n) for i in range(d)]
-    mu = np.array([int(c) for c in colsum], dtype=np.float64) / (n * scale)
-    cov = (np.array(s_mat, dtype=np.float64) / float(scale) ** 2) / n \
-        - np.outer(mu, mu)
-    cov += ridge * np.eye(d)
-    w = np.linalg.inv(cov)
-    w_q = np.floor(w * wscale + 0.5).astype(np.int64)
-    return mu_q, w_q, wscale * scale * scale
-
-
-def mahalanobis_scores_exact(df: DataFrame, *, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             ridge: float = 1e-3, scale: int = 1_000_000,
-                             wscale: int = 1_000_000) -> DataFrame:
-    """``mahalanobis_scores`` made ENGINE-EXACT so a generated SQL
-    oracle can hash-match it: scores are computed entirely on integers
-    — y = micro-unit vector minus the half-up integer mean, z = W_q @ y
-    with the quantized inverse, score = y . z (exact big-int), and ONE
-    trunc-div produces the 6-dp micro result. No float accumulation
-    anywhere, so BLAS order / einsum order cannot flip a hash.
-
-    Plan shape (same as the float sibling): exact integer second
-    moments + integer column sums reduce the corpus to DxD + D + 1
-    numbers; the driver derives (mu_q, W_q) via ``_maha_exact_params``
-    and broadcasts them into one vectorized scoring pass. The y.z fold
-    runs per row over D Python ints (products exceed int64; D*N bounded
-    ops, Arrow-batched)."""
-    import numpy as np
-    import pandas as pd
-
+def _exact_moments(df: DataFrame, *, vec_col: str, scale: int):
+    """The engine's exact-moments stage of the integer Mahalanobis and
+    PCA-whitening paths: two bounded aggregations reduce the corpus to
+    ``(s_mat, colsum, n)`` — the DxD micro-unit^2 second moments
+    (``embedding_second_moments``) and the D quantized column sums, as
+    Python ints, plus the row count."""
     mom = embedding_second_moments(df, vec_col=vec_col,
                                    quant=scale).collect()
     d = max(r["i"] for r in mom) + 1
@@ -1704,10 +1461,92 @@ def mahalanobis_scores_exact(df: DataFrame, *, id_col: str = "vec_id",
                        .alias("i", "qx"))
              .groupBy("i").agg(F.sum("qx").alias("sq"),
                                F.count(F.lit(1)).alias("n")).collect())
-    n = qsums[0]["n"]
     colsum = [0] * d
     for r in qsums:
         colsum[r["i"]] = int(r["sq"])
+    return s_mat, colsum, qsums[0]["n"]
+
+
+def _parquet_exact_moments(sf_dir: str, *, table: str, vec_col: str,
+                           scale: int):
+    """The oracle generators' exact-moments stage: the same
+    ``(s_mat, colsum, n)`` as ``_exact_moments``, rebuilt from the
+    parquet with pyarrow and numpy big-int (object) arithmetic. It
+    shares no code with the Spark accumulation on purpose — an oracle
+    that reused it could not catch a fault in it."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    arr = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"),
+                        columns=[vec_col])[vec_col]
+    x = np.array(arr.to_pylist(), dtype=np.float64)
+    q = np.floor(x * scale + 0.5).astype(np.int64).astype(object)
+    return (q.T @ q).tolist(), q.sum(axis=0).tolist(), len(q)
+
+
+def _exact_mean_cov(s_mat, colsum, n: int, *, scale: int):
+    """From exact moments: mu_q[i] = the half-up-rounded integer
+    micro-unit mean floor((2*colsum[i] + n) / (2n)) (exact integer
+    arithmetic), and the float covariance S/n - mu mu^T in units."""
+    import numpy as np
+    mu_q = [(2 * int(c) + n) // (2 * n) for c in colsum]
+    mu = np.array([int(c) for c in colsum], dtype=np.float64) / (n * scale)
+    cov = (np.array(s_mat, dtype=np.float64) / float(scale) ** 2) / n \
+        - np.outer(mu, mu)
+    return mu_q, cov
+
+
+def _maha_exact_params(s_mat, colsum, n: int, *, ridge: float,
+                       scale: int, wscale: int):
+    """Shared driver-side derivation for the ENGINE-EXACT Mahalanobis
+    path: from the EXACT integer second moments ``s_mat`` (DxD int
+    micro-unit^2), integer column sums ``colsum`` (D), and row count
+    ``n``, derive (mu_q, w_q, den):
+      * mu_q = the half-up integer micro-unit mean (``_exact_mean_cov``);
+      * w_q = the ridge-regularized covariance inverse quantized to
+        ``wscale`` units (floor(w*wscale + 0.5), symmetric) — the DxD
+        int literal a SQL oracle can carry;
+      * den = wscale * scale^2, the one divisor of the final score.
+    Both the engine and the oracle GENERATOR call this with the same
+    exact integers, so the derived literals are bit-identical even
+    though the inversion itself is float LAPACK."""
+    import numpy as np
+    mu_q, cov = _exact_mean_cov(s_mat, colsum, n, scale=scale)
+    cov += ridge * np.eye(len(colsum))
+    w = np.linalg.inv(cov)
+    w_q = np.floor(w * wscale + 0.5).astype(np.int64)
+    return mu_q, w_q, wscale * scale * scale
+
+
+def mahalanobis_scores_exact(df: DataFrame, *, id_col: str = "vec_id",
+                             vec_col: str = "embedding",
+                             ridge: float = 1e-3, scale: int = 1_000_000,
+                             wscale: int = 1_000_000) -> DataFrame:
+    """Embedding-space outlier scores: squared Mahalanobis distance of
+    every vector from the corpus mean under the (ridge-regularized)
+    covariance — the whitening-based hygiene gate that catches
+    degenerate/corrupt embeddings a plain L2-norm check misses.
+
+    ENGINE-EXACT, so a generated SQL oracle can hash-match it: scores
+    are computed entirely on integers
+    — y = micro-unit vector minus the half-up integer mean, z = W_q @ y
+    with the quantized inverse, score = y . z (exact big-int), and ONE
+    trunc-div produces the 6-dp micro result. No float accumulation
+    anywhere, so BLAS order / einsum order cannot flip a hash.
+
+    Plan shape: exact integer second moments + integer column sums
+    (``_exact_moments``) reduce the corpus to DxD + D + 1 numbers; the
+    driver derives (mu_q, W_q) via ``_maha_exact_params``
+    and broadcasts them into one vectorized scoring pass. The y.z fold
+    runs per row over D Python ints (products exceed int64; D*N bounded
+    ops, Arrow-batched)."""
+    import numpy as np
+    import pandas as pd
+
+    s_mat, colsum, n = _exact_moments(df, vec_col=vec_col, scale=scale)
+    d = len(colsum)
     mu_q, w_q, den = _maha_exact_params(s_mat, colsum, n, ridge=ridge,
                                         scale=scale, wscale=wscale)
     # int64 matmul overflow guard for z = W_q @ y (loud, not wrapped)
@@ -1761,21 +1600,10 @@ def mahalanobis_exact_oracle_sql(sf_dir: str, *, table: str = "embeddings",
     scoring bit for bit (HUGEINT y.z fold, one trunc-div). Registered
     as a PER-SF generator callable — resolved by ``oracle_for`` with
     the sweep/gate dir, since the literals are data-dependent."""
-    import os
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    arr = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"),
-                        columns=[vec_col])[vec_col]
-    x = np.array(arr.to_pylist(), dtype=np.float64)
-    q = np.floor(x * scale + 0.5).astype(np.int64)
-    n, d = q.shape
-    s_mat = (q.astype(object).T @ q.astype(object))  # exact big-int
-    colsum = q.astype(object).sum(axis=0)
-    mu_q, w_q, den = _maha_exact_params(s_mat.tolist(), colsum.tolist(),
-                                        n, ridge=ridge, scale=scale,
-                                        wscale=wscale)
+    s_mat, colsum, n = _parquet_exact_moments(sf_dir, table=table,
+                                              vec_col=vec_col, scale=scale)
+    mu_q, w_q, den = _maha_exact_params(s_mat, colsum, n, ridge=ridge,
+                                        scale=scale, wscale=wscale)
     mu_lit = "[" + ", ".join(str(v) for v in mu_q) + "]"
     w_lit = "[" + ",\n   ".join(
         "[" + ", ".join(str(v) for v in row) + "]"
@@ -1823,10 +1651,7 @@ def _pca_whiten_params(s_mat, colsum, n: int, *, out_dim: int,
     d = len(colsum)
     if not 1 <= out_dim <= d:
         raise ValueError(f"out_dim must be in [1, {d}], got {out_dim}")
-    mu_q = [(2 * int(c) + n) // (2 * n) for c in colsum]
-    mu = np.array([int(c) for c in colsum], dtype=np.float64) / (n * scale)
-    cov = (np.array(s_mat, dtype=np.float64) / float(scale) ** 2) / n \
-        - np.outer(mu, mu)
+    mu_q, cov = _exact_mean_cov(s_mat, colsum, n, scale=scale)
     evals, evecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(evals)[::-1][:out_dim]
     lam, v = evals[order], evecs[:, order]
@@ -1864,20 +1689,8 @@ def pca_whiten_embeddings(df: DataFrame, *, id_col: str = "vec_id",
     import numpy as np
     import pandas as pd
 
-    mom = embedding_second_moments(df, vec_col=vec_col,
-                                   quant=scale).collect()
-    d = max(r["i"] for r in mom) + 1
-    s_mat = [[0] * d for _ in range(d)]
-    for r in mom:
-        s_mat[r["i"]][r["j"]] = int(r["s"])
-    qsums = (df.select(F.posexplode(quantized_vec(vec_col, scale))
-                       .alias("i", "qx"))
-             .groupBy("i").agg(F.sum("qx").alias("sq"),
-                               F.count(F.lit(1)).alias("n")).collect())
-    n = qsums[0]["n"]
-    colsum = [0] * d
-    for r in qsums:
-        colsum[r["i"]] = int(r["sq"])
+    s_mat, colsum, n = _exact_moments(df, vec_col=vec_col, scale=scale)
+    d = len(colsum)
     mu_q, p_q, den = _pca_whiten_params(s_mat, colsum, n, out_dim=out_dim,
                                         ridge=ridge, scale=scale,
                                         pscale=pscale)
@@ -1935,18 +1748,8 @@ def pca_whiten_oracle_sql(sf_dir: str, *, table: str = "embeddings",
     replays the integer projection and the one float division bit for
     bit. Registered as a per-SF generator callable (the literals are
     data-dependent), like the Mahalanobis oracle."""
-    import os
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    arr = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"),
-                        columns=[vec_col])[vec_col]
-    x = np.array(arr.to_pylist(), dtype=np.float64)
-    q = np.floor(x * scale + 0.5).astype(np.int64)
-    n, d = q.shape
-    s_mat = (q.astype(object).T @ q.astype(object)).tolist()
-    colsum = q.astype(object).sum(axis=0).tolist()
+    s_mat, colsum, n = _parquet_exact_moments(sf_dir, table=table,
+                                              vec_col=vec_col, scale=scale)
     mu_q, p_q, den = _pca_whiten_params(s_mat, colsum, n, out_dim=out_dim,
                                         ridge=ridge, scale=scale,
                                         pscale=pscale)
@@ -2582,7 +2385,7 @@ FROM (VALUES
 # Greedy k-center coreset selection (round 9): pick k maximally-spread
 # representatives — Gonzalez's (1985) 2-approximation for the k-center
 # objective, the coreset selection rule of Sener & Savarese (ICLR 2018)
-# used for data pruning / active learning. Complements semdedup_prune
+# used for data pruning / active learning. Complements semdedup_prune_exact
 # (which REMOVES redundancy) by SELECTING a budget-sized cover.
 # ---------------------------------------------------------------------------
 
@@ -2615,7 +2418,7 @@ def kcenter_select(df: DataFrame, *, id_col: str = "vec_id",
     superseded round's cache is dropped as soon as the next
     materializes, so at most two (id, v, md) copies exist at once. At
     corpus scale run the greedy over cluster representatives
-    (``train_codebook`` centroids) or a deterministic sample — the
+    (``train_codebook_exact`` centroids) or a deterministic sample — the
     composition coreset pipelines actually ship.
     """
     from ..plans.caching import track_persist
@@ -2721,6 +2524,35 @@ def kcenter_assignments(df: DataFrame, *, id_col: str = "vec_id",
             .orderBy("center_round"))
 
 
+def _mutual_margin_pairs(fwd: DataFrame, bwd: DataFrame, *,
+                         threshold: float, scale: int) -> DataFrame:
+    """The ratio-margin + mutual-argmax tail both margin miners share
+    (the formula is ``margin_mining_pairs``'s): ``fwd`` holds each
+    source's top-k targets and ``bwd`` each target's top-k sources, as
+    (sid, tid, micro) rows with ``micro`` the integer micro-unit
+    cosine. Returns (src_id, tgt_id, sim, margin)."""
+    fstat = fwd.groupBy("sid").agg(F.sum("micro").alias("fsum"),
+                                   F.count(F.lit(1)).alias("fcnt"))
+    bstat = bwd.groupBy("tid").agg(F.sum("micro").alias("bsum"),
+                                   F.count(F.lit(1)).alias("bcnt"))
+    cand = fwd.unionByName(bwd).distinct()
+    num = (F.lit(2) * F.col("micro") * F.col("fcnt") * F.col("bcnt"))
+    den = (F.col("fsum") * F.col("bcnt") + F.col("bsum") * F.col("fcnt"))
+    m = (cand.join(fstat, "sid").join(bstat, "tid")
+         .select("sid", "tid", "micro",
+                 F.round(num.cast("double") / den, 4).alias("margin")))
+    wf = Window.partitionBy("sid").orderBy(F.col("margin").desc(), "tid")
+    wb = Window.partitionBy("tid").orderBy(F.col("margin").desc(), "sid")
+    return (m.withColumn("rf", F.row_number().over(wf))
+            .withColumn("rb", F.row_number().over(wb))
+            .where((F.col("rf") == 1) & (F.col("rb") == 1)
+                   & (F.col("margin") > threshold))
+            .select(F.col("sid").alias("src_id"),
+                    F.col("tid").alias("tgt_id"),
+                    (F.col("micro") / scale).alias("sim"),
+                    "margin"))
+
+
 def margin_mining_pairs(df: DataFrame, *, id_col: str = "vec_id",
                         vec_col: str = "embedding", k: int = 4,
                         threshold: float = 1.0,
@@ -2768,26 +2600,7 @@ def margin_mining_pairs(df: DataFrame, *, id_col: str = "vec_id",
     b = bwd.select(F.col("neighbor_id").alias("sid"),
                    F.col(id_col).alias("tid"),
                    micro.alias("micro"))
-    fstat = f.groupBy("sid").agg(F.sum("micro").alias("fsum"),
-                                 F.count(F.lit(1)).alias("fcnt"))
-    bstat = b.groupBy("tid").agg(F.sum("micro").alias("bsum"),
-                                 F.count(F.lit(1)).alias("bcnt"))
-    cand = f.unionByName(b).distinct()
-    num = (F.lit(2) * F.col("micro") * F.col("fcnt") * F.col("bcnt"))
-    den = (F.col("fsum") * F.col("bcnt") + F.col("bsum") * F.col("fcnt"))
-    m = (cand.join(fstat, "sid").join(bstat, "tid")
-         .select("sid", "tid", "micro",
-                 F.round(num.cast("double") / den, 4).alias("margin")))
-    wf = Window.partitionBy("sid").orderBy(F.col("margin").desc(), "tid")
-    wb = Window.partitionBy("tid").orderBy(F.col("margin").desc(), "sid")
-    return (m.withColumn("rf", F.row_number().over(wf))
-            .withColumn("rb", F.row_number().over(wb))
-            .where((F.col("rf") == 1) & (F.col("rb") == 1)
-                   & (F.col("margin") > threshold))
-            .select(F.col("sid").alias("src_id"),
-                    F.col("tid").alias("tgt_id"),
-                    (F.col("micro") / scale).alias("sim"),
-                    "margin"))
+    return _mutual_margin_pairs(f, b, threshold=threshold, scale=scale)
 
 
 def margin_mining_pairs_ann(df: DataFrame, *, id_col: str = "vec_id",
@@ -2839,23 +2652,4 @@ def margin_mining_pairs_ann(df: DataFrame, *, id_col: str = "vec_id",
            .where(F.col("r") <= k).drop("r"))
     bwd = (ps.withColumn("r", F.row_number().over(wb0))
            .where(F.col("r") <= k).drop("r"))
-    fstat = fwd.groupBy("sid").agg(F.sum("micro").alias("fsum"),
-                                   F.count(F.lit(1)).alias("fcnt"))
-    bstat = bwd.groupBy("tid").agg(F.sum("micro").alias("bsum"),
-                                   F.count(F.lit(1)).alias("bcnt"))
-    cand = fwd.unionByName(bwd).distinct()
-    num = (F.lit(2) * F.col("micro") * F.col("fcnt") * F.col("bcnt"))
-    den = (F.col("fsum") * F.col("bcnt") + F.col("bsum") * F.col("fcnt"))
-    m = (cand.join(fstat, "sid").join(bstat, "tid")
-         .select("sid", "tid", "micro",
-                 F.round(num.cast("double") / den, 4).alias("margin")))
-    wf = Window.partitionBy("sid").orderBy(F.col("margin").desc(), "tid")
-    wb = Window.partitionBy("tid").orderBy(F.col("margin").desc(), "sid")
-    return (m.withColumn("rf", F.row_number().over(wf))
-            .withColumn("rb", F.row_number().over(wb))
-            .where((F.col("rf") == 1) & (F.col("rb") == 1)
-                   & (F.col("margin") > threshold))
-            .select(F.col("sid").alias("src_id"),
-                    F.col("tid").alias("tgt_id"),
-                    (F.col("micro") / scale).alias("sim"),
-                    "margin"))
+    return _mutual_margin_pairs(fwd, bwd, threshold=threshold, scale=scale)

@@ -4364,27 +4364,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.round("quality", 4).alias("quality"), "n_tokens"))
 
 
-@query("cube_status_flag", """
-SELECT coalesce(l_returnflag, 'ALL') AS flag,
-       coalesce(l_linestatus, 'ALL') AS status,
-       count(*) AS cnt,
-       round(sum(l_quantity), 2) AS qty
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-""")
-def cube_status_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over two dimensions — all 4 grouping combinations in ONE
-    pass (single shuffle through an Expand node), complementing the
-    ROLLUP query; absent from the reference (SURVEY §2.5)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.cube("l_returnflag", "l_linestatus")
-            .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.round(F.sum("l_quantity"), 2).alias("qty"))
-            .select(F.coalesce("l_returnflag", F.lit("ALL")).alias("flag"),
-                    F.coalesce("l_linestatus", F.lit("ALL")).alias("status"),
-                    "cnt", "qty"))
-
-
 @query("range_frame_rolling_revenue", """
 SELECT o_custkey, o_orderkey, o_orderdate,
        round(sum(o_totalprice) OVER (
@@ -7344,9 +7323,8 @@ def embedding_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFram
     independently, rebuilds the same exact integer moments, and bakes
     (mu_q, W_q) into the SQL as literals — the DxD inversion is driver
     metadata, exactly like a codebook. Top-50 by (maha2 desc, vec_id)
-    for a bounded result. The float sibling ``mahalanobis_scores``
-    stays numpy-parity-pinned for callers without the quantized
-    contract."""
+    for a bounded result. Its numpy parity is pinned by
+    tests/test_functions.py::test_mahalanobis_matches_numpy_reference."""
     emb = _t(spark, sf_dir, "embeddings")
     scores = S.mahalanobis_scores_exact(emb)
     return (scores.orderBy(F.col("maha2").desc(), "vec_id").limit(50))
@@ -8823,9 +8801,8 @@ def semdedup_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd's reduces to exact int64 cluster sums + truncated division;
     2 unrolled iterations in the SQL) -> one exact assignment pass ->
     per-cluster quantized-cosine pair scan (micro threshold 400000 =
-    0.4) -> drop any vector similar to a lower-id cluster-mate. The
-    float-mean sibling ``S.semdedup_prune`` remains for codebooks
-    trained elsewhere; its NumPy parity is pinned by
+    0.4) -> drop any vector similar to a lower-id cluster-mate. Its
+    NumPy parity (integer Lloyd's included) is pinned by
     tests/test_functions.py::test_semdedup_matches_numpy_reference."""
     emb = _t(spark, sf_dir, "embeddings")
     return S.semdedup_prune_exact(emb, threshold_micro=400_000,
@@ -8845,63 +8822,6 @@ def bpe_train_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pinned by
     tests/test_functions.py::test_bpe_train_matches_python_reference."""
     return T.bpe_train_merges(_t(spark, sf_dir, "documents"), rounds=8)
-
-
-@query("semdedup_fixed_codebook", """
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS cid, v AS cv FROM v WHERE vec_id < 8
-), csims AS (
-  SELECT v.vec_id, c.cid, v.v,
-         round(list_sum(list_transform(list_zip(v.v, c.cv), p -> p[1] * p[2]))
-               / (sqrt(list_sum(list_transform(v.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(c.cv, x -> x * x)))), 6) AS csim
-  FROM v CROSS JOIN c
-), assign AS (
-  SELECT vec_id, cid, v
-  FROM (SELECT vec_id, cid, v,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY csim DESC, cid) AS crn
-        FROM csims)
-  WHERE crn = 1
-), pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM assign a JOIN assign b USING (cid)
-  WHERE a.vec_id < b.vec_id
-    AND round(list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
-              / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-                 * sqrt(list_sum(list_transform(b.v, x -> x * x)))), 6) >= 0.4
-)
-SELECT vec_id, cid,
-       vec_id NOT IN (SELECT id_b FROM pairs) AS kept
-FROM assign
-""")
-def semdedup_fixed_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with a DETERMINISTIC codebook (the 8 lowest-id vectors,
-    the ivf_knn convention) so the full pipeline — rounded nearest-
-    centroid assignment with cid tie-break, within-cluster pair scan,
-    drop-vs-lower-id — is hash-checked against a DuckDB oracle. The
-    k-means sibling `semdedup_prune` is the production path; this entry
-    pins the execution machinery end to end."""
-    emb = _t(spark, sf_dir, "embeddings")
-    rows = sorted(
-        emb.where(F.col("vec_id") < 8)
-        .select(S.as_double("embedding").alias("v"), "vec_id").collect(),
-        key=lambda r: r["vec_id"])
-    # Spark's cid is the codebook LIST INDEX while the oracle's cid is
-    # the raw vec_id — they only mean the same thing when vec_ids are
-    # exactly the dense 0..7. Regenerated testdata starting at 1 would
-    # silently shift every cid and fail the hash gate confusingly
-    # (ADVICE r3); fail loudly here instead.
-    got = [r["vec_id"] for r in rows]
-    if got != list(range(8)):
-        raise ValueError(
-            f"semdedup_fixed_codebook expects dense vec_ids 0..7 for the "
-            f"codebook (list index == vec_id == oracle cid); got {got}")
-    cb = [r["v"] for r in rows]
-    return S.semdedup_prune(emb, threshold=0.4, codebook=cb,
-                            assign_round_dp=6)
 
 
 def _kcenter_ctes(k: int) -> str:
@@ -9725,9 +9645,8 @@ FROM enc WHERE rn = 1 GROUP BY vec_id
 """)
 def pq_encode_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ codes for every vector: m=4 subspaces, 8 sub-centroids each
-    (the deterministic vec_id<8 codebook convention of ann_ivf_knn /
-    semdedup_fixed_codebook — at scale you'd plug in
-    train_pq_codebooks, same plan). Each 256-byte float vector becomes
+    (the deterministic vec_id<8 codebook convention of ann_ivf_knn —
+    at scale you'd plug in train_pq_codebooks, same plan). Each 256-byte float vector becomes
     4 bytes of codes + one reconstruction norm. Encoding is ONE
     vectorized mapInPandas pass, zero shuffle; argmin over rounded
     squared L2 with lowest-centroid tie-break is reproduced exactly by
