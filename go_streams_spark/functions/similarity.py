@@ -1342,7 +1342,6 @@ def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
                vec_col: str = "embedding", k: int = 3,
                nlist: int | str = "auto", nprobe: int = 4,
                m: int = 4, ksub: int = 8, round_dp: int = 6,
-               coarse_codebook=None, pq_codebooks=None,
                rerank_shortlist: int | None = None) -> DataFrame:
     """IVF-PQ — the FAISS IndexIVFPQ composition and the design a
     100 TB embedding corpus actually runs: IVF coarse routing bounds
@@ -1356,20 +1355,17 @@ def ivf_pq_knn(df: DataFrame, *, id_col: str = "vec_id",
     set); one encode pass (PQ codebooks in the closure); one cogroup
     on the list id where ONLY codes cross the wire for members —
     queries bring raw vectors and build their (m x ksub) LUT once per
-    list. Deterministic codebooks (vec_id<nlist coarse, vec_id<ksub
-    sub-codebooks) keep it oracle-reproducible; plug in
-    ``train_codebook_exact``/``train_pq_codebooks`` output for production —
-    identical plan. ``rerank_shortlist``: when set, ADC produces that
+    list. The codebooks are deterministic (vec_id<nlist coarse,
+    vec_id<ksub sub-codebooks), which keeps it oracle-reproducible.
+    ``rerank_shortlist``: when set, ADC produces that
     many candidates per query and exact full-precision cosine re-ranks
     them to the final top-k (the refine stage)."""
     import numpy as np
 
     base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
-    c_mat = _ivf_codebook_mat(base, id_col, nlist, coarse_codebook)
-    if pq_codebooks is None:
-        pq_codebooks = fixed_pq_codebooks(df, id_col=id_col,
-                                          vec_col=vec_col, m=m, ksub=ksub)
-    cb = np.asarray(pq_codebooks, dtype=np.float64)
+    c_mat = _ivf_codebook_mat(base, id_col, nlist, None)
+    cb = fixed_pq_codebooks(df, id_col=id_col, vec_col=vec_col, m=m,
+                            ksub=ksub)
     routed = _ivf_routes(base, c_mat, id_col=id_col, nprobe=nprobe,
                          round_dp=round_dp)
     enc = pq_encode(df, cb, id_col=id_col, vec_col=vec_col)
@@ -2152,7 +2148,7 @@ def mmr_topk(df: DataFrame, *, id_col: str = "vec_id",
 def ivf_balance_audit(df: DataFrame, *, id_col: str = "vec_id",
                       vec_col: str = "embedding", nlist: int | str = "auto",
                       nprobe: int = 4, top_lists: int = 8,
-                      round_dp: int = 6, codebook=None) -> DataFrame:
+                      round_dp: int = 6) -> DataFrame:
     """IVF index HEALTH report — the pre-flight before committing a
     corpus to an inverted-file layout: list-size spread, the FAISS
     imbalance factor (max/mean — >> 1 means straggler lists), the share
@@ -2173,7 +2169,7 @@ def ivf_balance_audit(df: DataFrame, *, id_col: str = "vec_id",
     base = df.select(F.col(id_col), as_double(vec_col).alias("v"))
     if nlist == "auto":
         nlist = auto_nlist(df.count())
-    c_mat = _ivf_codebook_mat(base, id_col, nlist, codebook)
+    c_mat = _ivf_codebook_mat(base, id_col, nlist, None)
     routed = _ivf_routes(base, c_mat, id_col=id_col, nprobe=nprobe,
                          round_dp=round_dp)
     from ..plans.caching import track_persist

@@ -14,16 +14,28 @@ window function over an explicit order column —
 With ``partition_by`` the scan distributes per key (the scalable form);
 without it Spark must range-sort but each partition still computes its
 frame locally. For non-algebraic Python accumulators use
-``running_fold_py`` (applyInPandas, per-key sequential).
+``running_fold_py`` (per-key sequential).
+
+Sequential per-key folds share ONE core, ``_fold_keys``: one
+``step(key, rows, state)`` per key's (key, order)-sorted run. It has a
+batch driver, ``_keyed_fold`` (one ``mapInPandas`` pass that carries
+only the last key's state across Arrow batches), and a streaming one,
+``streaming.stateful._bucketed_state``. ``running_fold_py``,
+``holt_linear``, ``holt_winters_additive`` and
+``throttle.token_bucket_admit`` are steps on the batch driver, each
+sharing its step with its streaming twin.
 """
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Callable, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, IntegralType
 
 from ..api import Flow
 
@@ -94,51 +106,156 @@ def final_reduce(*aggs: Column) -> Flow:
     return Flow(lambda df: df.agg(*aggs), name="reduce_final")
 
 
+def _concat(pieces: list):
+    """One output column from every key's piece. A piece turns float64
+    where its key's rows hold a null in an integral column; pieces of
+    mixed dtypes join as objects, so one key's null does not round
+    another key's values through float64."""
+    if len(pieces) == 1:
+        return pieces[0]
+    if not isinstance(pieces[0], np.ndarray):
+        return list(chain.from_iterable(pieces))
+    if len({p.dtype for p in pieces}) > 1:
+        return np.concatenate([p.astype(object) for p in pieces])
+    return np.concatenate(pieces)
+
+
+def _null_flagged(df: DataFrame, *extra: Column) -> tuple[DataFrame, dict]:
+    """``df`` with each integral column null-free beside a
+    ``__null_<column>`` flag, plus ``extra`` columns, for ``_fold_keys``;
+    and the integral columns' types."""
+    ints = {f.name: f.dataType for f in df.schema
+            if isinstance(f.dataType, IntegralType)}
+    cols = [F.coalesce(c, F.lit(0).cast(ints[c])).alias(c) if c in ints
+            else c for c in df.columns]
+    flags = [F.col(c).isNull().alias(f"__null_{c}") for c in ints]
+    return df.select(*cols, *flags, *extra), ints
+
+
+def _fold_keys(rows: pd.DataFrame, store: dict, *, key_cols: list[str],
+               order_cols: list[str], ints: dict,
+               step: Callable) -> pd.DataFrame | None:
+    """The per-key fold core (module docstring) over one pandas frame of
+    ``_null_flagged`` rows.
+
+    The rows are stably sorted ONCE by (key, *order_cols) — ties keep
+    arrival order, nulls sort last — and ``step(key, rows, state)``
+    runs for each key in the frame:
+
+    - ``key``: tuple of the key values, null as None (so null keys fold
+      as one key, like ``groupBy``);
+    - ``rows``: the key's rows, ``{column: ndarray}``;
+    - ``state``: the key's state from ``store``, None for a new key.
+
+    It returns (new state, output columns ``{name: list|ndarray}`` or
+    None); the new state goes back into ``store``, and the result is one
+    frame of every key's output columns concatenated, None when no key
+    emitted. The step sees each key's rows as a per-key group would:
+    pyspark hands pandas an integer column holding a null as float64
+    (exact only to 2**53), so integral columns reach pandas null-free
+    beside a null flag, and only a key whose own rows hold a null sees
+    that column as float64 with NaN (key columns: as Python ints and
+    None).
+    """
+    nulls = []
+    for c in ints:
+        flag = f"__null_{c}"
+        if not rows[flag].any():
+            del rows[flag]
+        elif c in key_cols:
+            rows[c] = rows[c].astype(object).where(~rows.pop(flag), None)
+        else:
+            nulls.append(c)
+    rows["__key"] = rows.groupby(key_cols, sort=False,
+                                 dropna=False).ngroup()
+    order = [o for c in order_cols
+             for o in ((f"__null_{c}", c) if c in nulls else (c,))]
+    rows = rows.sort_values(["__key", *order], kind="stable")
+    cols = {c: rows[c].to_numpy() for c in rows.columns}
+    flags = {c: cols.pop(f"__null_{c}") for c in nulls}
+    cuts = (np.flatnonzero(np.diff(cols["__key"])) + 1).tolist()
+    starts = [0, *cuts]
+    keys = zip(*([None if pd.isna(v) else v
+                  for v in rows[k].iloc[starts].tolist()]
+                 for k in key_cols))
+    out: dict = {}
+    for key, lo, hi in zip(keys, starts, [*cuts, len(rows)]):
+        part = {c: a[lo:hi] for c, a in cols.items()}
+        for c, flag in flags.items():
+            if flag[lo:hi].any():
+                part[c] = np.where(flag[lo:hi], np.nan, part[c])
+        new, emitted = step(key, part, store.get(key))
+        store[key] = new
+        for c, v in (emitted or {}).items():
+            out.setdefault(c, []).append(v)
+    return pd.DataFrame({c: _concat(p) for c, p in out.items()}) if out \
+        else None
+
+
+def _keyed_fold(df: DataFrame, *, key_cols: list[str], order_cols: list[str],
+                step: Callable, output_schema: str) -> DataFrame:
+    """The batch driver of ``_fold_keys`` (module docstring): one
+    shuffle on the keys, a sort within partitions by (keys, *order_cols
+    nulls last), so a key's rows are one contiguous run, and one
+    ``mapInPandas`` pass. Only the last key's state carries from one
+    Arrow batch to the next: a key whose rows span batches folds on, and
+    per-task memory is one Arrow batch plus one key's state, whatever
+    the partition holds."""
+
+    def run(batches):
+        store: dict = {}
+        for rows in filter(len, batches):
+            out = _fold_keys(rows, store, key_cols=key_cols,
+                             order_cols=order_cols, ints=ints, step=step)
+            last = next(reversed(store))
+            store = {last: store[last]}
+            if out is not None:
+                yield out
+
+    part = df.repartition(*key_cols).sortWithinPartitions(
+        *key_cols, *(F.col(c).asc_nulls_last() for c in order_cols))
+    flagged, ints = _null_flagged(part)
+    return flagged.mapInPandas(run, output_schema)
+
+
+def _fold_step(fold_fn: Callable, init, value_col: str,
+               output_schema: str) -> Callable:
+    """The running-fold step of ``_fold_keys``: folds a key's rows left
+    to right from its accumulator (``init`` for a new key) and emits the
+    accumulator after EVERY element as column ``acc``, beside the other
+    ``output_schema`` columns."""
+    out_cols = DataType.fromDDL(output_schema).names
+
+    def step(key, rows, state):
+        acc = init if state is None else state[0]
+        accs = []
+        for v in rows[value_col]:
+            acc = fold_fn(v, acc)
+            accs.append(acc)
+        return (acc,), {c: accs if c == "acc" else rows[c] for c in out_cols}
+
+    return step
+
+
 def running_fold_py(fold_fn: Callable, init, *, order_col: str, value_col: str,
-                    key_cols: Sequence[str], output_schema: str,
-                    output: str = "acc") -> Flow:
-    """Arbitrary-Python running fold, sequential per key via applyInPandas.
+                    key_cols: Sequence[str], output_schema: str) -> Flow:
+    """Arbitrary-Python running fold, sequential per key.
 
-    The per-key group is sorted by ``order_col`` then folded left-to-right
-    — exactly the reference loop (``flow/fold.go:83-90``) but parallel
-    across keys. Keys shuffle once; each group must fit in executor memory
-    (same contract as any Spark grouped-map op).
-
-    r9 (guide §4.2): the grouped-map boundary is keyed on a hash BUCKET
-    of ``key_cols``, not the raw key — FlatMapGroupsInPandas pays a
-    per-GROUP Arrow round-trip (~2-4 ms), so one call per key turned a
-    1500-key corpus into seconds of pure group overhead. One call now
-    folds a whole bucket: rows sort by (key, order) and the accumulator
-    resets to ``init`` on key change, which is fold-for-fold identical
-    to the per-key form (each key still folds alone, in order-col
-    order, from the same init). The user fold_fn stays an opaque
-    per-row Python step — that is the operator's contract.
+    Each key's rows fold in ``order_col`` order from ``init`` — exactly
+    the reference loop (``flow/fold.go:83-90``) but parallel across
+    keys — and every row comes out with its accumulator in column
+    ``acc``; null keys fold as one key. It is ``running_fold_stream``'s
+    fold step on the batch driver (module docstring): keys shuffle once,
+    and a task holds one Arrow batch plus one key's accumulator, never a
+    whole key group. The user fold_fn stays an opaque per-row Python
+    step — that is the operator's contract.
     """
 
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (pdf.sort_values([*key_cols, order_col])
-               .drop(columns=["__fold_b"]))
-        out = []
-        acc = init
-        prev_key = None
-        for key, v in zip(zip(*(pdf[k] for k in key_cols)), pdf[value_col]):
-            if key != prev_key:
-                acc = init
-                prev_key = key
-            acc = fold_fn(v, acc)
-            out.append(acc)
-        pdf = pdf.copy()
-        pdf[output] = out
-        return pdf
-
     def _apply(df: DataFrame) -> DataFrame:
-        n_buckets = df.sparkSession.sparkContext.defaultParallelism * 2
-        bucketed = df.withColumn(
-            "__fold_b",
-            F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]),
-                   F.lit(n_buckets)))
-        return bucketed.groupBy("__fold_b").applyInPandas(
-            _fold, schema=output_schema)
+        return _keyed_fold(df, key_cols=list(key_cols), order_cols=[order_col],
+                           step=_fold_step(fold_fn, init, value_col,
+                                           output_schema),
+                           output_schema=output_schema)
 
     return Flow(_apply, name="fold_py")
 
@@ -241,6 +358,16 @@ def _tdiv(a: int, d: int) -> int:
     return a // d if a >= 0 else -((-a) // d)
 
 
+def _grid_schema(fn: str, df: DataFrame, cols: tuple) -> str:
+    """The (key, order, value) columns' DDL of a Holt fold's output,
+    with its level and trend; a missing column fails loudly."""
+    types = dict(df.dtypes)
+    if any(c not in types for c in cols):
+        raise ValueError(f"{fn}: missing column among {cols}")
+    return ", ".join(f"{c} {types[c]}" for c in cols) \
+        + ", level long, trend long"
+
+
 def holt_linear(df: DataFrame, *, key_col: str, order_col: str,
                 value_col: str) -> DataFrame:
     """Holt double exponential smoothing (level + linear trend) with
@@ -258,42 +385,58 @@ def holt_linear(df: DataFrame, *, key_col: str, order_col: str,
     sequential fold is engine- and partitioning-exact and a recursive
     CTE replays it bit-for-bit.
 
-    Plan: one applyInPandas fold per key over the key's ordered grid
-    rows — state is two ints, work is grid-grain (e.g. hours), never
-    row-grain; keys parallelize across the cluster."""
-    key_type = dict(df.dtypes).get(key_col)
-    val_type = dict(df.dtypes).get(value_col)
-    order_type = dict(df.dtypes).get(order_col)
-    if key_type is None or val_type is None or order_type is None:
-        raise ValueError(
-            f"holt_linear: missing column among {key_col!r}, "
-            f"{order_col!r}, {value_col!r}")
+    Plan: a step on the per-key fold core's batch driver (module
+    docstring) over the key's ordered grid rows — state is two ints
+    (and the key's first row, held until the second arrives), work is
+    grid-grain (e.g. hours), never row-grain; keys parallelize across
+    the cluster."""
+    cols = (key_col, order_col, value_col)
+    schema = _grid_schema("holt_linear", df, cols)
 
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort") \
-            .reset_index(drop=True)
-        if len(pdf) < 2:
-            return pdf.iloc[0:0].assign(level=pd.Series(dtype="int64"),
-                                        trend=pd.Series(dtype="int64"))
-        ys = [int(v) for v in pdf[value_col]]
-        lv, tr = ys[0], ys[1] - ys[0]
-        levels, trends = [lv], [tr]
-        for y in ys[1:]:
+    def step(key, rows, state):
+        lv, tr, first = state or (None, None, None)
+        if first is not None:
+            rows = {c: _concat([first[c], rows[c]]) for c in cols}
+        ys = [int(v) for v in rows[value_col]]
+        levels, trends = [], []
+        if lv is None:
+            if len(ys) < 2:
+                return (None, None, {c: rows[c] for c in cols}), None
+            lv, tr = ys[0], ys[1] - ys[0]
+            levels, trends, ys = [lv], [tr], ys[1:]
+        for y in ys:
             nl = _tdiv(y + 3 * (lv + tr), 4)
             tr = _tdiv((nl - lv) + 3 * tr, 4)
             lv = nl
             levels.append(lv)
             trends.append(tr)
-        return pd.DataFrame({
-            key_col: pdf[key_col],
-            order_col: pdf[order_col],
-            value_col: pdf[value_col],
-            "level": pd.Series(levels, dtype="int64"),
-            "trend": pd.Series(trends, dtype="int64")})
+        return (lv, tr, None), {**{c: rows[c] for c in cols},
+                                "level": levels, "trend": trends}
 
-    schema = (f"{key_col} {key_type}, {order_col} {order_type}, "
-              f"{value_col} {val_type}, level long, trend long")
-    return df.groupBy(key_col).applyInPandas(_fold, schema=schema)
+    return _keyed_fold(df, key_cols=[key_col], order_cols=[order_col],
+                       step=step, output_schema=schema)
+
+
+def _hw_feed(model: tuple, y: int, period: int) -> tuple:
+    """Feed one slot value ``y`` to the additive Holt-Winters model
+    (init buffer, l, b, seasonal vector): the first ``period`` values
+    fill the init buffer, every later one runs the recurrence. Returns
+    the new model and, past the init, (forecast, level, trend,
+    seasonal)."""
+    buf, lv, tr, sea = model
+    if len(sea) < period:
+        buf.append(y)
+        if len(buf) == period:
+            lv = _tdiv(sum(buf), period)
+            sea = [v - lv for v in buf]
+        return (buf, lv, tr, sea), None
+    s_old = sea.pop(0)
+    forecast = lv + tr + s_old
+    nl = _tdiv(y - s_old + 3 * (lv + tr), 4)
+    tr = _tdiv((nl - lv) + 3 * tr, 4)
+    ns = _tdiv((y - nl) + 3 * s_old, 4)
+    sea.append(ns)
+    return (buf, nl, tr, sea), (forecast, nl, tr, ns)
 
 
 def holt_winters_additive(df: DataFrame, *, key_col: str, order_col: str,
@@ -326,63 +469,32 @@ def holt_winters_additive(df: DataFrame, *, key_col: str, order_col: str,
     y_t) — the residual y_t - f_t is the seasonal-adjusted surprise a
     monitoring rule thresholds on.
 
-    Plan: one applyInPandas fold per key over the key's ordered grid
-    rows — state is m+2 ints, work is grid-grain (e.g. hours), never
-    event-grain; keys parallelize across the cluster.
+    Plan: a step on the per-key fold core's batch driver (module
+    docstring) that feeds each grid row to ``_hw_feed``, the slot feed
+    ``holt_winters_stream`` shares — state is m+2 ints, work is
+    grid-grain (e.g. hours), never event-grain; keys parallelize across
+    the cluster.
     """
     if period < 2:
         raise ValueError("holt_winters_additive: period must be >= 2")
-    from collections import deque
-    key_type = dict(df.dtypes).get(key_col)
-    val_type = dict(df.dtypes).get(value_col)
-    order_type = dict(df.dtypes).get(order_col)
-    if key_type is None or val_type is None or order_type is None:
-        raise ValueError(
-            f"holt_winters_additive: missing column among {key_col!r}, "
-            f"{order_col!r}, {value_col!r}")
+    cols = (key_col, order_col, value_col)
+    schema = _grid_schema("holt_winters_additive", df, cols) \
+        + ", seasonal long" + (", forecast long" if emit_forecast else "")
 
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort") \
-            .reset_index(drop=True)
-        extra = {"level": pd.Series(dtype="int64"),
-                 "trend": pd.Series(dtype="int64"),
-                 "seasonal": pd.Series(dtype="int64")}
+    def step(key, rows, model):
+        model, fed = model or ([], 0, 0, []), []
+        for y in rows[value_col].tolist():
+            model, out = _hw_feed(model, int(y), period)
+            if out is not None:
+                fed.append(out)
+        if not fed:
+            return model, None
+        forecast, *lbs = (list(c) for c in zip(*fed))
+        out = {c: rows[c][len(rows[c]) - len(fed):] for c in cols}
+        out.update(zip(("level", "trend", "seasonal"), lbs))
         if emit_forecast:
-            extra["forecast"] = pd.Series(dtype="int64")
-        empty = pdf.iloc[0:0].assign(**extra)
-        if len(pdf) < period + 1:
-            return empty
-        ys = [int(v) for v in pdf[value_col]]
-        lv = _tdiv(sum(ys[:period]), period)
-        tr = 0
-        sea = deque(y - lv for y in ys[:period])
-        levels, trends, seas, fores = [], [], [], []
-        for y in ys[period:]:
-            s_old = sea.popleft()
-            fores.append(lv + tr + s_old)
-            nl = _tdiv(y - s_old + 3 * (lv + tr), 4)
-            tr = _tdiv((nl - lv) + 3 * tr, 4)
-            lv = nl
-            ns = _tdiv((y - nl) + 3 * s_old, 4)
-            sea.append(ns)
-            levels.append(lv)
-            trends.append(tr)
-            seas.append(ns)
-        out = pdf.iloc[period:].reset_index(drop=True)
-        cols = {
-            key_col: out[key_col],
-            order_col: out[order_col],
-            value_col: out[value_col],
-            "level": pd.Series(levels, dtype="int64"),
-            "trend": pd.Series(trends, dtype="int64"),
-            "seasonal": pd.Series(seas, dtype="int64")}
-        if emit_forecast:
-            cols["forecast"] = pd.Series(fores, dtype="int64")
-        return pd.DataFrame(cols)
+            out["forecast"] = forecast
+        return model, out
 
-    schema = (f"{key_col} {key_type}, {order_col} {order_type}, "
-              f"{value_col} {val_type}, level long, trend long, "
-              f"seasonal long")
-    if emit_forecast:
-        schema += ", forecast long"
-    return df.groupBy(key_col).applyInPandas(_fold, schema=schema)
+    return _keyed_fold(df, key_cols=[key_col], order_cols=[order_col],
+                       step=step, output_schema=schema)

@@ -15,6 +15,11 @@ pipeline. The faithful mappings:
     micro-batch (``discard_over_quota`` keeps the first ``quota`` elements
     per period bucket — the reference's drop-when-full approximated
     deterministically, flagged in SURVEY §2.1#8 as approximate).
+
+The token bucket (``token_bucket_admit``) is one step, ``_token_bucket``,
+on the per-key fold core's batch driver (``aggregate._keyed_fold``);
+``streaming.stateful.token_bucket_stream`` runs the same step on the
+streaming driver.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..api import Flow
+from .aggregate import _keyed_fold
 
 
 #: per-source spelling of "at most N elements per trigger"
@@ -87,6 +93,43 @@ def discard_over_quota(quota: int, ts: str | Column, period: str,
     return Flow(_apply, name="throttler_discard")
 
 
+def _token_bucket(df: DataFrame, rate_micro_per_sec: int, burst_micro: int,
+                  cost_micro: int, ts_col: str) -> tuple:
+    """The token-bucket step of the per-key fold core (state: micro-tokens
+    and the last-seen second, null before the key's first event) and its
+    output schema, for ``token_bucket_admit`` and ``token_bucket_stream``."""
+    if rate_micro_per_sec < 0 or burst_micro < 1 or cost_micro < 1:
+        raise ValueError(
+            "need rate_micro_per_sec >= 0, burst_micro >= 1, "
+            f"cost_micro >= 1; got {rate_micro_per_sec}/{burst_micro}/"
+            f"{cost_micro}")
+    cols = df.columns
+    out_schema = ", ".join(
+        f"{n} {t}" for n, t in df.dtypes) + ", admitted boolean, " \
+        "tokens_after_micro bigint"
+
+    def step(key, rows, state):
+        tokens, last = (burst_micro, None) if state is None else state
+        secs = (rows[ts_col].astype("datetime64[ns]").view("int64")
+                // 1_000_000_000).tolist()
+        admitted, after = [], []
+        for s in secs:
+            if last is not None:
+                tokens = min(burst_micro,
+                             tokens + (s - last) * rate_micro_per_sec)
+            last = s
+            ok = tokens >= cost_micro
+            if ok:
+                tokens -= cost_micro
+            admitted.append(ok)
+            after.append(tokens)
+        return (tokens, last), {**{c: rows[c] for c in cols},
+                                "admitted": admitted,
+                                "tokens_after_micro": after}
+
+    return step, out_schema
+
+
 def token_bucket_admit(df: DataFrame, *, rate_micro_per_sec: int,
                        burst_micro: int, cost_micro: int = 1_000_000,
                        key_col: str = "user_id", ts_col: str = "ts",
@@ -107,61 +150,14 @@ def token_bucket_admit(df: DataFrame, *, rate_micro_per_sec: int,
     data-dependent (a rejection spends nothing, so the admitted set
     feeds back into the state — the GCRA recursion; no associative
     prefix form exists, hence no JVM window-fold path like
-    ``ewma_halving``'s linear recurrence). What IS free is the grouping
-    overhead: instead of one applyInPandas call per key (one pandas
-    frame + sort + datetime conversion per key — dominated by per-group
-    fixed cost when keys are small), hash-repartition on the key, sort
-    within partitions, and run ONE mapInPandas pass per partition with
-    the (key, tokens, prev_sec) state carried across Arrow batches —
-    same shuffle count, same exact fold, ~key-count-times fewer Python
-    crossings. Returns the input rows plus
+    ``ewma_halving``'s linear recurrence). A key's rows fold in
+    (ts, tiebreak) order on the per-key fold core's batch driver
+    (module docstring): one shuffle on the key, and a task holds one
+    Arrow batch plus one key's bucket. Returns the input rows plus
     (admitted: boolean, tokens_after_micro: long).
     """
-    if rate_micro_per_sec < 0 or burst_micro < 1 or cost_micro < 1:
-        raise ValueError(
-            "need rate_micro_per_sec >= 0, burst_micro >= 1, "
-            f"cost_micro >= 1; got {rate_micro_per_sec}/{burst_micro}/"
-            f"{cost_micro}")
-    import pandas as pd
-
-    cols = df.columns
-    out_schema = ", ".join(
-        f"{n} {t}" for n, t in df.dtypes) + ", admitted boolean, " \
-        "tokens_after_micro bigint"
-    rate, burst, cost = rate_micro_per_sec, burst_micro, cost_micro
-
-    def _fold(batches):
-        # Partition is hash-partitioned by key and sorted by
-        # (key, ts, tiebreak); a key's rows may SPAN Arrow batches, so
-        # the bucket state must carry across the batch iterator.
-        state_key, tokens, prev = object(), 0, None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ser = pd.to_datetime(pdf[ts_col])
-            if getattr(ser.dt, "tz", None) is not None:
-                ser = ser.dt.tz_convert("UTC").dt.tz_localize(None)
-            secs = (ser.astype("datetime64[ns]").astype("int64")
-                    // 1_000_000_000).tolist()
-            keys = pdf[key_col].tolist()
-            admitted, after = [], []
-            for k, s in zip(keys, secs):
-                if k != state_key:
-                    state_key, tokens, prev = k, burst, None
-                if prev is not None:
-                    tokens = min(burst, tokens + (s - prev) * rate)
-                prev = s
-                if tokens >= cost:
-                    tokens -= cost
-                    admitted.append(True)
-                else:
-                    admitted.append(False)
-                after.append(tokens)
-            out = pdf.copy()
-            out["admitted"] = admitted
-            out["tokens_after_micro"] = after
-            yield out[cols + ["admitted", "tokens_after_micro"]]
-
-    part = (df.repartition(key_col)
-            .sortWithinPartitions(key_col, ts_col, tiebreak_col))
-    return part.mapInPandas(_fold, schema=out_schema)
+    step, out_schema = _token_bucket(df, rate_micro_per_sec, burst_micro,
+                                     cost_micro, ts_col)
+    return _keyed_fold(df, key_cols=[key_col],
+                       order_cols=[ts_col, tiebreak_col], step=step,
+                       output_schema=out_schema)

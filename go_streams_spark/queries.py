@@ -698,8 +698,9 @@ def token_bucket_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens/s, cost 1/event): the burst-tolerant admission semantics a
     fixed-window throttler cannot express. Integer micro-token
     arithmetic makes the sequential fold bit-identical to the DuckDB
-    recursive-CTE replay; the fold itself is one Arrow pass per
-    user partition (key-grain bounded)."""
+    recursive-CTE replay; the fold itself runs on the per-key fold
+    core's batch driver (one mapInPandas pass, only the last user's
+    bucket carried across Arrow batches)."""
     ev = _t(spark, sf_dir, "events")
     from .operators.throttle import token_bucket_admit
     out = token_bucket_admit(
@@ -2949,10 +2950,11 @@ SELECT user_id, event_id,
 FROM events
 """)
 def fold_python_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary-Python Fold via applyInPandas (FoldFunction analogue,
-    flow/fold.go:8): per-key sequential accumulate with custom logic the
-    Column algebra can't express as one aggregate — still parallel
-    across keys (one shuffle), matching the reference's per-key chain."""
+    """Arbitrary-Python Fold (FoldFunction analogue, flow/fold.go:8) on
+    the per-key fold core's batch driver: per-key sequential accumulate
+    with custom logic the Column algebra can't express as one aggregate
+    — still parallel across keys (one shuffle, one mapInPandas pass),
+    matching the reference's per-key chain."""
     from .operators import running_fold_py
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "event_type", "value")
 
@@ -11939,8 +11941,9 @@ def holt_linear_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     trend-corrected forecaster EWMA can't be (EWMA lags a ramp by
     construction). The per-key fold is sequential BY THE MODEL'S
     DEFINITION (each state depends on the previous), so the engine
-    pays one applyInPandas pass per type over HOUR-GRID rows (720 at
-    this corpus' span — never event-grain); the recursive-CTE oracle
+    folds each type's HOUR-GRID rows (720 at this corpus' span — never
+    event-grain) on the per-key fold core's batch driver, one
+    mapInPandas pass over all types; the recursive-CTE oracle
     replays every step, so a single off-by-one in the fold breaks the
     hash."""
     from .operators.aggregate import holt_linear
@@ -12004,10 +12007,11 @@ def holt_winters_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     — replays every step bit-for-bit.
 
     Plan: the fold is sequential per key BY THE MODEL'S DEFINITION, so
-    the engine pays one applyInPandas pass per event_type over
-    HOUR-GRID rows (~720 here), never event-grain; types parallelize
-    across the cluster and the pre-aggregation to the grid is the only
-    data-volume shuffle."""
+    the engine folds each event_type's HOUR-GRID rows (~720 here),
+    never event-grain, on the per-key fold core's batch driver (one
+    mapInPandas pass, the slot feed shared with holt_winters_stream);
+    types parallelize across the cluster and the pre-aggregation to the
+    grid is the only data-volume shuffle."""
     from .operators.aggregate import holt_winters_additive
     ev = _t(spark, sf_dir, "events")
     hourly = (ev.groupBy("event_type",
@@ -12068,9 +12072,10 @@ def hw_anomaly_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     a raw z-score misses on diurnal load — 3am traffic that is normal
     FOR 3AM but 5 sigma below the daily mean stays quiet, while a
     modest dip during the peak hour (a real incident) fires. Same
-    exact-int64 fold as holt_winters_hourly with emit_forecast=True;
-    the oracle joins each recursion step's PREVIOUS state row, so the
-    forecast definition itself is hash-pinned."""
+    exact-int64 fold as holt_winters_hourly with emit_forecast=True (the
+    same per-key fold core's batch driver and slot feed); the oracle
+    joins each recursion step's PREVIOUS state row, so the forecast
+    definition itself is hash-pinned."""
     from .operators.aggregate import holt_winters_additive
     ev = _t(spark, sf_dir, "events")
     hourly = (ev.groupBy("event_type",

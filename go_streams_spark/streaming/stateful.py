@@ -15,7 +15,9 @@ State is kept per BUCKET, not per key, for the per-key folds
 bucket ``pmod(xxhash64(keys), B)``, B = ``spark.sql.shuffle.partitions``
 when the frame is built, and one state group per bucket carries every
 key of the bucket — its state row holds B, the keys and each per-key
-state field as parallel arrays (``_bucketed_state``). pyspark's
+state field as parallel arrays (``_bucketed_state``, the streaming
+driver of the per-key fold core ``operators.aggregate._fold_keys``,
+whose batch driver runs the batch twins on the same steps). pyspark's
 serializer pays a fixed cost per state group per micro-batch (one
 Arrow-to-pandas conversion, one state JSON, one concat), so this pays it
 at most B times per trigger instead of once per active key. A bucket's
@@ -36,7 +38,6 @@ documented (SURVEY §7 "what's hard" #1).
 
 from __future__ import annotations
 
-from itertools import chain
 from typing import Any, Callable, Iterable
 
 import numpy as np
@@ -45,10 +46,12 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, DataType, IntegerType,
-                               IntegralType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DataType, IntegerType, StructField,
+                               StructType)
 
-from ..operators.aggregate import _tdiv
+from ..operators.aggregate import (_fold_keys, _fold_step, _hw_feed,
+                                   _null_flagged)
+from ..operators.throttle import _token_bucket
 
 
 def _bucket(cols: list[str], n: int) -> Column:
@@ -97,43 +100,15 @@ def _py(v):
     return v
 
 
-def _concat(pieces: list):
-    """One output column from every key's piece. A piece turns float64
-    where its key's rows hold a null in an integral column; pieces of
-    mixed dtypes join as objects, so one key's null does not round
-    another key's values through float64."""
-    if len(pieces) == 1:
-        return pieces[0]
-    if not isinstance(pieces[0], np.ndarray):
-        return list(chain.from_iterable(pieces))
-    if len({p.dtype for p in pieces}) > 1:
-        return np.concatenate([p.astype(object) for p in pieces])
-    return np.concatenate(pieces)
-
-
 def _bucketed_state(df: DataFrame, *, key_cols: list[str],
                     order_cols: list[str], state_schema: str,
                     step: Callable, output_schema: str,
                     output_mode: str = "append") -> DataFrame:
-    """Per-key state carried in state buckets (module docstring).
-
-    Per micro-batch and bucket, the bucket's rows are stably sorted ONCE
-    by (key, *order_cols) — ties keep arrival order, nulls sort last —
-    and ``step(key, rows, state)`` runs for each key in the batch:
-
-    - ``key``: tuple of the key values, null as None (so null keys fold
-      as one key, like ``groupBy``);
-    - ``rows``: the key's rows, ``{column: ndarray}``;
-    - ``state``: the key's ``state_schema`` tuple, None for a new key.
-
-    It returns (new state tuple, output columns ``{name: list|ndarray}``
-    or None); the bucket emits one frame of every key's output columns
-    concatenated. The step sees each key's rows as a per-key group
-    would: pyspark hands pandas an integer column holding a null as
-    float64 (exact only to 2**53), so integral columns reach pandas
-    null-free beside a null flag, and only a key whose own rows hold a
-    null sees that column as float64 with NaN (key columns: as Python
-    ints and None).
+    """Per-key state carried in state buckets (module docstring): per
+    micro-batch, a bucket's rows go through ``_fold_keys`` once, with
+    the bucket's per-key states as its store; ``step`` and its
+    ``state_schema`` tuple follow that core's contract. The bucket emits
+    one frame of every key's output columns.
 
     Bucket b runs in state partition b (``_slots``). A restart that
     builds the query under another ``spark.sql.shuffle.partitions``
@@ -155,8 +130,6 @@ def _bucketed_state(df: DataFrame, *, key_cols: list[str],
         + [StructField(f"key{i}", ArrayType(t)) for i, t in enumerate(key_types)]
         + [StructField(f.name, ArrayType(f.dataType)) for f in fields])
     nk = len(key_cols)
-    ints = {f.name: f.dataType for f in df.schema
-            if isinstance(f.dataType, IntegralType)}
 
     def run(group, pdfs: Iterable[pd.DataFrame], state: GroupState):
         # the state partition count the stream runs with: the checkpoint
@@ -180,51 +153,19 @@ def _bucketed_state(df: DataFrame, *, key_cols: list[str],
             return
         rows = (pd.concat(chunks, ignore_index=True)
                 if len(chunks) > 1 else chunks[0])
-        nulls = []
-        for c in ints:
-            flag = f"__null_{c}"
-            if not rows[flag].any():
-                del rows[flag]
-            elif c in key_cols:
-                rows[c] = rows[c].astype(object).where(~rows.pop(flag), None)
-            else:
-                nulls.append(c)
-        rows["__key"] = rows.groupby(key_cols, sort=False,
-                                     dropna=False).ngroup()
-        order = [o for c in order_cols
-                 for o in ((f"__null_{c}", c) if c in nulls else (c,))]
-        rows = rows.sort_values(["__key", *order], kind="stable")
-        cols = {c: rows[c].to_numpy() for c in rows.columns}
-        flags = {c: cols.pop(f"__null_{c}") for c in nulls}
-        cuts = (np.flatnonzero(np.diff(cols["__key"])) + 1).tolist()
-        starts = [0, *cuts]
-        keys = zip(*([None if pd.isna(v) else v
-                      for v in rows[k].iloc[starts].tolist()]
-                     for k in key_cols))
-        out: dict = {}
-        for key, lo, hi in zip(keys, starts, [*cuts, len(rows)]):
-            part = {c: a[lo:hi] for c, a in cols.items()}
-            for c, flag in flags.items():
-                if flag[lo:hi].any():
-                    part[c] = np.where(flag[lo:hi], np.nan, part[c])
-            new, emitted = step(key, part, store.get(key))
-            store[key] = new
-            for c, v in (emitted or {}).items():
-                out.setdefault(c, []).append(v)
+        out = _fold_keys(rows, store, key_cols=key_cols,
+                         order_cols=order_cols, ints=ints, step=step)
         state.update((nb,
                       *([_py(k[i]) for k in store] for i in range(nk)),
                       *([_py(s[j]) for s in store.values()]
                         for j in range(len(fields)))))
-        if out:
-            yield pd.DataFrame({c: _concat(p) for c, p in out.items()})
+        if out is not None:
+            yield out
 
     slot = F.element_at(F.array(*map(F.lit, _slots(nb))),
                         _bucket(key_cols, nb) + 1).alias("__slot")
-    cols = [F.coalesce(c, F.lit(0).cast(ints[c])).alias(c) if c in ints
-            else c for c in df.columns]
-    flags = [F.col(c).isNull().alias(f"__null_{c}") for c in ints]
-    return (df.select(*cols, *flags, slot)
-            .groupBy("__slot")
+    flagged, ints = _null_flagged(df, slot)
+    return (flagged.groupBy("__slot")
             .applyInPandasWithState(run, output_schema, bucket_state,
                                     output_mode, GroupStateTimeout.NoTimeout))
 
@@ -246,18 +187,10 @@ def running_fold_stream(df: DataFrame, *, key_cols: list[str], value_col: str,
     values out of order whenever a key's rows span >1 Arrow chunk).
     """
 
-    out_cols = [c.strip().split(" ")[0] for c in output_schema.split(",")]
-
-    def step(key, rows, state):
-        acc = init if state is None else state[0]
-        accs = []
-        for v in rows[value_col]:
-            acc = fold_fn(v, acc)
-            accs.append(acc)
-        return (acc,), {c: accs if c == "acc" else rows[c] for c in out_cols}
-
     return _bucketed_state(df, key_cols=key_cols, order_cols=[order_col],
-                           state_schema=state_schema, step=step,
+                           state_schema=state_schema,
+                           step=_fold_step(fold_fn, init, value_col,
+                                           output_schema),
                            output_schema=output_schema,
                            output_mode=output_mode)
 
@@ -588,35 +521,8 @@ def token_bucket_stream(df: DataFrame, *, rate_micro_per_sec: int,
     ``burst_micro``, and a row is admitted while ``cost_micro`` tokens
     remain. Emits every input row plus (admitted, tokens_after_micro).
     """
-    if rate_micro_per_sec < 0 or burst_micro < 1 or cost_micro < 1:
-        raise ValueError(
-            "need rate_micro_per_sec >= 0, burst_micro >= 1, "
-            f"cost_micro >= 1; got {rate_micro_per_sec}/{burst_micro}/"
-            f"{cost_micro}")
-    cols = df.columns
-    out_schema = ", ".join(
-        f"{n} {t}" for n, t in df.dtypes) + ", admitted boolean, " \
-        "tokens_after_micro bigint"
-
-    def step(key, rows, state):
-        tokens, last = (burst_micro, None) if state is None else state
-        secs = (rows[ts_col].astype("datetime64[ns]").view("int64")
-                // 1_000_000_000).tolist()
-        admitted, after = [], []
-        for s in secs:
-            if last is not None:
-                tokens = min(burst_micro,
-                             tokens + (s - last) * rate_micro_per_sec)
-            last = s
-            ok = tokens >= cost_micro
-            if ok:
-                tokens -= cost_micro
-            admitted.append(ok)
-            after.append(tokens)
-        return (tokens, last), {**{c: rows[c] for c in cols},
-                                "admitted": admitted,
-                                "tokens_after_micro": after}
-
+    step, out_schema = _token_bucket(df, rate_micro_per_sec, burst_micro,
+                                     cost_micro, ts_col)
     return _bucketed_state(df, key_cols=[key_col],
                            order_cols=[ts_col, tiebreak_col],
                            state_schema="tokens bigint, last_sec bigint",
@@ -652,27 +558,8 @@ def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
         raise ValueError("holt_winters_stream: period must be >= 2")
 
     def step(key, rows, state):
-        cur, hsum, buf, lv, tr, sea = (
-            (None, 0, [], 0, 0, []) if state is None else state)
-        buf, sea = list(buf), list(sea)
-        outs = []
-
-        def close_slot(hour_ns: int, y: int):
-            nonlocal lv, tr, sea
-            if len(sea) < period:
-                buf.append(y)
-                if len(buf) == period:
-                    lv, tr = _tdiv(sum(buf), period), 0
-                    sea = [v - lv for v in buf]
-                return
-            s_old = sea.pop(0)
-            nl = _tdiv(y - s_old + 3 * (lv + tr), 4)
-            tr = _tdiv((nl - lv) + 3 * tr, 4)
-            lv = nl
-            ns = _tdiv((y - nl) + 3 * s_old, 4)
-            sea.append(ns)
-            outs.append((hour_ns, y, lv, tr, ns))
-
+        cur, hsum, buf, lv, tr, sea = state or (None, 0, [], 0, 0, [])
+        model, outs = (list(buf), lv, tr, list(sea)), []
         hours = rows[hour_col].astype("datetime64[ns]").view("int64")
         for h, y in zip(hours.tolist(), rows[value_col].tolist()):
             y = int(y)
@@ -681,16 +568,18 @@ def holt_winters_stream(df: DataFrame, *, key_col: str, hour_col: str,
             elif h == cur:
                 hsum += y
             else:
-                close_slot(cur, hsum)
+                model, fed = _hw_feed(model, hsum, period)
+                if fed is not None:
+                    outs.append((cur, hsum, *fed[1:]))
                 cur, hsum = h, y
-        state = (cur, hsum, buf, lv, tr, sea)
+        state = (cur, hsum, *model)
         if not outs:
             return state, None
-        hour, *model = (list(c) for c in zip(*outs))
+        hour, *fit = (list(c) for c in zip(*outs))
         return state, {key_col: np.repeat(rows[key_col][:1], len(outs)),
                        "hour": np.array(hour, dtype="datetime64[ns]"),
                        **dict(zip(("y_micro", "level", "trend", "seasonal"),
-                                  model))}
+                                  fit))}
 
     key_type = dict(df.dtypes)[key_col]
     out_schema = (f"{key_col} {key_type}, hour timestamp, y_micro long, "

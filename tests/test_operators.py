@@ -42,14 +42,23 @@ def test_running_fold_py_per_key(spark):
         key_cols=["k"], output_schema="k int, ord int, value double, acc double")).to_df()
     got = {(r["k"], r["ord"]): r["acc"] for r in out.collect()}
     assert got == {(1, 1): 2.0, (1, 2): 6.0, (2, 1): 5.0}
+    # null keys fold as ONE key, as in groupBy and running_fold_stream
+    nulls = spark.createDataFrame(
+        [(None, 1, 1.0), (None, 2, 2.0), (None, 3, 3.0), (4, 1, 9.0)],
+        "k int, ord int, value double")
+    out = Source(nulls).via(running_fold_py(
+        lambda v, acc: acc + v, 0.0, order_col="ord", value_col="value",
+        key_cols=["k"], output_schema="k int, ord int, value double, acc double")).to_df()
+    got = {(r["k"], r["ord"]): r["acc"] for r in out.collect()}
+    assert got == {(None, 1): 1.0, (None, 2): 3.0, (None, 3): 6.0, (4, 1): 9.0}
 
 
 def test_running_fold_py_bucket_resets_acc_between_keys(spark):
-    # r9: groups are bucketed (hash(key) % 2*parallelism) so one Python
-    # call folds MANY keys — the fold must restart from init at every
-    # key boundary inside a bucket. 40 keys on a tiny cluster guarantees
-    # multi-key buckets; a product fold makes cross-key leakage visible
-    # (any carried accumulator multiplies the next key's first value).
+    # one Arrow batch of a key-sorted partition folds MANY keys — the
+    # fold must restart from init at every key boundary inside a batch.
+    # 40 keys on a tiny cluster guarantees multi-key batches; a product
+    # fold makes cross-key leakage visible (any carried accumulator
+    # multiplies the next key's first value).
     rows = [(k, o, 2.0) for k in range(40) for o in range(3)]
     df = spark.createDataFrame(rows, "k int, ord int, value double")
     out = Source(df).via(running_fold_py(
@@ -59,6 +68,59 @@ def test_running_fold_py_bucket_resets_acc_between_keys(spark):
     assert len(got) == 120
     for k in range(40):
         assert (got[(k, 0)], got[(k, 1)], got[(k, 2)]) == (2.0, 4.0, 8.0)
+
+
+def test_batch_folds_carry_state_across_arrow_batches(spark):
+    """The batch per-key folds run the fold core once per Arrow batch
+    and carry only the last key's state into the next batch. At 3
+    records per batch every multi-row key spans batches, so each
+    operator must return the same rows as at 10,000 (one batch per
+    partition): keys spanning batches, a null key and a null order
+    value included."""
+    import datetime as dt
+    from collections import Counter
+    from go_streams_spark.operators.aggregate import (holt_linear,
+                                                      holt_winters_additive)
+    from go_streams_spark.operators.throttle import token_bucket_admit
+    base = dt.datetime(2024, 1, 1)
+    rows = [(k, t, base + dt.timedelta(seconds=7 * t + n),
+             (t * 37 + n * 11) % 50 - 10)
+            for n, (k, size) in enumerate((("a", 11), ("b", 7), (None, 6),
+                                           ("c", 1), ("d", 4)))
+            for t in range(size)]
+    rows.append(("a", None, base, 5))
+    df = spark.createDataFrame(rows, "k string, t long, ts timestamp, y long")
+    ops = {
+        "fold": lambda: Source(df).via(running_fold_py(
+            lambda v, acc: acc * 3 + v, 0, order_col="t", value_col="y",
+            key_cols=["k"],
+            output_schema="k string, t long, ts timestamp, y long, acc long"
+        )).to_df(),
+        "token_bucket": lambda: token_bucket_admit(
+            df, rate_micro_per_sec=200_000, burst_micro=2_000_000,
+            key_col="k", ts_col="ts", tiebreak_col="t"),
+        "holt": lambda: holt_linear(df, key_col="k", order_col="t",
+                                    value_col="y"),
+        "holt_winters": lambda: holt_winters_additive(
+            df, key_col="k", order_col="t", value_col="y", period=2,
+            emit_forecast=True),
+    }
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    got = {}
+    try:
+        for size in (10_000, 3):
+            spark.conf.set(conf, str(size))
+            got[size] = {name: Counter(tuple(r) for r in op().collect())
+                         for name, op in ops.items()}
+    finally:
+        spark.conf.set(conf, prev)
+    for name in ops:
+        assert got[3][name] == got[10_000][name], name
+    assert sum(got[3]["fold"].values()) == len(rows)
+    # the null key folds as one key: acc = 3 * acc + y over t = 0..5
+    null_accs = sorted((r[1], r[4]) for r in got[3]["fold"] if r[0] is None)
+    assert [acc for _, acc in null_accs] == [12, 35, 141, 446, 1348, 4041]
 
 
 def test_final_reduce(spark):

@@ -165,6 +165,31 @@ def test_running_fold_stream_nullable_long_column(spark, stream_dir):
                    (2, 1, None, 2.0), (2, 2, 7, 6.0)]
 
 
+def test_running_fold_stream_struct_output_column(spark, stream_dir):
+    """The output column names come from parsing ``output_schema``, so a
+    pass-through column whose type holds commas (a struct, a decimal)
+    keeps its name instead of splitting into bogus ones."""
+    schema = "k long, seq int, value double"
+    spark.createDataFrame([(1, 1, 1.0), (2, 1, 5.0), (1, 2, 2.0)], schema) \
+        .coalesce(1).write.mode("overwrite").parquet(stream_dir)
+    src = file_stream_source(spark, stream_dir, fmt="parquet", schema=schema)
+    src = src.select("k", "seq", "value",
+                     F.struct("value", F.col("seq").cast("string")
+                              .alias("tag")).alias("p"),
+                     F.col("value").cast("decimal(10,2)").alias("d"))
+    name = _mem_name()
+    out = running_fold_stream(
+        src, key_cols=["k"], value_col="value", order_col="seq",
+        fold_fn=lambda v, acc: acc + v, init=0.0,
+        output_schema="k long, seq int, p struct<value:double,tag:string>, "
+                      "d decimal(10,2), acc double")
+    Source(out).to(memory_sink(name, output_mode="append"))
+    got = sorted((r["k"], r["seq"], r["p"]["tag"], float(r["d"]), r["acc"])
+                 for r in spark.table(name).collect())
+    assert got == [(1, 1, "1", 1.0, 1.0), (1, 2, "2", 2.0, 3.0),
+                   (2, 1, "1", 5.0, 5.0)]
+
+
 @pytest.mark.parametrize("n", [1, 2, 8, 200])
 def test_state_slots_one_bucket_per_partition(spark, n):
     """Slot b of n lands in partition b of Spark's n-way hash
