@@ -3,10 +3,12 @@ extraction -> near-duplicate detection over the extracted features,
 then the round-7 REAL-container leg: actual BMP / RIFF-WAVE / AVI
 files are written per doc, parsed back with the library-free codec
 walkers (header/padding/nesting all real), and image near-dup runs on
-perceptual dHash of the decoded pixels. The generic ``extract_features``
-kernel stays deterministic-fake where real codecs (pillow/PyAV) are
-absent, but every Spark-side seam — binary columns, Arrow batches,
-feature arrays into LSH — is the real production shape.
+perceptual dHash of the decoded pixels. ``extract_features`` has one
+decode rule, read from the blob: an ``image/*`` blob starting with
+``BM`` gets the library-free BMP parser, a BMP that does not parse
+falls back to the deterministic stub, and every other blob (the text
+documents here) gets the stub. Every Spark-side seam — binary columns,
+Arrow batches, feature arrays into LSH — is the real production shape.
 
 Run: python examples/multimodal_pipeline.py [sf_dir]
 """

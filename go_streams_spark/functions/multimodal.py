@@ -1,38 +1,72 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` with typed
 metadata.
 
-Decode kernels are codec-gated: real pillow image decode
-(``codec='pil'``/'auto') and real PyAV/ffmpeg video frame decode
-(``codec='av'``/'auto') run wherever those libraries exist; the
-deterministic byte-arithmetic stubs (clearly marked) are the default
-and the quarantine fallback, keeping every query oracle-checkable in
-codec-free environments like this container. The Spark-side plumbing —
-schemas, Arrow batch shapes, mapInPandas signatures, partition behavior
-— is identical on both paths and fully tested.
+One decode rule, read from the blob. ``extract_features`` decodes an
+``image/*`` row whose blob starts with ``BM`` with the library-free BMP
+parser (``_decode_bmp_builtin``); a BMP that does not parse falls back
+to the deterministic byte-arithmetic stub (``_decode_stub``), and every
+other row gets the stub. ``sample_frames`` byte-slices every blob into
+fixed-size frames. The BMP, RIFF/WAVE, AVI and PNG codecs below parse
+real container bytes with no external library, so every query stays
+oracle-checkable.
 
-Scale notes: media blobs ride in their row (never collected); decode
-fans out per partition via ``mapInPandas`` with bounded Arrow batches
-(``spark.sql.execution.arrow.maxRecordsPerBatch`` caps peak memory);
-feature vectors come back as array<float> columns ready for the
-similarity ops in ``functions/similarity.py``.
+One Arrow pass. Every codec is a per-row function on ``_per_blob``:
+one ``mapInPandas`` over (id, *input columns), one output frame per
+Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` caps
+peak memory), no shuffle, and the output id keeps the input id's name
+and type. Media blobs ride in their row (never collected); feature
+vectors come back as array<float> columns ready for the similarity ops
+in ``functions/similarity.py``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import binascii
+import hashlib
+import math
+import struct
+import zlib
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from .dedup import simhash_pairs
 
-MEDIA_SCHEMA = (
-    "doc_id long, media binary, media_type string, byte_len long, content_hash string"
-)
 
-FEATURE_SCHEMA = "doc_id long, media_type string, feature array<float>, n_frames int"
+def _per_blob(df: DataFrame, id_col: str, cols: Sequence[str],
+              out_schema: str, fn: Callable) -> DataFrame:
+    """The one Arrow pass of every codec here: select ``(id_col, *cols)``,
+    run ``fn(id, *values)`` once per row — it returns that row's output
+    tuples, in ``out_schema`` order — and yield one frame per Arrow
+    batch. The output id keeps ``id_col``'s name and type; a
+    ``ValueError`` from ``fn``, or a ``struct.error`` from a blob too
+    short for its headers, re-raises as ``ValueError("doc <id>: ...")``."""
+    id_type = dict(df.dtypes).get(id_col)
+    if id_type is None:
+        raise ValueError(f"{id_col!r} not in input")
+    names = DataType.fromDDL(out_schema).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids: list = []
+            out: list = []
+            for did, *vals in zip(*(pdf[c] for c in (id_col, *cols))):
+                n = len(out)
+                try:
+                    out.extend(fn(did, *vals))
+                except (ValueError, struct.error) as e:
+                    raise ValueError(f"doc {did}: {e}") from e
+                ids.extend([did] * (len(out) - n))
+            frame = pd.DataFrame.from_records(out, columns=names)
+            frame.insert(0, id_col, ids)
+            yield frame
+
+    return df.select(id_col, *cols).mapInPandas(
+        run, schema=f"{id_col} {id_type}, {out_schema}")
 
 
 def attach_media_metadata(df: DataFrame, *, blob_col: str = "media",
@@ -60,8 +94,7 @@ def sniff_media_type(blob: Column) -> Column:
 
 def _decode_stub(blob: bytes, media_type: str, dim: int) -> np.ndarray:
     """STUB decode/feature-extract: deterministic fake embedding derived
-    from blob bytes. Replace with a real codec (PIL / torchaudio /
-    ffmpeg) in production — the signature is the contract.
+    from blob bytes, for every blob the BMP parser does not decode.
     """
     if media_type == "unsupported/raise":
         raise NotImplementedError("real media decoding requires codec libs not in this container")
@@ -75,103 +108,32 @@ def _decode_stub(blob: bytes, media_type: str, dim: int) -> np.ndarray:
     return (arr / denom).astype(np.float32)
 
 
-def _decode_pil(blob: bytes, media_type: str, dim: int) -> np.ndarray:
-    """Real image decode via pillow WHEN AVAILABLE (not baked into this
-    container — the import stays inside the function so it resolves on
-    the executor that actually has the codec): decode -> grayscale ->
-    area-resize to a ~sqrt(dim) square -> flatten -> L2-normalize.
-    Same signature and output contract as ``_decode_stub``."""
-    import io as _io
-
-    from PIL import Image
-
-    side = max(1, int(dim ** 0.5))
-    img = Image.open(_io.BytesIO(blob)).convert("L").resize(
-        (side, side), Image.BILINEAR)
-    arr = np.asarray(img, dtype=np.float64).reshape(-1)[:dim]
-    if arr.size < dim:
-        arr = np.pad(arr, (0, dim - arr.size))
-    denom = float(np.linalg.norm(arr)) or 1.0
-    return (arr / denom).astype(np.float32)
-
-
-def _pick_decoder(codec: str):
-    """codec='auto': pillow if importable, else the deterministic stub;
-    'pil'/'stub' force one (forcing 'pil' without the lib raises on the
-    executor — the honest failure mode)."""
-    if codec == "stub":
-        return _decode_stub
-    if codec == "bmp":
-        return _decode_bmp_builtin
-    if codec == "pil":
-        # import EAGERLY so a missing pillow raises once per task here:
-        # deferring it to _decode_pil would let the per-row corrupt-blob
-        # quarantine swallow the ImportError and silently emit stub
-        # features when the user explicitly requested real decode
-        from PIL import Image  # noqa: F401
-        return _decode_pil
-    try:
-        import PIL  # noqa: F401
-        return _decode_pil
-    except ImportError:
-        # no pillow: BMP blobs still get a REAL decode (the builtin
-        # struct parser); everything else degrades to the stub
-        return _decode_auto_builtin
-
-
-def _quarantine_errors():
-    """Exception classes the per-row quarantine may swallow: genuinely
-    corrupt/undecodable blobs only — NEVER environment errors like
-    ImportError (those must fail the task loudly)."""
-    try:
-        from PIL import UnidentifiedImageError
-        return (UnidentifiedImageError, OSError, ValueError)
-    except ImportError:
-        return (OSError, ValueError)
+def _decode(blob: bytes, media_type: str, dim: int) -> np.ndarray:
+    """The one decode rule (module docstring): the BMP parser for an
+    ``image/*`` blob starting with ``BM``, the stub for the rest and for
+    a BMP that does not parse (one corrupt image at web scale must not
+    kill the job)."""
+    if str(media_type).startswith("image/") and blob[:2] == b"BM":
+        try:
+            return _decode_bmp_builtin(blob, media_type, dim)
+        except ValueError:
+            pass
+    return _decode_stub(blob, media_type, dim)
 
 
 def extract_features(df: DataFrame, *, blob_col: str = "media", id_col: str = "doc_id",
-                     type_col: str = "media_type", dim: int = 16,
-                     codec: str = "stub") -> DataFrame:
-    """mapInPandas feature extraction over binary media.
+                     type_col: str = "media_type", dim: int = 16) -> DataFrame:
+    """Feature extraction over binary media: one ``dim``-float feature
+    per row by the one decode rule (module docstring), no shuffle.
+    ``n_frames`` models frame-sampling metadata (always 1). Returns
+    (id, media_type, feature, n_frames)."""
 
-    One Arrow batch in, one out; runs fully parallel per partition with
-    no shuffle. ``n_frames`` models frame-sampling metadata (stubbed=1).
-    ``codec``: 'stub' (default — deterministic, oracle-checkable),
-    'pil' (real image decode, needs pillow on executors), or 'auto'.
-    Non-image rows under 'pil'/'auto' fall back to the stub (pillow
-    cannot decode wav/webm) so one mixed-media pass still succeeds.
-    """
+    def features(did, blob, media_type):
+        return [(media_type, _decode(bytes(blob), media_type, dim).tolist(), 1)]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _pick_decoder(codec)
-        quarantine = _quarantine_errors()
-        for pdf in batches:
-            feats = []
-            for b, t in zip(pdf[blob_col], pdf[type_col]):
-                if decode is not _decode_stub and not str(t).startswith("image/"):
-                    feats.append(_decode_stub(b, t, dim).tolist())
-                elif decode is not _decode_stub:
-                    # quarantine undecodable blobs to the stub instead
-                    # of failing the task: one corrupt image is
-                    # inevitable at web scale and must not kill the job
-                    try:
-                        feats.append(decode(b, t, dim).tolist())
-                    except quarantine:
-                        feats.append(_decode_stub(b, t, dim).tolist())
-                else:
-                    feats.append(decode(b, t, dim).tolist())
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "media_type": pdf[type_col],
-                "feature": feats,
-                "n_frames": 1,
-            })
-
-    return df.mapInPandas(_extract, schema=FEATURE_SCHEMA)
-
-
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame binary"
+    return _per_blob(df, id_col, [blob_col, type_col],
+                     "media_type string, feature array<float>, n_frames int",
+                     features)
 
 
 def _slice_frames(b: bytes, frame_size: int, every_k: int, max_frames: int):
@@ -187,101 +149,20 @@ def _slice_frames(b: bytes, frame_size: int, every_k: int, max_frames: int):
     return out
 
 
-def _av_frames(b: bytes, frame_size: int, every_k: int, max_frames: int):
-    """Real video decode via PyAV/ffmpeg WHEN AVAILABLE (not baked into
-    this container — import stays inside so it resolves on the executor
-    that has the codec): demux the container, decode the first video
-    stream, keep every ``every_k``-th decoded frame up to ``max_frames``,
-    and emit each as a grayscale ~sqrt(frame_size)-square raster padded
-    to EXACTLY ``frame_size`` bytes — same (frame_idx, bytes) contract
-    as ``_slice_frames`` so FRAME_SCHEMA and downstream feature/dedup
-    plumbing are codec-agnostic."""
-    import io as _io
-
-    import av
-
-    side = max(1, int(frame_size ** 0.5))
-    out = []
-    with av.open(_io.BytesIO(b)) as container:
-        stream = container.streams.video[0]
-        for fidx, frame in enumerate(container.decode(stream)):
-            if fidx % every_k:
-                continue
-            if len(out) >= max_frames:
-                break
-            raster = (frame.reformat(width=side, height=side, format="gray")
-                      .to_ndarray().tobytes())
-            out.append((fidx, raster[:frame_size].ljust(frame_size, b"\0")))
-    return out
-
-
-def _pick_frame_sampler(codec: str):
-    """codec='auto': PyAV if importable, else byte slicing; 'av'/'stub'
-    force one (forcing 'av' without the lib raises eagerly — the honest
-    failure mode, same contract as ``_pick_decoder('pil')``)."""
-    if codec == "stub":
-        return _slice_frames
-    if codec == "av":
-        import av  # noqa: F401  (eager: missing lib must fail loudly)
-        return _av_frames
-    try:
-        import av  # noqa: F401
-        return _av_frames
-    except ImportError:
-        return _slice_frames
-
-
-def _video_quarantine_errors():
-    """Exception classes the per-document quarantine may swallow:
-    genuinely corrupt/undecodable containers only — NEVER environment
-    errors like ImportError (those must fail the task loudly)."""
-    try:
-        import av
-        ffmpeg_err = getattr(av, "FFmpegError",
-                             getattr(av, "AVError", OSError))
-        return (ffmpeg_err, OSError, ValueError, IndexError)
-    except ImportError:
-        return (OSError, ValueError)
-
-
-def _looks_like_video(b: bytes) -> bool:
-    """Magic-byte video sniff — webm/matroska EBML, mp4/mov/3gp ftyp
-    box, RIFF-AVI, FLV, MPEG-TS (two aligned 0x47 sync bytes; a single
-    one would false-positive on any text starting with 'G'). Routing
-    only: under ``codec='auto'`` it decides stub vs decode; an explicit
-    ``codec='av'`` ATTEMPTS DECODE ON EVERY ROW regardless (quarantining
-    undecodable ones), so a container this list misses is never
-    silently byte-sliced when the user asked for real decode."""
-    return (b[:4] == b"\x1aE\xdf\xa3"
-            or b[4:8] == b"ftyp"
-            or (b[:4] == b"RIFF" and b[8:12] == b"AVI ")
-            or b[:4] == b"FLV\x01"
-            or (len(b) >= 189 and b[0] == 0x47 and b[188] == 0x47))
-
-
 def sample_frames(df: DataFrame, *, blob_col: str = "media",
                   id_col: str = "doc_id", frame_size: int = 32,
-                  every_k: int = 2, max_frames: int = 4,
-                  codec: str = "stub") -> DataFrame:
-    """Frame sampling over binary media via mapInPandas.
-
-    ``codec``: 'stub' (default — blob as concatenated fixed-size frames,
-    deterministic and oracle-checkable), 'av' (real ffmpeg decode, needs
-    PyAV on executors), or 'auto' (PyAV when importable). Under
-    'av'/'auto', non-video blobs and corrupt containers quarantine to
-    the byte-slicing stub — one broken video at web scale must not kill
-    the job — while a missing library fails loudly (eager import).
+                  every_k: int = 2, max_frames: int = 4) -> DataFrame:
+    """Frame sampling over binary media: the blob as concatenated
+    ``frame_size``-byte frames (``_slice_frames``).
 
     Emits every ``every_k``-th frame, at most ``max_frames`` per
     document, one ROW per frame — the explode shape downstream feature
     extraction and dedup expect. No shuffle: rows fan out within their
-    partition, with Arrow batch size capping peak decode memory.
+    partition, with Arrow batch size capping peak memory.
 
     Knobs are validated at build time (the constructor-panic contract
     of the other operators): a bad ``every_k=0`` would otherwise
-    surface late and per-task — as a range() ValueError in the stub or
-    a modulo ZeroDivisionError in the PyAV path, where the quarantine
-    handler would misread it as a corrupt blob.
+    surface late and per-task as a range() ValueError.
     """
     if frame_size < 1:
         raise ValueError("frame_size must be positive")
@@ -289,37 +170,9 @@ def sample_frames(df: DataFrame, *, blob_col: str = "media",
         raise ValueError("every_k must be positive")
     if max_frames < 0:
         raise ValueError("max_frames must be >= 0")
-    if codec not in ("stub", "av", "auto"):
-        raise ValueError("codec must be 'stub', 'av', or 'auto'")
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sampler = _pick_frame_sampler(codec)
-        quarantine = _video_quarantine_errors()
-        for pdf in batches:
-            out_id, out_idx, out_frame = [], [], []
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(b)
-                # 'auto' routes by sniff; explicit 'av' tries the real
-                # decoder on every row (an unrecognized container must
-                # not silently byte-slice when real decode was asked
-                # for), quarantining genuinely undecodable blobs
-                if (sampler is _av_frames
-                        and (codec == "av" or _looks_like_video(b))):
-                    try:
-                        frames = sampler(b, frame_size, every_k, max_frames)
-                    except quarantine:
-                        frames = _slice_frames(b, frame_size, every_k,
-                                               max_frames)
-                else:
-                    frames = _slice_frames(b, frame_size, every_k, max_frames)
-                for fidx, raw in frames:
-                    out_id.append(i)
-                    out_idx.append(fidx)
-                    out_frame.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "frame_idx": out_idx, "frame": out_frame})
-
-    return df.mapInPandas(_sample, schema=FRAME_SCHEMA)
+    return _per_blob(df, id_col, [blob_col], "frame_idx int, frame binary",
+                     lambda did, b: _slice_frames(bytes(b), frame_size,
+                                                  every_k, max_frames))
 
 
 def resize_features(df: DataFrame, *, feature_col: str = "feature",
@@ -345,22 +198,16 @@ def resize_features(df: DataFrame, *, feature_col: str = "feature",
     return df.withColumn(feature_col, _resize(F.col(feature_col)))
 
 
-def _pcm_schema(id_col: str, id_type: str) -> str:
-    return (f"{id_col} {id_type}, win_idx int, n_samples int, "
-            "energy long, peak int, zero_crossings int")
-
-
 def pcm_window_features(df: DataFrame, *, blob_col: str = "media",
                         id_col: str = "doc_id", window: int = 16,
                         hop: int = 8) -> DataFrame:
-    """Audio windowed feature extraction over binary PCM via
-    mapInPandas — the audio leg of the modality triad (image decode:
-    ``extract_features``/pillow; video: ``sample_frames``/PyAV). The
-    blob is interpreted as little-endian int16 PCM (the WAV/ffmpeg
-    ``s16le`` payload convention — a real pipeline demuxes the
-    container first, exactly like ``sample_frames``'s codec path);
-    full ``window``-sample frames at stride ``hop`` each emit one row
-    of INTEGER-EXACT features:
+    """Audio windowed feature extraction over binary PCM — the audio
+    leg of the modality triad (image: ``extract_features``; video:
+    ``sample_frames``). The blob is interpreted as little-endian int16
+    PCM (the WAV/ffmpeg ``s16le`` payload convention — a container is
+    demuxed first, e.g. by ``decode_wav_pcm``); full ``window``-sample
+    frames at stride ``hop`` each emit one row of INTEGER-EXACT
+    features:
 
       energy         sum of squared samples (int64)
       peak           max absolute sample
@@ -379,67 +226,52 @@ def pcm_window_features(df: DataFrame, *, blob_col: str = "media",
     if hop < 1:
         raise ValueError("hop must be positive")
 
-    id_type = dict(df.dtypes).get(id_col)
-    if id_type is None:
-        raise ValueError(f"pcm_window_features: {id_col!r} not in input")
+    def windows(did, b):
+        b = bytes(b)
+        samples = np.frombuffer(
+            b[:len(b) - (len(b) % 2)], dtype="<i2").astype(np.int64)
+        if len(samples) < window:
+            return ()
+        # one row per window start 0, hop, 2*hop, ... (a strided view)
+        x = np.lib.stride_tricks.sliding_window_view(samples, window)[::hop]
+        neg = x < 0
+        return zip(range(len(x)), [window] * len(x),
+                   (x * x).sum(axis=1).tolist(), np.abs(x).max(axis=1).tolist(),
+                   (neg[:, 1:] != neg[:, :-1]).sum(axis=1).tolist())
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widx, ns, en, pk, zc = [], [], [], [], [], []
-            for did, b in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(b)
-                samples = np.frombuffer(
-                    b[:len(b) - (len(b) % 2)], dtype="<i2").astype(np.int64)
-                n = len(samples)
-                w = 0
-                start = 0
-                while start + window <= n:
-                    x = samples[start:start + window]
-                    neg = x < 0
-                    ids.append(did)
-                    widx.append(w)
-                    ns.append(window)
-                    en.append(int(np.dot(x, x)))
-                    pk.append(int(np.max(np.abs(x))))
-                    zc.append(int(np.sum(neg[1:] != neg[:-1])))
-                    w += 1
-                    start += hop
-            yield pd.DataFrame({
-                id_col: pd.Series(ids),
-                "win_idx": pd.Series(widx, dtype="int32"),
-                "n_samples": pd.Series(ns, dtype="int32"),
-                "energy": pd.Series(en, dtype="int64"),
-                "peak": pd.Series(pk, dtype="int32"),
-                "zero_crossings": pd.Series(zc, dtype="int32"),
-            })
+    return _per_blob(df, id_col, [blob_col],
+                     "win_idx int, n_samples int, energy long, peak int, "
+                     "zero_crossings int", windows)
 
-    return df.mapInPandas(_extract, schema=_pcm_schema(id_col, id_type))
+
+def _doc_head(text: str) -> str:
+    """The doc's first 8 lowercase whitespace tokens — the hash base of
+    every synthetic container, so documents sharing a head render
+    identical images, clips and videos."""
+    return " ".join([t for t in text.lower().split(" ") if t][:8])
 
 
 # ---------------------------------------------------------------------------
-# Real BMP codec path (round 7): unlike the codec-gated pillow/PyAV
-# kernels above, this is an ACTUAL image decode that needs no external
-# library — BMP (BITMAPINFOHEADER, 24bpp, bottom-up, 4-byte row padding)
-# is simple enough to parse with struct. The corpus gets a deterministic
-# synthetic BMP per doc (pixels derived from md5(text)), the decoder
-# parses those real bytes back, and the DuckDB oracle re-derives the
-# PIXEL MATH independently — so a decode bug (padding, bottom-up order,
-# BGR layout, header offsets) breaks the hash gate. dHash features on
-# top give image-level near-dup.
+# Real BMP codec path (round 7): an ACTUAL image decode that needs no
+# external library — BMP (BITMAPINFOHEADER, 24bpp, bottom-up, 4-byte row
+# padding) is simple enough to parse with struct. The corpus gets a
+# deterministic synthetic BMP per doc (pixels derived from md5(text)),
+# the decoder parses those real bytes back, and the DuckDB oracle
+# re-derives the PIXEL MATH independently — so a decode bug (padding,
+# bottom-up order, BGR layout, header offsets) breaks the hash gate.
+# dHash features on top give image-level near-dup.
 
 BMP_W, BMP_H = 18, 16  # 18*3 = 54 bytes/row -> 2 pad bytes: padding is exercised
 
 
 def _bmp_pixel_rows(text: str) -> list[list[int]]:
     """Deterministic base-value pixel grid (top-down, row-major) for
-    the synthetic image — "render the document head": the hash base is
-    the doc's first 8 lowercase whitespace tokens (so documents sharing
-    a head render IDENTICAL images and the dHash near-dup stage has
-    non-degenerate pairs at every SF); row r's 18 values are bytes
-    0..15 of md5(head:r) plus bytes 0..1 of md5(head:r:x)."""
-    import hashlib
-
-    head = " ".join([t for t in text.lower().split(" ") if t][:8])
+    the synthetic image — "render the document head" (``_doc_head``,
+    so documents sharing a head render IDENTICAL images and the dHash
+    near-dup stage has non-degenerate pairs at every SF); row r's 18
+    values are bytes 0..15 of md5(head:r) plus bytes 0..1 of
+    md5(head:r:x)."""
+    head = _doc_head(text)
     rows = []
     for r in range(BMP_H):
         h1 = hashlib.md5(f"{head}:{r}".encode()).digest()
@@ -456,31 +288,66 @@ def synth_bmp(df: DataFrame, *, text_col: str = "text",
     honors the actual format: 14-byte file header, 40-byte
     BITMAPINFOHEADER, BGR byte order, rows bottom-up, each row padded
     to a 4-byte boundary. One Arrow map pass, zero shuffle."""
-    import struct
+    row_bytes = (BMP_W * 3 + 3) // 4 * 4
+    img_size = row_bytes * BMP_H
+    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + img_size, 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, BMP_W, BMP_H, 1, 24, 0,
+                       img_size, 2835, 2835, 0, 0)
 
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        row_bytes = (BMP_W * 3 + 3) // 4 * 4
-        img_size = row_bytes * BMP_H
-        header = struct.pack("<2sIHHI", b"BM", 14 + 40 + img_size, 0, 0, 54)
-        info = struct.pack("<IiiHHIIiiII", 40, BMP_W, BMP_H, 1, 24, 0,
-                           img_size, 2835, 2835, 0, 0)
-        for pdf in batches:
-            blobs = []
-            for text in pdf[text_col].fillna(""):
-                v = np.array(_bmp_pixel_rows(text), dtype=np.int64)[::-1]
-                # channels DIFFER (R=v, G=2v%256, B=3v%256) so a BGR/RGB
-                # order bug in any decoder is visible in the luminance
-                # the oracle re-derives; rows bottom-up, BGR on disk
-                body = np.zeros((BMP_H, row_bytes), dtype=np.uint8)
-                body[:, 0:BMP_W * 3:3] = (3 * v) % 256
-                body[:, 1:BMP_W * 3:3] = (2 * v) % 256
-                body[:, 2:BMP_W * 3:3] = v
-                blobs.append(header + info + body.tobytes())
-            yield pd.DataFrame({id_col: pdf[id_col], "image": blobs})
+    def image(did, text):
+        v = np.array(_bmp_pixel_rows(text or ""), dtype=np.int64)[::-1]
+        # channels DIFFER (R=v, G=2v%256, B=3v%256) so a BGR/RGB order
+        # bug in any decoder is visible in the luminance the oracle
+        # re-derives; rows bottom-up, BGR on disk
+        body = np.zeros((BMP_H, row_bytes), dtype=np.uint8)
+        body[:, 0:BMP_W * 3:3] = (3 * v) % 256
+        body[:, 1:BMP_W * 3:3] = (2 * v) % 256
+        body[:, 2:BMP_W * 3:3] = v
+        return [(header + info + body.tobytes(),)]
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInPandas(
-        _make, schema=f"{id_col} {id_type}, image binary")
+    return _per_blob(df, id_col, [text_col], "image binary", image)
+
+
+def _bmp_luminance_grid(b: bytes) -> "np.ndarray":
+    """Parse a 24bpp bottom-up BI_RGB BMP into its integer luminance
+    grid ((299R + 587G + 114B) // 1000, top-down row-major). Shared by
+    the dHash path and the builtin feature codec; raises ValueError on
+    anything that is not the supported variant, a blob shorter than its
+    headers included."""
+    if b[:2] != b"BM":
+        raise ValueError("not a BMP")
+    if len(b) < 54:
+        raise ValueError(f"truncated BMP: {len(b)} bytes, headers need 54")
+    _magic, _fsize, _r1, _r2, offset = struct.unpack_from("<2sIHHI", b, 0)
+    (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _cu,
+     _ci) = struct.unpack_from("<IiiHHIIiiII", b, 14)
+    if hsz != 40 or bpp != 24 or comp != 0 or h <= 0:
+        raise ValueError("unsupported BMP variant")
+    row_bytes = (w * 3 + 3) // 4 * 4
+    rows = np.frombuffer(b, dtype=np.uint8, count=h * row_bytes,
+                         offset=offset).reshape(h, row_bytes)
+    px = rows[::-1, :w * 3].reshape(h, w, 3).astype(np.int64)  # un-flip
+    return (299 * px[:, :, 2] + 587 * px[:, :, 1]
+            + 114 * px[:, :, 0]) // 1000
+
+
+def _block_means(grid: np.ndarray, rows: int, cols: int) -> np.ndarray:
+    """Integer block means of ``grid`` on a ``rows`` x ``cols`` grid with
+    floor boundaries (exact: integer sums floor-divided by the block
+    size; an empty block reads 0). One reshape when the dims divide
+    evenly (the synthetic shape), the generic block loop otherwise."""
+    h, w = grid.shape
+    if h % rows == 0 and w % cols == 0:
+        return (grid.reshape(rows, h // rows, cols, w // cols)
+                .sum(axis=(1, 3)) // ((h // rows) * (w // cols)))
+    avg = np.zeros((rows, cols), dtype=np.int64)
+    for r in range(rows):
+        y0, y1 = r * h // rows, (r + 1) * h // rows
+        for c in range(cols):
+            x0, x1 = c * w // cols, (c + 1) * w // cols
+            avg[r, c] = (int(grid[y0:y1, x0:x1].sum())
+                         // max((y1 - y0) * (x1 - x0), 1))
+    return avg
 
 
 def decode_bmp_dhash(df: DataFrame, *, image_col: str = "image",
@@ -488,71 +355,28 @@ def decode_bmp_dhash(df: DataFrame, *, image_col: str = "image",
     """REAL BMP decode + perceptual dHash: parse the file header
     (magic, pixel offset), BITMAPINFOHEADER (dims, 24bpp, BI_RGB),
     un-pad and re-flip the bottom-up rows, integer-luminance
-    ((299R + 587G + 114B) // 1000), block-average to a 9x8 grid
-    (floor boundaries — exact integers), then dHash: bit = left > right
+    ((299R + 587G + 114B) // 1000) — all in ``_bmp_luminance_grid`` —
+    block-average to a 9x8 grid (``_block_means``: floor boundaries,
+    exact integers), then dHash: bit = left > right
     per adjacent column pair, packed into four 16-bit bands
     (b0..b3, two grid rows each, bit (row%2)*8+col from the MSB) so
     hamming distance is bit_count(xor) per band and pigeonhole banding
     (hamming <= 3 => some band equal) gives the near-dup join key.
     Returns (id, width, height, bpp, b0..b3)."""
-    import struct
+    weights = 1 << (15 - (np.arange(2)[:, None] * 8 + np.arange(8)[None, :]))
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_rows: dict[str, list] = {c: [] for c in
-                                     (id_col, "width", "height", "bpp",
-                                      "b0", "b1", "b2", "b3")}
-        for pdf in batches:
-            for did, blob in zip(pdf[id_col], pdf[image_col]):
-                b = bytes(blob)
-                magic, _fsize, _r1, _r2, offset = struct.unpack_from(
-                    "<2sIHHI", b, 0)
-                if magic != b"BM":
-                    raise ValueError(f"doc {did}: not a BMP")
-                (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _cu,
-                 _ci) = struct.unpack_from("<IiiHHIIiiII", b, 14)
-                if hsz != 40 or bpp != 24 or comp != 0 or h <= 0:
-                    raise ValueError(f"doc {did}: unsupported BMP variant")
-                row_bytes = (w * 3 + 3) // 4 * 4
-                rows = np.frombuffer(
-                    b, dtype=np.uint8, count=h * row_bytes,
-                    offset=offset).reshape(h, row_bytes)
-                px = rows[::-1, :w * 3].reshape(  # un-flip bottom-up
-                    h, w, 3).astype(np.int64)
-                grid = (299 * px[:, :, 2] + 587 * px[:, :, 1]
-                        + 114 * px[:, :, 0]) // 1000
-                # integer block-average to 9x8 (vectorized reshape when
-                # dims divide evenly — the synth shape; generic floor-
-                # boundary loop otherwise, e.g. foreign BMPs)
-                R, C = 8, 9
-                if h % R == 0 and w % C == 0:
-                    avg = grid.reshape(R, h // R, C, w // C) \
-                        .sum(axis=(1, 3)) // ((h // R) * (w // C))
-                else:
-                    avg = np.zeros((R, C), dtype=np.int64)
-                    for r in range(R):
-                        y0, y1 = r * h // R, (r + 1) * h // R
-                        for c in range(C):
-                            x0, x1 = c * w // C, (c + 1) * w // C
-                            avg[r, c] = (grid[y0:y1, x0:x1].sum()
-                                         // ((y1 - y0) * (x1 - x0)))
-                bits = (avg[:, :-1] > avg[:, 1:]).astype(np.int64)  # (8,8)
-                weights = 1 << (15 - (np.arange(2)[:, None] * 8
-                                      + np.arange(C - 1)[None, :]))
-                bands = [int((bits[2 * k:2 * k + 2] * weights).sum())
-                         for k in range(4)]
-                out_rows[id_col].append(did)
-                out_rows["width"].append(w)
-                out_rows["height"].append(h)
-                out_rows["bpp"].append(bpp)
-                for k in range(4):
-                    out_rows[f"b{k}"].append(bands[k])
-            yield pd.DataFrame(out_rows)
-            out_rows = {c: [] for c in out_rows}
+    def dhash(did, blob):
+        grid = _bmp_luminance_grid(bytes(blob))
+        avg = _block_means(grid, 8, 9)
+        bits = (avg[:, :-1] > avg[:, 1:]).astype(np.int64)  # (8,8)
+        # bpp: 24 is the only variant the parser accepts
+        return [(grid.shape[1], grid.shape[0], 24,
+                 *(int((bits[2 * k:2 * k + 2] * weights).sum())
+                   for k in range(4)))]
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, image_col).mapInPandas(
-        _decode, schema=(f"{id_col} {id_type}, width int, height int, "
-                         "bpp int, b0 int, b1 int, b2 int, b3 int"))
+    return _per_blob(df, id_col, [image_col],
+                     "width int, height int, bpp int, b0 int, b1 int, "
+                     "b2 int, b3 int", dhash)
 
 
 def dhash_neardup_pairs(feat: DataFrame, *, id_col: str = "doc_id",
@@ -570,6 +394,45 @@ def dhash_neardup_pairs(feat: DataFrame, *, id_col: str = "doc_id",
                  for k in range(4))
     return simhash_pairs(feat.select(F.col(id_col), packed.alias("simhash")),
                          id_col=id_col, max_hamming=max_hamming, bits=64)
+
+
+def _decode_bmp_builtin(blob: bytes, media_type: str, dim: int) -> np.ndarray:
+    """REAL image decode with no external library, with the stub's
+    signature: struct-parse the actual file bytes (header, padding,
+    bottom-up, BGR), integer-luminance, floor-boundary block means to a
+    ~sqrt(dim) square (INTEGER floor-div means + an exact int64
+    sum-of-squares norm, so the float32 features are bit-reproducible
+    in any engine — the pairwise-summing np.linalg.norm would not be),
+    flatten, pad, L2-normalize."""
+    side = max(1, int(dim ** 0.5))
+    q = _block_means(_bmp_luminance_grid(bytes(blob)), side, side).reshape(-1)
+    arr = q.astype(np.float64)[:dim]
+    if arr.size < dim:
+        arr = np.pad(arr, (0, dim - arr.size))
+    ss = int((q * q).sum())  # exact integer, order-independent
+    denom = math.sqrt(ss) or 1.0
+    return (arr / denom).astype(np.float32)
+
+
+# ---------------------------------------------------------------------------
+# RIFF chunks: one writer and one walker for the WAV and AVI codecs. A
+# chunk is a 4-byte id, a little-endian uint32 size and the body, padded
+# to an even length (the pad byte is not counted in the size).
+
+
+def _riff_chunk(cid: bytes, body: bytes) -> bytes:
+    """One RIFF chunk, its pad byte included."""
+    return (struct.pack("<4sI", cid, len(body)) + body
+            + (b"\x00" if len(body) % 2 else b""))
+
+
+def _riff_chunks(b: bytes, pos: int, end: int):
+    """Walk the chunks of ``b[pos:end]``: yields (id, body offset, size),
+    stepping over each body and its pad byte."""
+    while pos + 8 <= end:
+        cid, csz = struct.unpack_from("<4sI", b, pos)
+        yield cid, pos + 8, csz
+        pos += 8 + csz + (csz % 2)
 
 
 # ---------------------------------------------------------------------------
@@ -590,11 +453,8 @@ WAV_RATE = 16_000
 def _wav_samples(text: str) -> "np.ndarray":
     """Deterministic int16 sample vector for the synthetic clip: block
     k contributes the 16 bytes of md5(head:w:k) as 8 little-endian
-    int16 samples; head = the doc's first 8 lowercase tokens (same
-    base as the BMP path)."""
-    import hashlib
-
-    head = " ".join([t for t in text.lower().split(" ") if t][:8])
+    int16 samples; head = ``_doc_head`` (same base as the BMP path)."""
+    head = _doc_head(text)
     raw = b"".join(hashlib.md5(f"{head}:w:{k}".encode()).digest()
                    for k in range(WAV_BLOCKS))
     return np.frombuffer(raw, dtype="<i2")
@@ -607,24 +467,15 @@ def synth_wav(df: DataFrame, *, text_col: str = "text",
     odd-sized ``junk`` chunk (3 bytes + the RIFF pad byte — parsers
     that forget even-padding desync here), then the ``data`` chunk.
     One Arrow map pass, zero shuffle."""
-    import struct
+    fmt = _riff_chunk(b"fmt ", struct.pack("<HHIIHH", 1, 1, WAV_RATE,
+                                           WAV_RATE * 2, 2, 16))
+    junk = _riff_chunk(b"junk", b"odd")  # 3 bytes + pad
 
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fmt = struct.pack("<4sIHHIIHH", b"fmt ", 16, 1, 1, WAV_RATE,
-                          WAV_RATE * 2, 2, 16)
-        junk = struct.pack("<4sI", b"junk", 3) + b"odd" + b"\x00"  # pad
-        for pdf in batches:
-            blobs = []
-            for text in pdf[text_col].fillna(""):
-                payload = _wav_samples(text).tobytes()
-                data = struct.pack("<4sI", b"data", len(payload)) + payload
-                body = b"WAVE" + fmt + junk + data
-                blobs.append(struct.pack("<4sI", b"RIFF", len(body)) + body)
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": blobs})
+    def audio(did, text):
+        data = _riff_chunk(b"data", _wav_samples(text or "").tobytes())
+        return [(_riff_chunk(b"RIFF", b"WAVE" + fmt + junk + data),)]
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInPandas(
-        _make, schema=f"{id_col} {id_type}, audio binary")
+    return _per_blob(df, id_col, [text_col], "audio binary", audio)
 
 
 def decode_wav_pcm(df: DataFrame, *, audio_col: str = "audio",
@@ -635,44 +486,29 @@ def decode_wav_pcm(df: DataFrame, *, audio_col: str = "audio",
     ``data`` payload as a bare s16le binary column ready for
     ``pcm_window_features`` — plus the parsed sample_rate and
     n_samples. Malformed input raises loudly."""
-    import struct
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, ns, pcms = [], [], [], []
-            for did, blob in zip(pdf[id_col], pdf[audio_col]):
-                b = bytes(blob)
-                magic, _size, form = struct.unpack_from("<4sI4s", b, 0)
-                if magic != b"RIFF" or form != b"WAVE":
-                    raise ValueError(f"doc {did}: not a RIFF/WAVE file")
-                pos, fmt_seen, rate, payload = 12, False, None, None
-                while pos + 8 <= len(b):
-                    cid, csz = struct.unpack_from("<4sI", b, pos)
-                    body = b[pos + 8: pos + 8 + csz]
-                    if cid == b"fmt ":
-                        (audio_fmt, chans, rate, _br, _ba,
-                         bits) = struct.unpack_from("<HHIIHH", body, 0)
-                        if audio_fmt != 1 or chans != 1 or bits != 16:
-                            raise ValueError(
-                                f"doc {did}: unsupported WAV "
-                                f"(fmt={audio_fmt} ch={chans} bits={bits})")
-                        fmt_seen = True
-                    elif cid == b"data":
-                        payload = body
-                    pos += 8 + csz + (csz % 2)  # RIFF pads to even
-                if not fmt_seen or payload is None:
-                    raise ValueError(f"doc {did}: missing fmt/data chunk")
-                ids.append(did)
-                rates.append(rate)
-                ns.append(len(payload) // 2)
-                pcms.append(payload)
-            yield pd.DataFrame({id_col: ids, "sample_rate": rates,
-                                "n_total": ns, "pcm": pcms})
+    def pcm(did, blob):
+        b = bytes(blob)
+        magic, _size, form = struct.unpack_from("<4sI4s", b, 0)
+        if magic != b"RIFF" or form != b"WAVE":
+            raise ValueError("not a RIFF/WAVE file")
+        rate = payload = None
+        for cid, off, csz in _riff_chunks(b, 12, len(b)):
+            if cid == b"fmt ":
+                (audio_fmt, chans, rate, _br, _ba,
+                 bits) = struct.unpack_from("<HHIIHH", b[off:off + csz])
+                if audio_fmt != 1 or chans != 1 or bits != 16:
+                    raise ValueError(
+                        f"unsupported WAV "
+                        f"(fmt={audio_fmt} ch={chans} bits={bits})")
+            elif cid == b"data":
+                payload = b[off:off + csz]
+        if rate is None or payload is None:
+            raise ValueError("missing fmt/data chunk")
+        return [(rate, len(payload) // 2, payload)]
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, audio_col).mapInPandas(
-        _decode, schema=(f"{id_col} {id_type}, sample_rate int, "
-                         "n_total int, pcm binary"))
+    return _per_blob(df, id_col, [audio_col],
+                     "sample_rate int, n_total int, pcm binary", pcm)
 
 
 # ---------------------------------------------------------------------------
@@ -694,9 +530,7 @@ def _avi_frame_hex(text: str, f: int) -> str:
     frame ``f``: row r contributes md5(head:v:f:r)[:16 bytes] +
     md5(head:v:f:r:x)[:2 bytes] — 18 grayscale bytes per row, 16 rows,
     top-down raw '00db' payload (no BMP padding inside frames)."""
-    import hashlib
-
-    head = " ".join([t for t in text.lower().split(" ") if t][:8])
+    head = _doc_head(text)
     out = []
     for r in range(AVI_H):
         h1 = hashlib.md5(f"{head}:v:{f}:{r}".encode()).hexdigest()
@@ -712,45 +546,32 @@ def synth_avi(df: DataFrame, *, text_col: str = "text",
     'vids'/raw strh and a BITMAPINFOHEADER strf), then LIST('movi')
     holding AVI_FRAMES '00db' raw frame chunks with an odd-sized JUNK
     chunk between frames 0 and 1 (padding rule under test)."""
-    import binascii
-    import struct
-
-    def _chunk(cid: bytes, body: bytes) -> bytes:
-        return (struct.pack("<4sI", cid, len(body)) + body
-                + (b"\x00" if len(body) % 2 else b""))
 
     def _list(form: bytes, body: bytes) -> bytes:
-        return _chunk(b"LIST", form + body)
+        return _riff_chunk(b"LIST", form + body)
 
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        avih = struct.pack("<IIIIIIIIIIIIII", 33366, AVI_W * AVI_H * 25,
-                           0, 0, AVI_FRAMES, 0, 1, AVI_W * AVI_H,
-                           AVI_W, AVI_H, 0, 0, 0, 0)
-        strh = struct.pack("<4s4sIHHIIIIIIIIhhhh", b"vids", b"DIB ",
-                           0, 0, 0, 0, 1, 25, 0, AVI_FRAMES,
-                           AVI_W * AVI_H, 0, 0, 0, 0, AVI_W, AVI_H)
-        strf = struct.pack("<IiiHHIIiiII", 40, AVI_W, AVI_H, 1, 8, 0,
-                           AVI_W * AVI_H, 0, 0, 0, 0)
-        hdrl = _list(b"hdrl", _chunk(b"avih", avih)
-                     + _list(b"strl", _chunk(b"strh", strh)
-                             + _chunk(b"strf", strf)))
-        for pdf in batches:
-            blobs = []
-            for text in pdf[text_col].fillna(""):
-                movi_body = b""
-                for f in range(AVI_FRAMES):
-                    movi_body += _chunk(
-                        b"00db",
-                        binascii.unhexlify(_avi_frame_hex(text, f)))
-                    if f == 0:
-                        movi_body += _chunk(b"JUNK", b"odd")  # 3 + pad
-                body = b"AVI " + hdrl + _list(b"movi", movi_body)
-                blobs.append(struct.pack("<4sI", b"RIFF", len(body)) + body)
-            yield pd.DataFrame({id_col: pdf[id_col], "video": blobs})
+    avih = struct.pack("<IIIIIIIIIIIIII", 33366, AVI_W * AVI_H * 25,
+                       0, 0, AVI_FRAMES, 0, 1, AVI_W * AVI_H,
+                       AVI_W, AVI_H, 0, 0, 0, 0)
+    strh = struct.pack("<4s4sIHHIIIIIIIIhhhh", b"vids", b"DIB ",
+                       0, 0, 0, 0, 1, 25, 0, AVI_FRAMES,
+                       AVI_W * AVI_H, 0, 0, 0, 0, AVI_W, AVI_H)
+    strf = struct.pack("<IiiHHIIiiII", 40, AVI_W, AVI_H, 1, 8, 0,
+                       AVI_W * AVI_H, 0, 0, 0, 0)
+    hdrl = _list(b"hdrl", _riff_chunk(b"avih", avih)
+                 + _list(b"strl", _riff_chunk(b"strh", strh)
+                         + _riff_chunk(b"strf", strf)))
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInPandas(
-        _make, schema=f"{id_col} {id_type}, video binary")
+    def video(did, text):
+        movi = b""
+        for f in range(AVI_FRAMES):
+            movi += _riff_chunk(
+                b"00db", binascii.unhexlify(_avi_frame_hex(text or "", f)))
+            if f == 0:
+                movi += _riff_chunk(b"JUNK", b"odd")  # 3 + pad
+        return [(_riff_chunk(b"RIFF", b"AVI " + hdrl + _list(b"movi", movi)),)]
+
+    return _per_blob(df, id_col, [text_col], "video binary", video)
 
 
 def decode_avi_frames(df: DataFrame, *, video_col: str = "video",
@@ -763,129 +584,46 @@ def decode_avi_frames(df: DataFrame, *, video_col: str = "video",
     emit every ``every_k``-th frame's integer mean luminance plus the
     md5 of its hex payload (the cross-engine frame fingerprint).
     Returns (id, frame_idx, width, height, mean_lum, frame_md5)."""
-    import hashlib
-    import struct
-
     if every_k < 1:
         raise ValueError(f"every_k must be >= 1, got {every_k}")
 
-    def _walk(b: bytes, pos: int, end: int):
-        while pos + 8 <= end:
-            cid, csz = struct.unpack_from("<4sI", b, pos)
-            yield cid, pos + 8, csz
-            pos += 8 + csz + (csz % 2)
+    def frames(did, blob):
+        b = bytes(blob)
+        magic, _sz, form = struct.unpack_from("<4sI4s", b, 0)
+        if magic != b"RIFF" or form != b"AVI ":
+            raise ValueError("not an AVI")
+        n_decl = w = h = None
+        payloads: list[bytes] = []
+        for cid, off, csz in _riff_chunks(b, 12, len(b)):
+            if cid != b"LIST":
+                continue
+            form2 = b[off:off + 4]
+            if form2 == b"hdrl":
+                for c2, o2, _s2 in _riff_chunks(b, off + 4, off + csz):
+                    if c2 == b"avih":
+                        vals = struct.unpack_from("<14I", b, o2)
+                        n_decl, w, h = vals[4], vals[8], vals[9]
+            elif form2 == b"movi":
+                for c2, o2, s2 in _riff_chunks(b, off + 4, off + csz):
+                    if c2 == b"00db":
+                        payloads.append(b[o2:o2 + s2])
+        if n_decl is None:
+            raise ValueError("missing avih header")
+        if len(payloads) != n_decl:
+            raise ValueError(f"avih declares {n_decl} frames, "
+                             f"movi holds {len(payloads)}")
+        out = []
+        for fi in range(0, len(payloads), every_k):
+            fr = payloads[fi]
+            if len(fr) != w * h:
+                raise ValueError(f"frame {fi}: {len(fr)} bytes != {w}x{h}")
+            out.append((fi, w, h, int(sum(fr) // len(fr)),
+                        hashlib.md5(fr.hex().encode()).hexdigest()))
+        return out
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (id_col, "frame_idx", "width", "height", "mean_lum",
-                "frame_md5")
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for did, blob in zip(pdf[id_col], pdf[video_col]):
-                b = bytes(blob)
-                magic, _sz, form = struct.unpack_from("<4sI4s", b, 0)
-                if magic != b"RIFF" or form != b"AVI ":
-                    raise ValueError(f"doc {did}: not an AVI")
-                n_decl = w = h = None
-                frames: list[bytes] = []
-                for cid, off, csz in _walk(b, 12, len(b)):
-                    if cid != b"LIST":
-                        continue
-                    form2 = b[off:off + 4]
-                    if form2 == b"hdrl":
-                        for c2, o2, s2 in _walk(b, off + 4, off + csz):
-                            if c2 == b"avih":
-                                vals = struct.unpack_from("<14I", b, o2)
-                                n_decl, w, h = vals[4], vals[8], vals[9]
-                    elif form2 == b"movi":
-                        for c2, o2, s2 in _walk(b, off + 4, off + csz):
-                            if c2 == b"00db":
-                                frames.append(b[o2:o2 + s2])
-                if n_decl is None:
-                    raise ValueError(f"doc {did}: missing avih header")
-                if len(frames) != n_decl:
-                    raise ValueError(
-                        f"doc {did}: avih declares {n_decl} frames, "
-                        f"movi holds {len(frames)}")
-                for fi in range(0, len(frames), every_k):
-                    fr = frames[fi]
-                    if len(fr) != w * h:
-                        raise ValueError(
-                            f"doc {did} frame {fi}: {len(fr)} bytes "
-                            f"!= {w}x{h}")
-                    out[id_col].append(did)
-                    out["frame_idx"].append(fi)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_lum"].append(int(sum(fr) // len(fr)))
-                    out["frame_md5"].append(
-                        hashlib.md5(fr.hex().encode()).hexdigest())
-            yield pd.DataFrame(out)
-            out = {c: [] for c in cols}
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, video_col).mapInPandas(
-        _decode, schema=(f"{id_col} {id_type}, frame_idx int, width int, "
-                         "height int, mean_lum int, frame_md5 string"))
-
-
-def _bmp_luminance_grid(b: bytes) -> "np.ndarray":
-    """Parse a 24bpp bottom-up BI_RGB BMP into its integer luminance
-    grid ((299R + 587G + 114B) // 1000, top-down row-major). Shared by
-    the dHash path and the builtin feature codec; raises on anything
-    that is not the supported variant."""
-    import struct
-
-    magic, _fsize, _r1, _r2, offset = struct.unpack_from("<2sIHHI", b, 0)
-    if magic != b"BM":
-        raise ValueError("not a BMP")
-    (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _cu,
-     _ci) = struct.unpack_from("<IiiHHIIiiII", b, 14)
-    if hsz != 40 or bpp != 24 or comp != 0 or h <= 0:
-        raise ValueError("unsupported BMP variant")
-    row_bytes = (w * 3 + 3) // 4 * 4
-    rows = np.frombuffer(b, dtype=np.uint8, count=h * row_bytes,
-                         offset=offset).reshape(h, row_bytes)
-    px = rows[::-1, :w * 3].reshape(h, w, 3).astype(np.int64)
-    return (299 * px[:, :, 2] + 587 * px[:, :, 1]
-            + 114 * px[:, :, 0]) // 1000
-
-
-def _decode_bmp_builtin(blob: bytes, media_type: str, dim: int) -> np.ndarray:
-    """REAL image decode with no external library — the BMP sibling of
-    ``_decode_pil``, same signature/contract: struct-parse the actual
-    file bytes (header, padding, bottom-up, BGR), integer-luminance,
-    floor-boundary block means to a ~sqrt(dim) square (INTEGER
-    floor-div means + an exact int64 sum-of-squares norm, so the
-    float32 features are bit-reproducible in any engine — the
-    pairwise-summing np.linalg.norm would not be), flatten, pad,
-    L2-normalize."""
-    import math
-
-    grid = _bmp_luminance_grid(bytes(blob))
-    h, w = grid.shape
-    side = max(1, int(dim ** 0.5))
-    q = np.zeros(side * side, dtype=np.int64)
-    for r in range(side):
-        y0, y1 = r * h // side, (r + 1) * h // side
-        for c in range(side):
-            x0, x1 = c * w // side, (c + 1) * w // side
-            n = max((y1 - y0) * (x1 - x0), 1)
-            q[r * side + c] = int(grid[y0:y1, x0:x1].sum()) // n
-    arr = q.astype(np.float64)[:dim]
-    if arr.size < dim:
-        arr = np.pad(arr, (0, dim - arr.size))
-    ss = int((q * q).sum())  # exact integer, order-independent
-    denom = math.sqrt(ss) or 1.0
-    return (arr / denom).astype(np.float32)
-
-
-def _decode_auto_builtin(blob: bytes, media_type: str, dim: int) -> np.ndarray:
-    """'auto' fallback when pillow is absent: REAL decode for BMP blobs
-    (magic-checked), deterministic stub for everything else."""
-    b = bytes(blob)
-    if b[:2] == b"BM":
-        return _decode_bmp_builtin(b, media_type, dim)
-    return _decode_stub(b, media_type, dim)
+    return _per_blob(df, id_col, [video_col],
+                     "frame_idx int, width int, height int, mean_lum int, "
+                     "frame_md5 string", frames)
 
 
 # ---------------------------------------------------------------------------
@@ -901,7 +639,6 @@ def dft_tables(n: int = DFT_N, bins=DFT_BINS):
     half-up. The SAME literal table feeds the Spark kernel and the SQL
     oracle, so engine exactness never depends on two libms agreeing
     about cos — the transform is DEFINED by these integers."""
-    import math
     cos_t, sin_t = {}, {}
     for k in bins:
         cos_t[k] = [int(math.floor(math.cos(2 * math.pi * k * i / n)
@@ -932,43 +669,25 @@ def pcm_dft_band_energy(df: DataFrame, *, blob_col: str = "pcm",
     if not bins:
         raise ValueError("bins must name at least one DFT bin")
     cos_t, sin_t = dft_tables(n, bins)
-    C = np.array([cos_t[k] for k in bins], dtype=np.int64)
-    S = np.array([sin_t[k] for k in bins], dtype=np.int64)
-    bins_arr = np.array(bins, dtype=np.int32)
-    id_type = dict(df.dtypes).get(id_col)
-    if id_type is None:
-        raise ValueError(f"pcm_dft_band_energy: {id_col!r} not in input")
+    # cos rows then sin rows: one int64 product per clip gives re and im
+    basis = np.array([cos_t[k] for k in bins] + [sin_t[k] for k in bins],
+                     dtype=np.int64)
+    bins_list = [int(k) for k in bins]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bn, rm, im_, en = [], [], [], [], []
-            for did, b in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(b)
-                x = np.frombuffer(
-                    b[:len(b) - (len(b) % 2)], dtype="<i2").astype(np.int64)
-                if len(x) < n:            # zero-pad a short clip
-                    x = np.concatenate([x, np.zeros(n - len(x), np.int64)])
-                x = x[:n]
-                re = C @ x                # exact: numpy int64 loop, no BLAS
-                im = S @ x
-                req = np.abs(re) // 1_000_000
-                imq = np.abs(im) // 1_000_000
-                ids.extend([did] * len(bins))
-                bn.extend(bins_arr.tolist())
-                rm.extend(req.tolist())
-                im_.extend(imq.tolist())
-                en.extend((req * req + imq * imq).tolist())
-            yield pd.DataFrame({
-                id_col: pd.Series(ids),
-                "bin": pd.Series(bn, dtype="int32"),
-                "re_mag": pd.Series(rm, dtype="int64"),
-                "im_mag": pd.Series(im_, dtype="int64"),
-                "band_energy": pd.Series(en, dtype="int64"),
-            })
+    def bands(did, b):
+        b = bytes(b)
+        x = np.frombuffer(
+            b[:len(b) - (len(b) % 2)], dtype="<i2").astype(np.int64)[:n]
+        if len(x) < n:  # zero-pad a short clip
+            x = np.concatenate([x, np.zeros(n - len(x), np.int64)])
+        mag = np.abs(basis @ x) // 1_000_000  # exact: int64 loop, no BLAS
+        re, im = mag[:len(bins_list)], mag[len(bins_list):]
+        return zip(bins_list, re.tolist(), im.tolist(),
+                   (re * re + im * im).tolist())
 
-    return df.mapInPandas(_extract, schema=(
-        f"{id_col} {id_type}, bin int, re_mag long, im_mag long, "
-        "band_energy long"))
+    return _per_blob(df, id_col, [blob_col],
+                     "bin int, re_mag long, im_mag long, band_energy long",
+                     bands)
 
 
 def dft_basis_values_sql(n: int = DFT_N, bins=DFT_BINS) -> str:
@@ -1008,52 +727,44 @@ def synth_png(df: DataFrame, *, text_col: str = "text",
     exercised), one zlib DEFLATE stream split across TWO IDAT chunks,
     IEND — every chunk carrying its real CRC-32. One Arrow map pass,
     zero shuffle."""
-    import struct
-    import zlib
 
     def _chunk(typ: bytes, data: bytes) -> bytes:
         return (struct.pack(">I", len(data)) + typ + data
                 + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
 
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sig = b"\x89PNG\r\n\x1a\n"
-        ihdr = struct.pack(">IIBBBBB", PNG_W, PNG_H, 8, 0, 0, 0, 0)
-        for pdf in batches:
-            blobs = []
-            for text in pdf[text_col].fillna(""):
-                v = np.array(_bmp_pixel_rows(text), dtype=np.int64)
-                raw = bytearray()
-                prev = np.zeros(PNG_W, dtype=np.int64)
-                for r in range(PNG_H):
-                    row = v[r]
-                    left = np.concatenate(([0], row[:-1]))
-                    ul = np.concatenate(([0], prev[:-1]))
-                    ft = r % 5
-                    if ft == 0:
-                        flt = row
-                    elif ft == 1:
-                        flt = (row - left) % 256
-                    elif ft == 2:
-                        flt = (row - prev) % 256
-                    elif ft == 3:
-                        flt = (row - (left + prev) // 2) % 256
-                    else:
-                        pr = np.array([_paeth(int(left[c]), int(prev[c]),
-                                              int(ul[c]))
-                                       for c in range(PNG_W)], dtype=np.int64)
-                        flt = (row - pr) % 256
-                    raw.append(ft)
-                    raw.extend(flt.astype(np.uint8).tobytes())
-                    prev = row
-                comp = zlib.compress(bytes(raw), 6)
-                mid = len(comp) // 2  # multi-IDAT concat is under test
-                blobs.append(sig + _chunk(b"IHDR", ihdr)
-                             + _chunk(b"IDAT", comp[:mid])
-                             + _chunk(b"IDAT", comp[mid:])
-                             + _chunk(b"IEND", b""))
-            yield pd.DataFrame({id_col: pdf[id_col], "image": blobs})
+    sig = b"\x89PNG\r\n\x1a\n"
+    ihdr = struct.pack(">IIBBBBB", PNG_W, PNG_H, 8, 0, 0, 0, 0)
 
-    id_type = dict(df.dtypes)[id_col]
+    def image(did, text):
+        v = np.array(_bmp_pixel_rows(text or ""), dtype=np.int64)
+        raw = bytearray()
+        prev = np.zeros(PNG_W, dtype=np.int64)
+        for r in range(PNG_H):
+            row = v[r]
+            left = np.concatenate(([0], row[:-1]))
+            ul = np.concatenate(([0], prev[:-1]))
+            ft = r % 5
+            if ft == 0:
+                flt = row
+            elif ft == 1:
+                flt = (row - left) % 256
+            elif ft == 2:
+                flt = (row - prev) % 256
+            elif ft == 3:
+                flt = (row - (left + prev) // 2) % 256
+            else:
+                pr = np.array([_paeth(int(left[c]), int(prev[c]),
+                                      int(ul[c]))
+                               for c in range(PNG_W)], dtype=np.int64)
+                flt = (row - pr) % 256
+            raw.append(ft)
+            raw.extend(flt.astype(np.uint8).tobytes())
+            prev = row
+        comp = zlib.compress(bytes(raw), 6)
+        mid = len(comp) // 2  # multi-IDAT concat is under test
+        return [(sig + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", comp[:mid])
+                 + _chunk(b"IDAT", comp[mid:]) + _chunk(b"IEND", b""),)]
+
     # r9 (guide §2.5 input-width trap): the PNG codec work (deflate +
     # per-row filters, ~0.6 ms/doc with the decode) is decoupled from
     # the slim (id, text) scan's byte size — a few-MB dimension scan
@@ -1066,8 +777,8 @@ def synth_png(df: DataFrame, *, text_col: str = "text",
     # the spread work — so those keep the narrow scan (same rejection
     # class as the bigram cpu_widen, OPTIMIZATION_r09.md §3).
     from ..operators.topology import cpu_widen
-    return cpu_widen(df.select(id_col, text_col)).mapInPandas(
-        _make, schema=f"{id_col} {id_type}, image binary")
+    return _per_blob(cpu_widen(df.select(id_col, text_col)), id_col,
+                     [text_col], "image binary", image)
 
 
 def decode_png_gray(df: DataFrame, *, image_col: str = "image",
@@ -1080,91 +791,68 @@ def decode_png_gray(df: DataFrame, *, image_col: str = "image",
     facts plus exact integer luminance features: total/min/max and the
     four floor-split quadrant sums — the stats a training-data
     multimodal hygiene pass computes per image."""
-    import struct
-    import zlib
 
-    cols = (id_col, "width", "height", "bit_depth", "n_idat", "lum_sum",
-            "lum_min", "lum_max", "q00", "q01", "q10", "q11")
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # fresh dict per Arrow batch: a function-scope accumulator
-            # with the yield inside the loop re-emits earlier batches'
-            # rows on partitions larger than one Arrow batch
-            out: dict[str, list] = {c: [] for c in cols}
-            for did, blob in zip(pdf[id_col], pdf[image_col]):
-                b = bytes(blob)
-                if b[:8] != b"\x89PNG\r\n\x1a\n":
-                    raise ValueError(f"doc {did}: not a PNG")
-                pos, idats, ihdr, n_idat = 8, [], None, 0
-                while pos < len(b):
-                    (ln,) = struct.unpack_from(">I", b, pos)
-                    typ = b[pos + 4:pos + 8]
-                    data = b[pos + 8:pos + 8 + ln]
-                    (crc,) = struct.unpack_from(">I", b, pos + 8 + ln)
-                    if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
-                        raise ValueError(f"doc {did}: CRC mismatch in "
-                                         f"{typ!r}")
-                    if typ == b"IHDR":
-                        ihdr = struct.unpack(">IIBBBBB", data)
-                    elif typ == b"IDAT":
-                        idats.append(data)
-                        n_idat += 1
-                    elif typ == b"IEND":
-                        break
-                    pos += 12 + ln
-                if ihdr is None:
-                    raise ValueError(f"doc {did}: missing IHDR")
-                w, h, depth, ctype, comp_m, filt_m, interlace = ihdr
-                if depth != 8 or ctype != 0 or comp_m != 0 or filt_m != 0 \
-                        or interlace != 0:
-                    raise ValueError(f"doc {did}: unsupported PNG variant")
-                raw = zlib.decompress(b"".join(idats))
-                if len(raw) != h * (w + 1):
-                    raise ValueError(f"doc {did}: scanline size mismatch")
-                px = np.zeros((h, w), dtype=np.int64)
-                prev = np.zeros(w, dtype=np.int64)
-                for r in range(h):
-                    ft = raw[r * (w + 1)]
-                    f = np.frombuffer(raw, np.uint8, count=w,
-                                      offset=r * (w + 1) + 1).astype(np.int64)
-                    if ft == 0:
-                        row = f
-                    elif ft == 2:
-                        row = (f + prev) % 256
-                    elif ft in (1, 3, 4):
-                        row = np.zeros(w, dtype=np.int64)
-                        for c in range(w):
-                            left = row[c - 1] if c else 0
-                            if ft == 1:
-                                pred = left
-                            elif ft == 3:
-                                pred = (left + prev[c]) // 2
-                            else:
-                                pred = _paeth(int(left), int(prev[c]),
-                                              int(prev[c - 1] if c else 0))
-                            row[c] = (f[c] + pred) % 256
+    def gray(did, blob):
+        b = bytes(blob)
+        if b[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError("not a PNG")
+        pos, idats, ihdr = 8, [], None
+        while pos < len(b):
+            (ln,) = struct.unpack_from(">I", b, pos)
+            typ = b[pos + 4:pos + 8]
+            data = b[pos + 8:pos + 8 + ln]
+            (crc,) = struct.unpack_from(">I", b, pos + 8 + ln)
+            if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
+                raise ValueError(f"CRC mismatch in {typ!r}")
+            if typ == b"IHDR":
+                ihdr = struct.unpack(">IIBBBBB", data)
+            elif typ == b"IDAT":
+                idats.append(data)
+            elif typ == b"IEND":
+                break
+            pos += 12 + ln
+        if ihdr is None:
+            raise ValueError("missing IHDR")
+        w, h, depth, ctype, comp_m, filt_m, interlace = ihdr
+        if depth != 8 or ctype != 0 or comp_m != 0 or filt_m != 0 \
+                or interlace != 0:
+            raise ValueError("unsupported PNG variant")
+        raw = zlib.decompress(b"".join(idats))
+        if len(raw) != h * (w + 1):
+            raise ValueError("scanline size mismatch")
+        px = np.zeros((h, w), dtype=np.int64)
+        prev = np.zeros(w, dtype=np.int64)
+        for r in range(h):
+            ft = raw[r * (w + 1)]
+            f = np.frombuffer(raw, np.uint8, count=w,
+                              offset=r * (w + 1) + 1).astype(np.int64)
+            if ft == 0:
+                row = f
+            elif ft == 2:
+                row = (f + prev) % 256
+            elif ft in (1, 3, 4):
+                row = np.zeros(w, dtype=np.int64)
+                for c in range(w):
+                    left = row[c - 1] if c else 0
+                    if ft == 1:
+                        pred = left
+                    elif ft == 3:
+                        pred = (left + prev[c]) // 2
                     else:
-                        raise ValueError(f"doc {did}: bad filter {ft}")
-                    px[r] = row
-                    prev = row
-                hr, wc = h // 2, (w + 1) // 2
-                out[id_col].append(did)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(depth)
-                out["n_idat"].append(n_idat)
-                out["lum_sum"].append(int(px.sum()))
-                out["lum_min"].append(int(px.min()))
-                out["lum_max"].append(int(px.max()))
-                out["q00"].append(int(px[:hr, :wc].sum()))
-                out["q01"].append(int(px[:hr, wc:].sum()))
-                out["q10"].append(int(px[hr:, :wc].sum()))
-                out["q11"].append(int(px[hr:, wc:].sum()))
-            yield pd.DataFrame(out)
+                        pred = _paeth(int(left), int(prev[c]),
+                                      int(prev[c - 1] if c else 0))
+                    row[c] = (f[c] + pred) % 256
+            else:
+                raise ValueError(f"bad filter {ft}")
+            px[r] = row
+            prev = row
+        hr, wc = h // 2, (w + 1) // 2
+        return [(w, h, depth, len(idats), int(px.sum()), int(px.min()),
+                 int(px.max()), int(px[:hr, :wc].sum()),
+                 int(px[:hr, wc:].sum()), int(px[hr:, :wc].sum()),
+                 int(px[hr:, wc:].sum()))]
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.mapInPandas(_decode, schema=(
-        f"{id_col} {id_type}, width int, height int, bit_depth int, "
-        "n_idat int, lum_sum long, lum_min int, lum_max int, "
-        "q00 long, q01 long, q10 long, q11 long"))
+    return _per_blob(df, id_col, [image_col],
+                     "width int, height int, bit_depth int, n_idat int, "
+                     "lum_sum long, lum_min int, lum_max int, q00 long, "
+                     "q01 long, q10 long, q11 long", gray)

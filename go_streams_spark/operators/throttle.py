@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -97,7 +98,9 @@ def _token_bucket(df: DataFrame, rate_micro_per_sec: int, burst_micro: int,
                   cost_micro: int, ts_col: str) -> tuple:
     """The token-bucket step of the per-key fold core (state: micro-tokens
     and the last-seen second, null before the key's first event) and its
-    output schema, for ``token_bucket_admit`` and ``token_bucket_stream``."""
+    output schema, for ``token_bucket_admit`` and ``token_bucket_stream``.
+    A row with a null ts gets a null decision and balance and leaves its
+    key's bucket as it was."""
     if rate_micro_per_sec < 0 or burst_micro < 1 or cost_micro < 1:
         raise ValueError(
             "need rate_micro_per_sec >= 0, burst_micro >= 1, "
@@ -110,10 +113,14 @@ def _token_bucket(df: DataFrame, rate_micro_per_sec: int, burst_micro: int,
 
     def step(key, rows, state):
         tokens, last = (burst_micro, None) if state is None else state
-        secs = (rows[ts_col].astype("datetime64[ns]").view("int64")
-                // 1_000_000_000).tolist()
+        ts = rows[ts_col].astype("datetime64[ns]")
+        secs = (ts.view("int64") // 1_000_000_000).tolist()
         admitted, after = [], []
-        for s in secs:
+        for s, null in zip(secs, np.isnat(ts)):
+            if null:
+                admitted.append(None)
+                after.append(None)
+                continue
             if last is not None:
                 tokens = min(burst_micro,
                              tokens + (s - last) * rate_micro_per_sec)
@@ -123,9 +130,12 @@ def _token_bucket(df: DataFrame, rate_micro_per_sec: int, burst_micro: int,
                 tokens -= cost_micro
             admitted.append(ok)
             after.append(tokens)
-        return (tokens, last), {**{c: rows[c] for c in cols},
-                                "admitted": admitted,
-                                "tokens_after_micro": after}
+        # object only when a null is present: a float64 column would
+        # round the balances through 2**53
+        return (tokens, last), {
+            **{c: rows[c] for c in cols}, "admitted": admitted,
+            "tokens_after_micro": np.array(
+                after, dtype=object if None in after else np.int64)}
 
     return step, out_schema
 

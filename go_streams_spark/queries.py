@@ -2572,9 +2572,10 @@ FROM n
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stubbed decode/feature-extract over binary media via mapInPandas —
     real Arrow plumbing (schema, batch shape, partition parallelism),
-    deterministic fake features (no codec libs in this container). The
-    stub feature is a pure function of the leading bytes (float64 math,
-    float32 storage), so the oracle reproduces it exactly in SQL —
+    deterministic fake features (no text blob starts with ``BM``, so
+    no row takes the BMP decode). The stub feature is a pure function
+    of the leading bytes (float64 math, float32 storage), so the oracle
+    reproduces it exactly in SQL —
     byte extraction, L2 norm, ::REAL cast (documents are ASCII, so
     ascii(substr) == byte; non-ASCII corpora would need a blob
     get-byte)."""
@@ -10831,8 +10832,9 @@ GROUP BY q.doc_id
 def multimodal_features_real_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The generic media-feature pipeline running a REAL in-container
     decode end to end: synth actual BMP files -> magic-byte sniff tags
-    them image/bmp -> ``extract_features(codec='bmp')`` struct-parses
-    the bytes and emits floor-boundary block-mean luminance features
+    them image/bmp -> ``extract_features`` (the one decode rule: an
+    image blob starting with ``BM``) struct-parses the bytes and emits
+    floor-boundary block-mean luminance features
     (integer means + exact int64 norm, so the float32 vector is
     engine-reproducible). The oracle re-derives the features from the
     pixel math — the whole write->sniff->parse->featurize chain must be
@@ -10842,7 +10844,7 @@ def multimodal_features_real_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.multimodal import (attach_media_metadata,
                                        extract_features, synth_bmp)
     media = attach_media_metadata(synth_bmp(docs), blob_col="image")
-    feats = extract_features(media, blob_col="image", dim=16, codec="bmp")
+    feats = extract_features(media, blob_col="image", dim=16)
 
     def f(i):
         return F.round(F.element_at("feature", i + 1).cast("double"), 4) \

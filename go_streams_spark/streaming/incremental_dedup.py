@@ -33,6 +33,8 @@ is a key-width semi-join; nothing is ever collected to the driver.
 from __future__ import annotations
 
 import os
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +51,48 @@ def batch_band_keys(df: DataFrame, *, text_col: str = "text",
     return D.band_rows(wide, id_col=id_col, rows_per_band=rows_per_band)
 
 
+def _filter_step(batch_df: DataFrame, state: DataFrame | None, id_col: str,
+                 pairs: DataFrame, band_keys: Callable
+                 ) -> tuple[DataFrame, DataFrame]:
+    """The one incremental step: returns (kept rows, kept band keys).
+
+    Within the batch, the verified near-dup ``pairs`` go through
+    connected components and every component keeps its min id; then
+    ``band_keys(kept)`` rows that collide with the band-key ``state`` of
+    previously kept rows drop their rows."""
+    comps = D.connected_components(pairs)
+    losers = (comps.where(F.col("id") != F.col("component"))
+              .select(F.col("id").alias(id_col)))
+    kept = batch_df.join(losers, id_col, "left_anti")
+    bands = band_keys(kept)
+    if state is not None:
+        colliding = (bands.join(state.hint("shuffle_hash"),
+                                ["band", "band_key"], "left_semi")
+                     .select(id_col).distinct())
+        kept = kept.join(colliding, id_col, "left_anti")
+        bands = bands.join(colliding, id_col, "left_anti")
+    return kept, bands.select("band", "band_key")
+
+
+def _sink(spark, state_dir: str, out_dir: str, step: Callable):
+    """foreachBatch body running ``step(batch_df, state)`` with parquet
+    band-key state."""
+
+    def process(batch_df: DataFrame, batch_id: int):
+        state = None
+        if os.path.isdir(state_dir) and any(
+                f.endswith(".parquet") for _, _, fs in os.walk(state_dir)
+                for f in fs):
+            state = spark.read.parquet(state_dir)
+        kept, new_bands = step(batch_df, state)
+        # per-batch output dir overwrite => idempotent under replay
+        (kept.write.mode("overwrite")
+             .parquet(os.path.join(out_dir, f"batch_id={batch_id}")))
+        new_bands.write.mode("append").parquet(state_dir)
+
+    return process
+
+
 def near_dup_filter_batch(batch_df: DataFrame, state: DataFrame | None, *,
                           text_col: str = "text", id_col: str = "doc_id",
                           ngram: int = 3, threshold: float = 0.5,
@@ -61,26 +105,13 @@ def near_dup_filter_batch(batch_df: DataFrame, state: DataFrame | None, *,
     then drops docs colliding with the band-key ``state`` of previously
     kept docs.
     """
-    # within-batch: exact near-dup pairs -> components -> keep min id
     pairs = D.ngram_jaccard_pairs(batch_df, text_col=text_col, id_col=id_col,
                                   ngram=ngram, threshold=threshold,
                                   num_hashes=num_hashes,
                                   rows_per_band=rows_per_band)
-    comps = D.connected_components(pairs)
-    losers = (comps.where(F.col("id") != F.col("component"))
-              .select(F.col("id").alias(id_col)))
-    batch_kept = batch_df.join(losers, id_col, "left_anti")
-
-    bands = batch_band_keys(batch_kept, text_col=text_col, id_col=id_col,
-                            ngram=ngram, num_hashes=num_hashes,
-                            rows_per_band=rows_per_band)
-    if state is not None:
-        colliding = (bands.join(state.hint("shuffle_hash"),
-                                ["band", "band_key"], "left_semi")
-                     .select(id_col).distinct())
-        batch_kept = batch_kept.join(colliding, id_col, "left_anti")
-        bands = bands.join(colliding, id_col, "left_anti")
-    return batch_kept, bands.select("band", "band_key")
+    return _filter_step(batch_df, state, id_col, pairs, partial(
+        batch_band_keys, text_col=text_col, id_col=id_col, ngram=ngram,
+        num_hashes=num_hashes, rows_per_band=rows_per_band))
 
 
 def incremental_near_dup_sink(spark, *, state_dir: str, out_dir: str,
@@ -90,23 +121,10 @@ def incremental_near_dup_sink(spark, *, state_dir: str, out_dir: str,
     """foreachBatch body running the incremental step with parquet
     state. Use: ``stream.writeStream.foreachBatch(incremental_near_dup_
     sink(spark, ...)).option("checkpointLocation", ...)``."""
-
-    def process(batch_df: DataFrame, batch_id: int):
-        state = None
-        if os.path.isdir(state_dir) and any(
-                f.endswith(".parquet") for _, _, fs in os.walk(state_dir)
-                for f in fs):
-            state = spark.read.parquet(state_dir)
-        kept, new_bands = near_dup_filter_batch(
-            batch_df, state, text_col=text_col, id_col=id_col, ngram=ngram,
-            threshold=threshold, num_hashes=num_hashes,
-            rows_per_band=rows_per_band)
-        # per-batch output dir overwrite => idempotent under replay
-        (kept.write.mode("overwrite")
-             .parquet(os.path.join(out_dir, f"batch_id={batch_id}")))
-        new_bands.write.mode("append").parquet(state_dir)
-
-    return process
+    return _sink(spark, state_dir, out_dir, partial(
+        near_dup_filter_batch, text_col=text_col, id_col=id_col,
+        ngram=ngram, threshold=threshold, num_hashes=num_hashes,
+        rows_per_band=rows_per_band))
 
 
 def embedding_band_keys(df: DataFrame, *, vec_col: str = "embedding",
@@ -138,25 +156,13 @@ def embedding_near_dup_filter_batch(batch_df: DataFrame,
     (candidate-level, same documented precision bound as the text
     variant — history keeps band keys, not vectors).
     """
-    from ..functions import dedup as D
     from ..functions import similarity as S
     pairs = S.cosine_near_dup_lsh(batch_df, id_col=id_col, vec_col=vec_col,
                                   threshold=threshold, nbits=nbits,
                                   max_band_hamming=max_band_hamming)
-    comps = D.connected_components(pairs)
-    losers = (comps.where(F.col("id") != F.col("component"))
-              .select(F.col("id").alias(id_col)))
-    kept = batch_df.join(losers, id_col, "left_anti")
-    bands = embedding_band_keys(kept, vec_col=vec_col, id_col=id_col,
-                                nbits=nbits,
-                                max_band_hamming=max_band_hamming)
-    if state is not None:
-        colliding = (bands.join(state.hint("shuffle_hash"),
-                                ["band", "band_key"], "left_semi")
-                     .select(id_col).distinct())
-        kept = kept.join(colliding, id_col, "left_anti")
-        bands = bands.join(colliding, id_col, "left_anti")
-    return kept, bands.select("band", "band_key")
+    return _filter_step(batch_df, state, id_col, pairs, partial(
+        embedding_band_keys, vec_col=vec_col, id_col=id_col, nbits=nbits,
+        max_band_hamming=max_band_hamming))
 
 
 def incremental_embedding_dedup_sink(spark, *, state_dir: str, out_dir: str,
@@ -168,19 +174,7 @@ def incremental_embedding_dedup_sink(spark, *, state_dir: str, out_dir: str,
     """foreachBatch body for continuous embedding near-dedup with
     parquet band-key state — same replay-idempotence contract as
     ``incremental_near_dup_sink``."""
-
-    def process(batch_df: DataFrame, batch_id: int):
-        state = None
-        if os.path.isdir(state_dir) and any(
-                f.endswith(".parquet") for _, _, fs in os.walk(state_dir)
-                for f in fs):
-            state = spark.read.parquet(state_dir)
-        kept, new_bands = embedding_near_dup_filter_batch(
-            batch_df, state, vec_col=vec_col, id_col=id_col,
-            threshold=threshold, nbits=nbits,
-            max_band_hamming=max_band_hamming)
-        (kept.write.mode("overwrite")
-             .parquet(os.path.join(out_dir, f"batch_id={batch_id}")))
-        new_bands.write.mode("append").parquet(state_dir)
-
-    return process
+    return _sink(spark, state_dir, out_dir, partial(
+        embedding_near_dup_filter_batch, vec_col=vec_col, id_col=id_col,
+        threshold=threshold, nbits=nbits,
+        max_band_hamming=max_band_hamming))

@@ -255,143 +255,62 @@ def test_lang_id_other_languages(spark):
 
 
 def test_multimodal_plumbing(spark):
+    """The one decode rule: a BMP image blob gets the BMP parser, a
+    truncated BMP falls back to the stub (and fails decode_bmp_dhash
+    loudly with its doc id), every other blob gets the stub. The output
+    id keeps the input id's name and type in extract_features and
+    sample_frames."""
+    import struct
+
+    import numpy as np
     png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 64
     jpg = b"\xff\xd8\xff\xe0" + b"\x01" * 64
-    df = spark.createDataFrame([(1, bytearray(png)), (2, bytearray(jpg))],
-                               "doc_id long, media binary")
+    row = bytes([10, 20, 30, 40, 50, 60]) + b"\0\0"  # 2 BGR px + pad
+    bmp = (struct.pack("<2sIHHI", b"BM", 54 + 2 * len(row), 0, 0, 54)
+           + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, 2 * len(row),
+                         0, 0, 0, 0) + row + row[::-1][2:] + b"\0\0")
+    truncated = b"BM1234"
+    df = spark.createDataFrame(
+        [(1, bytearray(png)), (2, bytearray(jpg)), (3, bytearray(bmp)),
+         (4, bytearray(truncated))], "doc_id long, media binary")
     meta = M.attach_media_metadata(df)
     types = {r["doc_id"]: r["media_type"] for r in meta.collect()}
-    assert types == {1: "image/png", 2: "image/jpeg"}
+    assert types == {1: "image/png", 2: "image/jpeg", 3: "image/bmp",
+                     4: "image/bmp"}
     feats = M.extract_features(meta, dim=8).collect()
-    assert len(feats) == 2
+    assert len(feats) == 4
     assert all(len(r["feature"]) == 8 for r in feats)
+    got = {r["doc_id"]: r["feature"] for r in feats}
+    want = {1: M._decode_stub(png, "image/png", 8),
+            2: M._decode_stub(jpg, "image/jpeg", 8),
+            3: M._decode_bmp_builtin(bmp, "image/bmp", 8),
+            4: M._decode_stub(truncated, "image/bmp", 8)}
+    for i, w in want.items():
+        assert np.array_equal(np.array(got[i], dtype=np.float32), w), i
+    assert not np.array_equal(want[3], M._decode_stub(bmp, "image/bmp", 8))
     # deterministic: same media -> same feature
     again = M.extract_features(meta, dim=8).collect()
     assert sorted(map(str, feats)) == sorted(map(str, again))
+    with pytest.raises(ValueError, match="truncated"):
+        M._bmp_luminance_grid(truncated)
+    with pytest.raises(Exception, match="doc 4: truncated BMP"):
+        M.decode_bmp_dhash(df.where("doc_id = 4"), image_col="media").collect()
+
+    keyed = spark.createDataFrame([("a", bytearray(jpg))],
+                                  "key string, media binary")
+    out = M.extract_features(M.attach_media_metadata(keyed, id_col="key"),
+                             id_col="key", dim=8)
+    assert out.columns[0] == "key" and out.dtypes[0] == ("key", "string")
+    assert [r["key"] for r in out.collect()] == ["a"]
+    frames = M.sample_frames(keyed, id_col="key", frame_size=16)
+    assert frames.dtypes[0] == ("key", "string")
+    assert [(r["key"], r["frame_idx"]) for r in frames.collect()] == \
+        [("a", 0), ("a", 2)]
 
 
 def test_multimodal_decode_stub_raises():
     with pytest.raises(NotImplementedError):
         M._decode_stub(b"x", "unsupported/raise", 4)
-
-
-def test_multimodal_codec_selection():
-    """codec='stub' always picks the stub; codec='bmp' forces the
-    builtin struct decoder; codec='auto' picks pillow only when
-    importable (not baked into this container) and otherwise falls back
-    to the builtin BMP-aware decoder (round 7: real decode for BMP
-    magic, stub for everything else) — never raises at selection
-    time."""
-    assert M._pick_decoder("stub") is M._decode_stub
-    assert M._pick_decoder("bmp") is M._decode_bmp_builtin
-    try:
-        import PIL  # noqa: F401
-        assert M._pick_decoder("auto") is M._decode_pil
-    except ImportError:
-        assert M._pick_decoder("auto") is M._decode_auto_builtin
-
-
-def test_multimodal_real_pil_decode(spark):
-    """Real image decode path — runs wherever pillow exists (any real
-    cluster image; skipped in this codec-free container). A genuine
-    8x8 PNG goes through decode -> grayscale -> resize -> normalized
-    feature, end to end through the same mapInPandas plumbing as the
-    stub, mixed with a non-image row that falls back to the stub."""
-    pytest.importorskip("PIL")
-    import io as _io
-
-    from PIL import Image
-    buf = _io.BytesIO()
-    Image.frombytes("L", (8, 8), bytes(range(64))).save(buf, format="PNG")
-    png = buf.getvalue()
-    wav = b"RIFF" + b"\x02" * 64
-    df = spark.createDataFrame([(1, bytearray(png)), (2, bytearray(wav))],
-                               "doc_id long, media binary")
-    feats = {r["doc_id"]: r["feature"] for r in M.extract_features(
-        M.attach_media_metadata(df), dim=16, codec="auto").collect()}
-    assert len(feats[1]) == 16 and len(feats[2]) == 16
-    # the PIL path is a real decode of the pixel ramp: normalized,
-    # nonnegative, strictly increasing along the first row
-    v = feats[1]
-    assert abs(sum(x * x for x in v) - 1.0) < 1e-3
-    assert v[:4] == sorted(v[:4])
-    # the wav row matches the stub exactly (fallback is byte-identical)
-    import numpy as np
-    assert np.allclose(feats[2], M._decode_stub(wav, "audio/wav", 16))
-
-
-def test_video_frame_sampler_selection():
-    """codec='stub' always byte-slices; codec='auto' picks PyAV only
-    when importable (not baked into this container) and falls back to
-    slicing otherwise — never raises at selection time."""
-    assert M._pick_frame_sampler("stub") is M._slice_frames
-    try:
-        import av  # noqa: F401
-        assert M._pick_frame_sampler("auto") is M._av_frames
-    except ImportError:
-        assert M._pick_frame_sampler("auto") is M._slice_frames
-
-
-def test_video_real_av_decode(spark):
-    """Real video decode path — runs wherever PyAV exists (any real
-    cluster video task; skipped in this codec-free container). A tiny
-    mp4 encoded in-memory round-trips through demux -> decode ->
-    grayscale raster frames via the same mapInPandas plumbing as the
-    stub, mixed with a non-video row that falls back to byte slicing."""
-    av = pytest.importorskip("av")
-    import io as _io
-
-    import numpy as np
-
-    buf = _io.BytesIO()
-    with av.open(buf, "w", format="mp4") as container:
-        stream = container.add_stream("mpeg4", rate=4)
-        stream.width, stream.height = 16, 16
-        for i in range(6):
-            arr = np.full((16, 16, 3), i * 20, dtype=np.uint8)
-            frame = av.VideoFrame.from_ndarray(arr, format="rgb24")
-            for pkt in stream.encode(frame):
-                container.mux(pkt)
-        for pkt in stream.encode():
-            container.mux(pkt)
-    mp4 = buf.getvalue()
-    assert M._looks_like_video(mp4)
-    blob = b"not-a-video-" + b"\x07" * 100
-    df = spark.createDataFrame([(1, bytearray(mp4)), (2, bytearray(blob))],
-                               "doc_id long, media binary")
-    rows = M.sample_frames(df, frame_size=16, every_k=2, max_frames=3,
-                           codec="auto").collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # video doc: every-2nd decoded frame, capped at 3, 16-byte rasters
-    assert [r["frame_idx"] for r in by_doc[1]] == [0, 2, 4]
-    assert all(len(bytes(r["frame"])) == 16 for r in by_doc[1])
-    # the decoded constant-gray frames brighten over time (i*20 ramp)
-    means = [np.frombuffer(bytes(r["frame"]), dtype=np.uint8).mean()
-             for r in sorted(by_doc[1], key=lambda r: r["frame_idx"])]
-    assert means[0] < means[1] < means[2]
-    # the non-video row is byte-identical to the stub slicing
-    expect = M._slice_frames(blob, 16, 2, 3)
-    got = [(r["frame_idx"], bytes(r["frame"]))
-           for r in sorted(by_doc[2], key=lambda r: r["frame_idx"])]
-    assert got == expect
-
-
-def test_video_forced_av_without_pyav_raises(spark):
-    """codec='av' is an explicit request for real decode: when PyAV is
-    missing the task must FAIL (eager import in _pick_frame_sampler),
-    not silently slice bytes. Runs only in PyAV-free environments like
-    this container."""
-    try:
-        import av  # noqa: F401
-        pytest.skip("PyAV present — the forced path decodes for real")
-    except ImportError:
-        pass
-    df = spark.createDataFrame([(1, bytearray(b"\x1aE\xdf\xa3" + b"\x00" * 64))],
-                               "doc_id long, media binary")
-    with pytest.raises(Exception, match="av|ImportError|ModuleNotFound"):
-        M.sample_frames(df, codec="av").collect()
 
 
 def test_connected_components_nonconvergence_is_loud(spark):
@@ -416,24 +335,6 @@ def test_connected_components_nonconvergence_is_loud(spark):
     assert {r["component"] for r in full} == {0}
     with pytest.raises(ValueError):
         connected_components(path, on_nonconverged="explode")
-
-
-def test_multimodal_forced_pil_without_pillow_raises(spark):
-    """codec='pil' is an explicit request for real decode: when pillow
-    is missing the task must FAIL (eager import in _pick_decoder), not
-    silently quarantine every row to stub features. Runs only in
-    pillow-free environments like this container; the happy path is
-    covered by test_multimodal_real_pil_decode elsewhere."""
-    try:
-        import PIL  # noqa: F401
-        pytest.skip("pillow present — the forced path decodes for real")
-    except ImportError:
-        pass
-    df = spark.createDataFrame([(1, bytearray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16))],
-                               "doc_id long, media binary")
-    with pytest.raises(Exception, match="PIL|ImportError|ModuleNotFound"):
-        M.extract_features(M.attach_media_metadata(df), dim=4,
-                           codec="pil").collect()
 
 
 def test_connected_components(spark):
@@ -1007,23 +908,6 @@ def test_k_core_peel_and_convergence_contract(spark):
     assert len(partial) >= 3  # best-effort superset of the true core
     # k above the max degree peels everything
     assert k_core(g, k=5).count() == 0
-
-
-def test_video_sniff_covers_common_containers():
-    """The routing sniff recognizes webm/EBML, mp4 ftyp, RIFF-AVI, FLV
-    and aligned MPEG-TS sync bytes — and does NOT fire on text that
-    merely starts with 'G' (a single 0x47 would)."""
-    s = M._looks_like_video
-    assert s(b"\x1aE\xdf\xa3" + b"\0" * 16)                  # webm/mkv
-    assert s(b"\0\0\0\x20ftypisom" + b"\0" * 8)              # mp4
-    assert s(b"RIFF\x10\x00\x00\x00AVI LIST" + b"\0" * 8)    # avi
-    assert s(b"FLV\x01\x05" + b"\0" * 16)                    # flv
-    ts = bytearray(b"\0" * 200)
-    ts[0] = 0x47
-    ts[188] = 0x47
-    assert s(bytes(ts))                                      # mpeg-ts
-    assert not s(b"G'day, this is just text that is fairly long" * 8)
-    assert not s(b"RIFF\x10\x00\x00\x00WAVEfmt " + b"\0" * 8)  # wav != avi
 
 
 def test_label_propagation_two_cliques(spark):
@@ -2384,6 +2268,11 @@ def test_wav_codec_chunk_walk_and_validation(spark):
                                 "doc_id bigint, audio binary")
     with _pt.raises(Exception, match="unsupported WAV"):
         decode_wav_pcm(sdf).collect()
+    # a blob shorter than the RIFF header fails with its doc id
+    short = spark.createDataFrame([(7, bytearray(b"RIFF"))],
+                                  "doc_id bigint, audio binary")
+    with _pt.raises(Exception, match="doc 7: unpack_from requires"):
+        decode_wav_pcm(short).collect()
 
 
 def test_avi_codec_nested_walk_and_validation(spark):

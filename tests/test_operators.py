@@ -552,6 +552,30 @@ def test_token_bucket_burst_and_refill(spark):
         token_bucket_admit(df, rate_micro_per_sec=1, burst_micro=0)
 
 
+def test_token_bucket_null_ts_keeps_bucket(spark):
+    """A null ts gives a null decision and balance, and the key's
+    bucket stays as it was: the other rows' decisions equal those of
+    the same rows without the null ones."""
+    import datetime as dt
+    from go_streams_spark.operators.throttle import token_bucket_admit
+    base = dt.datetime(2024, 1, 1)
+    rows = [(1, i, base + dt.timedelta(seconds=s))
+            for i, s in enumerate((0, 1, 2, 60, 61))]
+    nulls = [(1, 9, None), (2, 10, None)]
+    schema = "user_id long, event_id long, ts timestamp"
+
+    def admit(rs):
+        return {r["event_id"]: (r["admitted"], r["tokens_after_micro"])
+                for r in token_bucket_admit(
+                    spark.createDataFrame(rs, schema),
+                    rate_micro_per_sec=20_000,
+                    burst_micro=3_000_000).collect()}
+
+    got = admit(rows + nulls)
+    assert got[9] == got[10] == (None, None)
+    assert {e: got[e] for e in range(5)} == admit(rows)
+
+
 def test_join_delta_equals_bag_difference(spark):
     """The incremental-maintenance identity on a hand case with
     duplicate keys: three-term delta == new_join bag-minus old_join,

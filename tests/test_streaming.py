@@ -965,6 +965,48 @@ def test_token_bucket_stream_matches_batch(spark, tmp_path):
     assert got == want and len(got) == len(rows)
 
 
+def test_token_bucket_stream_null_ts_matches_batch(spark, tmp_path):
+    """A null-ts row gets a null decision and balance and leaves its
+    key's bucket as it was, in the stream as in the batch fold: the
+    null row sits in the first micro-batch, so a bucket it corrupted
+    would refill the second micro-batch's rows from a bogus last-seen
+    second."""
+    import datetime as dt
+    from go_streams_spark.operators.throttle import token_bucket_admit
+    from go_streams_spark.streaming.stateful import token_bucket_stream
+
+    base = dt.datetime(2024, 1, 1)
+    first = [(1, e, base + dt.timedelta(seconds=e)) for e in range(3)]
+    first += [(1, 9, None), (2, 10, None)]
+    second = [(1, 20, base + dt.timedelta(seconds=60)),
+              (1, 21, base + dt.timedelta(seconds=61)),
+              (2, 22, base + dt.timedelta(seconds=5))]
+    schema = "user_id long, event_id long, ts timestamp"
+    d = str(tmp_path / "tbn")
+    for rows in (first, second):
+        spark.createDataFrame(rows, schema).coalesce(1).write \
+            .mode("append").parquet(d)
+
+    src = file_stream_source(spark, d, fmt="parquet", schema=schema,
+                             maxFilesPerTrigger="1")
+    out = token_bucket_stream(src, rate_micro_per_sec=20_000,
+                              burst_micro=3_000_000)
+    q = (out.writeStream.format("memory").queryName("tb_null")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = {r["event_id"]: (r["admitted"], r["tokens_after_micro"])
+           for r in spark.table("tb_null").collect()}
+    want = {r["event_id"]: (r["admitted"], r["tokens_after_micro"])
+            for r in token_bucket_admit(
+                spark.createDataFrame(first + second, schema),
+                rate_micro_per_sec=20_000,
+                burst_micro=3_000_000).collect()}
+    assert got == want and len(got) == len(first) + len(second)
+    assert got[9] == got[10] == (None, None)
+    # the refill at 60 s starts from the 2 s event: 58 s x 20,000
+    assert got[20] == (True, 40_000 + 58 * 20_000 - 1_000_000)
+
+
 def test_holt_winters_stream_cross_batch_parity(spark, tmp_path):
     """holt_winters_stream matches the batch fold minus each key's
     FINAL slot (the append-mode open-slot hold), with the model state —
