@@ -13,6 +13,12 @@ Design for 100 TB:
     pairs are pigeonhole band candidates whose hamming distance <= k.
     Every banded candidate set (MinHash, SimHash, dHash, sign-LSH)
     comes from one self equi-join, ``_band_pairs``.
+  - Set-similarity joins have one path per job: ``ngram_jaccard_pairs``
+    (MinHash-LSH candidates -> lossless length filter -> exact verify,
+    the memory-safe order) and ``prefix_filter_pairs`` (exact PPJoin,
+    complete by construction). ``containment_pairs`` shares PPJoin's
+    rarity-prefix body, ``_rarity_prefix``. Every prune in front of the
+    4-dp Jaccard verify reads one floor, ``_verify_floor_micro``.
 
 All hashing is md5-based so results are bit-identical to the DuckDB
 oracle SQL.
@@ -20,6 +26,7 @@ oracle SQL.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -104,8 +111,8 @@ def minhash_wide(shingles: DataFrame, *, id_col: str = "doc_id",
 
     ``with_count=True`` adds the per-doc shingle-set size as column
     ``c`` — one more aggregate in the SAME pass, so consumers that
-    need sizes (setsim's length filter) stop paying a separate count
-    aggregate + per-side join (guide §2.4).
+    need sizes (the length filter of ``ngram_jaccard_pairs``) stop
+    paying a separate count aggregate + per-side join (guide §2.4).
     """
     d = F.md5("s")
     h1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long")
@@ -213,8 +220,8 @@ def minhash_lsh_candidates(df: DataFrame, *, text_col: str = "text",
 
     ``with_sizes=True`` adds ``ca``/``cb`` (each side's shingle-set
     size) to every pair: the size is aggregated in the SAME pass as
-    the signature and rides the band rows, so consumers needing a
-    length filter (setsim) skip a count aggregate and two joins of the
+    the signature and rides the band rows, so the length filter of
+    ``ngram_jaccard_pairs`` skips a count aggregate and two joins of the
     candidate table (guide §2.4). The pair set is identical — sizes
     are functionally dependent on the ids, so the wider distinct
     dedups the same (id_a, id_b) space.
@@ -266,20 +273,92 @@ def _pair_overlap(candidates: DataFrame, sh: DataFrame, *,
                     F.size("__ssb").alias("cb")))
 
 
-def jaccard_verify(df: DataFrame, candidates: DataFrame, *, text_col: str = "text",
-                   id_col: str = "doc_id", ngram: int = 3,
-                   threshold: float = 0.5,
-                   shingles: DataFrame | None = None) -> DataFrame:
+def _verify_floor_micro(threshold: float) -> int:
+    """The smallest Jaccard ``_jaccard_verify`` keeps, in integer
+    micro-units: the one floor every prune in front of it reads.
+
+    The verify keeps ``round(J, 4) >= t`` (half-up), which is every
+    J >= ceil4(t) - 0.00005, with ceil4(t) = t rounded UP to 4
+    decimals. A prefix or length filter derived from t itself is
+    lossless only for J >= t and drops the pairs in
+    [t - 0.00005, t) that the verify and the brute-force oracle keep:
+    5,000 shared 3-grams of a 5,000-gram and a 10,001-gram doc give
+    J = 0.49995, which rounds to 0.5.
+    """
+    if not (0.0 < threshold <= 1.0):
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    return math.ceil(round(threshold * 10_000, 6)) * 100 - 50
+
+
+def _length_filter(floor_micro: int) -> Column:
+    """The All-Pairs length bound over a pair's set sizes ``ca``/``cb``:
+    J >= f implies f * max(|A|,|B|) <= min(|A|,|B|). Exact integers,
+    so lossless down to the verify floor ``floor_micro`` (id order is
+    not size order, hence least/greatest)."""
+    return (F.least("ca", "cb") * 1_000_000
+            >= F.lit(floor_micro) * F.greatest("ca", "cb"))
+
+
+def _rarity_prefix(sh: DataFrame, *, id_col: str,
+                   min_ratio_micro: int) -> DataFrame:
+    """(id, s, sf, c) rarity-prefix rows of the shingle rows ``sh``, pinned:
+    the blocking body of PPJoin (``prefix_filter_pairs``) and of
+    ``containment_pairs``.
+
+    Every doc's shingles are ordered by a global rarity order (corpus
+    frequency ``sf`` asc, shingle asc). If a pair needs an overlap of
+    at least o = ceil(r * c) of a doc's c shingles, the first c - o + 1
+    of them in that order meet the other doc (Xiao et al.), so only
+    those rows can seed a candidate. The ceiling is exact integer
+    arithmetic on ``min_ratio_micro`` (a DOUBLE ceil disagrees between
+    engines at exact multiples).
+
+    The per-doc size c rides the SAME window exchange as the rank
+    (count over the unordered doc partition; r9 removed a separate
+    count aggregate + join). ``freq`` is un-hinted: it sits behind its
+    own shuffle, so AQE joins it with exact runtime stats. The prefix
+    rows carry sf, so a caller's candidate estimate is one aggregate
+    over this frame. Pinned because that estimate and the candidate
+    join are two consumers: unpinned, the freq join + rank window
+    (the most expensive pre-candidate stage) ran once per consumer.
+    """
+    from pyspark.sql import Window
+    freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("sf"))
+    ranked = (sh.join(freq, "s")
+              .withColumn("rnk", F.row_number().over(
+                  Window.partitionBy(id_col).orderBy("sf", "s")))
+              .withColumn("c", F.count(F.lit(1)).over(
+                  Window.partitionBy(id_col))))
+    o = F.expr(f"({min_ratio_micro} * c + 999999) div 1000000")
+    return track_persist(
+        ranked.where(F.col("rnk") <= F.col("c") - o + 1)
+        .select(F.col(id_col), "s", "sf", "c"))
+
+
+def _guard_candidates(name: str, estimate: DataFrame,
+                      max_candidate_estimate: int | None,
+                      remedy: str) -> None:
+    """Raise before any pair forms when the one-row ``estimate``
+    (column ``e``) exceeds the budget; ``None`` runs unguarded."""
+    if max_candidate_estimate is None:
+        return
+    est = estimate.collect()[0]["e"] or 0
+    if est > max_candidate_estimate:
+        raise RuntimeError(
+            f"{name}: estimated candidate volume {int(est):,} exceeds "
+            f"max_candidate_estimate={max_candidate_estimate:,}. {remedy} "
+            f"Pass max_candidate_estimate=None to run unguarded.")
+
+
+def _jaccard_verify(candidates: DataFrame, sh: DataFrame, *, id_col: str,
+                    threshold: float) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs only; keep >= threshold.
 
     |A ∩ B| via the doc-grain array-intersection plan
     (``_pair_overlap`` — see its docstring for the r9 plan-shape
     evidence); jaccard = i / (|A| + |B| - i), with |A| = the array
-    size (identical to the former per-doc count join: shingle rows
-    are distinct per doc).
+    size (shingle rows are distinct per doc).
     """
-    sh = shingles if shingles is not None else \
-        shingle_rows(df, text_col=text_col, id_col=id_col, ngram=ngram)
     out = _pair_overlap(candidates, sh, id_col=id_col)
     jac = F.round(F.col("i") / F.greatest(F.col("ca") + F.col("cb") - F.col("i"), F.lit(1)), 4)
     return (out.select("id_a", "id_b", jac.alias("jaccard"))
@@ -305,66 +384,30 @@ def containment_pairs(df: DataFrame, *, text_col: str = "text",
     the large doc's filler shingles — a planted full-subsumption pair
     shares a band with probability ~(|A|/|B|)^3 per band, measured as
     a test failure before this blocker replaced it). Lossless instead:
-    if |S ∩ B| >= o = ceil(t*|S|), the first |S| - o + 1 shingles of S
-    in rare-first order intersect B, so candidates = (rarity prefix of
-    the potentially-smaller side) equi-joined against ALL shingles —
-    every qualifying pair is generated, recall 1.0 by the lemma. The
-    required-overlap ceiling is exact integer arithmetic
-    ((t_micro * c + 999999) div 1e6 — a DOUBLE ceil disagrees between
-    engines at exact multiples), scores are integer micro-units, so
-    the SQL replay is hash-identical.
+    if |S ∩ B| >= ceil(t*|S|), the rarity prefix of S
+    (``_rarity_prefix`` at t) intersects B, so candidates = (rarity
+    prefix of the potentially-smaller side) equi-joined against ALL
+    shingles — every qualifying pair is generated, recall 1.0 by the
+    lemma. Scores are integer micro-units ((i * 1e6) div min >= t is
+    i >= ceil(t * min) exactly), so the SQL replay is hash-identical.
 
     Scale shape: candidate volume is sum over prefix rows of df(s) —
     rare-first prefixes keep those buckets small, and the same loud
     ``max_candidate_estimate`` pre-flight as prefix_filter_pairs
-    bounds it from a one-agg histogram before any pair forms. The
-    corpus-scale join sides pin merge (spillable, SCALE.md §26).
+    bounds it before any pair forms. The corpus-scale join sides pin
+    merge (spillable, SCALE.md §26).
     """
-    from pyspark.sql import Window
     sh = track_persist(shingle_rows(df, text_col=text_col, id_col=id_col,
                                     ngram=ngram))
-    freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("sf"))
-    # per-doc size c rides the SAME window exchange as the prefix rank
-    # (count over the unordered doc partition) — r9 removed the
-    # separate count aggregate + shuffle_hash join that previously
-    # re-derived it (guide §2.4: two operations keyed the same way
-    # share one exchange). Identical integers: count(*) per doc.
-    ranked = (sh.join(freq, "s")
-              .withColumn("rnk", F.row_number().over(
-                  Window.partitionBy(id_col).orderBy("sf", "s")))
-              .withColumn("c", F.count(F.lit(1)).over(
-                  Window.partitionBy(id_col))))
-    # required overlap o = ceil(t * c) in EXACT integer micro units;
-    # prefix keeps ranks 1 .. c - o + 1
-    o = F.expr(f"({threshold_micro} * c + 999999) div 1000000")
-    # pinned (r9): the guard's pre-flight estimate and the candidate
-    # join are TWO consumers of this subtree — unpinned, the
-    # freq-join + per-doc rank window ran once for the estimate and
-    # again inside the main query (plan audit: the window sort is the
-    # most expensive pre-candidate stage)
-    # the prefix rows carry their shingle's corpus frequency sf (from
-    # the ranked join), so the guard estimate below is ONE aggregate
-    # over the persisted frame — r10 removed the estimate's own
-    # groupBy(s) + re-join against freq (guide §2.4; stage profile at
-    # sf0.1/32c: the guard job was 0.64 s of the 4.0 s query). Same
-    # integer: sum over prefix rows of (sf - 1) = sum over s of
-    # np(s) * (sf(s) - 1). The extra int64 column on the pin is noise
-    # next to the shingle strings.
-    pref = track_persist(
-        ranked.where(F.col("rnk") <= F.col("c") - o + 1)
-        .select(F.col(id_col), F.col("s"), F.col("sf")))
-    if max_candidate_estimate is not None:
-        est = (pref.agg(F.sum(F.col("sf") - 1).alias("e"))
-               .collect()[0]["e"]) or 0
-        if est > max_candidate_estimate:
-            raise RuntimeError(
-                f"containment_pairs: estimated candidate volume "
-                f"{int(est):,} exceeds max_candidate_estimate="
-                f"{max_candidate_estimate:,}. Containment blocking at "
-                f"this shingle-frequency profile needs executor-fleet "
-                f"memory; drop boilerplate shingles first (a doc-"
-                f"frequency cap upstream) or pass "
-                f"max_candidate_estimate=None to run unguarded.")
+    pref = _rarity_prefix(sh, id_col=id_col, min_ratio_micro=threshold_micro)
+    # sum over prefix rows of (sf - 1) = sum over s of np(s) * (sf(s) - 1):
+    # one aggregate over the pinned prefix (r10)
+    _guard_candidates(
+        "containment_pairs", pref.agg(F.sum(F.col("sf") - 1).alias("e")),
+        max_candidate_estimate,
+        "Containment blocking at this shingle-frequency profile needs "
+        "executor-fleet memory; drop boilerplate shingles first (a "
+        "doc-frequency cap upstream).")
     pa = pref.select(F.col(id_col).alias("pid"), "s")
     sball = sh.select(F.col(id_col).alias("oid"), F.col("s").alias("s_b"))
     cands = (pa.join(sball.hint("merge"),
@@ -383,27 +426,113 @@ def containment_pairs(df: DataFrame, *, text_col: str = "text",
             .where(F.col("containment_micro") >= threshold_micro))
 
 
+def prefix_filter_pairs(df: DataFrame, *, text_col: str = "text",
+                        id_col: str = "doc_id", ngram: int = 3,
+                        threshold: float = 0.5,
+                        max_candidate_estimate: int | None = 100_000_000,
+                        shingles: DataFrame | None = None) -> DataFrame:
+    """EXACT set-similarity join (PPJoin/All-Pairs class, Bayardo et
+    al. WWW'07; Xiao et al. WWW'08): every pair with n-gram Jaccard >=
+    threshold, found WITHOUT the O(N^2) scan and WITHOUT the
+    probabilistic miss rate of MinHash-LSH — the deterministic
+    complement to ngram_jaccard_pairs.
+
+    Prefix-filtering principle: J(A,B) >= f implies
+    |A ∩ B| >= ceil(f*|A|), so the rarity prefixes of A and B
+    (``_rarity_prefix`` at the verify floor f) must share a shingle —
+    a candidate pair only forms on a shared PREFIX shingle (rare-first
+    ordering keeps those buckets small), plus the length filter
+    f*max(|A|,|B|) <= min(|A|,|B|). f is ``_verify_floor_micro``, the
+    smallest J the 4-dp verify keeps, so no pair the verify would keep
+    is pruned. Exact Jaccard verification then runs on candidates
+    only. Completeness is gate-checked: the DuckDB oracle computes
+    brute-force all-pairs.
+
+    Scale shape: shingle rows persist once and feed frequency counts /
+    prefix ranking / verification; candidate generation is a
+    shuffle-hash equi-join on prefix shingles. No cartesian, no
+    broadcast of corpus-scale sides. The per-doc prefix rank windows on
+    the doc key (bounded partitions). At 100 TB the prefix index is the
+    standard materialize-to-parquet first stage.
+
+    MEMORY GUARD: exact PPJoin's candidate volume is inherent to the
+    corpus's duplicate density — at high density it can exceed any
+    single-node heap (the sf10 sweep needed a 48 GB driver; SCALE.md
+    §22). Before forming pairs this function upper-bounds the candidate
+    count from the prefix-bucket histogram (sum over prefix shingles of
+    n*(n-1)/2 — one cheap agg, no pair join) and raises loudly when it
+    exceeds ``max_candidate_estimate``, naming the memory-safe path
+    ``ngram_jaccard_pairs`` (LSH-bucketed candidates, the same exact
+    verify). Pass ``None`` to run unguarded on a fleet with the memory
+    for it.
+
+    ``shingles``: share a caller-persisted shingle-row frame
+    (``dedup_method_eval`` builds shingles once and feeds PPJoin truth
+    AND the MinHash blocker from it).
+    """
+    floor = _verify_floor_micro(threshold)
+    sh = shingles if shingles is not None else track_persist(
+        shingle_rows(df, text_col=text_col, id_col=id_col, ngram=ngram))
+    pref = _rarity_prefix(sh, id_col=id_col, min_ratio_micro=floor)
+    _guard_candidates(
+        "prefix_filter_pairs",
+        pref.groupBy("s").agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("e")),
+        max_candidate_estimate,
+        "Exact PPJoin at this duplicate density needs executor-fleet "
+        "memory; the memory-safe path is ngram_jaccard_pairs — "
+        "LSH-bucketed candidates, the same exact verify.")
+    pa = pref.select(F.col(id_col).alias("id_a"), "s",
+                     F.col("c").alias("ca"))
+    pb = pref.select(F.col(id_col).alias("id_b"),
+                     F.col("s").alias("s_b"), F.col("c").alias("cb"))
+    # pb keeps the SHJ build: this exact-complete variant is BY CONTRACT
+    # the fleet-memory path (docstring + max_candidate_estimate guard),
+    # and its prefix-bucket join is the documented 48 GB sf10 surface —
+    # pinning merge here only taxes the gate-scale audits that remain.
+    cands = (pa.join(pb.hint("shuffle_hash"),
+                     (F.col("s") == F.col("s_b"))
+                     & (F.col("id_a") < F.col("id_b"))
+                     & _length_filter(floor))
+             .select("id_a", "id_b").distinct())
+    return _jaccard_verify(cands, sh, id_col=id_col, threshold=threshold)
+
+
 def ngram_jaccard_pairs(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
                         ngram: int = 3, threshold: float = 0.5,
                         num_hashes: int = 12, rows_per_band: int = 3) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates -> exact Jaccard verify.
+    """Full near-dup pipeline and the memory-safe set-similarity join:
+    MinHash-LSH candidates -> lossless length filter -> exact Jaccard
+    verify. The result is exactly {pairs the verify keeps} ∩ {LSH
+    candidates}: recall is LSH's (probabilistic at the threshold
+    boundary, COVERAGE.md), precision is exact. Candidate volume is
+    bounded by band-bucket occupancy (the shape that held exponent
+    0.55 at sf10).
 
-    The shingle rows feed four consumers (signature, intersection join
-    x2, per-doc counts); Catalyst does not reuse the exchange across
-    them, so the subtree is persisted — the 100 TB shape is the same
-    decision with parquet instead of memory (materialize shingles once,
-    the standard first stage of a corpus-dedup pipeline, and feed every
-    consumer from that scan). Measured round 1: the cache-fill barrier
-    costs ~0.5 s at sf0.1 and removes 5 recomputations of the
-    explode+window shingling, whose re-codegen under AQE dominated the
-    query in long-lived sessions.
+    The length filter (``_length_filter`` at the verify floor) is free:
+    the set sizes ride the band join (``with_sizes``, aggregated in
+    the signature pass), so no count aggregate or per-side join of the
+    candidate table exists. PPJoin's prefix-agreement filter is NOT
+    run here: r10 measured it pruning candidates ~2.5x at sf0.1 but
+    paying a frequency aggregate, a corpus-scale join and two per-doc
+    windows, 3.96 -> 1.96 s at sf0.1/32c without it
+    (OPTIMIZATION_r10.md).
+
+    The shingle rows feed the signature and the verify; Catalyst does
+    not reuse the exchange across them, so the subtree is persisted —
+    the 100 TB shape is the same decision with parquet instead of
+    memory. Measured round 1: the cache-fill barrier costs ~0.5 s at
+    sf0.1 and removes the recomputations of the explode+window
+    shingling.
     """
+    floor = _verify_floor_micro(threshold)
     sh = track_persist(shingle_rows(df, text_col=text_col, id_col=id_col, ngram=ngram))
-    cands = minhash_lsh_candidates(df, text_col=text_col, id_col=id_col, ngram=ngram,
-                                   num_hashes=num_hashes, rows_per_band=rows_per_band,
-                                   shingles=sh)
-    return jaccard_verify(df, cands, text_col=text_col, id_col=id_col,
-                          ngram=ngram, threshold=threshold, shingles=sh)
+    cands = (minhash_lsh_candidates(df, text_col=text_col, id_col=id_col, ngram=ngram,
+                                    num_hashes=num_hashes, rows_per_band=rows_per_band,
+                                    shingles=sh, with_sizes=True)
+             .where(_length_filter(floor))
+             .select("id_a", "id_b"))
+    return _jaccard_verify(cands, sh, id_col=id_col, threshold=threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -800,186 +929,6 @@ def remove_duplicate_spans(df: DataFrame, *, text_col: str = "text",
                     .cast("long").alias("n_removed")))
 
 
-def prefix_filter_pairs(df: DataFrame, *, text_col: str = "text",
-                        id_col: str = "doc_id", ngram: int = 3,
-                        threshold: float = 0.5,
-                        max_candidate_estimate: int | None = 100_000_000,
-                        shingles: DataFrame | None = None) -> DataFrame:
-    """EXACT set-similarity join (PPJoin/All-Pairs class, Bayardo et
-    al. WWW'07; Xiao et al. WWW'08): every pair with n-gram Jaccard >=
-    threshold, found WITHOUT the O(N^2) scan and WITHOUT the
-    probabilistic miss rate of MinHash-LSH — the deterministic
-    complement to ngram_jaccard_pairs.
-
-    Prefix-filtering principle: order every doc's shingles by a global
-    rarity order (corpus frequency asc, shingle asc); if J(A,B) >= t
-    the first |A| - ceil(t*|A|) + 1 shingles of A and the first
-    |B| - ceil(t*|B|) + 1 of B must share one — so a candidate pair
-    only forms on a shared PREFIX shingle (rare-first ordering keeps
-    those buckets small), plus the length filter t*|A| <= |B| <= |A|/t.
-    Exact Jaccard verification then runs on candidates only
-    (jaccard_verify reuse). Completeness is gate-checked: the DuckDB
-    oracle computes brute-force all-pairs.
-
-    Scale shape: shingle rows persist once and feed frequency counts /
-    prefix ranking / verification; candidate generation is a
-    shuffle-hash equi-join on prefix shingles. No cartesian, no
-    broadcast of corpus-scale sides. The per-doc prefix rank windows on
-    the doc key (bounded partitions). At 100 TB the prefix index is the
-    standard materialize-to-parquet first stage.
-
-    MEMORY GUARD: exact PPJoin's candidate volume is inherent to the
-    corpus's duplicate density — at high density it can exceed any
-    single-node heap (the sf10 sweep needed a 48 GB driver; SCALE.md
-    §22). Before forming pairs this function upper-bounds the candidate
-    count from the prefix-bucket histogram (sum over prefix shingles of
-    n*(n-1)/2 — one cheap agg, no pair join) and raises loudly when it
-    exceeds ``max_candidate_estimate``, naming the memory-safe composed
-    alternative ``setsim_pairs(prefilter='lsh')`` (LSH near-dup first,
-    exact verification on the bucketed candidates). Pass ``None`` to
-    run unguarded on a fleet with the memory for it.
-    """
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from pyspark.sql import Window
-    from ..plans.caching import track_persist
-    # ``shingles``: share a caller-persisted shingle-row frame (the
-    # multi-method comparison path — dedup_method_eval builds shingles
-    # once and feeds PPJoin truth AND the MinHash blocker from it)
-    sh = shingles if shingles is not None else track_persist(
-        shingle_rows(df, text_col=text_col, id_col=id_col, ngram=ngram))
-    freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("sf"))
-    # freq is UN-hinted: it sits behind its own shuffle (the groupBy),
-    # so AQE joins it with EXACT runtime stats — broadcast when the
-    # type table is small, partitioned (spillable) when it is
-    # corpus-sized. The underestimate risk that forces pins elsewhere
-    # only exists for un-aggregated explode outputs with no shuffle
-    # boundary in front of the join decision.
-    # per-doc size c rides the SAME window exchange as the prefix rank
-    # (count over the unordered doc partition) — r9 removed the
-    # separate count aggregate + shuffle_hash join that previously
-    # re-derived it (guide §2.4). Identical integers: count(*) per doc.
-    ranked = (sh.join(freq, "s")
-              .withColumn("rnk", F.row_number().over(
-                  Window.partitionBy(id_col).orderBy("sf", "s")))
-              .withColumn("c", F.count(F.lit(1)).over(
-                  Window.partitionBy(id_col))))
-    # pa and pb below are TWO consumers of this subtree; without a pin
-    # Catalyst re-runs the freq join + rank window once per side (plan
-    # audit: 10 cache scans -> 5). Prefix rows are doc-grain-bounded.
-    pref = track_persist(
-        ranked.where(F.col("rnk")
-                     <= F.col("c") - F.ceil(F.lit(threshold) * F.col("c")) + 1)
-        .select(F.col(id_col), F.col("s"), F.col("c")))
-    if max_candidate_estimate is not None:
-        est = (pref.groupBy("s").agg(F.count(F.lit(1)).alias("n"))
-               .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("e"))
-               .collect()[0]["e"]) or 0
-        if est > max_candidate_estimate:
-            raise RuntimeError(
-                f"prefix_filter_pairs: estimated candidate volume "
-                f"{int(est):,} exceeds max_candidate_estimate="
-                f"{max_candidate_estimate:,}. Exact PPJoin at this "
-                f"duplicate density needs executor-fleet memory; the "
-                f"memory-safe production order is "
-                f"setsim_pairs(prefilter='lsh') — LSH-bucketed "
-                f"candidates, identical exact verification. Pass "
-                f"max_candidate_estimate=None to run unguarded.")
-    pa = pref.select(F.col(id_col).alias("id_a"), "s",
-                     F.col("c").alias("ca"))
-    pb = pref.select(F.col(id_col).alias("id_b"),
-                     F.col("s").alias("s_b"), F.col("c").alias("cb"))
-    # pb keeps the SHJ build: this exact-complete variant is BY CONTRACT
-    # the fleet-memory path (docstring + max_candidate_estimate guard;
-    # the memory-safe production order is setsim_pairs(prefilter='lsh')),
-    # and its prefix-bucket join is the documented 48 GB sf10 surface —
-    # pinning merge here only taxes the gate-scale audits that remain.
-    cands = (pa.join(pb.hint("shuffle_hash"),
-                     (F.col("s") == F.col("s_b"))
-                     & (F.col("id_a") < F.col("id_b"))
-                     # length filter: t*ca <= cb <= ca/t is required for
-                     # J >= t to be possible at all
-                     & (F.col("cb") >= F.lit(threshold) * F.col("ca"))
-                     & (F.col("cb") * F.lit(threshold) <= F.col("ca")))
-             .select("id_a", "id_b").distinct())
-    return jaccard_verify(df, cands, text_col=text_col, id_col=id_col,
-                          ngram=ngram, threshold=threshold, shingles=sh)
-
-
-def setsim_pairs(df: DataFrame, *, text_col: str = "text",
-                 id_col: str = "doc_id", ngram: int = 3,
-                 threshold: float = 0.5, prefilter: str | None = "lsh",
-                 num_hashes: int = 12, rows_per_band: int = 3,
-                 max_candidate_estimate: int | None = 100_000_000
-                 ) -> DataFrame:
-    """Set-similarity join front door — picks the candidate-generation
-    strategy by memory regime, exact verification either way.
-
-    ``prefilter='lsh'`` (default — the production order at scale): LSH
-    band buckets generate candidates (volume bounded by band-bucket
-    occupancy — the shape that held exponent 0.55 at sf10), then
-    PPJoin's lossless LENGTH filter prunes them (free: the set sizes
-    ride the band join). Exact Jaccard on every surviving candidate;
-    recall is LSH's (probabilistic at the threshold boundary,
-    documented in COVERAGE.md) — within the candidate set,
-    completeness is exact, so the result is precisely
-    {pairs with J >= t} ∩ {LSH candidates}.
-
-    The r8-r9 shape ALSO ran PPJoin's prefix-agreement filter on the
-    LSH candidates (a true pair must share a rarity-order prefix
-    shingle — lossless, so the result set is identical either way).
-    r10 REMOVED it by measurement: it pruned candidates ~2.5x (8067 ->
-    3136 at sf0.1) but paid a corpus-frequency aggregate, a
-    corpus-scale shingle-rows join, and two per-doc windows to do so —
-    ~2 corpus-scale exchanges to save pair-grain work that the r9
-    doc-grain array verify made cheap. A/B at sf0.1/32c (same session,
-    alternating order, collect-identical results): 3.96 -> 1.96 s
-    (0.49x). Both sides of the tradeoff scale linearly with corpus
-    volume (bucket count grows, occupancy stays — the sf10-measured
-    regime), so the ratio carries; re-confirmed at sf10 (see
-    OPTIMIZATION_r10.md).
-
-    ``prefilter=None``: deterministic-complete exact PPJoin
-    (prefix_filter_pairs) — guaranteed to find EVERY qualifying pair,
-    at candidate volume inherent to the corpus's duplicate density;
-    guarded by ``max_candidate_estimate`` (raises loudly, naming this
-    composed path, rather than OOM-thrashing a small driver).
-
-    The length filter is lossless for true pairs (All-Pairs theorem:
-    J(A,B) >= t implies t*max(|A|,|B|) <= min(|A|,|B|)), so the
-    composed path loses nothing beyond LSH's own candidate recall.
-    """
-    if prefilter is None:
-        return prefix_filter_pairs(
-            df, text_col=text_col, id_col=id_col, ngram=ngram,
-            threshold=threshold,
-            max_candidate_estimate=max_candidate_estimate)
-    if prefilter != "lsh":
-        raise ValueError(f"prefilter must be 'lsh' or None, got {prefilter!r}")
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from ..plans.caching import track_persist
-    sh = track_persist(shingle_rows(df, text_col=text_col, id_col=id_col,
-                                    ngram=ngram))
-    # length filter: J >= t requires t * max(|A|,|B|) <= min(|A|,|B|);
-    # id order is not size order, so compare least/greatest. The sizes
-    # ride the band pipeline (with_sizes — aggregated in the signature
-    # pass), so no count aggregate and no per-side join of the
-    # candidate table exists here (r9, guide §2.4; formerly one agg +
-    # two shuffle_hash joins). The prefix-agreement filter that used
-    # to run here was removed in r10 — see the docstring for the
-    # measurement (lossless filter, identical result, 2x query cost).
-    cands1 = (minhash_lsh_candidates(df, text_col=text_col, id_col=id_col,
-                                     ngram=ngram, num_hashes=num_hashes,
-                                     rows_per_band=rows_per_band,
-                                     shingles=sh, with_sizes=True)
-              .where(F.least("ca", "cb")
-                     >= F.lit(threshold) * F.greatest("ca", "cb"))
-              .select("id_a", "id_b"))
-    return jaccard_verify(df, cands1, text_col=text_col, id_col=id_col,
-                          ngram=ngram, threshold=threshold, shingles=sh)
-
-
 def minhash_quality_report(df: DataFrame, *, text_col: str = "text",
                            id_col: str = "doc_id", ngram: int = 3,
                            num_hashes: int = 12,
@@ -1202,7 +1151,7 @@ def dedup_method_eval(df: DataFrame, *, text_col: str = "text",
 
       ground truth   every pair with 3-gram Jaccard >= ``threshold``,
                      from the PPJoin exact set-similarity join (whose
-                     completeness the setsim gate proves);
+                     completeness the setsim_prefix_pairs gate proves);
       minhash_lsh    band-collision candidates (12 hashes, 4 bands x 3);
       simhash64_bands  16-bit pigeonhole band collisions (pre-verify);
       winnowing      >= 2 shared selected fingerprints with the MOSS

@@ -304,7 +304,7 @@ def bloom_semi_join(probe: DataFrame, build: DataFrame, *,
     filter must be applied BEFORE an expensive decode. Plan: the bit
     set is <= m_bits rows (broadcast, never a shuffle); the probe scan
     gains two broadcast LeftSemi joins that AQE folds into the scan
-    stage — probe data is never shuffled by the prefilter itself.
+    stage — probe data is never shuffled by the bloom filter itself.
 
     Keys must be nonnegative integers (they fold mod 2^20 before
     hashing so the arithmetic is overflow-free in int64 on any engine).

@@ -1747,9 +1747,16 @@ JOIN cnts cb ON cb.doc_id = i.id_b
 WHERE round(i.i / greatest(ca.c + cb.c - i.i, 1), 4) >= 0.5
 """)
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pipeline: shingle -> 12-hash signature ->
-    4 bands -> bucket equi-join -> exact Jaccard verify >= 0.5.
-    Never materializes the O(N^2) pair space."""
+    """MinHash+LSH near-dup pipeline (``ngram_jaccard_pairs``, the one
+    LSH set-similarity path and the memory-safe production order at
+    100 TB): shingle -> 12-hash signature -> 4 bands -> bucket
+    equi-join -> PPJoin's lossless length filter -> exact Jaccard
+    verify >= 0.5. Never materializes the O(N^2) pair space;
+    candidate volume is bounded by bucket occupancy (the sf10-proven
+    0.55-exponent shape). Result is EXACTLY {pairs the verify keeps} ∩
+    {LSH candidates}: recall is LSH's, precision is exact. The oracle
+    replays it without the length filter, so the gate also proves
+    that filter prunes no pair the verify keeps."""
     docs = _t(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5,
                                  num_hashes=12, rows_per_band=3)
@@ -1783,30 +1790,20 @@ WHERE round(i.i / greatest(ca.c + cb.c - i.i, 1), 4) >= 0.5
 def setsim_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT set-similarity join (PPJoin/All-Pairs class): every pair
     with 3-gram Jaccard >= 0.5, via rare-first prefix filtering +
-    length filter + candidate-only verification — deterministic
-    completeness where MinHash-LSH is probabilistic. The oracle is
-    brute-force all-pairs, so the gate proves the prefix filter drops
-    NO qualifying pair. Candidates form only on shared rare prefix
-    shingles: bucket equi-join, no cartesian."""
+    length filter + candidate-only verification
+    (``prefix_filter_pairs``) — deterministic completeness where
+    MinHash-LSH is probabilistic. The oracle is brute-force all-pairs,
+    so the gate proves the prefix filter drops NO qualifying pair.
+    Candidates form only on shared rare prefix shingles: bucket
+    equi-join, no cartesian."""
     docs = _t(spark, sf_dir, "documents")
     return D.prefix_filter_pairs(docs, ngram=3, threshold=0.5)
 
 
-@query("setsim_pairs_lsh", ORACLE["dedup_minhash_pairs"])
-def setsim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MEMORY-SAFE composed set-similarity join — the production order
-    at 100 TB: LSH band buckets generate candidates (volume bounded by
-    bucket occupancy, the sf10-proven 0.55-exponent shape), PPJoin's
-    lossless length + prefix-agreement filters prune them, exact
-    Jaccard verifies the survivors. Result is EXACTLY
-    {pairs with J >= 0.5} ∩ {LSH candidates} — both filters are
-    lossless for true pairs (Bayardo/Xiao theorems), so the oracle is
-    the dedup_minhash_pairs replay verbatim: candidate recall is LSH's,
-    precision is exact. This is the path the prefix_filter_pairs
-    candidate-budget guard names when exact PPJoin's inherent candidate
-    volume would thrash a small heap (SCALE.md §22)."""
-    docs = _t(spark, sf_dir, "documents")
-    return D.setsim_pairs(docs, ngram=3, threshold=0.5, prefilter="lsh")
+# the memory-safe set-similarity join the prefix_filter_pairs budget
+# guard names (SCALE.md §22): the same call, and so the same oracle,
+# as dedup_minhash_pairs, kept as its own gate entry
+query("setsim_pairs_lsh", ORACLE["dedup_minhash_pairs"])(dedup_minhash_pairs)
 
 
 @query("simhash_docs", """

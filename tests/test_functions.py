@@ -1558,8 +1558,9 @@ def test_prefix_filter_pairs_complete_and_bucketed(spark, sf_dir):
     """PPJoin completeness: against brute-force exact Jaccard the
     prefix-filtered join must find EVERY pair >= threshold (recall 1.0
     by construction — this is the deterministic advantage over
-    MinHash-LSH), with candidate generation an equi-join (no cartesian,
-    no corpus-side broadcast)."""
+    MinHash-LSH), and the LSH path a subset of it. Both plan candidate
+    generation as an equi-join (no cartesian, no corpus-side
+    broadcast)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
            D.prefix_filter_pairs(docs, ngram=3, threshold=0.5).collect()}
@@ -1580,16 +1581,19 @@ def test_prefix_filter_pairs_complete_and_bucketed(spark, sf_dir):
                 if j >= 0.5:
                     expect[(a, b)] = j
     assert got == expect
-    # and the LSH pipeline on the same data may only ever find a SUBSET
-    lsh = {(r["id_a"], r["id_b"]) for r in
+    # the LSH pipeline (candidates -> length filter -> the same verify)
+    # may only ever find a SUBSET, with the same jaccard values
+    lsh = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
            D.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5).collect()}
-    assert lsh <= set(got)
+    assert set(lsh) <= set(got)
+    assert all(got[k] == v for k, v in lsh.items())
 
     from go_streams_spark.plans import explain_str
-    plan = explain_str(
-        D.prefix_filter_pairs(docs, ngram=3, threshold=0.5), "simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for q in (D.prefix_filter_pairs(docs, ngram=3, threshold=0.5),
+              D.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5)):
+        plan = explain_str(q, "simple")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
     with pytest.raises(ValueError, match="threshold"):
         D.prefix_filter_pairs(docs, threshold=0.0)
 
@@ -1597,10 +1601,11 @@ def test_prefix_filter_pairs_complete_and_bucketed(spark, sf_dir):
 def test_prefix_filter_candidate_budget_guard(spark, sf_dir):
     """The memory guard: when the prefix-bucket histogram upper-bounds
     candidate volume above the budget, prefix_filter_pairs must raise
-    BEFORE forming any pair, and the message must name the composed
-    memory-safe alternative (the sf10 OOM class, SCALE.md §22/§24)."""
+    BEFORE forming any pair, and the message must name the
+    memory-safe LSH path, ngram_jaccard_pairs (the sf10 OOM class,
+    SCALE.md §22/§24)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    with pytest.raises(RuntimeError, match="setsim_pairs"):
+    with pytest.raises(RuntimeError, match="ngram_jaccard_pairs"):
         D.prefix_filter_pairs(docs, ngram=3, threshold=0.5,
                               max_candidate_estimate=1)
     # budget=None runs unguarded; default budget passes at this scale
@@ -1609,32 +1614,25 @@ def test_prefix_filter_candidate_budget_guard(spark, sf_dir):
         max_candidate_estimate=None).count() >= 0
 
 
-def test_setsim_pairs_composed_lsh_path(spark, sf_dir):
-    """Composed path semantics: setsim_pairs(prefilter='lsh') returns
-    EXACTLY the LSH pipeline's verified pairs ({J >= t} ∩ LSH
-    candidates — the PPJoin length filter is lossless for true pairs),
-    is a subset of the deterministic-complete exact join, and
-    plans without cartesian products or corpus-side broadcasts."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    composed = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-                D.setsim_pairs(docs, ngram=3, threshold=0.5,
-                               prefilter="lsh").collect()}
-    lsh = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-           D.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5).collect()}
-    exact = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-             D.prefix_filter_pairs(docs, ngram=3, threshold=0.5).collect()}
-    assert composed == lsh
-    assert set(composed) <= set(exact)
-    assert all(exact[k] == v for k, v in composed.items())
-
-    from go_streams_spark.plans import explain_str
-    plan = explain_str(
-        D.setsim_pairs(docs, ngram=3, threshold=0.5, prefilter="lsh"),
-        "simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    with pytest.raises(ValueError, match="prefilter"):
-        D.setsim_pairs(docs, prefilter="bogus")
+def test_setsim_filters_keep_the_verify_rounding_edge(spark):
+    """The verify keeps round(J, 4) >= t, so J = 5000/10001 = 0.49995
+    counts as 0.5. Doc 1 is 5,002 distinct tokens (5,000 3-grams); doc
+    2 is doc 1 plus 5,001 new tokens (10,001 3-grams). A prefix or
+    length filter derived from t itself prunes that pair: doc 2's
+    5,001 rarest shingles are its own, and 5000 < 0.5 * 10001."""
+    from go_streams_spark.functions.dedup import (
+        _length_filter, _verify_floor_micro)
+    base = " ".join(f"a{i}" for i in range(5002))
+    docs = spark.createDataFrame(
+        [(1, base), (2, base + " " + " ".join(f"b{i}" for i in range(5001)))],
+        "doc_id bigint, text string")
+    assert [tuple(r) for r in D.prefix_filter_pairs(
+        docs, ngram=3, threshold=0.5).collect()] == [(1, 2, 0.5)]
+    sizes = spark.createDataFrame([(5000, 10001), (10001, 5000),
+                                   (5000, 10002)], "ca long, cb long")
+    keep = [r[0] for r in sizes.select(
+        _length_filter(_verify_floor_micro(0.5))).collect()]
+    assert keep == [True, True, False]   # 5000/10002 rounds to 0.4999
 
 
 def test_compression_ratio_exact_vs_zlib(spark, sf_dir):
@@ -2111,10 +2109,10 @@ def test_mrl_arrow_sims_match_jvm_formula(spark):
 
 
 def test_minhash_with_sizes_carries_exact_counts(spark):
-    """r9: setsim's length filter reads ca/cb carried through the band
-    join (with_sizes) instead of joining a count aggregate — the pair
-    set must be identical to the plain form and the sizes must equal
-    each doc's distinct-shingle count."""
+    """ngram_jaccard_pairs' length filter reads ca/cb carried through
+    the band join (with_sizes) instead of joining a count aggregate —
+    the pair set must be identical to the plain form and the sizes
+    must equal each doc's distinct-shingle count."""
     from go_streams_spark.functions.dedup import (
         minhash_lsh_candidates, shingle_rows)
     docs = spark.createDataFrame(
